@@ -33,6 +33,9 @@ LANG_STOPWORDS: dict[str, list[str]] = {
     "zh": ["的", "了", "是", "在", "我", "有", "和", "不", "这", "个"],
 }
 LANG_ORDER = ["en", "es", "fr", "de", "zh"]  # argmax tie-break: first wins
+# the QA pass's stop-word set (stopword_ratio): every language's list, so the
+# fused kernel's langid lookup doubles as the membership test
+STOPWORD_UNION: list[str] = sorted(set().union(*LANG_STOPWORDS.values()))
 DEFAULT_LANG = "en"
 
 

@@ -6,8 +6,8 @@ same tokenisation — measured on this sandbox the JVM expression forms
 (split / array_distinct / array_contains chains) cost ~200µs/doc while this
 kernel computes identical values for ~40µs/doc. The column-expression forms
 (functions/textstats.py) remain the reference surface: STAGES (unfused) uses
-them, tests assert bit-equality between the two paths, and custom stopword
-configs fall back to them (see plans/stages.py fused_applicable).
+them and tests assert bit-equality between the two paths; the pipeline runs
+only this kernel.
 
 Kernel shape (per Arrow batch of ~10k docs):
 - ONE tokenize: join the batch into a single byte buffer, lower once, split
@@ -49,15 +49,36 @@ from .scrub import TOXIC_TERMS, _scrub_delta_series
 
 _TOXIC_BYTES = [t.encode("utf-8") for t in TOXIC_TERMS]
 
-FUSED_SCHEMA = (
-    "lang_pred string, avg_logprob double, ppl double, scrub_delta string, "
-    "n_words long, mean_word_len double, symbol_ratio double, "
-    "distinct_word_ratio double, stopword_ratio double, ellipsis_count long, "
-    "dup_line_frac double, dup_para_frac double, dup_2gram_frac double, "
-    "repl_n long, mojibake_n long, ctrl_frac double, "
-    "bullet_line_frac double, ellipsis_line_frac double, "
-    "alpha_word_frac double"
+# Every column the kernel emits, in output order, with its Spark type: the
+# Python-only scores, then the rule statistics the keep gate reads.
+PYTHON_SCORE_COLS: tuple[tuple[str, str], ...] = (
+    ("lang_pred", "string"),
+    ("avg_logprob", "double"),
+    ("ppl", "double"),
+    ("scrub_delta", "string"),
 )
+RULE_STAT_COLS: tuple[tuple[str, str], ...] = (
+    ("n_words", "long"),
+    ("mean_word_len", "double"),
+    ("symbol_ratio", "double"),
+    ("distinct_word_ratio", "double"),
+    ("stopword_ratio", "double"),
+    ("ellipsis_count", "long"),
+    ("dup_line_frac", "double"),
+    ("dup_para_frac", "double"),
+    ("dup_2gram_frac", "double"),
+    ("repl_n", "long"),
+    ("mojibake_n", "long"),
+    ("ctrl_frac", "double"),
+    ("bullet_line_frac", "double"),
+    ("ellipsis_line_frac", "double"),
+    ("alpha_word_frac", "double"),
+)
+SCORE_COLS = PYTHON_SCORE_COLS + RULE_STAT_COLS
+FUSED_SCHEMA = ", ".join(f"{c} {t}" for c, t in SCORE_COLS)
+# pandas dtype per Spark type (nullable Int64: a NULL text scores NA)
+_PD_DTYPES = {"string": object, "double": np.float64, "long": "Int64"}
+
 
 # combined model: token → id; LP[id] = unigram logprob, LID[id] = language id
 # (-1: not a stop-word of any language). Built once per Python worker process
@@ -93,31 +114,8 @@ def _fused_series(texts: pd.Series) -> pd.DataFrame:
     texts = texts.reset_index(drop=True)
     n = len(texts)
     if n == 0:
-        empty_f = pd.Series([], dtype=np.float64)
-        empty_i = pd.Series([], dtype="Int64")
-        empty_o = pd.Series([], dtype=object)
         return pd.DataFrame(
-            {
-                "lang_pred": empty_o,
-                "avg_logprob": empty_f,
-                "ppl": empty_f,
-                "scrub_delta": empty_o,
-                "n_words": empty_i,
-                "mean_word_len": empty_f,
-                "symbol_ratio": empty_f,
-                "distinct_word_ratio": empty_f,
-                "stopword_ratio": empty_f,
-                "ellipsis_count": empty_i,
-                "dup_line_frac": empty_f,
-                "dup_para_frac": empty_f,
-                "dup_2gram_frac": empty_f,
-                "repl_n": empty_i,
-                "mojibake_n": empty_i,
-                "ctrl_frac": empty_f,
-                "bullet_line_frac": empty_f,
-                "ellipsis_line_frac": empty_f,
-                "alpha_word_frac": empty_f,
-            }
+            {c: pd.Series([], dtype=_PD_DTYPES[t]) for c, t in SCORE_COLS}
         )
 
     tok2id, lp_arr, lid_arr = _combined()
@@ -344,39 +342,35 @@ def _fused_series(texts: pd.Series) -> pd.DataFrame:
     )
     alpha_frac = np.bincount(idx[u_word[codes]], minlength=n) / fcounts
 
-    def _ints(a: np.ndarray) -> pd.Series:
-        s = pd.Series(a, dtype="Int64")
-        s[na_mask] = pd.NA
-        return s
-
-    def _floats(a: np.ndarray) -> np.ndarray:
-        a = a.astype(np.float64)
-        a[na_mask] = np.nan
+    def _typed(a, t: str):
+        if t == "string":
+            return a
+        a = pd.Series(a, dtype=_PD_DTYPES[t])
+        a[na_mask] = pd.NA if t == "long" else np.nan
         return a
 
-    return pd.DataFrame(
-        {
-            "lang_pred": pred_s,
-            "avg_logprob": avg,
-            "ppl": np.exp(-avg),
-            "scrub_delta": _scrub_delta_series(texts, candidates=cand),
-            "n_words": _ints(counts),
-            "mean_word_len": _floats(mean_wl),
-            "symbol_ratio": _floats(symbol_ratio),
-            "distinct_word_ratio": _floats(distinct_ratio),
-            "stopword_ratio": _floats(stopword_ratio),
-            "ellipsis_count": _ints(ellipsis),
-            "dup_line_frac": _floats(dup_line),
-            "dup_para_frac": _floats(dup_para),
-            "dup_2gram_frac": _floats(dup_2gram),
-            "repl_n": _ints(repl_n),
-            "mojibake_n": _ints(moji_n),
-            "ctrl_frac": _floats(ctrl_frac),
-            "bullet_line_frac": _floats(bullet_frac),
-            "ellipsis_line_frac": _floats(ell_line_frac),
-            "alpha_word_frac": _floats(alpha_frac),
-        }
-    )
+    scores = {
+        "lang_pred": pred_s,
+        "avg_logprob": avg,
+        "ppl": np.exp(-avg),
+        "scrub_delta": _scrub_delta_series(texts, candidates=cand),
+        "n_words": counts,
+        "mean_word_len": mean_wl,
+        "symbol_ratio": symbol_ratio,
+        "distinct_word_ratio": distinct_ratio,
+        "stopword_ratio": stopword_ratio,
+        "ellipsis_count": ellipsis,
+        "dup_line_frac": dup_line,
+        "dup_para_frac": dup_para,
+        "dup_2gram_frac": dup_2gram,
+        "repl_n": repl_n,
+        "mojibake_n": moji_n,
+        "ctrl_frac": ctrl_frac,
+        "bullet_line_frac": bullet_frac,
+        "ellipsis_line_frac": ell_line_frac,
+        "alpha_word_frac": alpha_frac,
+    }
+    return pd.DataFrame({c: _typed(scores[c], t) for c, t in SCORE_COLS})
 
 
 def qa_scores_udf(text: Column) -> Column:

@@ -13,8 +13,10 @@ space-normalised); `tokens_expr` is the single place to change that.
 
 from __future__ import annotations
 
-import dataclasses
+import operator
 from dataclasses import dataclass
+from functools import reduce
+from typing import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -30,14 +32,6 @@ def n_words_expr(text: Column) -> Column:
 
 def n_chars_expr(text: Column) -> Column:
     return F.length(text).cast("long")
-
-
-def mean_word_len_expr(text: Column) -> Column:
-    """Mean token length = non-space chars / token count (exact for
-    single-space-separated text; avoids a per-token aggregate)."""
-    nw = n_words_expr(text)
-    non_space = F.length(F.replace(text, F.lit(" "), F.lit("")))
-    return non_space.cast("double") / nw.cast("double")
 
 
 def distinct_word_ratio_expr(text: Column) -> Column:
@@ -211,13 +205,6 @@ def word_entropy_expr(text: Column) -> Column:
 # ASCII punctuation only (never counts CJK/accented letters as symbols);
 # identical semantics in Java regex / RE2 / Python re.
 SYMBOL_CLASS = "[!-/:-@\\[-`{-~]"
-
-
-def symbol_ratio_expr(text: Column) -> Column:
-    """ASCII symbol occurrences per word."""
-    nw = n_words_expr(text)
-    n_sym = F.regexp_count(text, F.lit(SYMBOL_CLASS))
-    return n_sym.cast("double") / nw.cast("double")
 
 
 def digit_ratio_expr(text: Column) -> Column:
@@ -513,6 +500,7 @@ def rule_columns(
     toks: Column | None = None,
     ltoks: Column | None = None,
     lines: Column | None = None,
+    stopwords: list[str] = EN_STOPWORDS,
 ) -> dict[str, Column]:
     """All heuristic rule statistics for one text column, as named exprs.
 
@@ -523,7 +511,9 @@ def rule_columns(
     without staging the token list is rebuilt ~6× and the line list 3×
     per row (the c4_line_clean staged-projection pattern). Defaults build
     the identical trees from `text`, so single-expression callers
-    (filters, keep_expr) are unchanged."""
+    (filters, keep_expr) are unchanged. `stopwords` is the list
+    stopword_ratio counts: the queries' EN_STOPWORDS, or the QA pass's
+    all-language union."""
     th = th or GopherThresholds()
     toks = tokens_expr(text) if toks is None else toks
     ltoks = tokens_expr(F.lower(text)) if ltoks is None else ltoks
@@ -531,7 +521,7 @@ def rule_columns(
     nw = F.size(toks).cast("long")
     fw = F.size(toks).cast("double")
     nl = F.size(lines).cast("double")
-    sw = F.lit(EN_STOPWORDS)
+    sw = F.lit(stopwords)
 
     def _ell_line(ln: Column) -> Column:
         out = ln.endswith(ELLIPSIS_SUFFIXES[0])
@@ -577,44 +567,52 @@ def rule_columns(
     }
 
 
-def keep_from(
-    c: dict[str, Column],
-    th: GopherThresholds | None = None,
-    overrides: dict[str, Column] | None = None,
-) -> Column:
-    """The keep/drop decision over already-built rule columns (the staged
-    form: pass `rule_columns(...)` output, or F.col refs to a projection
-    of it). `overrides` optionally replaces named thresholds with Column
-    expressions (the per-language-profile form: a broadcast-joined
-    profile column stands in for the global literal); unnamed thresholds
-    stay the `th` literals, so the conjunct list is single-sourced."""
+# The keep gate, one row per conjunct: (rule column, comparator, threshold
+# field). Threshold fields are named alike on GopherThresholds and QAConfig,
+# and operator.ge/le apply unchanged to pyspark Columns and pandas Series, so
+# the Spark decision, the sink's pandas decision and the funnel violations
+# all fold this one table.
+RULE_CONJUNCTS: tuple[tuple[str, Callable, str], ...] = (
+    ("n_words", operator.ge, "min_words"),
+    ("n_words", operator.le, "max_words"),
+    ("mean_word_len", operator.ge, "min_mean_word_len"),
+    ("mean_word_len", operator.le, "max_mean_word_len"),
+    ("symbol_ratio", operator.le, "max_symbol_ratio"),
+    ("distinct_word_ratio", operator.ge, "min_distinct_word_ratio"),
+    ("stopword_ratio", operator.ge, "min_stopword_ratio"),
+    ("ellipsis_count", operator.le, "max_ellipsis"),
+    ("dup_line_frac", operator.le, "max_dup_line_frac"),
+    ("dup_para_frac", operator.le, "max_dup_para_frac"),
+    ("dup_2gram_frac", operator.le, "max_dup_2gram_frac"),
+    ("repl_n", operator.le, "max_repl_chars"),
+    ("mojibake_n", operator.le, "max_mojibake"),
+    ("ctrl_frac", operator.le, "max_ctrl_frac"),
+    ("bullet_line_frac", operator.le, "max_bullet_line_frac"),
+    ("ellipsis_line_frac", operator.le, "max_ellipsis_line_frac"),
+    ("alpha_word_frac", operator.ge, "min_alpha_word_frac"),
+)
+
+
+def keep_from(c, th=None, overrides: dict | None = None):
+    """The keep/drop decision over already-built rule columns: `c` maps
+    each rule column to a Column (`rule_columns(...)` output, or F.col
+    refs to a projection of it) or is a pandas frame of them, and the
+    result is a Column or a boolean Series accordingly. `th` is any object
+    carrying the threshold fields (GopherThresholds, QAConfig).
+    `overrides` optionally replaces named thresholds with per-row values
+    (the per-language-profile form: a profile Column or Series stands in
+    for the global literal)."""
     th = th or GopherThresholds()
-    t: dict[str, object] = {
-        f.name: getattr(th, f.name) for f in dataclasses.fields(th)
-    }
-    if overrides:
-        unknown = set(overrides) - set(t)
-        if unknown:
-            raise KeyError(f"unknown threshold overrides: {sorted(unknown)}")
-        t.update(overrides)
-    return (
-        (c["n_words"] >= t["min_words"])
-        & (c["n_words"] <= t["max_words"])
-        & (c["mean_word_len"] >= t["min_mean_word_len"])
-        & (c["mean_word_len"] <= t["max_mean_word_len"])
-        & (c["symbol_ratio"] <= t["max_symbol_ratio"])
-        & (c["distinct_word_ratio"] >= t["min_distinct_word_ratio"])
-        & (c["stopword_ratio"] >= t["min_stopword_ratio"])
-        & (c["ellipsis_count"] <= t["max_ellipsis"])
-        & (c["dup_line_frac"] <= t["max_dup_line_frac"])
-        & (c["dup_para_frac"] <= t["max_dup_para_frac"])
-        & (c["dup_2gram_frac"] <= t["max_dup_2gram_frac"])
-        & (c["repl_n"] <= t["max_repl_chars"])
-        & (c["mojibake_n"] <= t["max_mojibake"])
-        & (c["ctrl_frac"] <= t["max_ctrl_frac"])
-        & (c["bullet_line_frac"] <= t["max_bullet_line_frac"])
-        & (c["ellipsis_line_frac"] <= t["max_ellipsis_line_frac"])
-        & (c["alpha_word_frac"] >= t["min_alpha_word_frac"])
+    overrides = overrides or {}
+    unknown = set(overrides) - {f for _, _, f in RULE_CONJUNCTS}
+    if unknown:
+        raise KeyError(f"unknown threshold overrides: {sorted(unknown)}")
+    return reduce(
+        operator.and_,
+        (
+            op(c[col], overrides[f] if f in overrides else getattr(th, f))
+            for col, op, f in RULE_CONJUNCTS
+        ),
     )
 
 

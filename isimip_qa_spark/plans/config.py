@@ -5,16 +5,10 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
-
-def _union_stopwords() -> list[str]:
-    from ..functions.langid import LANG_STOPWORDS
-
-    out: set[str] = set()
-    for sw in LANG_STOPWORDS.values():
-        out.update(sw)
-    return sorted(out)
+# threshold fields of a lang_profiles row, in row order after the language
+PROFILED_FIELDS = ("min_words", "min_stopword_ratio", "min_alpha_word_frac")
 
 
 @dataclass(frozen=True)
@@ -91,12 +85,26 @@ class QAConfig:
     n_concurrent_chunks: int = 1
     hot_host_frac: float = 0.05  # hosts above this share of rows get salted
     n_salts: int = 8
-    stopwords: list[str] = field(default_factory=_union_stopwords)
 
     # execution knobs that do not change output bytes — artifact identity
     # (config_hash) must not depend on them, or a resume after changing
     # them would needlessly recompute / refuse a cache hit
     _NON_SEMANTIC = ("n_concurrent_chunks",)
+
+    def profile_thresholds(self) -> dict[str, tuple[dict[str, float], float]]:
+        """lang_profiles as {threshold field: ({lang: value}, fallback)}: a
+        listed language takes its row's value, any other the 'default'
+        row's, else the global threshold. Profiles are config, so the keep
+        decision compiles this lookup in (a CASE chain on the Spark side, a
+        map on the pandas side) rather than joining a dim."""
+        rows = {r[0]: r[1:] for r in self.lang_profiles}
+        fallback = rows.pop(
+            "default", tuple(getattr(self, f) for f in PROFILED_FIELDS)
+        )
+        return {
+            f: ({lang: v[i] for lang, v in rows.items()}, fallback[i])
+            for i, f in enumerate(PROFILED_FIELDS)
+        }
 
     def config_hash(self) -> str:
         """Stable hash recorded in lineage (run manifest identity)."""

@@ -10,8 +10,8 @@ Physical shape (the properties that carry to 1000 executors / 100 TB):
   before anything else → parquet/Iceberg pushdown + partition pruning.
 - `html` is dropped immediately unless a stage needs it (column pruning
   discipline; the scan never materialises it for text-only runs).
-- Metrics are computed per Spark partition via spark_partition_id() inside
-  the same pass (observe-style), appended to a metrics table — the analogue
+- Metrics are computed per Spark partition by the sink task inside the
+  same pass (plans/sink.py), appended to a metrics table — the analogue
   of the reference's extraction artifacts (mixins/extractions.py:42-62).
 """
 
@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import os
+import shutil
 import uuid
 
 from .checkpoint import (
@@ -34,20 +35,18 @@ from .checkpoint import (
     mark_chunk_done,
 )
 from .config import QAConfig
+from .sink import METRICS_SCHEMA, qa_sink
 from .skew import detect_hot_hosts, salted_repartition
 from .stages import FUSED_STAGES, STAGES
 
-# pandas dtypes of METRICS_SCHEMA (plans/sink.py) — fetched-chunk metrics
+# pandas dtypes of METRICS_SCHEMA's numeric columns — fetched-chunk metrics
 # replayed from JSON manifests are coerced to these so an all-None column
 # (e.g. a chunk whose every partition had zero ppl rows) can't land as an
 # object-typed parquet column and break spark.read.parquet of out_dir/metrics
 _METRICS_DTYPES = {
-    "chunk": "int32", "partition_id": "int32",
-    "n_docs": "int64", "n_keep": "int64",
-    "avg_ppl": "float64", "avg_words": "float64",
-    "trip_short": "int64", "trip_symbol": "int64", "n_scrubbed": "int64",
-    "ppl_sum": "float64", "ppl_n": "int64",
-    "words_sum": "int64", "words_n": "int64",
+    name: {"int": "int32", "long": "int64", "double": "float64"}[t]
+    for name, t in (f.split() for f in METRICS_SCHEMA.split(", "))
+    if t != "timestamp"
 }
 
 
@@ -120,11 +119,6 @@ def _append_parquet_driver_side(pdf, path: str) -> None:
         allow_truncated_timestamps=True,
     )
 
-METRIC_RULE_COLS = [
-    "n_words", "mean_word_len", "symbol_ratio",
-    "distinct_word_ratio", "stopword_ratio", "ellipsis_count",
-]
-
 
 def _bucketize_staging(
     spark: SparkSession, df: DataFrame, out_dir: str, cfg: QAConfig
@@ -162,10 +156,9 @@ def scope_filter(df: DataFrame, cfg: QAConfig) -> DataFrame:
 def apply_stages(df: DataFrame, cfg: QAConfig, fused: bool = True) -> DataFrame:
     """Fused (default): the three Python stages run as ONE pandas UDF —
     one Arrow transfer of `text` per batch instead of three. The unfused
-    path keeps per-stage physical separation (debugging / per-stage metrics)."""
-    from .stages import fused_applicable
-
-    for stage in (FUSED_STAGES if fused and fused_applicable(cfg) else STAGES):
+    path keeps per-stage physical separation (the test oracle, and the
+    streaming scorer)."""
+    for stage in (FUSED_STAGES if fused else STAGES):
         df = stage.apply(df, cfg)
     # derived columns: `scrub_delta` is the stored form (changed docs only);
     # the full scrubbed column is a JVM-side coalesce, never shipped or
@@ -200,13 +193,6 @@ def _metric_aggs(cfg: QAConfig) -> list:
         F.sum("n_words").alias("words_sum"),
         F.count("n_words").alias("words_n"),
     ]
-
-
-def partition_metrics(scored: DataFrame, cfg: QAConfig) -> DataFrame:
-    """Per-partition QA metrics (the extraction-artifact analogue)."""
-    return scored.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        *_metric_aggs(cfg)
-    )
 
 
 def run_qa(
@@ -294,7 +280,7 @@ def run_qa(
     cfg_hash = cfg.config_hash()
 
     if cfg.checkpoint_mode == "single_pass" and not done:
-        return _run_single_pass(spark, df, cfg, out_dir, hot, cfg_hash, t0)
+        return _run_single_pass(df, cfg, out_dir, hot, cfg_hash, t0)
 
     # chunked mode over NON-pre-bucketed input: a runtime-computed bucket
     # column cannot prune the scan, so the chunk loop would re-scan the
@@ -317,32 +303,13 @@ def run_qa(
         t_chunk = time.time()
         part = df.filter(F.col("bucket") == chunk).drop("bucket")
         part = salted_repartition(part, cfg.n_partitions, hot, cfg.n_salts)
-        from .stages import fused_applicable
-
-        if fused_applicable(cfg):
-            # write-audit sink, scoped to this chunk: ONE job scores,
-            # writes chunk=K files, and returns the partition metrics
-            from .sink import qa_sink
-
-            import shutil
-
-            shutil.rmtree(chunk_path(out_dir, chunk), ignore_errors=True)
-            metrics_pdf = qa_sink(
-                part.withColumn("chunk", F.lit(chunk)), out_dir, cfg
-            ).toPandas()
-            metrics_pdf["config_hash"] = cfg_hash
-        else:
-            scored = apply_stages(part, cfg).drop("text_scrubbed")  # delta form
-            scored.write.mode("overwrite").parquet(chunk_path(out_dir, chunk))
-            # metrics over the written chunk: parquet column pruning means
-            # this job reads only small metric columns, never the text
-            out = spark.read.parquet(chunk_path(out_dir, chunk))
-            metrics_pdf = (
-                partition_metrics(out, cfg)
-                .withColumn("chunk", F.lit(chunk))
-                .withColumn("config_hash", F.lit(cfg_hash))
-                .toPandas()
-            )
+        # write-audit sink, scoped to this chunk: ONE job scores, writes
+        # chunk=K files, and returns the partition metrics
+        shutil.rmtree(chunk_path(out_dir, chunk), ignore_errors=True)
+        metrics_pdf = qa_sink(
+            part.withColumn("chunk", F.lit(chunk)), out_dir, cfg
+        ).toPandas()
+        metrics_pdf["config_hash"] = cfg_hash
         _append_parquet_driver_side(metrics_pdf, f"{out_dir}/metrics")
         n_rows = int(metrics_pdf["n_docs"].sum())  # no separate count job
 
@@ -410,7 +377,6 @@ def run_qa(
 
 
 def _run_single_pass(
-    spark: SparkSession,
     df: DataFrame,
     cfg: QAConfig,
     out_dir: str,
@@ -422,36 +388,15 @@ def _run_single_pass(
     (plans/sink.py) that scores, writes per-chunk parquet, and returns the
     per-(chunk, partition) metrics rows — no second job, no read-back.
     Same on-disk layout + manifest as the chunked path, so later invocations
-    resume chunk-wise. Custom stop-word configs (fused kernel inapplicable)
-    fall back to the expression stages + JVM writer."""
-    from .sink import qa_sink
-    from .stages import fused_applicable
-
+    resume chunk-wise."""
     part = salted_repartition(
         df.withColumnRenamed("bucket", "chunk"), cfg.n_partitions, hot, cfg.n_salts
     )
-    if fused_applicable(cfg):
-        # overwrite semantics: clear any uncommitted output of a prior
-        # crashed run (a committed run has a manifest and never gets here)
-        import shutil
-
-        shutil.rmtree(f"{out_dir}/data", ignore_errors=True)
-        metrics_pdf = qa_sink(part, out_dir, cfg).toPandas()
-        metrics_pdf["config_hash"] = cfg_hash
-    else:
-        scored = apply_stages(part, cfg).drop("text_scrubbed")
-        scored.write.mode("overwrite").partitionBy("chunk").parquet(
-            f"{out_dir}/data"
-        )
-        out = spark.read.parquet(f"{out_dir}/data")
-        metrics_pdf = (
-            out.groupBy(
-                F.col("chunk"), F.spark_partition_id().alias("partition_id")
-            )
-            .agg(*_metric_aggs(cfg))
-            .withColumn("config_hash", F.lit(cfg_hash))
-            .toPandas()
-        )
+    # overwrite semantics: clear any uncommitted output of a prior crashed
+    # run (a committed run has a manifest and never gets here)
+    shutil.rmtree(f"{out_dir}/data", ignore_errors=True)
+    metrics_pdf = qa_sink(part, out_dir, cfg).toPandas()
+    metrics_pdf["config_hash"] = cfg_hash
     _append_parquet_driver_side(metrics_pdf, f"{out_dir}/metrics")
     per_chunk = {
         int(c): int(n)

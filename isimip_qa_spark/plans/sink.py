@@ -19,10 +19,11 @@ Why this shape (measured on this sandbox, reasoned for 1000 executors):
   write-audit-publish with the manifest as the catalog (Iceberg-snapshot
   analogue, and the resume unit per north_rule).
 
-Semantics contract: identical output values to the column-expression path
-(chunked mode) — enforced by tests/test_qa_pipeline.py single_pass==chunked.
+Semantics contract: identical output values to the column-expression stages
+(plans/stages.py STAGES, the test oracle) — enforced by the fused==unfused
+tests and the keep-decision agreement test (tests/test_rule_table.py).
 One caveat: a NULL `text` row gets keep=False here (pandas) where the
-expression path writes keep=NULL; both count as "not kept" in every metric.
+expression form yields keep=NULL; both count as "not kept" in every metric.
 """
 
 from __future__ import annotations
@@ -32,6 +33,9 @@ from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..functions.qa_fused import SCORE_COLS, _fused_series
+from ..functions.textstats import keep_from
 
 
 def _round4_half_up(x: float) -> float:
@@ -63,25 +67,7 @@ _OUT_COLS = [
     ("warc_ts", "timestamp"),
     ("text", "string"),
     ("lang", "string"),
-    ("lang_pred", "string"),
-    ("avg_logprob", "double"),
-    ("ppl", "double"),
-    ("scrub_delta", "string"),
-    ("n_words", "long"),
-    ("mean_word_len", "double"),
-    ("symbol_ratio", "double"),
-    ("distinct_word_ratio", "double"),
-    ("stopword_ratio", "double"),
-    ("ellipsis_count", "long"),
-    ("dup_line_frac", "double"),
-    ("dup_para_frac", "double"),
-    ("dup_2gram_frac", "double"),
-    ("repl_n", "long"),
-    ("mojibake_n", "long"),
-    ("ctrl_frac", "double"),
-    ("bullet_line_frac", "double"),
-    ("ellipsis_line_frac", "double"),
-    ("alpha_word_frac", "double"),
+    *SCORE_COLS,
     ("scrubbed", "boolean"),
     ("keep", "boolean"),
 ]
@@ -100,64 +86,25 @@ def _pa_schema():
     return pa.schema([(name, m[t]) for name, t in _OUT_COLS])
 
 
-def _profile_thresholds(s: pd.DataFrame, cfg):
-    """Per-row (min_words, min_stopword_ratio, min_alpha_word_frac) from
-    cfg.lang_profiles keyed on lang_pred — the pandas twin of
-    stages._profile_threshold's CASE chain (listed lang → profile row,
-    else the 'default' row, else the global threshold)."""
-    dflt = (cfg.min_words, cfg.min_stopword_ratio, cfg.min_alpha_word_frac)
-    for row in cfg.lang_profiles:
-        if row[0] == "default":
-            dflt = tuple(row[1:])
-    maps = [
-        {r[0]: r[i] for r in cfg.lang_profiles if r[0] != "default"}
-        for i in (1, 2, 3)
-    ]
-    lp = s["lang_pred"]
-    return tuple(
-        lp.map(m).fillna(d).astype(float) for m, d in zip(maps, dflt)
-    )
-
-
 def _keep_series(s: pd.DataFrame, cfg) -> pd.Series:
-    """pandas twin of stages.rules_pass_expr + decision — same float64
-    comparisons over bit-identical inputs, so the same booleans."""
-    nw = s["n_words"]
-    min_words = cfg.min_words
-    min_sw = cfg.min_stopword_ratio
-    min_alpha = cfg.min_alpha_word_frac
+    """pandas form of stages.rules_pass_expr + decision — the same conjunct
+    table over bit-identical inputs, so the same booleans."""
+    overrides = None
     if cfg.lang_profiles:
-        min_words, min_sw, min_alpha = _profile_thresholds(s, cfg)
-    expr = (
-        (nw >= min_words)
-        & (nw <= cfg.max_words)
-        & (s["mean_word_len"] >= cfg.min_mean_word_len)
-        & (s["mean_word_len"] <= cfg.max_mean_word_len)
-        & (s["symbol_ratio"] <= cfg.max_symbol_ratio)
-        & (s["distinct_word_ratio"] >= cfg.min_distinct_word_ratio)
-        & (s["stopword_ratio"] >= min_sw)
-        & (s["ellipsis_count"] <= cfg.max_ellipsis)
-        & (s["dup_line_frac"] <= cfg.max_dup_line_frac)
-        & (s["dup_para_frac"] <= cfg.max_dup_para_frac)
-        & (s["dup_2gram_frac"] <= cfg.max_dup_2gram_frac)
-        & (s["repl_n"] <= cfg.max_repl_chars)
-        & (s["mojibake_n"] <= cfg.max_mojibake)
-        & (s["ctrl_frac"] <= cfg.max_ctrl_frac)
-        & (s["bullet_line_frac"] <= cfg.max_bullet_line_frac)
-        & (s["ellipsis_line_frac"] <= cfg.max_ellipsis_line_frac)
-        & (s["alpha_word_frac"] >= min_alpha)
+        overrides = {
+            f: s["lang_pred"].map(by_lang).fillna(fallback).astype(float)
+            for f, (by_lang, fallback) in cfg.profile_thresholds().items()
+        }
+    keep = (
+        keep_from(s, cfg, overrides)
         & (s["ppl"] <= cfg.max_ppl)
         & s["lang_pred"].isin(list(cfg.allowed_langs))
     )
-    return expr.fillna(False).astype(bool)
+    return keep.fillna(False).astype(bool)
 
 
 def _make_writer(pq, path: str, schema):
-    """Sink parquet writer. Experiment hooks (SPARK_GRAFT_ZSTD_LEVEL,
-    SPARK_GRAFT_PAGE_KB) expose the codec level / data-page size that the
-    2->8 scaling study sweeps (BASELINE.md): compression CPU scales with
-    cores, output-byte bandwidth does not, so the codec point shifts the
-    compute/bandwidth mix."""
+    """Sink parquet writer."""
     # default zstd level 3 (pyarrow's own default is 1): measured on the
     # round-3 codec sweep as strictly faster at BOTH core counts
     # (133.4s/39.9s vs 151.3s/42.9s at 4M docs) — the extra compression
@@ -166,22 +113,13 @@ def _make_writer(pq, path: str, schema):
     # better — 0.836 vs zstd1's same-campaign 0.881, since it helps the
     # low-core level more; the default optimizes wall at every level,
     # not the ratio. BASELINE.md round-3 section has the full table.)
-    kw = {"compression": "zstd", "compression_level": 3}
-    lvl = os.environ.get("SPARK_GRAFT_ZSTD_LEVEL")
-    if lvl:
-        kw["compression_level"] = int(lvl)
-    page_kb = os.environ.get("SPARK_GRAFT_PAGE_KB")
-    if page_kb:
-        kw["data_page_size"] = int(page_kb) * 1024
-    return pq.ParquetWriter(path, schema, **kw)
+    return pq.ParquetWriter(path, schema, compression="zstd", compression_level=3)
 
 
 def qa_sink(scored_input: DataFrame, out_dir: str, cfg) -> DataFrame:
     """Attach the sink to a repartitioned pages DataFrame (columns url,
     warc_ts, text, lang, chunk). Returns the (lazy) metrics DataFrame —
     running any action on it executes the whole write."""
-    from ..functions.qa_fused import _fused_series
-
     data_dir = os.path.join(out_dir, "data")
     # trip counters are diagnostics against the GLOBAL thresholds by
     # design (stable cross-run lineage even when lang_profiles vary the

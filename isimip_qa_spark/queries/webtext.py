@@ -727,35 +727,18 @@ _FUNNEL_SQL = (
 )
 
 
-def _violations(r: DataFrame) -> dict[str, Column]:
+def _violations() -> dict[str, Column]:
     """Per-rule violation flag exprs over a `_staged_rule_cols` frame —
-    the negation of each keep_from conjunct, shared by the corpus funnel
-    (drop_attribution) and the per-source funnel (source_rule_funnel).
-    Rule names match _FUNNEL_RULES; thresholds are the GopherThresholds
-    defaults the SQL twins spell literally."""
-    c = {k: F.col(k) for k in r.columns}
+    the negated keep_from conjuncts, OR-ed per rule column, shared by the
+    corpus funnel (drop_attribution) and the per-source funnel
+    (source_rule_funnel). Rule names match _FUNNEL_RULES; thresholds are
+    the GopherThresholds defaults the SQL twins spell literally."""
     th = ts.GopherThresholds()
-    return {
-        "n_words": (c["n_words"] < th.min_words)
-        | (c["n_words"] > th.max_words),
-        "mean_word_len": (c["mean_word_len"] < th.min_mean_word_len)
-        | (c["mean_word_len"] > th.max_mean_word_len),
-        "symbol_ratio": c["symbol_ratio"] > th.max_symbol_ratio,
-        "distinct_word_ratio": c["distinct_word_ratio"]
-        < th.min_distinct_word_ratio,
-        "stopword_ratio": c["stopword_ratio"] < th.min_stopword_ratio,
-        "ellipsis_count": c["ellipsis_count"] > th.max_ellipsis,
-        "dup_line_frac": c["dup_line_frac"] > th.max_dup_line_frac,
-        "dup_para_frac": c["dup_para_frac"] > th.max_dup_para_frac,
-        "dup_2gram_frac": c["dup_2gram_frac"] > th.max_dup_2gram_frac,
-        "repl_n": c["repl_n"] > th.max_repl_chars,
-        "mojibake_n": c["mojibake_n"] > th.max_mojibake,
-        "ctrl_frac": c["ctrl_frac"] > th.max_ctrl_frac,
-        "bullet_line_frac": c["bullet_line_frac"] > th.max_bullet_line_frac,
-        "ellipsis_line_frac": c["ellipsis_line_frac"]
-        > th.max_ellipsis_line_frac,
-        "alpha_word_frac": c["alpha_word_frac"] < th.min_alpha_word_frac,
-    }
+    viol: dict[str, Column] = {}
+    for col, op, field in ts.RULE_CONJUNCTS:
+        v = ~op(F.col(col), getattr(th, field))
+        viol[col] = viol[col] | v if col in viol else v
+    return viol
 
 
 @register("drop_attribution", oracle=_FUNNEL_SQL)
@@ -777,7 +760,7 @@ def drop_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     single evaluation structural instead of optimizer-dependent."""
     d = read_table(spark, sf_dir, "documents")
     r = _staged_rule_cols(d)
-    viol = _violations(r)
+    viol = _violations()
     order = [n for n, _ in _FUNNEL_RULES]
     flags = r.select(
         *[viol[n].alias(f"v{i}") for i, n in enumerate(order)]
@@ -846,7 +829,7 @@ def source_rule_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows. The corpus shuffles only as 16 longs per source."""
     d = read_table(spark, sf_dir, "documents")
     r = _staged_rule_cols(d, keys=("source",))
-    viol = _violations(r)
+    viol = _violations()
     order = [n for n, _ in _FUNNEL_RULES]
     flags = r.select(
         "source", *[viol[n].alias(f"v{i}") for i, n in enumerate(order)]

@@ -18,7 +18,7 @@ import re
 import numpy as np
 import pandas as pd
 
-from isimip_qa_spark.functions.langid import LANG_ORDER, LANG_STOPWORDS
+from isimip_qa_spark.functions.langid import LANG_ORDER, LANG_STOPWORDS, STOPWORD_UNION
 from isimip_qa_spark.functions.perplexity import MODEL, OOV_LOGPROB
 from isimip_qa_spark.functions.scrub import ALL_PATTERNS
 from isimip_qa_spark.functions.textstats import (
@@ -56,7 +56,7 @@ def qa_frame(pages: pd.DataFrame, cfg: QAConfig | None = None) -> pd.DataFrame:
     out["distinct_word_ratio"] = (
         np.array([len(set(tk)) for tk in tok_lists]) / n_words
     )
-    sw = set(cfg.stopwords)
+    sw = set(STOPWORD_UNION)
     out["stopword_ratio"] = (
         np.array([sum(1 for w in t.lower().split(" ") if w in sw) for t in texts])
         / n_words

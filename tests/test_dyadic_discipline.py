@@ -190,6 +190,9 @@ def test_exp_ppl_rows_clear_of_round6_boundaries(sf_dir):
     sb = oracles["ppl_stupid_backoff"].replace(
         "round(sum(lp) / count(*), 6)", "round(sum(lp) / count(*), 12)"
     )
+    # a drifted oracle text would no-op the replace and probe round-6
+    # values, which clear the bound vacuously
+    assert ", 12)" in sb
     avgs.append(
         con.execute(f"SELECT avg_logprob FROM ({sb})").df()["avg_logprob"]
     )

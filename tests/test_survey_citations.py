@@ -13,8 +13,16 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
+import pytest
+
 REFERENCE = Path("/root/reference")
 REPO = Path(__file__).resolve().parent.parent
+
+# every check stats files under REFERENCE; without the reference checkout
+# there is nothing to resolve citations against
+pytestmark = pytest.mark.skipif(
+    not REFERENCE.is_dir(), reason=f"reference source tree {REFERENCE} absent"
+)
 
 # isimip_qa/<segments>.py with an optional :N or :N-M line suffix
 CITE = re.compile(r"isimip_qa/[A-Za-z0-9_/]+\.py(?::(\d+)(?:-(\d+))?)?")

@@ -99,8 +99,10 @@ def survey_home(name: str, sections) -> str:
 def oracle_kind(name: str, oracles) -> str:
     if name not in oracles:
         return "rows-only"
+    from isimip_qa_spark.queries.dedup import BUCKET_CAP
+
     sql = oracles[name]
-    if "count(*) OVER (PARTITION BY" in sql and "<= 256" in sql:
+    if "count(*) OVER (PARTITION BY" in sql and f"<= {BUCKET_CAP}" in sql:
         return "hash (capped twin)"
     return "hash"
 
