@@ -210,7 +210,7 @@ def ensure_pages(spark, n: int) -> str:
     return path
 
 
-def qa_walls(spark, pages, mode: str, hot_hosts, measured_reps: int = 3) -> list:
+def qa_walls(spark, pages, hot_hosts, measured_reps: int = 3) -> list:
     """One warm-up run (python-worker spin-up, page cache), then the wall
     times of `measured_reps` runs. Callers take the MIN: the sandbox VM has
     noisy-neighbor spikes of 2-3× (hypervisor steal is visible in
@@ -224,14 +224,7 @@ def qa_walls(spark, pages, mode: str, hot_hosts, measured_reps: int = 3) -> list
     walls = []
     for rep in range(measured_reps + 1):
         out_dir = tempfile.mkdtemp(prefix="bench_qa_", dir=TMP)
-        cfg = QAConfig(
-            n_chunks=QA_CHUNKS,
-            n_partitions=CPUS,
-            checkpoint_mode=mode,
-            # chunked: keep several chunk jobs in flight so one chunk's
-            # straggler tail overlaps the next chunk's map stage
-            n_concurrent_chunks=4 if mode == "chunked" else 1,
-        )
+        cfg = QAConfig(n_chunks=QA_CHUNKS, n_partitions=CPUS)
         t0 = time.time()
         run_qa(spark, pages, cfg, out_dir, resume=False, hot_hosts=hot_hosts)
         if rep > 0:  # rep 0 = warm-up
@@ -240,8 +233,8 @@ def qa_walls(spark, pages, mode: str, hot_hosts, measured_reps: int = 3) -> list
     return walls
 
 
-def time_qa(spark, pages, mode: str, hot_hosts, measured_reps: int = 3) -> float:
-    return min(qa_walls(spark, pages, mode, hot_hosts, measured_reps))
+def time_qa(spark, pages, hot_hosts, measured_reps: int = 3) -> float:
+    return min(qa_walls(spark, pages, hot_hosts, measured_reps))
 
 
 # --- noise calibration (VERDICT r4 'Next round' #3) ------------------------
@@ -266,7 +259,7 @@ def time_calibration(spark, reps: int = 3) -> dict:
 
     pages = spark.read.parquet(ensure_pages(spark, CAL_N))
     hot = detect_hot_hosts(pages.select("url"), 0.05)
-    walls = qa_walls(spark, pages, "single_pass", hot, reps)
+    walls = qa_walls(spark, pages, hot, reps)
     return {
         "min_sec": round(min(walls), 3),
         "median_sec": round(statistics.median(walls), 3),
@@ -348,27 +341,19 @@ def main() -> None:
         hot = detect_hot_hosts(pages.select("url"), 0.05)
         result["qa_docs"] = PAGES_N
         reps = int(os.environ.get("BENCH_REPS", "3"))
-        modes = os.environ.get("BENCH_MODES", "chunked,single_pass").split(",")
-        if "chunked" in modes:
-            chunked = time_qa(spark, pages, "chunked", hot, reps)
-            result["qa_pipeline_sec"] = round(chunked, 3)  # resumable default
-            result["qa_chunked_docs_per_sec"] = round(PAGES_N / chunked, 2)
-        if "single_pass" in modes:
-            fused = time_qa(spark, pages, "single_pass", hot, reps)
-            result["qa_single_pass_sec"] = round(fused, 3)
-            result["value"] = round(PAGES_N / fused, 2)  # headline throughput
-            result[f"{_band(PAGES_N)}_docs_per_sec"] = result["value"]
-            # both bands, every round (VERDICT r3 #8): composites at 100k
-            # vs 1M corpora are not comparable (fixed job cost is ~half
-            # the wall at 100k), so the round-over-round record carries
-            # each band under its own key instead of a prose footnote
-            if PAGES_N != 100_000 and os.environ.get("BENCH_SKIP_100K") != "1":
-                small = spark.read.parquet(ensure_pages(spark, 100_000))
-                hot_small = detect_hot_hosts(small.select("url"), 0.05)
-                t100k = time_qa(spark, small, "single_pass", hot_small, reps)
-                result["qa_100k_docs_per_sec"] = round(100_000 / t100k, 2)
-        else:
-            result["value"] = result["qa_chunked_docs_per_sec"]
+        fused = time_qa(spark, pages, hot, reps)
+        result["qa_single_pass_sec"] = round(fused, 3)
+        result["value"] = round(PAGES_N / fused, 2)  # headline throughput
+        result[f"{_band(PAGES_N)}_docs_per_sec"] = result["value"]
+        # both bands, every round (VERDICT r3 #8): composites at 100k
+        # vs 1M corpora are not comparable (fixed job cost is ~half
+        # the wall at 100k), so the round-over-round record carries
+        # each band under its own key instead of a prose footnote
+        if PAGES_N != 100_000 and os.environ.get("BENCH_SKIP_100K") != "1":
+            small = spark.read.parquet(ensure_pages(spark, 100_000))
+            hot_small = detect_hot_hosts(small.select("url"), 0.05)
+            t100k = time_qa(spark, small, hot_small, reps)
+            result["qa_100k_docs_per_sec"] = round(100_000 / t100k, 2)
     else:
         result["value"] = result.get("queries_total_sec", 0.0)
 

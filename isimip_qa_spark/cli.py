@@ -20,7 +20,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--output", required=True, help="output root (data/metrics/lineage)")
     p.add_argument("--chunks", type=int, default=8)
     p.add_argument("--partitions", type=int, default=0, help="0 = default parallelism")
-    p.add_argument("--mode", choices=["chunked", "single_pass"], default="chunked")
     p.add_argument("--window", default=None, help="warc_ts window lo:hi (dates)")
     p.add_argument("--langs", default=None, help="cohort langs, comma-separated")
     # multi-scope grid (reference planning loop, main.py:115-128): several
@@ -183,7 +182,6 @@ def main(argv=None) -> int:
     cfg = QAConfig(
         n_chunks=args.chunks,
         n_partitions=args.partitions or spark.sparkContext.defaultParallelism,
-        checkpoint_mode=args.mode,
         window=window,
         cohort_langs=tuple(args.langs.split(",")) if args.langs else None,
         extract_from_html=args.from_html,

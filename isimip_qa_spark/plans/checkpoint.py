@@ -3,10 +3,10 @@ extraction whose artifact exists or is fetchable —
 /root/reference/isimip_qa/main.py:126-128, mixins/extractions.py:16-28).
 
 Unit of resume: a *chunk* — a deterministic bucket range of the corpus
-(bucket = pmod(xxhash64(url), n_chunks)). Each chunk is one fused Spark job
-whose output lands in `out_dir/data/chunk=K/`; a chunk's manifest file is
-written only after its job commits, so a killed run resumes by re-running
-exactly the missing chunks. On an Iceberg deployment the manifest is the
+(bucket = pmod(xxhash64(url), n_chunks)). A run computes all of its missing
+chunks in one fused Spark job, whose output lands in `out_dir/data/chunk=K/`;
+each chunk's manifest file is written only after that job commits, so a
+killed run resumes by re-running exactly the chunks without a manifest. On an Iceberg deployment the manifest is the
 snapshot log and a chunk is a partition-scoped append — same structure,
 different sink.
 """

@@ -72,24 +72,9 @@ class QAConfig:
     extract_from_html: bool = False
     # execution
     n_chunks: int = 8  # checkpoint granularity (resume unit)
-    # "chunked": one job per chunk — a killed run resumes per chunk.
-    # "single_pass": one fused job writing all chunks (partitionBy) — ~3×
-    # less fixed cost at small scale; a mid-run crash reruns the pass, but
-    # a completed run still resumes chunk-wise on later invocations.
-    checkpoint_mode: str = "chunked"
     n_partitions: int = 32
-    # chunked mode: how many chunk jobs to keep in flight at once. Chunk
-    # jobs are independent (disjoint buckets, own manifests); >1 lets the
-    # scheduler overlap one chunk's straggler tail with the next chunk's
-    # map stage. Execution-only — excluded from config_hash.
-    n_concurrent_chunks: int = 1
     hot_host_frac: float = 0.05  # hosts above this share of rows get salted
     n_salts: int = 8
-
-    # execution knobs that do not change output bytes — artifact identity
-    # (config_hash) must not depend on them, or a resume after changing
-    # them would needlessly recompute / refuse a cache hit
-    _NON_SEMANTIC = ("n_concurrent_chunks",)
 
     def profile_thresholds(self) -> dict[str, tuple[dict[str, float], float]]:
         """lang_profiles as {threshold field: ({lang: value}, fallback)}: a
@@ -108,8 +93,5 @@ class QAConfig:
 
     def config_hash(self) -> str:
         """Stable hash recorded in lineage (run manifest identity)."""
-        d = asdict(self)
-        for k in self._NON_SEMANTIC:
-            d.pop(k, None)
-        payload = json.dumps(d, sort_keys=True, default=str)
+        payload = json.dumps(asdict(self), sort_keys=True, default=str)
         return hashlib.sha256(payload.encode()).hexdigest()[:16]

@@ -1,5 +1,7 @@
 """The fused QA DAG: scope filters → salted repartition → all stages in one
-pass → chunked checkpointed sink + per-partition metrics/lineage.
+pass → write-audit sink + per-partition metrics/lineage, as ONE Spark job
+over the chunks a run still has to compute (chunk manifests are the resume
+unit, plans/checkpoint.py).
 
 Physical shape (the properties that carry to 1000 executors / 100 TB):
 - ONE scan feeds all stages (reference's shared scan, main.py:130-136):
@@ -22,6 +24,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+import contextlib
 import os
 import shutil
 import uuid
@@ -32,6 +35,7 @@ from .checkpoint import (
     chunk_path,
     completed_chunks,
     fetch_chunk,
+    manifest_dir,
     mark_chunk_done,
 )
 from .config import QAConfig
@@ -120,25 +124,6 @@ def _append_parquet_driver_side(pdf, path: str) -> None:
     )
 
 
-def _bucketize_staging(
-    spark: SparkSession, df: DataFrame, out_dir: str, cfg: QAConfig
-) -> DataFrame:
-    """One bucket-partitioned staging write of the scoped input, so chunk
-    filters prune at the directory level (see call site). Shuffle-free: the
-    write is a narrow map + partitioned-file sink. Reused across resumes
-    via the parquet _SUCCESS marker; keyed by n_chunks so a config change
-    re-stages rather than mis-pruning."""
-    staging = os.path.join(out_dir, f"_staging_bucket{cfg.n_chunks}")
-    if not os.path.exists(os.path.join(staging, "_SUCCESS")):
-        # df already carries the runtime bucket column (call-site contract)
-        df.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    if not any(n.startswith("bucket=") for n in os.listdir(staging)):
-        # empty scoped corpus: no partition dirs to read (schema inference
-        # would fail) and nothing to prune — keep the runtime column
-        return df
-    return spark.read.parquet(staging)
-
-
 def scope_filter(df: DataFrame, cfg: QAConfig) -> DataFrame:
     """Period + Region analogues; both push down to the scan."""
     if cfg.window is not None:
@@ -206,7 +191,10 @@ def run_qa(
     cache_base: str | None = None,
     hot_hosts_fn=None,
 ) -> dict:
-    """Run the full QA DAG with chunked checkpointing.
+    """Run the full QA DAG with chunk-wise checkpointing: chunks already
+    committed (or fetched from `cache_base`) are skipped, and every chunk
+    still missing is computed by ONE sink job (_run_single_pass), whose
+    per-chunk manifests are published after it commits.
 
     `hot_hosts_fn`: optional lazy provider for corpus-level skew stats —
     called ONLY if this run actually reaches the compute path (a run fully
@@ -235,144 +223,50 @@ def run_qa(
         # column-pruning discipline: text stages must never scan html bytes
         df = df.drop("html")
 
-    done_early = completed_chunks(out_dir) if resume else set()
+    done = completed_chunks(out_dir) if resume else set()
     fetched: list[int] = []
-    if resume and cache_base and len(done_early) < cfg.n_chunks:
+    if resume and cache_base and len(done) < cfg.n_chunks:
         for c in range(cfg.n_chunks):
             t_fetch = time.time()
-            if c not in done_early and fetch_chunk(
+            if c not in done and fetch_chunk(
                 out_dir, c, cache_base, cfg.config_hash()
             ):
                 _replay_fetched_artifacts(out_dir, c, time.time() - t_fetch)
                 fetched.append(c)
-        done_early = completed_chunks(out_dir)
+        done = completed_chunks(out_dir)
 
-    # fully-resumed run: nothing to compute (and no need to scan for skew
+    # a fully-resumed run computes nothing (and never scans for skew
     # stats) — the reference's exists()-skip, main.py:126-128
-    if len(done_early) == cfg.n_chunks:
-        return {
-            "chunks_run": [],
-            "chunks_skipped": sorted(set(done_early) - set(fetched)),
-            "chunks_fetched": fetched,
-            "rows": 0,
-            "wall_s": round(time.time() - t0, 3),
-            "hot_hosts": hot_hosts or [],
-            "config_hash": cfg.config_hash(),
-        }
-
-    # host skew statistics: pass precomputed stats (corpus-level, computed
-    # once per table — the Iceberg-table-statistics analogue) or detect now
-    if hot_hosts is not None:
-        hot = hot_hosts
-    elif hot_hosts_fn is not None:
-        hot = hot_hosts_fn()
-    else:
-        hot = detect_hot_hosts(df, cfg.hot_host_frac)
-    pre_bucketed = "bucket" in df.columns
-    if not pre_bucketed:
-        df = df.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(cfg.n_chunks)))
-    # else: input is pre-bucketed on pmod(xxhash64(url), n_chunks) — chunk
-    # filters below hit the partition column and prune the scan (Iceberg
-    # bucket-partition analogue). Contract: layout bucket count == n_chunks.
-
-    done = completed_chunks(out_dir) if resume else set()
-    ran, skipped, total_rows = [], [], 0
-    cfg_hash = cfg.config_hash()
-
-    if cfg.checkpoint_mode == "single_pass" and not done:
-        return _run_single_pass(df, cfg, out_dir, hot, cfg_hash, t0)
-
-    # chunked mode over NON-pre-bucketed input: a runtime-computed bucket
-    # column cannot prune the scan, so the chunk loop would re-scan the
-    # whole corpus once per chunk (n_chunks× read amplification). Auto-
-    # bucketize ONCE: one staging write partitioned by bucket; every chunk
-    # job then reads only its bucket=K directory (VERDICT r2 #5). Total
-    # input bytes across chunk jobs ≈ 1× corpus (+ the staging write)
-    # instead of n_chunks× — the dominant term at 100 TB. The staging is
-    # resumable (_SUCCESS-gated) and lives under out_dir, so its lifetime
-    # matches the run's artifacts.
-    n_todo_early = cfg.n_chunks - len(done)
-    if not pre_bucketed and n_todo_early > 1:
-        df = _bucketize_staging(spark, df, out_dir, cfg)
-
-    def _run_one_chunk(chunk: int) -> int:
-        """One chunk end-to-end: job → metrics/lineage append → manifest
-        commit. Thread-safe by construction: each chunk owns its data dir
-        and manifest file, and the metrics/lineage appends write
-        uuid-named parquet parts."""
-        t_chunk = time.time()
-        part = df.filter(F.col("bucket") == chunk).drop("bucket")
-        part = salted_repartition(part, cfg.n_partitions, hot, cfg.n_salts)
-        # write-audit sink, scoped to this chunk: ONE job scores, writes
-        # chunk=K files, and returns the partition metrics
-        shutil.rmtree(chunk_path(out_dir, chunk), ignore_errors=True)
-        metrics_pdf = qa_sink(
-            part.withColumn("chunk", F.lit(chunk)), out_dir, cfg
-        ).toPandas()
-        metrics_pdf["config_hash"] = cfg_hash
-        _append_parquet_driver_side(metrics_pdf, f"{out_dir}/metrics")
-        n_rows = int(metrics_pdf["n_docs"].sum())  # no separate count job
-
-        # lineage: what ran, over what, producing what (north_rule)
-        import pandas as pd
-
-        lineage_pdf = pd.DataFrame(
-            [
-                {
-                    "config_hash": cfg_hash,
-                    "chunk": chunk,
-                    "stages": ",".join(s.name for s in STAGES),
-                    "rows": n_rows,
-                    "n_hot_hosts": len(hot),
-                    "wall_s": round(time.time() - t_chunk, 3),
-                }
-            ]
-        )
-        _append_parquet_driver_side(lineage_pdf, f"{out_dir}/lineage")
-        mark_chunk_done(
-            out_dir,
-            chunk,
-            {
-                "rows": n_rows,
-                "config_hash": cfg_hash,
-                "stages": [s.name for s in STAGES],
-                "files": chunk_files(out_dir, chunk),
-                "metrics": _metrics_records(metrics_pdf),
-            },
-        )
-        return n_rows
-
     todo = [c for c in range(cfg.n_chunks) if c not in done]
-    skipped = sorted(set(done) - set(fetched))
-    conc = max(1, cfg.n_concurrent_chunks)
-    if conc == 1 or len(todo) <= 1:
-        for chunk in todo:
-            total_rows += _run_one_chunk(chunk)
-            ran.append(chunk)
-    else:
-        # job-level parallelism: chunk jobs are independent (disjoint url
-        # buckets, own manifests), so submitting several at once lets the
-        # Spark scheduler pipeline one chunk's straggler tail with the next
-        # chunk's map stage — on a large cluster serial submission leaves
-        # executors idle during every chunk's tail. Resume granularity is
-        # unchanged: each chunk still commits its own manifest.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=conc) as ex:
-            futs = {ex.submit(_run_one_chunk, c): c for c in todo}
-            for fut, c in futs.items():
-                total_rows += fut.result()  # re-raises a failed chunk
-                ran.append(c)
-        ran.sort()
+    hot, rows = hot_hosts or [], 0
+    if todo:
+        # host skew statistics: pass precomputed stats (corpus-level,
+        # computed once per table — the Iceberg-table-statistics analogue)
+        # or detect now
+        if hot_hosts is None:
+            hot = (
+                hot_hosts_fn()
+                if hot_hosts_fn is not None
+                else detect_hot_hosts(df, cfg.hot_host_frac)
+            )
+        if "bucket" not in df.columns:
+            df = df.withColumn(
+                "bucket", F.pmod(F.xxhash64("url"), F.lit(cfg.n_chunks))
+            )
+        # else: input is pre-bucketed on pmod(xxhash64(url), n_chunks) — a
+        # resume's bucket filter hits the partition column and prunes the
+        # scan (Iceberg bucket-partition analogue). Contract: layout bucket
+        # count == n_chunks.
+        rows = _run_single_pass(df, cfg, out_dir, hot, todo)
 
     return {
-        "chunks_run": ran,
-        "chunks_skipped": skipped,
+        "chunks_run": todo,
+        "chunks_skipped": sorted(done - set(fetched)),
         "chunks_fetched": fetched,
-        "rows": total_rows,
+        "rows": rows,
         "wall_s": round(time.time() - t0, 3),
         "hot_hosts": hot,
-        "config_hash": cfg_hash,
+        "config_hash": cfg.config_hash(),
     }
 
 
@@ -381,68 +275,71 @@ def _run_single_pass(
     cfg: QAConfig,
     out_dir: str,
     hot: list[str],
-    cfg_hash: str,
-    t0: float,
-) -> dict:
-    """ONE fused job: salted repartition → write-audit mapInPandas sink
-    (plans/sink.py) that scores, writes per-chunk parquet, and returns the
-    per-(chunk, partition) metrics rows — no second job, no read-back.
-    Same on-disk layout + manifest as the chunked path, so later invocations
-    resume chunk-wise."""
+    todo: list[int],
+) -> int:
+    """ONE fused job computes every chunk in `todo`: salted repartition →
+    write-audit mapInPandas sink (plans/sink.py) that scores, writes
+    per-chunk parquet, and returns the per-(chunk, partition) metrics rows
+    — no second job, no read-back. Each chunk's manifest is published after
+    the job commits, so a later invocation resumes chunk-wise; a driver
+    killed during the job recomputes every chunk it had not published.
+    Returns the number of rows scored."""
+    t0 = time.time()
+    if len(todo) < cfg.n_chunks:
+        # resume: only the missing buckets (on pre-bucketed input, a
+        # partition filter that prunes the scan)
+        df = df.filter(F.col("bucket").isin(*todo))
     part = salted_repartition(
         df.withColumnRenamed("bucket", "chunk"), cfg.n_partitions, hot, cfg.n_salts
     )
-    # overwrite semantics: clear any uncommitted output of a prior crashed
-    # run (a committed run has a manifest and never gets here)
-    shutil.rmtree(f"{out_dir}/data", ignore_errors=True)
+    # overwrite semantics: clear what a crashed prior run left in the chunks
+    # about to be computed (unpublished part files, abandoned tmps); chunks
+    # outside `todo` are never touched. A resume=False rerun unpublishes a
+    # chunk before clearing it, so no manifest outlives its files if this
+    # job dies.
+    for c in todo:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(manifest_dir(out_dir), f"chunk_{c}.json"))
+        shutil.rmtree(chunk_path(out_dir, c), ignore_errors=True)
     metrics_pdf = qa_sink(part, out_dir, cfg).toPandas()
+    cfg_hash = cfg.config_hash()
     metrics_pdf["config_hash"] = cfg_hash
     _append_parquet_driver_side(metrics_pdf, f"{out_dir}/metrics")
-    per_chunk = {
-        int(c): int(n)
-        for c, n in metrics_pdf.groupby("chunk")["n_docs"].sum().items()
-    }
-    total_rows = sum(per_chunk.values())
+    per_chunk = metrics_pdf.groupby("chunk")["n_docs"].sum()
     wall = round(time.time() - t0, 3)
+    stages = [s.name for s in STAGES]
     import pandas as pd
 
+    # lineage: what ran, over what, producing what (north_rule)
     lineage_pdf = pd.DataFrame(
         [
             {
                 "config_hash": cfg_hash,
-                "chunk": int(c),
-                "stages": ",".join(s.name for s in STAGES),
-                "rows": n,
+                "chunk": c,
+                "stages": ",".join(stages),
+                "rows": int(per_chunk.get(c, 0)),
                 "n_hot_hosts": len(hot),
                 "wall_s": wall,
             }
-            for c, n in sorted(per_chunk.items())
+            for c in todo
         ]
     )
     _append_parquet_driver_side(lineage_pdf, f"{out_dir}/lineage")
-    for c in range(cfg.n_chunks):
+    for c in todo:
         mark_chunk_done(
             out_dir,
             c,
             {
-                "rows": per_chunk.get(c, 0),
+                "rows": int(per_chunk.get(c, 0)),
                 "config_hash": cfg_hash,
-                "stages": [s.name for s in STAGES],
+                "stages": stages,
                 "files": chunk_files(out_dir, c),
                 "metrics": _metrics_records(
                     metrics_pdf[metrics_pdf["chunk"] == c]
                 ),
             },
         )
-    return {
-        "chunks_run": list(range(cfg.n_chunks)),
-        "chunks_skipped": [],
-        "chunks_fetched": [],
-        "rows": total_rows,
-        "wall_s": wall,
-        "hot_hosts": hot,
-        "config_hash": cfg_hash,
-    }
+    return int(per_chunk.sum())
 
 
 def read_scored(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -28,6 +28,7 @@ expression form yields keep=NULL; both count as "not kept" in every metric.
 
 from __future__ import annotations
 
+import logging
 import os
 from decimal import ROUND_HALF_UP, Decimal
 
@@ -36,6 +37,14 @@ from pyspark.sql import DataFrame
 
 from ..functions.qa_fused import SCORE_COLS, _fused_series
 from ..functions.textstats import keep_from
+
+log = logging.getLogger(__name__)
+
+# rows per parquet row group of a sink file. The sink buffers each chunk's
+# rows and writes exactly this many per row group (the remainder at close),
+# so the file layout does not depend on how Spark's Arrow batches mix
+# chunks; 4096 = the session's spark.sql.execution.arrow.maxRecordsPerBatch
+ROW_GROUP_ROWS = 4096
 
 
 def _round4_half_up(x: float) -> float:
@@ -135,7 +144,20 @@ def qa_sink(scored_input: DataFrame, out_dir: str, cfg) -> DataFrame:
         pid, attempt = tc.partitionId(), tc.taskAttemptId()
         schema = _pa_schema()
         writers: dict[int, tuple] = {}
+        pending: dict[int, list] = {}  # per chunk: < ROW_GROUP_ROWS rows
         acc: dict[int, dict] = {}
+
+        def flush(writer, tables: list, final: bool) -> list:
+            """Write every full ROW_GROUP_ROWS group of the buffered tables
+            (and, if final, the remainder); return what stays buffered."""
+            n = sum(t.num_rows for t in tables)
+            end = n if final else n - n % ROW_GROUP_ROWS
+            if end == 0:
+                return tables
+            t = pa.concat_tables(tables).combine_chunks()
+            for off in range(0, end, ROW_GROUP_ROWS):
+                writer.write_table(t.slice(off, ROW_GROUP_ROWS))
+            return [t.slice(end)] if end < n else []
 
         for pdf in batches:
             stats = _fused_series(pdf["text"])
@@ -176,24 +198,26 @@ def qa_sink(scored_input: DataFrame, out_dir: str, cfg) -> DataFrame:
                             continue
                         try:
                             os.remove(stale)
-                        except OSError:
-                            pass
+                        except OSError as e:
+                            log.debug("stale tmp %s not removed: %s", stale, e)
                     tmp = os.path.join(cdir, f".part-{pid:05d}-{attempt}.tmp")
                     final = os.path.join(cdir, f"part-{pid:05d}.parquet")
                     w = (_make_writer(pq, tmp, schema), tmp, final)
                     writers[ck] = w
+                    pending[ck] = []
                     acc[ck] = {
                         "n_docs": 0, "n_keep": 0, "ppl_sum": 0.0, "ppl_n": 0,
                         "w_sum": 0, "w_n": 0, "trip_short": 0,
                         "trip_symbol": 0, "n_scrubbed": 0,
                         "ts_min": None, "ts_max": None,
                     }
-                w[0].write_table(
+                pending[ck].append(
                     pa.Table.from_pandas(
                         g[[c for c, _ in _OUT_COLS]], schema=schema,
                         preserve_index=False,
                     )
                 )
+                pending[ck] = flush(w[0], pending[ck], final=False)
                 a = acc[ck]
                 a["n_docs"] += len(g)
                 a["n_keep"] += int(g["keep"].sum())
@@ -212,6 +236,7 @@ def qa_sink(scored_input: DataFrame, out_dir: str, cfg) -> DataFrame:
 
         rows = []
         for ck, (w, tmp, final) in writers.items():
+            flush(w, pending[ck], final=True)
             w.close()
             os.replace(tmp, final)  # atomic; task retry last-wins
             a = acc[ck]

@@ -6,7 +6,7 @@ Cluster usage (north_rule deployment shape):
     spark-submit --master <cluster> \
         --py-files dist/isimip_qa_spark.zip \
         jobs/qa_submit.py --input s3://pages --output s3://scored \
-        --chunks 64 --mode chunked --window 2024-01-01:2024-02-01
+        --chunks 64 --window 2024-01-01:2024-02-01
 
 On the cluster the input is the Iceberg pages table; locally a parquet
 directory with the same schema. Re-submitting with the same --output resumes

@@ -6,8 +6,9 @@ the calibration/banding constants must stay sane."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def test_bench_queries_all_registered():

@@ -89,7 +89,7 @@ def test_cli_fits_model_and_filters_export(spark, tmp_path):
     rc = main(
         [
             "--input", src, "--output", out,
-            "--chunks", "2", "--mode", "single_pass",
+            "--chunks", "2",
             "--export-dir", exp,
             "--dsir-target", target,
             "--dsir-artifact", model,
@@ -117,7 +117,7 @@ def test_cli_fits_model_and_filters_export(spark, tmp_path):
     rc = main(
         [
             "--input", src, "--output", out,
-            "--chunks", "2", "--mode", "single_pass",
+            "--chunks", "2",
             "--export-dir", exp2,
             "--dsir-artifact", model,
             "--dsir-threshold", str(med),

@@ -27,6 +27,7 @@ from __future__ import annotations
 import os
 import re
 from decimal import Decimal
+from pathlib import Path
 
 import pytest
 
@@ -69,7 +70,7 @@ _ROUND_AGG = re.compile(r"round\s*\(\s*-?\s*(?:avg|sum)\s*\(", re.I)
 def _oracles():
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from isimip_qa_spark.queries import ORACLES, load_all
 
     load_all()

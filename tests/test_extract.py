@@ -64,11 +64,8 @@ def test_pipeline_raw_capture_entry_matches_text_entry(spark, tmp_path):
     from isimip_qa_spark.plans.pipeline import read_scored
     from isimip_qa_spark.sources.pages import pages_df
 
-    cfg = QAConfig(n_chunks=2, n_partitions=4, checkpoint_mode="single_pass")
-    cfg_x = QAConfig(
-        n_chunks=2, n_partitions=4, checkpoint_mode="single_pass",
-        extract_from_html=True,
-    )
+    cfg = QAConfig(n_chunks=2, n_partitions=4)
+    cfg_x = QAConfig(n_chunks=2, n_partitions=4, extract_from_html=True)
     pages = pages_df(spark, 3000, num_partitions=4)
     out_a, out_b = str(tmp_path / "a"), str(tmp_path / "b")
     run_qa(spark, pages, cfg, out_a, with_html=False)

@@ -267,7 +267,7 @@ def test_cli_lang_profiles(spark, tmp_path):
     spark.createDataFrame(pages_pandas(np.arange(400))).write.parquet(src)
     out_g = str(tmp_path / "out_g")
     out_p = str(tmp_path / "out_p")
-    base = ["--input", src, "--chunks", "2", "--mode", "single_pass"]
+    base = ["--input", src, "--chunks", "2"]
     assert main(base + ["--output", out_g]) == 0
     assert (
         main(

@@ -14,7 +14,7 @@ COHORTS = [("en", "es"), ("fr",)]
 
 
 def _cfg():
-    return QAConfig(n_chunks=2, n_partitions=4, checkpoint_mode="single_pass")
+    return QAConfig(n_chunks=2, n_partitions=4)
 
 
 def test_plan_grid_capability_prune():

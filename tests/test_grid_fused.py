@@ -21,7 +21,7 @@ COHORTS = [("en", "es"), ("fr",)]
 
 
 def _cfg():
-    return QAConfig(n_chunks=2, n_partitions=4, checkpoint_mode="single_pass")
+    return QAConfig(n_chunks=2, n_partitions=4)
 
 
 def test_fused_grid_one_scan_per_window(spark, pages_sdf, tmp_path, monkeypatch):

@@ -8,6 +8,7 @@ import importlib
 import json
 import os
 import sys
+from pathlib import Path
 
 
 def _run_json(run_id, eff):
@@ -34,7 +35,7 @@ def _merge(tmp_path, monkeypatch, run):
 
 
 def test_same_run_id_noop_same_value_new_run_kept(tmp_path, monkeypatch):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     base = {
         "levels": {"1": {"docs_per_sec": 1.0}},
         "pages_n": 100000,
@@ -59,7 +60,7 @@ def test_same_run_id_noop_same_value_new_run_kept(tmp_path, monkeypatch):
 
 
 def test_legacy_run_without_id_hash_keyed(tmp_path, monkeypatch):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     base = {
         "levels": {"1": {"docs_per_sec": 1.0}},
         "pages_n": 100000,

@@ -12,7 +12,7 @@ from isimip_qa_spark.plots import metrics_rollup, render_rollup
 
 def test_render_rollup_figure(spark, pages_sdf, tmp_path):
     out = str(tmp_path / "qa")
-    cfg = QAConfig(n_chunks=2, n_partitions=4, checkpoint_mode="single_pass")
+    cfg = QAConfig(n_chunks=2, n_partitions=4)
     run_qa(spark, pages_sdf, cfg, out)
 
     roll = metrics_rollup(spark, out).collect()
@@ -44,7 +44,7 @@ def test_rollup_avg_ppl_exact(spark, pages_sdf, tmp_path):
     from isimip_qa_spark.plans.pipeline import apply_stages, read_scored
 
     out = str(tmp_path / "qa")
-    cfg = QAConfig(n_chunks=2, n_partitions=4, checkpoint_mode="single_pass")
+    cfg = QAConfig(n_chunks=2, n_partitions=4)
     run_qa(spark, pages_sdf, cfg, out)
 
     roll = {r["chunk"]: r["avg_ppl"] for r in metrics_rollup(spark, out).collect()}
@@ -80,7 +80,7 @@ def test_render_grid_svg_matches_golden_bytes(spark, pages_sdf, tmp_path):
     assert golden.lstrip().startswith(b"<svg")  # the backend under contract
 
     out_root = str(tmp_path / "grid")
-    cfg = QAConfig(n_chunks=2, n_partitions=4, checkpoint_mode="single_pass")
+    cfg = QAConfig(n_chunks=2, n_partitions=4)
     windows = [None, ("2024-01-01 00:00:00", "2024-01-10 00:00:00")]
     cohorts = [("en", "es"), ("fr",)]
     run_grid_fused(spark, pages_sdf, cfg, windows, cohorts, out_root)
@@ -101,7 +101,7 @@ def test_render_grid_multi_panel(spark, pages_sdf, tmp_path):
     from isimip_qa_spark.plots import grid_panels, render_grid
 
     out_root = str(tmp_path / "grid")
-    cfg = QAConfig(n_chunks=2, n_partitions=4, checkpoint_mode="single_pass")
+    cfg = QAConfig(n_chunks=2, n_partitions=4)
     windows = [None, ("2024-01-01 00:00:00", "2024-01-10 00:00:00")]
     cohorts = [("en", "es"), ("fr",)]
     run_grid_fused(spark, pages_sdf, cfg, windows, cohorts, out_root)

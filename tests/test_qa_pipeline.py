@@ -7,6 +7,7 @@ import os
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from isimip_qa_spark.plans import QAConfig, run_qa
 from isimip_qa_spark.plans.pipeline import read_scored
@@ -151,58 +152,149 @@ def test_hot_host_detected_and_salted(scored):
     assert "host0.example.org" in summary["hot_hosts"]
 
 
-def test_single_pass_mode_equivalent(spark, pages_sdf, cfg, scored, tmp_path):
-    """single_pass checkpoint mode: same output + manifest as chunked."""
-    from isimip_qa_spark.plans import QAConfig, run_qa
+def _sink_jobs(spark, group: str, n_partitions: int) -> int:
+    """Sink jobs the status tracker recorded under `group`: jobs from the
+    sink's toPandas call site whose final stage ran the n_partitions sink
+    tasks. (Under AQE the salted shuffle's map side runs as a job of its
+    own from the same call site; its stage reads the input partitions.)"""
+    st = spark.sparkContext.statusTracker()
+    n = 0
+    for jid in st.getJobIdsForGroup(group):
+        last = st.getStageInfo(max(st.getJobInfo(jid).stageIds))
+        sink_site = "toPandas at" in last.name and "pipeline.py:" in last.name
+        if sink_site and last.numTasks == n_partitions:
+            n += 1
+    return n
 
-    cfg2 = QAConfig(n_chunks=4, n_partitions=4, checkpoint_mode="single_pass")
-    out = str(tmp_path / "qa_sp")
-    summary = run_qa(spark, pages_sdf, cfg2, out)
-    assert summary["rows"] == 2000
-    assert sorted(summary["chunks_run"]) == [0, 1, 2, 3]
-    got = read_scored(spark, out).toPandas()
-    _, _, chunked = scored
-    a = got.sort_values("url")[["url", "keep", "text_scrubbed", "lang_pred"]]
-    b = chunked.sort_values("url")[["url", "keep", "text_scrubbed", "lang_pred"]]
-    assert a.values.tolist() == b.values.tolist()
-    # a later invocation resumes chunk-wise
-    summary2 = run_qa(spark, pages_sdf, cfg2, out, resume=True)
-    assert summary2["chunks_run"] == []
-    # dropping one manifest re-runs only that chunk (falls back to chunked)
-    os.remove(os.path.join(out, "_manifest", "chunk_1.json"))
-    summary3 = run_qa(spark, pages_sdf, cfg2, out, resume=True)
-    assert summary3["chunks_run"] == [1]
+
+def _in_group(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        return fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_one_sink_job_fresh_and_resume(spark, pages_sdf, cfg, tmp_path):
+    """Every run_qa that computes anything submits exactly ONE sink job:
+    a fresh run computes all chunks in it, a resume only the missing one."""
+    assert pages_sdf.rdd.getNumPartitions() != cfg.n_partitions
+    out = str(tmp_path / "qa_jobs")
+    fresh = _in_group(spark, "qa-fresh", lambda: run_qa(spark, pages_sdf, cfg, out))
+    assert fresh["chunks_run"] == [0, 1, 2, 3] and fresh["rows"] == 2000
+    assert _sink_jobs(spark, "qa-fresh", cfg.n_partitions) == 1
+
+    os.remove(os.path.join(out, "_manifest", "chunk_2.json"))
+    again = _in_group(spark, "qa-resume", lambda: run_qa(spark, pages_sdf, cfg, out))
+    assert again["chunks_run"] == [2]
+    assert again["chunks_skipped"] == [0, 1, 3]
+    assert _sink_jobs(spark, "qa-resume", cfg.n_partitions) == 1
     assert len(read_scored(spark, out).toPandas()) == 2000
 
 
-def test_concurrent_chunks_match_serial(spark, pages_sdf, tmp_path):
-    """n_concurrent_chunks=4 produces the same corpus, manifests, and
-    resume behaviour as the serial chunk loop — job-level parallelism must
-    not change any output byte or the resume granularity."""
-    from isimip_qa_spark.plans import QAConfig, run_qa
-    from isimip_qa_spark.plans.checkpoint import read_manifest
-    from isimip_qa_spark.plans.pipeline import read_scored
+def test_driver_death_between_publishes(
+    spark, pages_sdf, cfg, scored, tmp_path, monkeypatch
+):
+    """A driver that dies after the sink job but between manifest publishes
+    leaves the published chunks intact; the rerun recomputes exactly the
+    unpublished ones (pre-bucketed input: the missing buckets are pruned),
+    leaves no tmp or orphan part file, and scores what a clean run does."""
+    from isimip_qa_spark.plans import pipeline
+    from isimip_qa_spark.plans.checkpoint import chunk_path, read_manifest
 
-    serial = QAConfig(n_chunks=4, n_partitions=4)
-    conc = QAConfig(n_chunks=4, n_partitions=4, n_concurrent_chunks=4)
-    # execution knob is identity-neutral: same artifact hash both ways
-    assert serial.config_hash() == conc.config_hash()
+    src = str(tmp_path / "pages_bucketed")
+    pages_sdf.withColumn(
+        "bucket", F.pmod(F.xxhash64("url"), F.lit(cfg.n_chunks))
+    ).write.partitionBy("bucket").parquet(src)
+    pages = spark.read.parquet(src)
+    out = str(tmp_path / "qa_crash")
 
-    out_s, out_c = str(tmp_path / "s"), str(tmp_path / "c")
-    s1 = run_qa(spark, pages_sdf, serial, out_s)
-    s2 = run_qa(spark, pages_sdf, conc, out_c)
-    assert s1["chunks_run"] == s2["chunks_run"] == [0, 1, 2, 3]
+    publish = pipeline.mark_chunk_done
+    calls = []
 
-    a = read_scored(spark, out_s).orderBy("url").toPandas()
-    b = read_scored(spark, out_c).orderBy("url").toPandas()
-    assert a["url"].tolist() == b["url"].tolist()
-    assert a["keep"].tolist() == b["keep"].tolist()
-    assert a["text_scrubbed"].tolist() == b["text_scrubbed"].tolist()
+    def dies_on_second(*args, **kw):
+        calls.append(args[1])
+        if len(calls) == 2:
+            raise RuntimeError("driver killed")
+        publish(*args, **kw)
 
-    rows_s = {c: m["rows"] for c, m in read_manifest(out_s).items()}
-    rows_c = {c: m["rows"] for c, m in read_manifest(out_c).items()}
-    assert rows_s == rows_c
+    monkeypatch.setattr(pipeline, "mark_chunk_done", dies_on_second)
+    with pytest.raises(RuntimeError, match="driver killed"):
+        run_qa(spark, pages, cfg, out)
+    monkeypatch.undo()
+    assert set(read_manifest(out)) == {0}
 
-    # concurrent run resumes like the serial one
-    again = run_qa(spark, pages_sdf, conc, out_c)
-    assert again["chunks_run"] == [] and sorted(again["chunks_skipped"]) == [0, 1, 2, 3]
+    def stats(chunk):
+        d = chunk_path(out, chunk)
+        return {f: (os.stat(os.path.join(d, f)).st_ino,
+                    os.stat(os.path.join(d, f)).st_mtime_ns) for f in os.listdir(d)}
+
+    before = stats(0)
+    summary = run_qa(spark, pages, cfg, out)
+    assert summary["chunks_run"] == [1, 2, 3]
+    assert summary["chunks_skipped"] == [0]
+    assert stats(0) == before
+
+    man = read_manifest(out)
+    assert set(man) == {0, 1, 2, 3}
+    for c in man:
+        on_disk = sorted(os.listdir(chunk_path(out, c)))
+        assert on_disk == man[c]["files"]
+        assert all(f.startswith("part-") and f.endswith(".parquet") for f in on_disk)
+
+    _, _, clean = scored
+    got = read_scored(spark, out).toPandas()
+    a = got.sort_values("url").reset_index(drop=True)
+    b = clean.sort_values("url").reset_index(drop=True)
+    assert a.columns.tolist() == b.columns.tolist()
+    pd.testing.assert_frame_equal(a, b)
+
+
+def test_rerun_without_resume_unpublishes_first(
+    spark, pages_sdf, cfg, tmp_path, monkeypatch
+):
+    """resume=False recomputes every chunk. If its sink job dies, no chunk
+    is left published over files the run already cleared."""
+    from isimip_qa_spark.plans import pipeline
+    from isimip_qa_spark.plans.checkpoint import completed_chunks
+
+    out = str(tmp_path / "qa_rerun")
+    run_qa(spark, pages_sdf, cfg, out)
+
+    def job_dies(*args, **kw):
+        raise RuntimeError("sink job failed")
+
+    monkeypatch.setattr(pipeline, "qa_sink", job_dies)
+    with pytest.raises(RuntimeError, match="sink job failed"):
+        run_qa(spark, pages_sdf, cfg, out, resume=False)
+    monkeypatch.undo()
+    assert completed_chunks(out) == set()
+    assert run_qa(spark, pages_sdf, cfg, out)["chunks_run"] == [0, 1, 2, 3]
+
+
+def test_sink_row_groups_independent_of_arrow_batch(spark, tmp_path):
+    """Sink files hold ROW_GROUP_ROWS-row row groups (the remainder last)
+    even when Arrow batches are smaller and mix chunks."""
+    import pyarrow.parquet as pq
+
+    from isimip_qa_spark.plans.sink import ROW_GROUP_ROWS
+    from isimip_qa_spark.sources.pages import pages_df
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1000")
+    try:
+        out = str(tmp_path / "qa_rg")
+        cfg = QAConfig(n_chunks=2, n_partitions=1)
+        run_qa(spark, pages_df(spark, 10_000, num_partitions=4), cfg, out, hot_hosts=[])
+    finally:
+        spark.conf.set(key, prev)
+    for c in range(cfg.n_chunks):
+        md = pq.ParquetFile(os.path.join(out, "data", f"chunk={c}", "part-00000.parquet")).metadata
+        sizes = [md.row_group(i).num_rows for i in range(md.num_row_groups)]
+        n = md.num_rows
+        assert n > ROW_GROUP_ROWS
+        assert sizes == [ROW_GROUP_ROWS] * (n // ROW_GROUP_ROWS) + (
+            [n % ROW_GROUP_ROWS] if n % ROW_GROUP_ROWS else []
+        )

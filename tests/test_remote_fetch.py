@@ -12,7 +12,6 @@ from isimip_qa_spark.plans.pipeline import read_scored
 def _cfg(**kw):
     kw.setdefault("n_chunks", 2)
     kw.setdefault("n_partitions", 4)
-    kw.setdefault("checkpoint_mode", "chunked")
     return QAConfig(**kw)
 
 

@@ -36,7 +36,6 @@ def run_level(cpus: int, pages_n: int, reps: int | None = None) -> dict:
         SPARK_GRAFT_CPUS=str(cpus),
         BENCH_PAGES_N=str(pages_n),
         BENCH_QA_ONLY="1",
-        BENCH_MODES=os.environ.get("BENCH_MODES", "single_pass"),
         BENCH_REPS=str(reps or os.environ.get("BENCH_REPS", "3")),
     )
     cmd = [sys.executable, os.path.join(REPO, "bench.py")]
@@ -124,7 +123,6 @@ def main() -> None:
             str(c): {
                 "docs_per_sec": r["value"],
                 "qa_single_pass_sec": r.get("qa_single_pass_sec"),
-                "qa_chunked_sec": r.get("qa_pipeline_sec"),
             }
             for c, r in res.items()
         },
