@@ -210,15 +210,13 @@ def ensure_pages(spark, n: int) -> str:
     return path
 
 
-def qa_walls(spark, pages, hot_hosts, measured_reps: int = 3) -> list:
+def qa_walls(spark, pages, measured_reps: int = 3) -> list:
     """One warm-up run (python-worker spin-up, page cache), then the wall
     times of `measured_reps` runs. Callers take the MIN: the sandbox VM has
     noisy-neighbor spikes of 2-3× (hypervisor steal is visible in
     /proc/stat) that only ever ADD time, so the minimum is the unbiased
     estimate of engine cost — the full rep list feeds the min/median spread
-    the JSON now carries so a noisy window is visible in the artifact.
-    Host-skew statistics are corpus-level (computed once per table, like
-    Iceberg table stats), so they're passed in, not re-detected per run."""
+    the JSON now carries so a noisy window is visible in the artifact."""
     from isimip_qa_spark.plans import QAConfig, run_qa
 
     walls = []
@@ -226,15 +224,15 @@ def qa_walls(spark, pages, hot_hosts, measured_reps: int = 3) -> list:
         out_dir = tempfile.mkdtemp(prefix="bench_qa_", dir=TMP)
         cfg = QAConfig(n_chunks=QA_CHUNKS, n_partitions=CPUS)
         t0 = time.time()
-        run_qa(spark, pages, cfg, out_dir, resume=False, hot_hosts=hot_hosts)
+        run_qa(spark, pages, cfg, out_dir, resume=False)
         if rep > 0:  # rep 0 = warm-up
             walls.append(time.time() - t0)
         shutil.rmtree(out_dir, ignore_errors=True)
     return walls
 
 
-def time_qa(spark, pages, hot_hosts, measured_reps: int = 3) -> float:
-    return min(qa_walls(spark, pages, hot_hosts, measured_reps))
+def time_qa(spark, pages, measured_reps: int = 3) -> float:
+    return min(qa_walls(spark, pages, measured_reps))
 
 
 # --- noise calibration (VERDICT r4 'Next round' #3) ------------------------
@@ -255,11 +253,8 @@ CAL_REF_SEC = 0.85  # clean-window floor, 2026-08-21 (local[32] + tmpfs,
 def time_calibration(spark, reps: int = 3) -> dict:
     import statistics
 
-    from isimip_qa_spark.plans.skew import detect_hot_hosts
-
     pages = spark.read.parquet(ensure_pages(spark, CAL_N))
-    hot = detect_hot_hosts(pages.select("url"), 0.05)
-    walls = qa_walls(spark, pages, hot, reps)
+    walls = qa_walls(spark, pages, reps)
     return {
         "min_sec": round(min(walls), 3),
         "median_sec": round(statistics.median(walls), 3),
@@ -334,14 +329,11 @@ def main() -> None:
         result["queries_total_sec"] = round(sum(per_query.values()), 3)
 
     if os.environ.get("BENCH_SKIP_PAGES") != "1":
-        from isimip_qa_spark.plans.skew import detect_hot_hosts
-
         pages_path = ensure_pages(spark, PAGES_N)
         pages = spark.read.parquet(pages_path)
-        hot = detect_hot_hosts(pages.select("url"), 0.05)
         result["qa_docs"] = PAGES_N
         reps = int(os.environ.get("BENCH_REPS", "3"))
-        fused = time_qa(spark, pages, hot, reps)
+        fused = time_qa(spark, pages, reps)
         result["qa_single_pass_sec"] = round(fused, 3)
         result["value"] = round(PAGES_N / fused, 2)  # headline throughput
         result[f"{_band(PAGES_N)}_docs_per_sec"] = result["value"]
@@ -351,8 +343,7 @@ def main() -> None:
         # each band under its own key instead of a prose footnote
         if PAGES_N != 100_000 and os.environ.get("BENCH_SKIP_100K") != "1":
             small = spark.read.parquet(ensure_pages(spark, 100_000))
-            hot_small = detect_hot_hosts(small.select("url"), 0.05)
-            t100k = time_qa(spark, small, hot_small, reps)
+            t100k = time_qa(spark, small, reps)
             result["qa_100k_docs_per_sec"] = round(100_000 / t100k, 2)
     else:
         result["value"] = result.get("queries_total_sec", 0.0)

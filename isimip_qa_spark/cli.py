@@ -19,7 +19,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--input", required=True, help="pages parquet/Iceberg path")
     p.add_argument("--output", required=True, help="output root (data/metrics/lineage)")
     p.add_argument("--chunks", type=int, default=8)
-    p.add_argument("--partitions", type=int, default=0, help="0 = default parallelism")
     p.add_argument("--window", default=None, help="warc_ts window lo:hi (dates)")
     p.add_argument("--langs", default=None, help="cohort langs, comma-separated")
     # multi-scope grid (reference planning loop, main.py:115-128): several
@@ -181,7 +180,6 @@ def main(argv=None) -> int:
     window = _parse_window(args.window)
     cfg = QAConfig(
         n_chunks=args.chunks,
-        n_partitions=args.partitions or spark.sparkContext.defaultParallelism,
         window=window,
         cohort_langs=tuple(args.langs.split(",")) if args.langs else None,
         extract_from_html=args.from_html,

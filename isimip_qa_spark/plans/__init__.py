@@ -1,5 +1,5 @@
 """Driver-side orchestration: the QA stage DAG, checkpoint/resume, skew
-salting, and lineage/metrics emission.
+salting for host-keyed aggregates, and lineage/metrics emission.
 
 This is the Spark recast of the reference's main loop
 (/root/reference/isimip_qa/main.py:115-136): planning = building the stage

@@ -72,9 +72,9 @@ class QAConfig:
     extract_from_html: bool = False
     # execution
     n_chunks: int = 8  # checkpoint granularity (resume unit)
+    # accepted (and hashed) but no longer shapes the QA pass, which scores
+    # each scan split in place; kept because perfbench/workloads.py passes it
     n_partitions: int = 32
-    hot_host_frac: float = 0.05  # hosts above this share of rows get salted
-    n_salts: int = 8
 
     def profile_thresholds(self) -> dict[str, tuple[dict[str, float], float]]:
         """lang_profiles as {threshold field: ({lang: value}, fallback)}: a

@@ -15,11 +15,6 @@ Capability pruning (the reference's has_region/has_period predicates,
 models.py:139-145): a cohort whose languages are all outside
 cfg.allowed_langs can keep nothing — the combo is planned but marked
 inapplicable and skipped before any job is submitted.
-
-Shared statistics: hot hosts are detected ONCE over the unscoped corpus and
-passed to every combo (the reference's process-wide mask cache analogue,
-config.py:18-19) — scoped subsets of a crawl share the same host skew, and
-re-detecting per combo would re-scan the table per grid cell.
 """
 
 from __future__ import annotations
@@ -34,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .checkpoint import completed_chunks
 from .config import QAConfig
 from .pipeline import run_qa
-from .skew import detect_hot_hosts
+from .skew import detect_hot_hosts  # noqa: F401  unused; perfbench/run.py wraps it
 
 Window = tuple[str, str] | None
 Cohort = tuple[str, ...] | None
@@ -88,7 +83,6 @@ def run_grid(
     cohorts: list[Cohort],
     out_root: str,
     resume: bool = True,
-    hot_hosts: list[str] | None = None,
     cache_base: str | None = None,
     cohort_names: list[str | None] | None = None,
 ) -> dict:
@@ -102,20 +96,6 @@ def run_grid(
     instead of recomputing (checkpoint.fetch_chunk)."""
     t0 = time.time()
     combos = plan_grid(base_cfg, windows, cohorts, cohort_names)
-
-    # one corpus-level scan for skew stats, shared by all combos — detected
-    # LAZILY via a memoized provider that run_qa calls only when a combo
-    # actually reaches its compute path, so a grid fully satisfied by
-    # resume OR cache fetch never pays the scan (the exists()-skip
-    # semantics, reference main.py:126-128; ADVICE r2)
-    detected: list[list[str]] = []
-
-    def _hot_provider() -> list[str]:
-        if hot_hosts is not None:
-            return hot_hosts
-        if not detected:
-            detected.append(detect_hot_hosts(pages, base_cfg.hot_host_frac))
-        return detected[0]
 
     results: dict[str, dict] = {}
     for label, cfg, applicable in combos:
@@ -135,9 +115,7 @@ def run_grid(
             cfg,
             cdir,
             resume=resume,
-            hot_hosts=hot_hosts,
             cache_base=combo_cache,
-            hot_hosts_fn=_hot_provider,
         )
         summary["status"] = (
             "resumed" if already == cfg.n_chunks else
@@ -158,9 +136,6 @@ def run_grid(
             r.get("status") == "inapplicable" for r in results.values()
         ),
         "n_fetched": sum(r.get("status") == "fetched" for r in results.values()),
-        "hot_hosts": hot_hosts
-        if hot_hosts is not None
-        else (detected[0] if detected else []),
         "wall_s": round(time.time() - t0, 3),
     }
     _write_grid_manifest(out_root, results)
@@ -216,7 +191,7 @@ def read_combo_scored(spark: SparkSession, cdir: str) -> DataFrame:
     return df
 
 
-def _derive_combo(spark, wdir: str, cdir: str, cfg: QAConfig, wsum: dict) -> dict:
+def _derive_combo(spark, wdir: str, cdir: str, cfg: QAConfig) -> dict:
     """Materialise one combo's artifact set from the shared window staging:
     per-(chunk, partition) metrics, lineage, chunk manifests, and the
     shared-data marker. One Spark job reading only metric columns + lang."""
@@ -261,7 +236,6 @@ def _derive_combo(spark, wdir: str, cdir: str, cfg: QAConfig, wsum: dict) -> dic
                 "chunk": int(c),
                 "stages": ",".join(s.name for s in STAGES),
                 "rows": int(per_chunk.get(c, 0)),
-                "n_hot_hosts": len(wsum.get("hot_hosts") or []),
                 "wall_s": wall,
             }
             for c in range(cfg.n_chunks)
@@ -315,7 +289,6 @@ def run_grid_fused(
     cohorts: list[Cohort],
     out_root: str,
     resume: bool = True,
-    hot_hosts: list[str] | None = None,
     cohort_names: list[str | None] | None = None,
 ) -> dict:
     """Window-fused grid: corpus scan/score job count == n_windows, never
@@ -324,15 +297,6 @@ def run_grid_fused(
     (manifests)."""
     t0 = time.time()
     combos = plan_grid(base_cfg, windows, cohorts, cohort_names)
-
-    detected: list[list[str]] = []
-
-    def _hot_provider() -> list[str]:
-        if hot_hosts is not None:
-            return hot_hosts
-        if not detected:
-            detected.append(detect_hot_hosts(pages, base_cfg.hot_host_frac))
-        return detected[0]
 
     results: dict[str, dict] = {}
     n_window_jobs = 0
@@ -366,19 +330,8 @@ def run_grid_fused(
             or len(completed_chunks(combo_dir(out_root, label, cfg)))
             < cfg.n_chunks
         ]
-        if todo:
-            wsum = run_qa(
-                spark,
-                pages,
-                wcfg,
-                wdir,
-                resume=resume,
-                hot_hosts=hot_hosts,
-                hot_hosts_fn=_hot_provider,
-            )
-            n_window_jobs += 1 if wsum["chunks_run"] else 0
-        else:
-            wsum = {"hot_hosts": hot_hosts or []}
+        if todo and run_qa(spark, pages, wcfg, wdir, resume=resume)["chunks_run"]:
+            n_window_jobs += 1
         for label, cfg in wcombos:
             cdir = combo_dir(out_root, label, cfg)
             if resume and len(completed_chunks(cdir)) == cfg.n_chunks:
@@ -388,7 +341,7 @@ def run_grid_fused(
                     "rows": 0,
                 }
                 continue
-            results[label] = _derive_combo(spark, wdir, cdir, cfg, wsum)
+            results[label] = _derive_combo(spark, wdir, cdir, cfg)
         _write_grid_manifest(out_root, results)
 
     out = {
@@ -399,9 +352,6 @@ def run_grid_fused(
         "n_inapplicable": sum(
             r.get("status") == "inapplicable" for r in results.values()
         ),
-        "hot_hosts": hot_hosts
-        if hot_hosts is not None
-        else (detected[0] if detected else []),
         "wall_s": round(time.time() - t0, 3),
     }
     _write_grid_manifest(out_root, results)

@@ -1,13 +1,16 @@
-"""The fused QA DAG: scope filters → salted repartition → all stages in one
-pass → write-audit sink + per-partition metrics/lineage, as ONE Spark job
-over the chunks a run still has to compute (chunk manifests are the resume
-unit, plans/checkpoint.py).
+"""The fused QA DAG: scope filters → all stages in one pass → write-audit
+sink + per-partition metrics/lineage, as ONE Spark job over the chunks a
+run still has to compute (chunk manifests are the resume unit,
+plans/checkpoint.py).
 
 Physical shape (the properties that carry to 1000 executors / 100 TB):
 - ONE scan feeds all stages (reference's shared scan, main.py:130-136):
   stages only add columns, so the whole DAG is a single narrow pipeline —
-  scan → project(+pandas UDFs) → write. No shuffle except the deliberate
-  salted repartition.
+  scan → filter → mapInPandas(sink) → write, no shuffle. Each sink task
+  scores one scan split in place: keep is per document and metrics are per
+  (chunk, partition), so nothing needs a host key, and url-hash-bucketed
+  input already has balanced splits. A retried task rereads the same
+  files in the same order, so it rewrites the same bytes.
 - Scope filters (warc_ts window = Period, lang cohort = Region) are applied
   before anything else → parquet/Iceberg pushdown + partition pruning.
 - `html` is dropped immediately unless a stage needs it (column pruning
@@ -40,7 +43,7 @@ from .checkpoint import (
 )
 from .config import QAConfig
 from .sink import METRICS_SCHEMA, qa_sink
-from .skew import detect_hot_hosts, salted_repartition
+from .skew import detect_hot_hosts  # noqa: F401  unused; perfbench/run.py wraps it
 from .stages import FUSED_STAGES, STAGES
 
 # pandas dtypes of METRICS_SCHEMA's numeric columns — fetched-chunk metrics
@@ -95,7 +98,6 @@ def _replay_fetched_artifacts(out_dir: str, chunk: int, fetch_wall: float) -> No
                 "chunk": chunk,
                 "stages": ",".join(man.get("stages", [])),
                 "rows": man.get("rows", 0),
-                "n_hot_hosts": 0,  # fetched, no skew scan ran locally
                 "wall_s": round(fetch_wall, 3),
             }
         ]
@@ -187,19 +189,12 @@ def run_qa(
     out_dir: str,
     resume: bool = True,
     with_html: bool = False,
-    hot_hosts: list[str] | None = None,
     cache_base: str | None = None,
-    hot_hosts_fn=None,
 ) -> dict:
     """Run the full QA DAG with chunk-wise checkpointing: chunks already
     committed (or fetched from `cache_base`) are skipped, and every chunk
     still missing is computed by ONE sink job (_run_single_pass), whose
     per-chunk manifests are published after it commits.
-
-    `hot_hosts_fn`: optional lazy provider for corpus-level skew stats —
-    called ONLY if this run actually reaches the compute path (a run fully
-    satisfied by resume or cache fetch never pays the detection scan).
-    run_grid passes a memoized provider so a grid detects at most once.
 
     Returns a summary dict: chunks run/skipped/fetched, rows, wall seconds.
     The scored corpus lands in out_dir/data/chunk=K/; per-partition metrics
@@ -235,20 +230,11 @@ def run_qa(
                 fetched.append(c)
         done = completed_chunks(out_dir)
 
-    # a fully-resumed run computes nothing (and never scans for skew
-    # stats) — the reference's exists()-skip, main.py:126-128
+    # a fully-resumed run computes nothing — the reference's exists()-skip,
+    # main.py:126-128
     todo = [c for c in range(cfg.n_chunks) if c not in done]
-    hot, rows = hot_hosts or [], 0
+    rows = 0
     if todo:
-        # host skew statistics: pass precomputed stats (corpus-level,
-        # computed once per table — the Iceberg-table-statistics analogue)
-        # or detect now
-        if hot_hosts is None:
-            hot = (
-                hot_hosts_fn()
-                if hot_hosts_fn is not None
-                else detect_hot_hosts(df, cfg.hot_host_frac)
-            )
         if "bucket" not in df.columns:
             df = df.withColumn(
                 "bucket", F.pmod(F.xxhash64("url"), F.lit(cfg.n_chunks))
@@ -257,7 +243,7 @@ def run_qa(
         # resume's bucket filter hits the partition column and prunes the
         # scan (Iceberg bucket-partition analogue). Contract: layout bucket
         # count == n_chunks.
-        rows = _run_single_pass(df, cfg, out_dir, hot, todo)
+        rows = _run_single_pass(df, cfg, out_dir, todo)
 
     return {
         "chunks_run": todo,
@@ -265,7 +251,6 @@ def run_qa(
         "chunks_fetched": fetched,
         "rows": rows,
         "wall_s": round(time.time() - t0, 3),
-        "hot_hosts": hot,
         "config_hash": cfg.config_hash(),
     }
 
@@ -274,24 +259,21 @@ def _run_single_pass(
     df: DataFrame,
     cfg: QAConfig,
     out_dir: str,
-    hot: list[str],
     todo: list[int],
 ) -> int:
-    """ONE fused job computes every chunk in `todo`: salted repartition →
-    write-audit mapInPandas sink (plans/sink.py) that scores, writes
-    per-chunk parquet, and returns the per-(chunk, partition) metrics rows
-    — no second job, no read-back. Each chunk's manifest is published after
-    the job commits, so a later invocation resumes chunk-wise; a driver
-    killed during the job recomputes every chunk it had not published.
-    Returns the number of rows scored."""
+    """ONE fused job computes every chunk in `todo`: each scan split goes
+    straight into the write-audit mapInPandas sink (plans/sink.py), which
+    scores it, writes per-chunk parquet, and returns the per-(chunk,
+    partition) metrics rows — no shuffle, no second job, no read-back. Each
+    chunk's manifest is published after the job commits, so a later
+    invocation resumes chunk-wise; a driver killed during the job
+    recomputes every chunk it had not published. Returns the number of
+    rows scored."""
     t0 = time.time()
     if len(todo) < cfg.n_chunks:
         # resume: only the missing buckets (on pre-bucketed input, a
         # partition filter that prunes the scan)
         df = df.filter(F.col("bucket").isin(*todo))
-    part = salted_repartition(
-        df.withColumnRenamed("bucket", "chunk"), cfg.n_partitions, hot, cfg.n_salts
-    )
     # overwrite semantics: clear what a crashed prior run left in the chunks
     # about to be computed (unpublished part files, abandoned tmps); chunks
     # outside `todo` are never touched. A resume=False rerun unpublishes a
@@ -301,7 +283,9 @@ def _run_single_pass(
         with contextlib.suppress(FileNotFoundError):
             os.remove(os.path.join(manifest_dir(out_dir), f"chunk_{c}.json"))
         shutil.rmtree(chunk_path(out_dir, c), ignore_errors=True)
-    metrics_pdf = qa_sink(part, out_dir, cfg).toPandas()
+    metrics_pdf = qa_sink(
+        df.withColumnRenamed("bucket", "chunk"), out_dir, cfg
+    ).toPandas()
     cfg_hash = cfg.config_hash()
     metrics_pdf["config_hash"] = cfg_hash
     _append_parquet_driver_side(metrics_pdf, f"{out_dir}/metrics")
@@ -318,7 +302,6 @@ def _run_single_pass(
                 "chunk": c,
                 "stages": ",".join(stages),
                 "rows": int(per_chunk.get(c, 0)),
-                "n_hot_hosts": len(hot),
                 "wall_s": wall,
             }
             for c in todo

@@ -1,9 +1,10 @@
 """Write-audit sink: the whole QA pass as ONE Spark job.
 
-`scan → scope filter → salted repartition → mapInPandas(sink)` where the
-sink computes the fused QA kernel (functions/qa_fused.py), derives the
-keep/drop decision, streams the scored rows into per-chunk parquet files
-with pyarrow, and returns ONLY the per-(chunk, partition) metrics rows.
+`scan → scope filter → mapInPandas(sink)`, no shuffle: each sink task
+scores one scan split in place. The sink computes the fused QA kernel
+(functions/qa_fused.py), derives the keep/drop decision, streams the scored
+rows into per-chunk parquet files with pyarrow, and returns ONLY the
+per-(chunk, partition) metrics rows.
 
 Why this shape (measured on this sandbox, reasoned for 1000 executors):
 - `text` crosses the JVM→Python boundary exactly once and nothing
@@ -126,8 +127,8 @@ def _make_writer(pq, path: str, schema):
 
 
 def qa_sink(scored_input: DataFrame, out_dir: str, cfg) -> DataFrame:
-    """Attach the sink to a repartitioned pages DataFrame (columns url,
-    warc_ts, text, lang, chunk). Returns the (lazy) metrics DataFrame —
+    """Attach the sink to a scoped pages DataFrame (columns url, warc_ts,
+    text, lang, chunk). Returns the (lazy) metrics DataFrame —
     running any action on it executes the whole write."""
     data_dir = os.path.join(out_dir, "data")
     # trip counters are diagnostics against the GLOBAL thresholds by

@@ -15,7 +15,7 @@ Scale notes:
   running total is a window ordered by (quality desc, doc_id) — a per-group
   sort is inherent to exact budget filling. At crawl scale the group key is
   the url host: bounded per-group row counts (a host's docs fit a task),
-  with the same hot-host salting discipline the QA pipeline uses for the
+  with the hot-host salting of plans/skew.py for the
   few degenerate hosts; an approximate two-pass variant (quality-threshold
   binary search, no per-group sort) is the relaxation if a group ever
   exceeds task memory.
@@ -283,8 +283,8 @@ def host_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     single boilerplate-heavy host from dominating the corpus.
 
     Scale shape: one exchange keyed on source; rank is a window per source.
-    Hosts are Zipfian, so the hot-host discipline applies: the QA pipeline's
-    measured salting (plans/skew.py) bounds the skew, and because row_number
+    Hosts are Zipfian, so the hot-host discipline applies: the measured
+    salting of plans/skew.py bounds the skew, and because row_number
     only needs the per-host top QUOTA, a pre-aggregation that keeps each
     map partition's local top-QUOTA before the exchange caps the shuffle at
     QUOTA × partitions rows per host — at crawl scale enable it by feeding

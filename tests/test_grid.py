@@ -104,26 +104,23 @@ def test_grid_runs_resumes_and_survives_kill(spark, pages_sdf, tmp_path, monkeyp
         assert set(json.load(f).values()) == {"resumed"}
 
 
-def test_fully_fetched_grid_skips_hot_host_scan(spark, pages_sdf, tmp_path, monkeypatch):
-    """ADVICE r2: a grid fully satisfiable from cache_base must not pay the
-    corpus-level skew scan — detection is a lazy memoized provider called
-    only when a combo reaches its compute path."""
-    import isimip_qa_spark.plans.grid as grid_mod
-    import isimip_qa_spark.plans.pipeline as pipe_mod
-
+def test_fetch_only_grid_submits_no_spark_job(spark, pages_sdf, tmp_path):
+    """A grid fully satisfiable from cache_base submits zero Spark jobs:
+    every combo is fetched, so nothing scans the corpus (the reference's
+    exists()-skip, main.py:126-128)."""
     base = _cfg()
     cache_root = str(tmp_path / "cacheroot")
     run_grid(spark, pages_sdf, base, [None], [("en",)], cache_root)
 
-    def _boom(*a, **k):
-        raise AssertionError("hot-host detection ran on a fetch-only grid")
-
-    monkeypatch.setattr(grid_mod, "detect_hot_hosts", _boom)
-    monkeypatch.setattr(pipe_mod, "detect_hot_hosts", _boom)
     out_root = str(tmp_path / "fresh")
-    s = run_grid(
-        spark, pages_sdf, base, [None], [("en",)], out_root,
-        cache_base=cache_root,
-    )
+    sc = spark.sparkContext
+    sc.setJobGroup("fetch-only-grid", "fetch-only-grid")
+    try:
+        s = run_grid(
+            spark, pages_sdf, base, [None], [("en",)], out_root,
+            cache_base=cache_root,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert s["combos"][combo_label(None, ("en",))]["status"] == "fetched"
-    assert s["hot_hosts"] == []  # no detection ran, none was passed
+    assert sc.statusTracker().getJobIdsForGroup("fetch-only-grid") == []

@@ -75,18 +75,44 @@ def test_python_stages_are_arrow_batched(spark, sf_dir):
 
 
 def test_pipeline_is_single_narrow_pass(spark, pages_sdf):
-    """The fused QA DAG: exactly ONE exchange (the deliberate salted
-    repartition) and ONE ArrowEvalPython (the fused UDF) — stages add
-    columns without extra shuffles (the reference's shared scan)."""
+    """The fused QA DAG: no exchange and ONE ArrowEvalPython (the fused
+    UDF) — stages add columns without shuffles (the reference's shared
+    scan)."""
     from isimip_qa_spark.plans.config import QAConfig
     from isimip_qa_spark.plans.pipeline import apply_stages
-    from isimip_qa_spark.plans.skew import salted_repartition
 
-    cfg = QAConfig()
-    df = salted_repartition(pages_sdf.drop("html"), 4, ["host0.example.org"], 8)
-    plan = plan_of(apply_stages(df, cfg))
-    assert plan.count("Exchange") == 1
+    plan = plan_of(apply_stages(pages_sdf.drop("html"), QAConfig()))
+    assert "Exchange" not in plan
     assert plan.count("ArrowEvalPython") == 1
+
+
+def test_qa_sink_reads_the_scan_directly(spark, pages_sdf, tmp_path, monkeypatch):
+    """run_qa hands the sink the scoped, bucket-filtered scan itself:
+    scan → filter → mapInPandas with no Exchange, so each sink task scores
+    one scan split in place."""
+    from isimip_qa_spark.plans import pipeline
+    from isimip_qa_spark.plans.config import QAConfig
+
+    src = str(tmp_path / "pages")
+    pages_sdf.write.parquet(src)
+    cfg = QAConfig(n_chunks=2, n_partitions=4, cohort_langs=("en", "fr"))
+    sink = pipeline.qa_sink
+    seen = []
+
+    def spy(df, out_dir, run_cfg):
+        seen.append(df)
+        metrics = sink(df, out_dir, run_cfg)
+        seen.append(metrics)
+        return metrics
+
+    monkeypatch.setattr(pipeline, "qa_sink", spy)
+    summary = pipeline.run_qa(spark, spark.read.parquet(src), cfg, str(tmp_path / "qa"))
+    assert summary["chunks_run"] == [0, 1]
+    given, metrics = seen
+    assert "Exchange" not in plan_of(given)
+    plan = plan_of(metrics)
+    assert "Exchange" not in plan
+    assert "MapInPandas" in plan and "FileScan parquet" in plan
 
 
 def test_ann_broadcasts_queries(spark, sf_dir):

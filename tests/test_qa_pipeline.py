@@ -147,22 +147,18 @@ def test_window_and_cohort_pushdown(spark, pages_sdf, tmp_path):
     assert "PushedFilters" in plan and "warc_ts" in plan
 
 
-def test_hot_host_detected_and_salted(scored):
-    _, summary, _ = scored
-    assert "host0.example.org" in summary["hot_hosts"]
-
-
-def _sink_jobs(spark, group: str, n_partitions: int) -> int:
-    """Sink jobs the status tracker recorded under `group`: jobs from the
-    sink's toPandas call site whose final stage ran the n_partitions sink
-    tasks. (Under AQE the salted shuffle's map side runs as a job of its
-    own from the same call site; its stage reads the input partitions.)"""
+def _sink_jobs(spark, group: str, n_splits: int) -> int:
+    """Jobs the status tracker recorded under `group` from the sink's
+    toPandas call site. Each must be one stage of one task per input split:
+    the sink scores each scan split in place, so no shuffle map job shares
+    the call site."""
     st = spark.sparkContext.statusTracker()
     n = 0
     for jid in st.getJobIdsForGroup(group):
-        last = st.getStageInfo(max(st.getJobInfo(jid).stageIds))
-        sink_site = "toPandas at" in last.name and "pipeline.py:" in last.name
-        if sink_site and last.numTasks == n_partitions:
+        stage_ids = st.getJobInfo(jid).stageIds
+        last = st.getStageInfo(max(stage_ids))
+        if "toPandas at" in last.name and "pipeline.py:" in last.name:
+            assert len(stage_ids) == 1 and last.numTasks == n_splits
             n += 1
     return n
 
@@ -179,17 +175,18 @@ def _in_group(spark, group: str, fn):
 def test_one_sink_job_fresh_and_resume(spark, pages_sdf, cfg, tmp_path):
     """Every run_qa that computes anything submits exactly ONE sink job:
     a fresh run computes all chunks in it, a resume only the missing one."""
-    assert pages_sdf.rdd.getNumPartitions() != cfg.n_partitions
+    n_splits = pages_sdf.rdd.getNumPartitions()
+    assert n_splits != cfg.n_partitions
     out = str(tmp_path / "qa_jobs")
     fresh = _in_group(spark, "qa-fresh", lambda: run_qa(spark, pages_sdf, cfg, out))
     assert fresh["chunks_run"] == [0, 1, 2, 3] and fresh["rows"] == 2000
-    assert _sink_jobs(spark, "qa-fresh", cfg.n_partitions) == 1
+    assert _sink_jobs(spark, "qa-fresh", n_splits) == 1
 
     os.remove(os.path.join(out, "_manifest", "chunk_2.json"))
     again = _in_group(spark, "qa-resume", lambda: run_qa(spark, pages_sdf, cfg, out))
     assert again["chunks_run"] == [2]
     assert again["chunks_skipped"] == [0, 1, 3]
-    assert _sink_jobs(spark, "qa-resume", cfg.n_partitions) == 1
+    assert _sink_jobs(spark, "qa-resume", n_splits) == 1
     assert len(read_scored(spark, out).toPandas()) == 2000
 
 
@@ -275,7 +272,8 @@ def test_rerun_without_resume_unpublishes_first(
 
 def test_sink_row_groups_independent_of_arrow_batch(spark, tmp_path):
     """Sink files hold ROW_GROUP_ROWS-row row groups (the remainder last)
-    even when Arrow batches are smaller and mix chunks."""
+    even when Arrow batches are smaller and mix chunks (a one-split input:
+    its one sink task sees every chunk in each 1000-row batch)."""
     import pyarrow.parquet as pq
 
     from isimip_qa_spark.plans.sink import ROW_GROUP_ROWS
@@ -287,7 +285,7 @@ def test_sink_row_groups_independent_of_arrow_batch(spark, tmp_path):
     try:
         out = str(tmp_path / "qa_rg")
         cfg = QAConfig(n_chunks=2, n_partitions=1)
-        run_qa(spark, pages_df(spark, 10_000, num_partitions=4), cfg, out, hot_hosts=[])
+        run_qa(spark, pages_df(spark, 10_000, num_partitions=1), cfg, out)
     finally:
         spark.conf.set(key, prev)
     for c in range(cfg.n_chunks):

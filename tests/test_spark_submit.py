@@ -45,7 +45,7 @@ def test_spark_submit_py_files_roundtrip(tmp_path):
         "--py-files", zip_path,
         os.path.join(REPO, "jobs", "qa_submit.py"),
         "--input", inp, "--output", out,
-        "--chunks", "2", "--partitions", "4",
+        "--chunks", "2",
     ]
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)  # the zip must be self-sufficient

@@ -85,9 +85,9 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     pages = spark.read.parquet(bench.ensure_pages(spark, n)).drop("html")
-    cfg = QAConfig(n_partitions=nparts)
+    cfg = QAConfig()
 
-    hot = detect_hot_hosts(pages.select("url"), cfg.hot_host_frac)
+    hot = detect_hot_hosts(pages.select("url"))
     top_share = (
         pages.groupBy(host_expr().alias("h"))
         .count()
@@ -99,7 +99,7 @@ def main() -> None:
 
     layouts = {
         "host_only": pages.repartition(nparts, host_expr()),
-        "salted": salted_repartition(pages, nparts, hot, cfg.n_salts),
+        "salted": salted_repartition(pages, nparts, hot),
         "round_robin": pages.repartition(nparts),
     }
     out = {
@@ -129,7 +129,7 @@ def main() -> None:
                 f"QA pass (min of 2) |\n|---|---|---|---|---|\n{rows}\n\n"
                 f"`host_only` puts the hot host's rows in one task (straggler "
                 f"= the whole partition); `salted` spreads them over "
-                f"{QAConfig().n_salts} salt buckets, restoring near-uniform "
+                "8 salt buckets, restoring near-uniform "
                 f"balance at the cost of a two-phase final agg for per-host "
                 f"rollups.\n"
             )
