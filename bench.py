@@ -12,8 +12,6 @@ Env knobs:
     SPARK_GRAFT_SF_DIR   table dir     (default /root/testdata/sf0.1)
     SPARK_GRAFT_CPUS     local[N]      (default 32)
     BENCH_PAGES_N        pages corpus  (default 1_000_000)
-    BENCH_PAGES_CODEC    input parquet codec (default snappy; the
-                         scan-path lever of the 2->8 scaling study)
     BENCH_SKIP_PAGES=1   skip the QA-pipeline segment
     BENCH_SKIP_100K=1    skip the extra 100k-band measurement
     BENCH_QA_ONLY=1      skip the per-query segment (scaling runs)
@@ -182,31 +180,25 @@ BENCH_QUERIES = [
 
 def ensure_pages(spark, n: int) -> str:
     """Generate-once pages parquet, laid out pre-bucketed on the QA chunk
-    key (marker-gated, deterministic content). BENCH_PAGES_CODEC overrides
-    the input parquet codec (default snappy) — the scan-path lever of the
-    2->8 scaling study (BASELINE.md): scan DEcompression CPU scales with
-    cores while raw input bytes from tmpfs do not, so the input codec
-    shifts scan work between the scaling and non-scaling resource."""
-    codec = os.environ.get("BENCH_PAGES_CODEC", "snappy")
-    suffix = "" if codec == "snappy" else f"_{codec}"
-    path = os.path.join(TMP, f"bench_pages_{n}_b{QA_CHUNKS}{suffix}")
+    key (marker-gated, deterministic content), written snappy-compressed
+    (the input codec of every recorded baseline; the session default is
+    zstd)."""
+    path = os.path.join(TMP, f"bench_pages_{n}_b{QA_CHUNKS}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         from isimip_qa_spark.sources.pages import write_pages
 
-        prev = spark.conf.get("spark.sql.parquet.compression.codec", None)
-        spark.conf.set("spark.sql.parquet.compression.codec", codec)
+        key = "spark.sql.parquet.compression.codec"
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, "snappy")
         try:
             write_pages(
                 spark, path, n, num_partitions=max(CPUS, 8), n_buckets=QA_CHUNKS
             )
         finally:
             if prev is not None:
-                spark.conf.set("spark.sql.parquet.compression.codec", prev)
+                spark.conf.set(key, prev)
             else:
-                # conf was unset before: unset it again, else a non-default
-                # BENCH_PAGES_CODEC override would silently change the codec
-                # of every later parquet write in this session
-                spark.conf.unset("spark.sql.parquet.compression.codec")
+                spark.conf.unset(key)
     return path
 
 

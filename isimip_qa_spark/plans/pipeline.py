@@ -1,7 +1,8 @@
 """The fused QA DAG: scope filters → all stages in one pass → write-audit
-sink + per-partition metrics/lineage, as ONE Spark job over the chunks a
-run still has to compute (chunk manifests are the resume unit,
-plans/checkpoint.py).
+sink + per-partition metrics/lineage, as ONE Spark job over the chunks
+still to compute — of one run (run_qa) or of every combo of a grid
+(run_targets) — with chunk manifests as the resume unit
+(plans/checkpoint.py).
 
 Physical shape (the properties that carry to 1000 executors / 100 TB):
 - ONE scan feeds all stages (reference's shared scan, main.py:130-136):
@@ -12,7 +13,9 @@ Physical shape (the properties that carry to 1000 executors / 100 TB):
   input already has balanced splits. A retried task rereads the same
   files in the same order, so it rewrites the same bytes.
 - Scope filters (warc_ts window = Period, lang cohort = Region) are applied
-  before anything else → parquet/Iceberg pushdown + partition pruning.
+  before anything else → parquet/Iceberg pushdown + partition pruning. In
+  a shared job the filter is the OR of the targets' scopes, and the same
+  predicates route each row to the targets it is written to.
 - `html` is dropped immediately unless a stage needs it (column pruning
   discipline; the scan never materialises it for text-only runs).
 - Metrics are computed per Spark partition by the sink task inside the
@@ -22,15 +25,17 @@ Physical shape (the properties that carry to 1000 executors / 100 TB):
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
 import contextlib
+import functools
+import operator
 import os
 import shutil
+import time
 import uuid
+from dataclasses import replace
+
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .checkpoint import (
     chunk_files,
@@ -74,14 +79,15 @@ def _metrics_records(pdf) -> list[dict]:
     return recs
 
 
-def _replay_fetched_artifacts(out_dir: str, chunk: int, fetch_wall: float) -> None:
-    """Materialize the metrics/lineage rows of a just-fetched chunk from
-    its manifest (written by fetch_chunk), keeping the same columns as
-    computed chunks so the metrics/lineage tables stay schema-stable."""
+def _replay_fetched_artifacts(out_dir: str, fetch_walls: dict[int, float]) -> None:
+    """Materialize the metrics/lineage rows of the just-fetched chunks from
+    their manifests (written by fetch_chunk) as ONE metrics and ONE lineage
+    file, keeping the same columns as computed chunks so the metrics/lineage
+    tables stay schema-stable."""
     import pandas as pd
 
-    man = chunk_manifest(out_dir, chunk) or {}
-    recs = man.get("metrics")
+    mans = {c: chunk_manifest(out_dir, c) or {} for c in fetch_walls}
+    recs = [r for man in mans.values() for r in man.get("metrics") or []]
     if recs:
         pdf = pd.DataFrame(recs)
         for k in ("ts_min", "ts_max"):
@@ -95,11 +101,12 @@ def _replay_fetched_artifacts(out_dir: str, chunk: int, fetch_wall: float) -> No
         [
             {
                 "config_hash": man.get("config_hash", ""),
-                "chunk": chunk,
+                "chunk": c,
                 "stages": ",".join(man.get("stages", [])),
                 "rows": man.get("rows", 0),
-                "wall_s": round(fetch_wall, 3),
+                "wall_s": round(fetch_walls[c], 3),
             }
+            for c, man in mans.items()
         ]
     )
     _append_parquet_driver_side(lineage, f"{out_dir}/lineage")
@@ -126,18 +133,20 @@ def _append_parquet_driver_side(pdf, path: str) -> None:
     )
 
 
-def scope_filter(df: DataFrame, cfg: QAConfig) -> DataFrame:
-    """Period + Region analogues; both push down to the scan."""
-    if cfg.window is not None:
-        lo, hi = cfg.window
-        df = df.filter(
-            F.col("warc_ts").between(F.lit(lo).cast("timestamp"), F.lit(hi).cast("timestamp"))
-        )
-    if cfg.cohort_langs is not None:
-        df = df.filter(F.col("lang").isin(*cfg.cohort_langs))
+def scope_pred(cfg: QAConfig) -> Column:
+    """Period + Region analogues as one predicate (the filter a run's scan
+    pushes down, and the routing of a row to its run in a shared job)."""
     # tolerant-time semantics (reference: unparseable → NaT → dropped,
     # mixins/extractions.py:82-84)
-    return df.filter(F.col("warc_ts").isNotNull())
+    pred = F.col("warc_ts").isNotNull()
+    if cfg.window is not None:
+        lo, hi = cfg.window
+        pred &= F.col("warc_ts").between(
+            F.lit(lo).cast("timestamp"), F.lit(hi).cast("timestamp")
+        )
+    if cfg.cohort_langs is not None:
+        pred &= F.col("lang").isin(*cfg.cohort_langs)
+    return pred
 
 
 def apply_stages(df: DataFrame, cfg: QAConfig, fused: bool = True) -> DataFrame:
@@ -158,30 +167,6 @@ def apply_stages(df: DataFrame, cfg: QAConfig, fused: bool = True) -> DataFrame:
     )
 
 
-def _metric_aggs(cfg: QAConfig) -> list:
-    return [
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("n_keep"),
-        F.round(F.avg("ppl"), 4).alias("avg_ppl"),
-        F.round(F.avg("n_words"), 4).alias("avg_words"),
-        F.sum(
-            F.when(F.col("n_words") < cfg.min_words, 1).otherwise(0)
-        ).alias("trip_short"),
-        F.sum(
-            F.when(F.col("symbol_ratio") > cfg.max_symbol_ratio, 1).otherwise(0)
-        ).alias("trip_symbol"),
-        F.sum(F.when(F.col("scrubbed"), 1).otherwise(0)).alias("n_scrubbed"),
-        F.min("warc_ts").alias("ts_min"),
-        F.max("warc_ts").alias("ts_max"),
-        # raw sums for exact rollups (F.sum/F.count skip nulls, matching
-        # the sink's dropna accumulators)
-        F.sum("ppl").alias("ppl_sum"),
-        F.count("ppl").alias("ppl_n"),
-        F.sum("n_words").alias("words_sum"),
-        F.count("n_words").alias("words_n"),
-    ]
-
-
 def run_qa(
     spark: SparkSession,
     pages: DataFrame,
@@ -193,8 +178,8 @@ def run_qa(
 ) -> dict:
     """Run the full QA DAG with chunk-wise checkpointing: chunks already
     committed (or fetched from `cache_base`) are skipped, and every chunk
-    still missing is computed by ONE sink job (_run_single_pass), whose
-    per-chunk manifests are published after it commits.
+    still missing is computed by ONE sink job, whose per-chunk manifests
+    are published after it commits. The one-target case of run_targets.
 
     Returns a summary dict: chunks run/skipped/fetched, rows, wall seconds.
     The scored corpus lands in out_dir/data/chunk=K/; per-partition metrics
@@ -205,8 +190,106 @@ def run_qa(
     hash are fetched instead of computed (the reference's remote-fetch skip,
     mixins/extractions.py:16-28).
     """
-    t0 = time.time()
-    df = scope_filter(pages, cfg)
+    return run_targets(spark, pages, [(cfg, out_dir, cache_base)], resume, with_html)[0]
+
+
+def run_targets(
+    spark: SparkSession,
+    pages: DataFrame,
+    targets: list[tuple[QAConfig, str, str | None]],
+    resume: bool = True,
+    with_html: bool = False,
+) -> list[dict]:
+    """run_qa over several (cfg, out_dir, cache_base) targets whose configs
+    differ only in `window` and `cohort_langs` (a grid's combos), with ONE
+    sink job for all of them. Per target, on the driver: the resume check
+    and the cache fetch. Then one job scores each row of the union of the
+    targets' missing chunks once and writes it to every target it belongs
+    to. Then, per target, the driver publishes metrics, lineage and chunk
+    manifests. A driver killed during the job recomputes every (target,
+    chunk) it had not published. Returns one run_qa summary per target;
+    a computed target's `wall_s` is its own driver time plus its row share
+    of the job."""
+    if len({replace(c, window=None, cohort_langs=None) for c, _, _ in targets}) > 1:
+        raise ValueError("targets of one job may differ only in window and cohort_langs")
+    summaries = []
+    for cfg, out_dir, cache_base in targets:
+        t0 = time.time()
+        done = completed_chunks(out_dir) if resume else set()
+        fetch_walls: dict[int, float] = {}
+        if resume and cache_base:
+            for c in range(cfg.n_chunks):
+                t_fetch = time.time()
+                if c not in done and fetch_chunk(
+                    out_dir, c, cache_base, cfg.config_hash()
+                ):
+                    fetch_walls[c] = time.time() - t_fetch
+        if fetch_walls:
+            _replay_fetched_artifacts(out_dir, fetch_walls)
+        summaries.append(
+            {
+                # a fully-resumed run computes nothing — the reference's
+                # exists()-skip, main.py:126-128
+                "chunks_run": [
+                    c for c in range(cfg.n_chunks)
+                    if c not in done and c not in fetch_walls
+                ],
+                "chunks_skipped": sorted(done),
+                "chunks_fetched": sorted(fetch_walls),
+                "rows": 0,
+                "wall_s": time.time() - t0,
+                "config_hash": cfg.config_hash(),
+            }
+        )
+
+    work = [(t, s) for t, s in zip(targets, summaries) if s["chunks_run"]]
+    if work:
+        t_job = time.time()
+        metrics = _run_single_pass(
+            pages, [(cfg, out_dir, s["chunks_run"]) for (cfg, out_dir, _), s in work],
+            with_html,
+        )
+        job_s = time.time() - t_job
+        total = sum(int(m["n_docs"].sum()) for m in metrics)
+        for ((cfg, out_dir, _), s), m in zip(work, metrics):
+            t0 = time.time()
+            s["rows"] = int(m["n_docs"].sum())
+            share = job_s * (s["rows"] / total if total else 1 / len(work))
+            _publish(out_dir, cfg, s["chunks_run"], m, share)
+            s["wall_s"] += share + time.time() - t0
+    for s in summaries:
+        s["wall_s"] = round(s["wall_s"], 3)
+    return summaries
+
+
+def _run_single_pass(
+    pages: DataFrame,
+    work: list[tuple[QAConfig, str, list[int]]],
+    with_html: bool,
+) -> list:
+    """ONE fused job computes every chunk in each (cfg, out_dir, todo) of
+    `work`: the scan, filtered by the OR over targets of scope_pred(cfg) ∧
+    bucket ∈ todo, goes straight into the write-audit mapInPandas sink
+    (plans/sink.py) with a `targets` column listing the targets each row
+    belongs to. The sink scores each row once, writes it to every target's
+    per-chunk parquet, and returns per-(target, chunk, partition) metrics
+    rows — no shuffle, no second job, no read-back. Returns each target's
+    metrics frame."""
+    cfg = work[0][0]
+    if "bucket" not in pages.columns:
+        pages = pages.withColumn(
+            "bucket", F.pmod(F.xxhash64("url"), F.lit(cfg.n_chunks))
+        )
+    # else: input is pre-bucketed on pmod(xxhash64(url), n_chunks) — a
+    # resume's bucket filter hits the partition column and prunes the scan
+    # (Iceberg bucket-partition analogue). Contract: layout bucket count ==
+    # n_chunks.
+    preds = [
+        scope_pred(c) if len(todo) == c.n_chunks
+        else scope_pred(c) & F.col("bucket").isin(*todo)
+        for c, _, todo in work
+    ]
+    df = pages.filter(functools.reduce(operator.or_, preds))
     if cfg.extract_from_html:
         # raw-capture entry: derive text from html in the map stage (pure
         # JVM regexp exprs — functions/extract.py); html bytes never reach
@@ -217,83 +300,42 @@ def run_qa(
     if not with_html:
         # column-pruning discipline: text stages must never scan html bytes
         df = df.drop("html")
-
-    done = completed_chunks(out_dir) if resume else set()
-    fetched: list[int] = []
-    if resume and cache_base and len(done) < cfg.n_chunks:
-        for c in range(cfg.n_chunks):
-            t_fetch = time.time()
-            if c not in done and fetch_chunk(
-                out_dir, c, cache_base, cfg.config_hash()
-            ):
-                _replay_fetched_artifacts(out_dir, c, time.time() - t_fetch)
-                fetched.append(c)
-        done = completed_chunks(out_dir)
-
-    # a fully-resumed run computes nothing — the reference's exists()-skip,
-    # main.py:126-128
-    todo = [c for c in range(cfg.n_chunks) if c not in done]
-    rows = 0
-    if todo:
-        if "bucket" not in df.columns:
-            df = df.withColumn(
-                "bucket", F.pmod(F.xxhash64("url"), F.lit(cfg.n_chunks))
-            )
-        # else: input is pre-bucketed on pmod(xxhash64(url), n_chunks) — a
-        # resume's bucket filter hits the partition column and prunes the
-        # scan (Iceberg bucket-partition analogue). Contract: layout bucket
-        # count == n_chunks.
-        rows = _run_single_pass(df, cfg, out_dir, todo)
-
-    return {
-        "chunks_run": todo,
-        "chunks_skipped": sorted(done - set(fetched)),
-        "chunks_fetched": fetched,
-        "rows": rows,
-        "wall_s": round(time.time() - t0, 3),
-        "config_hash": cfg.config_hash(),
-    }
-
-
-def _run_single_pass(
-    df: DataFrame,
-    cfg: QAConfig,
-    out_dir: str,
-    todo: list[int],
-) -> int:
-    """ONE fused job computes every chunk in `todo`: each scan split goes
-    straight into the write-audit mapInPandas sink (plans/sink.py), which
-    scores it, writes per-chunk parquet, and returns the per-(chunk,
-    partition) metrics rows — no shuffle, no second job, no read-back. Each
-    chunk's manifest is published after the job commits, so a later
-    invocation resumes chunk-wise; a driver killed during the job
-    recomputes every chunk it had not published. Returns the number of
-    rows scored."""
-    t0 = time.time()
-    if len(todo) < cfg.n_chunks:
-        # resume: only the missing buckets (on pre-bucketed input, a
-        # partition filter that prunes the scan)
-        df = df.filter(F.col("bucket").isin(*todo))
+    df = df.withColumn(
+        "targets",
+        F.array_compact(F.array(*[F.when(p, F.lit(i)) for i, p in enumerate(preds)])),
+    )
     # overwrite semantics: clear what a crashed prior run left in the chunks
     # about to be computed (unpublished part files, abandoned tmps); chunks
     # outside `todo` are never touched. A resume=False rerun unpublishes a
     # chunk before clearing it, so no manifest outlives its files if this
     # job dies.
-    for c in todo:
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(os.path.join(manifest_dir(out_dir), f"chunk_{c}.json"))
-        shutil.rmtree(chunk_path(out_dir, c), ignore_errors=True)
+    for _, out_dir, todo in work:
+        for c in todo:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(os.path.join(manifest_dir(out_dir), f"chunk_{c}.json"))
+            shutil.rmtree(chunk_path(out_dir, c), ignore_errors=True)
     metrics_pdf = qa_sink(
-        df.withColumnRenamed("bucket", "chunk"), out_dir, cfg
+        df.withColumnRenamed("bucket", "chunk"), [d for _, d, _ in work], cfg
     ).toPandas()
+    by_target = metrics_pdf.groupby("target")
+    return [
+        (by_target.get_group(i) if i in by_target.groups else metrics_pdf.iloc[:0])
+        .drop(columns="target")
+        .reset_index(drop=True)
+        for i in range(len(work))
+    ]
+
+
+def _publish(out_dir: str, cfg: QAConfig, todo: list[int], metrics_pdf, wall: float) -> None:
+    """Append a computed target's metrics and lineage rows, then publish one
+    manifest per chunk in `todo`, so a later invocation resumes chunk-wise."""
+    import pandas as pd
+
     cfg_hash = cfg.config_hash()
     metrics_pdf["config_hash"] = cfg_hash
     _append_parquet_driver_side(metrics_pdf, f"{out_dir}/metrics")
     per_chunk = metrics_pdf.groupby("chunk")["n_docs"].sum()
-    wall = round(time.time() - t0, 3)
     stages = [s.name for s in STAGES]
-    import pandas as pd
-
     # lineage: what ran, over what, producing what (north_rule)
     lineage_pdf = pd.DataFrame(
         [
@@ -302,7 +344,7 @@ def _run_single_pass(
                 "chunk": c,
                 "stages": ",".join(stages),
                 "rows": int(per_chunk.get(c, 0)),
-                "wall_s": wall,
+                "wall_s": round(wall, 3),
             }
             for c in todo
         ]
@@ -322,7 +364,6 @@ def _run_single_pass(
                 ),
             },
         )
-    return int(per_chunk.sum())
 
 
 def read_scored(spark: SparkSession, out_dir: str) -> DataFrame:

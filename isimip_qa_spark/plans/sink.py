@@ -3,8 +3,9 @@
 `scan → scope filter → mapInPandas(sink)`, no shuffle: each sink task
 scores one scan split in place. The sink computes the fused QA kernel
 (functions/qa_fused.py), derives the keep/drop decision, streams the scored
-rows into per-chunk parquet files with pyarrow, and returns ONLY the
-per-(chunk, partition) metrics rows.
+rows into per-chunk parquet files with pyarrow — one set per target out_dir
+a row belongs to, each row scored once — and returns ONLY the per-(target,
+chunk, partition) metrics rows.
 
 Why this shape (measured on this sandbox, reasoned for 1000 executors):
 - `text` crosses the JVM→Python boundary exactly once and nothing
@@ -126,17 +127,21 @@ def _make_writer(pq, path: str, schema):
     return pq.ParquetWriter(path, schema, compression="zstd", compression_level=3)
 
 
-def qa_sink(scored_input: DataFrame, out_dir: str, cfg) -> DataFrame:
+def qa_sink(scored_input: DataFrame, out_dirs: list[str], cfg) -> DataFrame:
     """Attach the sink to a scoped pages DataFrame (columns url, warc_ts,
-    text, lang, chunk). Returns the (lazy) metrics DataFrame —
-    running any action on it executes the whole write."""
-    data_dir = os.path.join(out_dir, "data")
+    text, lang, chunk, targets): `targets` lists the indexes into `out_dirs`
+    a row is written to, and `cfg` is the config every target shares apart
+    from its scopes. Returns the (lazy) metrics DataFrame, one row per
+    (target, chunk, partition) — running any action on it executes the
+    whole write."""
+    data_dirs = [os.path.join(d, "data") for d in out_dirs]
     # trip counters are diagnostics against the GLOBAL thresholds by
     # design (stable cross-run lineage even when lang_profiles vary the
     # actual gate); the keep decision itself honours the profiles
     min_words, max_symbol = cfg.min_words, cfg.max_symbol_ratio
 
     def sink(batches):
+        import numpy as np
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark import TaskContext
@@ -144,9 +149,10 @@ def qa_sink(scored_input: DataFrame, out_dir: str, cfg) -> DataFrame:
         tc = TaskContext.get()
         pid, attempt = tc.partitionId(), tc.taskAttemptId()
         schema = _pa_schema()
-        writers: dict[int, tuple] = {}
-        pending: dict[int, list] = {}  # per chunk: < ROW_GROUP_ROWS rows
-        acc: dict[int, dict] = {}
+        # all keyed by (target, chunk)
+        writers: dict[tuple[int, int], tuple] = {}
+        pending: dict[tuple[int, int], list] = {}  # < ROW_GROUP_ROWS rows
+        acc: dict[tuple[int, int], dict] = {}
 
         def flush(writer, tables: list, final: bool) -> list:
             """Write every full ROW_GROUP_ROWS group of the buffered tables
@@ -160,7 +166,20 @@ def qa_sink(scored_input: DataFrame, out_dir: str, cfg) -> DataFrame:
                 writer.write_table(t.slice(off, ROW_GROUP_ROWS))
             return [t.slice(end)] if end < n else []
 
+        def groups(pdf, out):
+            """(target, chunk) → its rows of `out`, each in scan order."""
+            chunks = pdf["chunk"].to_numpy()
+            lists = pdf["targets"].to_numpy()
+            row = np.repeat(np.arange(len(pdf)), [len(x) for x in lists])
+            tgt = np.concatenate(lists) if len(lists) else row
+            for t in np.unique(tgt):
+                rows = row[tgt == t]
+                sub = out if len(rows) == len(out) else out.iloc[rows]
+                for ck, g in sub.groupby(chunks[rows]):
+                    yield (int(t), int(ck)), g
+
         for pdf in batches:
+            # score each row once, whatever number of targets it feeds
             stats = _fused_series(pdf["text"])
             out = pdf[["url", "warc_ts", "text", "lang"]].reset_index(drop=True)
             for c in stats.columns:
@@ -168,13 +187,11 @@ def qa_sink(scored_input: DataFrame, out_dir: str, cfg) -> DataFrame:
             out["scrubbed"] = out["scrub_delta"].notna()
             out["keep"] = _keep_series(out, cfg)
             out["warc_ts"] = out["warc_ts"].astype("datetime64[us]")
-            chunks = pdf["chunk"].reset_index(drop=True)
 
-            for ck, g in out.groupby(chunks):
-                ck = int(ck)
-                w = writers.get(ck)
+            for key, g in groups(pdf, out):
+                w = writers.get(key)
                 if w is None:
-                    cdir = os.path.join(data_dir, f"chunk={ck}")
+                    cdir = os.path.join(data_dirs[key[0]], f"chunk={key[1]}")
                     os.makedirs(cdir, exist_ok=True)
                     # sweep tmp files abandoned by failed/killed prior
                     # attempts of THIS partition (a crashed task never
@@ -204,22 +221,22 @@ def qa_sink(scored_input: DataFrame, out_dir: str, cfg) -> DataFrame:
                     tmp = os.path.join(cdir, f".part-{pid:05d}-{attempt}.tmp")
                     final = os.path.join(cdir, f"part-{pid:05d}.parquet")
                     w = (_make_writer(pq, tmp, schema), tmp, final)
-                    writers[ck] = w
-                    pending[ck] = []
-                    acc[ck] = {
+                    writers[key] = w
+                    pending[key] = []
+                    acc[key] = {
                         "n_docs": 0, "n_keep": 0, "ppl_sum": 0.0, "ppl_n": 0,
                         "w_sum": 0, "w_n": 0, "trip_short": 0,
                         "trip_symbol": 0, "n_scrubbed": 0,
                         "ts_min": None, "ts_max": None,
                     }
-                pending[ck].append(
+                pending[key].append(
                     pa.Table.from_pandas(
                         g[[c for c, _ in _OUT_COLS]], schema=schema,
                         preserve_index=False,
                     )
                 )
-                pending[ck] = flush(w[0], pending[ck], final=False)
-                a = acc[ck]
+                pending[key] = flush(w[0], pending[key], final=False)
+                a = acc[key]
                 a["n_docs"] += len(g)
                 a["n_keep"] += int(g["keep"].sum())
                 ppl = g["ppl"].dropna()
@@ -236,13 +253,14 @@ def qa_sink(scored_input: DataFrame, out_dir: str, cfg) -> DataFrame:
                 a["ts_max"] = hi if a["ts_max"] is None else max(a["ts_max"], hi)
 
         rows = []
-        for ck, (w, tmp, final) in writers.items():
-            flush(w, pending[ck], final=True)
+        for (t, ck), (w, tmp, final) in writers.items():
+            flush(w, pending[t, ck], final=True)
             w.close()
             os.replace(tmp, final)  # atomic; task retry last-wins
-            a = acc[ck]
+            a = acc[t, ck]
             rows.append(
                 {
+                    "target": t,
                     "chunk": ck,
                     "partition_id": pid,
                     "n_docs": a["n_docs"],
@@ -267,4 +285,4 @@ def qa_sink(scored_input: DataFrame, out_dir: str, cfg) -> DataFrame:
         if rows:
             yield pd.DataFrame(rows)
 
-    return scored_input.mapInPandas(sink, METRICS_SCHEMA)
+    return scored_input.mapInPandas(sink, f"target int, {METRICS_SCHEMA}")

@@ -86,7 +86,7 @@ def _render_matplotlib(fig_path, chunks, keep, ppl) -> str:
 
 
 def grid_panels(spark: SparkSession, out_root: str) -> list[dict]:
-    """Walk a grid output root (run_grid / run_grid_fused layout:
+    """Walk a grid output root (run_grid layout:
     out_root/window=W/cohort=C/<hash>/metrics) and roll each combo up to
     one panel spec. Only the per-chunk rollups reach the driver."""
     import glob

@@ -39,3 +39,34 @@ def pages_sdf(spark):
     from isimip_qa_spark.sources.pages import pages_df
 
     return pages_df(spark, 2000, num_partitions=8)
+
+
+@pytest.fixture
+def sink_jobs(spark):
+    """sink_jobs(fn, n_splits) runs fn under a fresh job group and returns
+    (fn's result, the number of sink jobs it submitted), counted with the
+    status tracker: jobs from the sink's toPandas call site in pipeline.py.
+    Each must be one stage of one task per input split: the sink scores
+    each scan split in place, so no shuffle map job shares the call site."""
+    import uuid
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+
+    def run(fn, n_splits):
+        group = f"sink-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n = 0
+        for jid in st.getJobIdsForGroup(group):
+            stage_ids = st.getJobInfo(jid).stageIds
+            last = st.getStageInfo(max(stage_ids))
+            if "toPandas at" in last.name and "pipeline.py:" in last.name:
+                assert len(stage_ids) == 1 and last.numTasks == n_splits
+                n += 1
+        return out, n
+
+    return run

@@ -53,15 +53,17 @@ FLOAT_AGG_CLASSES = {
     # products (non-dyadic) — probed in test_host_reputation_boundary
     "lang_quality_rollup": "dyadic-quantized",  # 1/2^20 pre-quantized
     "embed_norm_stats": "dyadic-quantized",  # 1/2^20 pre-quantized (r5)
-    "source_divergence": "dyadic-sum-exact",  # JS terms 1/QD-quantized
+    "source_divergence": "dyadic-sum-exact",  # JS terms 1/QD-quantized,
+    # each clear of its round-half point (test_source_divergence_terms_...)
     "ppl_stupid_backoff": "boundary-asserted",  # avg_logprob is a
     # dyadic-sum-exact ratio; per-row ppl = exp(-avg) floats a libm ulp —
     # probed in test_exp_ppl_rows_clear_of_round6_boundaries
     "dsir_kl": "boundary-asserted",  # ln-term sums — probed below
     "domain_diversity": "boundary-asserted",  # entropy/HHI terms are
     # QD-quantized (dyadic-sum-exact) since the r5 sweep caught the
-    # unquantized norm_entropy 8.5e-10 from a boundary at sf0.01; the one
-    # remaining libm op (÷ log2(n_sources)) is probed below
+    # unquantized norm_entropy 8.5e-10 from a boundary at sf0.01; each term
+    # is probed clear of its round-half point, and the one remaining libm op
+    # (÷ log2(n_sources)) is probed below
 }
 
 _ROUND_AGG = re.compile(r"round\s*\(\s*-?\s*(?:avg|sum)\s*\(", re.I)
@@ -148,6 +150,61 @@ def test_domain_diversity_clear_of_round6_boundaries(sf_dir):
         sf_dir,
         float(row["norm_entropy"]),
     )
+
+
+# a QD term is round(x) / QD with x = term * QD computed through libm log2,
+# so the quantized dyadic is engine-exact only while x sits well clear of
+# a round-half point (k + 1/2): a ≤1-ulp log2 difference between engines
+# moves x by a few ulps. Measured minima over the shipped sfs: 2.3e8 ulps
+# (domain_diversity), 2.6e10 ulps (source_divergence).
+MIN_HALF_GRID_ULPS = 1 << 10
+
+
+def _half_grid_ulps(xs) -> float:
+    """Smallest distance of any x in xs to the nearest k + 1/2, in ulps of
+    that x (exact via Decimal)."""
+    import numpy as np
+
+    out = np.inf
+    for x in xs:
+        d = Decimal(x)
+        frac = d - d.to_integral_value(rounding="ROUND_FLOOR")
+        out = min(out, float(abs(frac - Decimal("0.5"))) / np.spacing(abs(x)))
+    return out
+
+
+@pytest.mark.parametrize("sf_dir", SF_DIRS)
+def test_domain_diversity_terms_clear_of_half_grid(sf_dir):
+    """Per-term grid-distance probe: every entropy accumuland
+    share*log2(share)*2^20 sits far more than 1 ulp from a round-half
+    point, so both engines quantize it to the same dyadic. (The HHI term
+    share*share*2^20 has no libm op and is correctly rounded on both.)"""
+    oracle = _oracles()["domain_diversity"]
+    assert "round(share * log2(share) * 1048576) / 1048576 AS e_t" in oracle
+    probe = (
+        oracle[: oracle.index("SELECT count(*)")]
+        + "SELECT share * log2(share) * 1048576 AS x FROM p"
+    )
+    xs = _duck(sf_dir).execute(probe).df()["x"]
+    assert len(xs) > 1
+    assert _half_grid_ulps(xs) > MIN_HALF_GRID_ULPS, sf_dir
+
+
+@pytest.mark.parametrize("sf_dir", SF_DIRS)
+def test_source_divergence_terms_clear_of_half_grid(sf_dir):
+    """The same probe over every source_divergence JS term (each
+    (source, token) cell's contribution * 2^20, before its round)."""
+    oracle = _oracles()["source_divergence"]
+    head = oracle[: oracle.index("SELECT source,\n           max(n_s)")]
+    probe = head.replace("round((", "((", 1).replace(
+        ") * 1048576) / 1048576 AS t", ") * 1048576) AS t"
+    )
+    # a drifted oracle text would no-op a replace and probe rounded terms
+    assert probe.count("round(") == head.count("round(") - 1
+    assert ") * 1048576) AS t" in probe
+    xs = _duck(sf_dir).execute(probe + "SELECT t FROM terms").df()["t"]
+    assert len(xs) > 1
+    assert _half_grid_ulps(xs) > MIN_HALF_GRID_ULPS, sf_dir
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)

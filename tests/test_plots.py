@@ -69,7 +69,7 @@ def test_render_grid_svg_matches_golden_bytes(spark, pages_sdf, tmp_path):
     2000-page source. Regenerate the golden (tests/golden/grid_golden.svg)
     only for an intentional figure change, by running this render and
     copying the output."""
-    from isimip_qa_spark.plans.grid import run_grid_fused
+    from isimip_qa_spark.plans.grid import run_grid
     from isimip_qa_spark.plots import render_grid
 
     golden_path = os.path.join(
@@ -83,7 +83,7 @@ def test_render_grid_svg_matches_golden_bytes(spark, pages_sdf, tmp_path):
     cfg = QAConfig(n_chunks=2, n_partitions=4)
     windows = [None, ("2024-01-01 00:00:00", "2024-01-10 00:00:00")]
     cohorts = [("en", "es"), ("fr",)]
-    run_grid_fused(spark, pages_sdf, cfg, windows, cohorts, out_root)
+    run_grid(spark, pages_sdf, cfg, windows, cohorts, out_root)
     fig = render_grid(spark, out_root, str(tmp_path / "figs" / "grid.svg"))
     with open(fig, "rb") as f:
         body = f.read()
@@ -97,14 +97,14 @@ def test_render_grid_svg_matches_golden_bytes(spark, pages_sdf, tmp_path):
 def test_render_grid_multi_panel(spark, pages_sdf, tmp_path):
     """VERDICT r2 #8: a grid run renders as a figs × rows × cols panel
     layout — one panel per (window × cohort) combo, on either backend."""
-    from isimip_qa_spark.plans.grid import run_grid_fused
+    from isimip_qa_spark.plans.grid import run_grid
     from isimip_qa_spark.plots import grid_panels, render_grid
 
     out_root = str(tmp_path / "grid")
     cfg = QAConfig(n_chunks=2, n_partitions=4)
     windows = [None, ("2024-01-01 00:00:00", "2024-01-10 00:00:00")]
     cohorts = [("en", "es"), ("fr",)]
-    run_grid_fused(spark, pages_sdf, cfg, windows, cohorts, out_root)
+    run_grid(spark, pages_sdf, cfg, windows, cohorts, out_root)
 
     panels = grid_panels(spark, out_root)
     assert len(panels) == 4  # one per combo

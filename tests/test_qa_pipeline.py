@@ -141,52 +141,27 @@ def test_window_and_cohort_pushdown(spark, pages_sdf, tmp_path):
     assert (got["lang"] == "en").all()
     assert got["warc_ts"].max() <= pd.Timestamp("2024-01-10")
     # pushdown check on the scoped plan
-    from isimip_qa_spark.plans.pipeline import scope_filter
+    from isimip_qa_spark.plans.pipeline import scope_pred
 
-    plan = scope_filter(pages, cfg)._jdf.queryExecution().executedPlan().toString()
+    plan = pages.filter(scope_pred(cfg))._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "warc_ts" in plan
 
 
-def _sink_jobs(spark, group: str, n_splits: int) -> int:
-    """Jobs the status tracker recorded under `group` from the sink's
-    toPandas call site. Each must be one stage of one task per input split:
-    the sink scores each scan split in place, so no shuffle map job shares
-    the call site."""
-    st = spark.sparkContext.statusTracker()
-    n = 0
-    for jid in st.getJobIdsForGroup(group):
-        stage_ids = st.getJobInfo(jid).stageIds
-        last = st.getStageInfo(max(stage_ids))
-        if "toPandas at" in last.name and "pipeline.py:" in last.name:
-            assert len(stage_ids) == 1 and last.numTasks == n_splits
-            n += 1
-    return n
-
-
-def _in_group(spark, group: str, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        return fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-
-
-def test_one_sink_job_fresh_and_resume(spark, pages_sdf, cfg, tmp_path):
+def test_one_sink_job_fresh_and_resume(spark, pages_sdf, cfg, tmp_path, sink_jobs):
     """Every run_qa that computes anything submits exactly ONE sink job:
     a fresh run computes all chunks in it, a resume only the missing one."""
     n_splits = pages_sdf.rdd.getNumPartitions()
     assert n_splits != cfg.n_partitions
     out = str(tmp_path / "qa_jobs")
-    fresh = _in_group(spark, "qa-fresh", lambda: run_qa(spark, pages_sdf, cfg, out))
+    fresh, n_jobs = sink_jobs(lambda: run_qa(spark, pages_sdf, cfg, out), n_splits)
     assert fresh["chunks_run"] == [0, 1, 2, 3] and fresh["rows"] == 2000
-    assert _sink_jobs(spark, "qa-fresh", n_splits) == 1
+    assert n_jobs == 1
 
     os.remove(os.path.join(out, "_manifest", "chunk_2.json"))
-    again = _in_group(spark, "qa-resume", lambda: run_qa(spark, pages_sdf, cfg, out))
+    again, n_jobs = sink_jobs(lambda: run_qa(spark, pages_sdf, cfg, out), n_splits)
     assert again["chunks_run"] == [2]
     assert again["chunks_skipped"] == [0, 1, 3]
-    assert _sink_jobs(spark, "qa-resume", n_splits) == 1
+    assert n_jobs == 1
     assert len(read_scored(spark, out).toPandas()) == 2000
 
 
