@@ -4,25 +4,36 @@ langid + perplexity + scrub each need Python (model lookups, compiled-re
 byte-identity); the Gopher/C4 rule statistics are also computed here on the
 same tokenisation — measured on this sandbox the JVM expression forms
 (split / array_distinct / array_contains chains) cost ~200µs/doc while this
-kernel computes identical values for ~40µs/doc. The column-expression forms
+kernel computes identical values for ~16µs/doc (4096-doc batches, one core
+of a 4-core VM). The column-expression forms
 (functions/textstats.py) remain the reference surface: STAGES (unfused) uses
 them and tests assert bit-equality between the two paths; the pipeline runs
 only this kernel.
 
-Kernel shape (per Arrow batch of ~10k docs):
-- ONE tokenize: join the batch into a single byte buffer, lower once, split
-  once (C-speed; pandas explode() would build a 1.2M-entry object index per
-  batch). Doc boundaries recovered by segment-sums over byte masks
-  (np.add.reduceat — writes n values, never full prefix arrays).
-- ONE vocabulary pass: pd.factorize dedups the batch's tokens, the model
-  dict is probed only per UNIQUE token, then per-token values come from
-  numpy gathers. Dyadic logprobs ⇒ np.bincount sums are exact, so outputs
-  are bit-identical to the unfused kernels.
-- Rule statistics from the same byte masks / token codes, matching
-  textstats.py expression semantics exactly (integer counts + one IEEE
-  double division each).
-- Scrub in delta form: byte-scan candidate prefilter + changed-only output
-  (functions/scrub.py) — Arrow ships back only the few changed docs.
+Kernel shape (`_fused_arrow`, per Arrow string array of ~4k docs):
+- The batch's UTF-8 bytes are read in place: the array's offsets are the
+  doc bounds and its data buffer is scanned as one byte array. Nothing is
+  decoded to Python strings except the unique tokens and the few scrub
+  candidates.
+- ONE tokenize: `split_pattern(" ")` + `dictionary_encode`; per-doc token
+  counts are the list lengths.
+- ONE vocabulary pass: lowering, the model dict probe and the wordlike
+  regex run in Python per UNIQUE token, then per-token values are numpy
+  gathers over the dictionary codes. Dyadic logprobs ⇒ np.bincount sums
+  are exact, so outputs are bit-identical to the unfused kernels.
+- Rule statistics from byte classes of the buffer and the token codes,
+  matching textstats.py expression semantics exactly (integer counts + one
+  IEEE double division each). Docs sit back to back in the buffer with no
+  separator, so every byte-level count is attributed by doc bounds and
+  '.'-runs break at them. Literals (U+FFFD, mojibake, toxic terms) hold no
+  space, so they are counted per unique token and cannot span two docs.
+- Scrub in delta form: a digit/'@'/toxic-term candidate prefilter, then the
+  regex chain on the candidate docs only; the column is NULL where a doc is
+  unchanged.
+
+`_fused_series` is its pandas adapter (`qa_scores_udf`, tests, benchmark
+replay); the sink (plans/sink.py) calls `_fused_arrow` on the Arrow batches
+Spark hands it.
 
 The reference analogue is the shared-scan discipline: one open file feeds
 all extractions (/root/reference/isimip_qa/main.py:130-136).
@@ -30,13 +41,17 @@ all extractions (/root/reference/isimip_qa/main.py:130-136).
 
 from __future__ import annotations
 
+import functools
 import re
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .scrub import TOXIC_TERMS, scrub_text
 from .textstats import (
     BULLET_LINE_RE,
     CTRL_CLASS,
@@ -45,9 +60,9 @@ from .textstats import (
     REPL_CHAR,
     WORDLIKE_RE,
 )
-from .scrub import TOXIC_TERMS, _scrub_delta_series
 
-_TOXIC_BYTES = [t.encode("utf-8") for t in TOXIC_TERMS]
+_MOJIBAKE = [seq for seq, _ in MOJIBAKE_SEQS]
+_WORDLIKE = re.compile(WORDLIKE_RE)
 
 # Every column the kernel emits, in output order, with its Spark type: the
 # Python-only scores, then the rule statistics the keep gate reads.
@@ -76,8 +91,28 @@ RULE_STAT_COLS: tuple[tuple[str, str], ...] = (
 )
 SCORE_COLS = PYTHON_SCORE_COLS + RULE_STAT_COLS
 FUSED_SCHEMA = ", ".join(f"{c} {t}" for c, t in SCORE_COLS)
-# pandas dtype per Spark type (nullable Int64: a NULL text scores NA)
-_PD_DTYPES = {"string": object, "double": np.float64, "long": "Int64"}
+# Arrow type per Spark type name (the sink adds timestamp)
+PA_TYPES = {
+    "string": pa.string(),
+    "double": pa.float64(),
+    "long": pa.int64(),
+    "int": pa.int32(),
+    "boolean": pa.bool_(),
+}
+SCORE_SCHEMA = pa.schema([(c, PA_TYPES[t]) for c, t in SCORE_COLS])
+
+# Byte classes, as bits of a 256-entry table. All are ASCII, and ASCII bytes
+# never occur inside multi-byte UTF-8 sequences, so byte counts equal char
+# counts: symbols are the ASCII punct class [!-/:-@[-`{-~], SCRUB the bytes
+# every scrub pattern match holds (digits, '@'), CTRL is textstats.CTRL_CLASS.
+_SYM, _SCRUB, _DOT, _CTRL = 1, 2, 4, 8
+_CLASS = np.zeros(256, dtype=np.uint8)
+for _lo, _hi in ((33, 47), (58, 64), (91, 96), (123, 126)):
+    _CLASS[_lo : _hi + 1] |= _SYM
+_CLASS[48:58] |= _SCRUB
+_CLASS[64] |= _SCRUB
+_CLASS[46] |= _DOT
+_CLASS[[b for b in range(128) if re.fullmatch(CTRL_CLASS, chr(b))]] |= _CTRL
 
 
 # combined model: token → id; LP[id] = unigram logprob, LID[id] = language id
@@ -102,261 +137,169 @@ def _combined() -> tuple[dict[str, int], np.ndarray, np.ndarray]:
     return _TOK2ID, _LP, _LID
 
 
-def _seg_count(mask: np.ndarray, starts: np.ndarray) -> np.ndarray:
-    """Per-doc sum of a byte mask over segment [starts[i], starts[i+1])."""
-    return np.add.reduceat(mask, starts, dtype=np.int64)
+def _distinct(doc: np.ndarray, code: np.ndarray, n: int, v: int) -> np.ndarray:
+    """Per-doc number of distinct codes (each < v) over (doc, code) pairs."""
+    key = np.unique(doc * np.int64(v) + code)
+    return np.bincount(key // np.int64(v), minlength=n)
 
 
-def _fused_series(texts: pd.Series) -> pd.DataFrame:
+def _dup_frac(parts: pa.ListArray) -> np.ndarray:
+    """(|parts| − |distinct parts|) / |parts| per doc (textstats._dup_frac):
+    single-part docs are exactly 0, so only multi-part docs are encoded."""
+    total = parts.value_lengths().to_numpy().astype(np.int64)
+    multi = total > 1
+    out = np.zeros(len(total), dtype=np.float64)
+    if multi.any():
+        sub = parts.filter(pa.array(multi))
+        enc = pc.dictionary_encode(sub.flatten())
+        doc = np.repeat(np.flatnonzero(multi), total[multi])
+        distinct = _distinct(doc, enc.indices.to_numpy(), len(total), len(enc.dictionary))
+        out[multi] = (total - distinct)[multi] / total[multi].astype(np.float64)
+    return out
+
+
+def _fused_arrow(text: pa.Array) -> pa.RecordBatch:
+    """SCORE_COLS of each doc of a string array (NULL text scores NULL)."""
     from .langid import LANG_ORDER
     from .perplexity import OOV_LOGPROB
 
-    texts = texts.reset_index(drop=True)
-    n = len(texts)
+    n = len(text)
     if n == 0:
-        return pd.DataFrame(
-            {c: pd.Series([], dtype=_PD_DTYPES[t]) for c, t in SCORE_COLS}
-        )
+        return pa.RecordBatch.from_pylist([], schema=SCORE_SCHEMA)
+    valid = text.is_valid().to_numpy(zero_copy_only=False)
+    if text.null_count:
+        text = pc.fill_null(text, "")  # scored as '' and masked at the end
 
-    tok2id, lp_arr, lid_arr = _combined()
-    na_mask = texts.isna().to_numpy()
-    filled = texts.fillna("")
+    # the batch's bytes and doc bounds, in place in the array's buffers
+    offs = np.frombuffer(text.buffers()[1], dtype=np.int32)[text.offset : text.offset + n + 1]
+    bounds = offs.astype(np.int64) - offs[0]
+    barr = (
+        np.frombuffer(text.buffers()[2], dtype=np.uint8, count=bounds[-1], offset=offs[0])
+        if bounds[-1]
+        else np.zeros(0, dtype=np.uint8)
+    )
+    # ONE pass over the bytes of any class (a few % of them), each
+    # attributed to its doc; uint8 wrap-around makes `barr - 91 < 6` the
+    # range test 91..96
+    pos = np.flatnonzero(
+        (barr < 65) & (barr != 32) | (barr - 91 < 6) | (barr - 123 < 4)
+    )
+    cls = _CLASS[barr[pos]]
+    doc = np.searchsorted(bounds, pos, side="right") - 1
 
-    # ONE byte scan of the whole batch: per-doc token counts (space bytes),
-    # scrub-candidate flags (digit/@), symbol counts, ellipsis runs — all
-    # from the same encoded buffer. Bytes 32-126 never occur inside
-    # multi-byte UTF-8 sequences, so byte counts equal char counts for these
-    # classes. '' doc → one '' token, matching ''.split(' ').
-    enc = [t.encode("utf-8") for t in filled.tolist()]
-    blens = np.fromiter(map(len, enc), dtype=np.int64, count=n)
-    big = b" ".join(enc)
-    # pad one byte so reduceat start == len(big) (empty last doc) is valid
-    barr = np.frombuffer(big + b"\0", dtype=np.uint8)
-    bounds = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(blens + 1, out=bounds[1:])
-    starts = bounds[:-1]
-    # doc i's segment [starts[i], starts[i+1]) includes its trailing
-    # separator space, so the space-sum IS the token count; the last doc has
-    # no separator → +1
-    counts = _seg_count(barr == 32, starts)
-    counts[-1] += 1
-    toks = big.decode("utf-8").split(" ")  # raw case; lowered per-unique below
+    def per_doc(bit: int) -> np.ndarray:
+        return np.bincount(doc[(cls & bit) != 0], minlength=n)
+
+    # ONE tokenize: '' doc → one '' token, matching ''.split(' ')
+    words = pc.split_pattern(text, " ")
+    counts = words.value_lengths().to_numpy().astype(np.int64)
+    enc = pc.dictionary_encode(words.flatten())
+    codes = enc.indices.to_numpy()
+    uniques = enc.dictionary.to_pylist()
     idx = np.repeat(np.arange(n, dtype=np.int64), counts)
 
-    # scrub candidates: any digit/'@' byte, plus docs containing a toxic
-    # term (term occurrences located in the shared buffer — terms hold no
-    # space, so they cannot span the doc separator)
-    cand = _seg_count(((barr >= 48) & (barr <= 57)) | (barr == 64), starts) > 0
-    for term in _TOXIC_BYTES:
-        pos = big.find(term)
-        while pos != -1:
-            cand[np.searchsorted(bounds, pos, side="right") - 1] = True
-            pos = big.find(term, pos + 1)
+    def token_sum(lits: list[str]) -> np.ndarray:
+        """Per-doc non-overlapping count of the literals. None holds a space,
+        so every match lies inside one token: counted per unique token."""
+        u_n = sum(pc.count_substring(enc.dictionary, s).to_numpy() for s in lits)
+        if not u_n.any():
+            return np.zeros(n, dtype=np.int64)
+        return np.bincount(idx, weights=u_n[codes], minlength=n).astype(np.int64)
 
-    # ONE vocabulary pass: factorize dedups the raw token stream; lowering
-    # and dict probes touch only UNIQUE tokens, per-token values are numpy
-    # gathers over the code array (langid/perplexity lower before lookup,
-    # so looking up lower(unique) is identical to factorizing lowered text)
-    codes, uniques = pd.factorize(pd.Series(toks, dtype=object))
-    uids = pd.Series([u.lower() for u in uniques], dtype=object).map(tok2id)
-    uk = uids.notna().to_numpy()
-    uid = np.zeros(len(uniques), dtype=np.int64)
-    uid[uk] = uids.to_numpy()[uk].astype(np.int64)
-    u_lp = np.full(len(uniques), OOV_LOGPROB, dtype=np.float64)
-    u_lp[uk] = lp_arr[uid[uk]]
-    u_lid = np.full(len(uniques), -1, dtype=np.int64)
-    u_lid[uk] = lid_arr[uid[uk]]
+    # ONE vocabulary pass over the UNIQUE raw-case tokens (langid/perplexity
+    # lower before lookup, so probing lower(unique) is identical)
+    tok2id, lp_arr, lid_arr = _combined()
+    uid = np.array([tok2id.get(u.lower(), -1) for u in uniques], dtype=np.int64)
+    known = uid >= 0
+    u_lp = np.where(known, lp_arr[uid], OOV_LOGPROB)
+    u_lid = np.where(known, lid_arr[uid], -1)
+    u_word = np.array([_WORDLIKE.search(u) is not None for u in uniques], dtype=bool)
 
     # perplexity: exact dyadic mean per doc
-    sums = np.bincount(idx, weights=u_lp[codes], minlength=n)
-    avg = sums / counts
-    avg[na_mask] = np.nan
+    avg = np.bincount(idx, weights=u_lp[codes], minlength=n) / counts
 
     # langid: stop-word occurrence argmax (first max wins = LANG_ORDER)
     lids = u_lid[codes]
     sw = lids >= 0
-    counts2d = np.zeros((n, len(LANG_ORDER)), dtype=np.int64)
-    if sw.any():
-        np.add.at(counts2d, (idx[sw], lids[sw]), 1)
-    preds = np.array(LANG_ORDER, dtype=object)[counts2d.argmax(axis=1)]
-    pred_s = pd.Series(preds, dtype="object")
-    pred_s[na_mask] = None
+    n_lang = len(LANG_ORDER)
+    per_lang = np.bincount(idx[sw] * n_lang + lids[sw], minlength=n * n_lang)
+    preds = np.array(LANG_ORDER, dtype=object)[per_lang.reshape(n, n_lang).argmax(axis=1)]
 
     # --- rule statistics (textstats.py expression semantics, bit-exact) ---
-    # n_words = size(split(text,' ')) = counts
-    # mean_word_len = (chars − spaces)/n_words; chars via str len (O(1))
-    chars = filled.str.len().to_numpy(dtype=np.int64)
+    # mean_word_len = (chars − spaces)/n_words, spaces = n_words − 1
+    chars = pc.utf8_length(text).to_numpy().astype(np.int64)
     fcounts = counts.astype(np.float64)
     mean_wl = (chars - (counts - 1)) / fcounts
-    # symbol_ratio: ASCII punct class [!-/:-@[-`{-~] occurrences / n_words
-    sym = (
-        ((barr >= 33) & (barr <= 47))
-        | ((barr >= 58) & (barr <= 64))
-        | ((barr >= 91) & (barr <= 96))
-        | ((barr >= 123) & (barr <= 126))
-    )
-    symbol_ratio = _seg_count(sym, starts) / fcounts
-    # distinct_word_ratio: |distinct raw-case tokens| / |tokens| (textstats
-    # splits unlowered text — the raw factorize codes carry exactly that)
-    pair = idx * np.int64(len(uniques)) + codes
-    distinct = np.bincount(
-        (np.unique(pair) // np.int64(len(uniques))).astype(np.int64), minlength=n
-    )
-    distinct_ratio = distinct / fcounts
-    # stopword_ratio: lowered-token occurrences in the stop-word union
-    sw_hits = np.bincount(idx[sw], minlength=n)
-    stopword_ratio = sw_hits / fcounts
-    # ellipsis_count: non-overlapping '...' matches = sum(run_len // 3) over
-    # maximal '.' runs (runs cannot span docs — separator is a space)
-    dot = barr == 46
-    prev = np.empty_like(dot)
-    prev[0] = False
-    prev[1:] = dot[:-1]
-    run_start = np.nonzero(dot & ~prev)[0]
-    if len(run_start):
-        nxt = np.empty_like(dot)
-        nxt[-1] = False
-        nxt[:-1] = dot[1:]
-        run_end = np.nonzero(dot & ~nxt)[0]
-        run_matches = (run_end - run_start + 1) // 3
-        run_doc = np.searchsorted(bounds, run_start, side="right") - 1
-        ellipsis = np.bincount(run_doc, weights=run_matches, minlength=n).astype(
-            np.int64
-        )
-    else:
-        ellipsis = np.zeros(n, dtype=np.int64)
+    # distinct_word_ratio: distinct raw-case tokens (textstats splits
+    # unlowered text — the raw dictionary codes carry exactly that)
+    distinct_ratio = _distinct(idx, codes, n, len(uniques)) / fcounts
+    stopword_ratio = np.bincount(idx[sw], minlength=n) / fcounts
+    # ellipsis_count: non-overlapping '...' = sum(run_len // 3) over maximal
+    # '.' runs; a run ends at its doc's last byte
+    dots = (cls & _DOT) != 0
+    dpos, ddoc = pos[dots], doc[dots]
+    ellipsis = np.zeros(n, dtype=np.int64)
+    if len(dpos):
+        new = np.ones(len(dpos), dtype=bool)
+        new[1:] = (dpos[1:] != dpos[:-1] + 1) | (ddoc[1:] != ddoc[:-1])
+        run_len = np.bincount(np.cumsum(new) - 1)
+        ellipsis = np.bincount(ddoc[new], weights=run_len // 3, minlength=n).astype(np.int64)
 
     # --- repetition rules (Gopher §A1.1), textstats.py semantics ---
-    # dup_2gram_frac from the raw-case token codes: gram (c_i, c_{i+1}) for
-    # adjacent same-doc positions; per-doc distinct via one composite-key
-    # np.unique (the distinct_word_ratio trick, pairwise). Single-token docs
-    # have one degenerate gram → fraction 0, matching the expression form.
+    # dup_2gram_frac: gram (c_i, c_{i+1}) for adjacent same-doc positions;
+    # single-token docs have one degenerate gram → fraction 0
     V = np.int64(len(uniques))
-    if len(idx) > 1:
-        adj = idx[:-1] == idx[1:]
-    else:
-        adj = np.zeros(0, dtype=bool)
-    if adj.any():
-        gdoc = idx[:-1][adj]
-        gkey = codes[:-1][adj].astype(np.int64) * V + codes[1:][adj]
-        comp = gdoc * (V * V) + gkey
-        distinct2 = np.bincount(
-            (np.unique(comp) // (V * V)).astype(np.int64), minlength=n
-        )
-    else:
-        distinct2 = np.zeros(n, dtype=np.int64)
+    adj = idx[:-1] == idx[1:]
+    gkey = codes[:-1][adj].astype(np.int64) * V + codes[1:][adj]
+    distinct2 = _distinct(idx[:-1][adj], gkey, n, int(V * V)) if adj.any() else 0
     total2 = np.maximum(counts - 1, 1).astype(np.float64)
     dup_2gram = np.where(counts >= 2, (total2 - distinct2) / total2, 0.0)
+    # line and paragraph parts: Arrow splits on the literal separator
+    # (non-overlapping, left to right = Java split(-1) part counts)
+    lines = pc.split_pattern(text, "\n")
+    dup_line = _dup_frac(lines)
+    dup_para = _dup_frac(pc.split_pattern(text, "\n\n"))
 
-    # dup_line_frac / dup_para_frac: only docs actually containing the
-    # separator do any work (fast path: single-part docs are exactly 0, the
-    # common case for space-normalised crawl text); multi-part docs get one
-    # vectorized split + factorize + composite-distinct pass.
-    def _dup_part_frac(
-        sep: str, sep_counts: np.ndarray | None = None
-    ) -> np.ndarray:
-        has = (
-            (sep_counts > 0)
-            if sep_counts is not None
-            else filled.str.contains(sep, regex=False).to_numpy()
-        )
-        if not has.any():
-            return np.zeros(n, dtype=np.float64)
-        # regex count of the literal separator (newlines need no escaping);
-        # non-overlapping matches + 1 == Java split(-1) part count
-        total = (
-            sep_counts
-            if sep_counts is not None
-            else filled.str.count(sep).to_numpy(dtype=np.int64)
-        ) + 1
-        parts = filled[has].str.split(sep, regex=False).explode()
-        pidx = parts.index.to_numpy(dtype=np.int64)
-        pcodes, puniq = pd.factorize(parts)
-        pv = np.int64(len(puniq))
-        dcounts = np.bincount(
-            (np.unique(pidx * pv + pcodes) // pv).astype(np.int64), minlength=n
-        )
-        distinct = np.where(has, dcounts, 1)
-        return (total - distinct) / total.astype(np.float64)
+    # --- encoding-quality signals: exact literal counts + ctrl fraction
+    # over greatest(len, 1) ---
+    repl_n = token_sum([REPL_CHAR])
+    moji_n = token_sum(_MOJIBAKE)
+    ctrl_frac = per_doc(_CTRL) / np.maximum(chars, 1).astype(np.float64)
 
-    nl_counts = filled.str.count("\n").to_numpy(dtype=np.int64)
-    dup_line = _dup_part_frac("\n", nl_counts)
-    dup_para = _dup_part_frac("\n\n")
-
-    # --- encoding-quality signals (textstats.py semantics: exact literal
-    # counts + ctrl fraction over greatest(len, 1); pandas str.count over
-    # the escaped literal == the expression side's non-overlapping
-    # length-arithmetic count, and the int64/int64 -> float64 division is
-    # the same IEEE op both sides; `chars` above is already str.len) ---
-    repl_n = filled.str.count(re.escape(REPL_CHAR)).to_numpy(dtype=np.int64)
-    moji_n = sum(
-        filled.str.count(re.escape(seq)).to_numpy(dtype=np.int64)
-        for seq, _ in MOJIBAKE_SEQS
-    )
-    ctrl_n = filled.str.count(CTRL_CLASS).to_numpy(dtype=np.int64)
-    ctrl_frac = ctrl_n.astype(np.float64) / np.maximum(chars, 1).astype(
-        np.float64
-    )
-
-    # --- Gopher format rules (textstats.py expression semantics) ---
-    # Line rules: per-doc line count is '\n' count + 1 (Java split(-1)
-    # parity, as in _dup_part_frac), and the same fast path applies —
-    # single-line docs (the common case for space-normalised crawl text)
-    # get direct vectorized tests, only multi-line docs pay the explode.
-    # The bullet test is re.match == the expression side's ^-anchored
-    # rlike; the ellipsis test is str.endswith == Column.endswith.
-    lines_total = (nl_counts + 1).astype(np.float64)
-    has_nl = nl_counts > 0
-
-    def _line_ends(s: pd.Series) -> pd.Series:
-        out = s.str.endswith(ELLIPSIS_SUFFIXES[0])
-        for _suf in ELLIPSIS_SUFFIXES[1:]:
-            out = out | s.str.endswith(_suf)
-        return out
-
-    bullet_hits = np.zeros(n, dtype=np.int64)
-    ell_hits = np.zeros(n, dtype=np.int64)
-    single = ~has_nl
-    if single.any():
-        sdocs = filled[single]
-        bullet_hits[single] = sdocs.str.match(BULLET_LINE_RE).to_numpy(
-            dtype=np.int64
-        )
-        ell_hits[single] = _line_ends(sdocs).to_numpy(dtype=np.int64)
-    if has_nl.any():
-        lparts = filled[has_nl].str.split("\n", regex=False).explode()
-        lidx = lparts.index.to_numpy(dtype=np.int64)
-        bull = lparts.str.match(BULLET_LINE_RE).to_numpy(dtype=bool)
-        bullet_hits += np.bincount(lidx[bull], minlength=n)
-        ends = _line_ends(lparts).to_numpy(dtype=bool)
-        ell_hits += np.bincount(lidx[ends], minlength=n)
-    bullet_frac = bullet_hits / lines_total
-    ell_line_frac = ell_hits / lines_total
-    # Alphabetic-word fraction: the wordlike regex probes only UNIQUE
-    # tokens (str.contains == rlike, both unanchored search), then a
-    # gather over the code array + bincount gives per-doc hits.
-    u_word = (
-        pd.Series(uniques, dtype=object)
-        .str.contains(WORDLIKE_RE, regex=True)
-        .to_numpy(dtype=bool)
-    )
+    # --- Gopher format rules per line (RE2's ^-anchored search ==
+    # re.match == the expression side's ^-anchored rlike; ends_with ==
+    # str.endswith == Column.endswith) ---
+    line_n = lines.value_lengths().to_numpy()
+    lidx = np.repeat(np.arange(n, dtype=np.int64), line_n)
+    flat = lines.flatten()
+    bull = pc.match_substring_regex(flat, BULLET_LINE_RE)
+    ends = functools.reduce(pc.or_, (pc.ends_with(flat, s) for s in ELLIPSIS_SUFFIXES))
+    bullet_frac = np.bincount(
+        lidx[bull.to_numpy(zero_copy_only=False)], minlength=n
+    ) / line_n.astype(np.float64)
+    ell_line_frac = np.bincount(
+        lidx[ends.to_numpy(zero_copy_only=False)], minlength=n
+    ) / line_n.astype(np.float64)
     alpha_frac = np.bincount(idx[u_word[codes]], minlength=n) / fcounts
 
-    def _typed(a, t: str):
-        if t == "string":
-            return a
-        a = pd.Series(a, dtype=_PD_DTYPES[t])
-        a[na_mask] = pd.NA if t == "long" else np.nan
-        return a
+    # scrub candidates: any digit/'@' byte, or a toxic term; the regex chain
+    # runs on those docs only
+    cand = ((per_doc(_SCRUB) > 0) | (token_sum(TOXIC_TERMS) > 0)) & valid
+    delta = np.full(n, None, dtype=object)
+    ci = np.flatnonzero(cand)
+    for i, s in zip(ci, text.take(pa.array(ci)).to_pylist()):
+        out = scrub_text(s)
+        if out != s:
+            delta[i] = out
 
     scores = {
-        "lang_pred": pred_s,
+        "lang_pred": preds,
         "avg_logprob": avg,
         "ppl": np.exp(-avg),
-        "scrub_delta": _scrub_delta_series(texts, candidates=cand),
+        "scrub_delta": delta,
         "n_words": counts,
         "mean_word_len": mean_wl,
-        "symbol_ratio": symbol_ratio,
+        "symbol_ratio": per_doc(_SYM) / fcounts,
         "distinct_word_ratio": distinct_ratio,
         "stopword_ratio": stopword_ratio,
         "ellipsis_count": ellipsis,
@@ -370,7 +313,18 @@ def _fused_series(texts: pd.Series) -> pd.DataFrame:
         "ellipsis_line_frac": ell_line_frac,
         "alpha_word_frac": alpha_frac,
     }
-    return pd.DataFrame({c: _typed(scores[c], t) for c, t in SCORE_COLS})
+    null = None if valid.all() else ~valid
+    return pa.RecordBatch.from_arrays(
+        [pa.array(scores[f.name], f.type, mask=null) for f in SCORE_SCHEMA],
+        schema=SCORE_SCHEMA,
+    )
+
+
+def _fused_series(texts: pd.Series) -> pd.DataFrame:
+    """pandas adapter of `_fused_arrow`: longs come back as nullable Int64,
+    NULL doubles as NaN."""
+    stats = _fused_arrow(pa.array(texts, type=pa.string(), from_pandas=True))
+    return stats.to_pandas(types_mapper={pa.int64(): pd.Int64Dtype()}.get)
 
 
 def qa_scores_udf(text: Column) -> Column:

@@ -44,11 +44,15 @@ def scrub_expr(text: Column) -> Column:
     return out
 
 
-def _scrub_series(texts: pd.Series) -> pd.Series:
-    out = texts
+def scrub_text(s: str) -> str:
+    """The chain on one string."""
     for rx, repl in _COMPILED:
-        out = out.str.replace(rx, repl, regex=True)
-    return out
+        s = rx.sub(repl, s)
+    return s
+
+
+def _scrub_series(texts: pd.Series) -> pd.Series:
+    return texts.map(scrub_text, na_action="ignore")
 
 
 # Candidate prefilter: every ALL_PATTERNS match necessarily contains a digit,
@@ -58,21 +62,14 @@ def _scrub_series(texts: pd.Series) -> pd.Series:
 _PREFILTER = re.compile("[0-9@]|" + TOXIC_PATTERN)
 
 
-def _scrub_delta_series(texts: pd.Series, candidates=None) -> pd.Series:
+def _scrub_delta_series(texts: pd.Series) -> pd.Series:
     """Scrubbed text where it differs from the input, else None.
 
     The delta form is the scale-path representation: Arrow ships (and the
     sink stores) only changed docs; `coalesce(scrub_delta, text)` JVM-side
-    reconstructs the full scrubbed column byte-identically.
-
-    `candidates`: optional boolean mask (aligned to `texts`) that is a
-    superset of scrub-affected docs — callers that already scanned the batch
-    (qa_fused) pass it to skip the regex prefilter here."""
+    reconstructs the full scrubbed column byte-identically."""
     out = pd.Series([None] * len(texts), index=texts.index, dtype=object)
-    if candidates is None:
-        cand = texts.str.contains(_PREFILTER, regex=True, na=False)
-    else:
-        cand = pd.Series(candidates, index=texts.index) & texts.notna()
+    cand = texts.str.contains(_PREFILTER, regex=True, na=False)
     if cand.any():
         sub = texts[cand]
         scrubbed = _scrub_series(sub)

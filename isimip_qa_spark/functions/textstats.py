@@ -569,8 +569,8 @@ def rule_columns(
 
 # The keep gate, one row per conjunct: (rule column, comparator, threshold
 # field). Threshold fields are named alike on GopherThresholds and QAConfig,
-# and operator.ge/le apply unchanged to pyspark Columns and pandas Series, so
-# the Spark decision, the sink's pandas decision and the funnel violations
+# and operator.ge/le apply unchanged to pyspark Columns and numpy arrays, so
+# the Spark decision, the sink's numpy decision and the funnel violations
 # all fold this one table.
 RULE_CONJUNCTS: tuple[tuple[str, Callable, str], ...] = (
     ("n_words", operator.ge, "min_words"),
@@ -596,12 +596,12 @@ RULE_CONJUNCTS: tuple[tuple[str, Callable, str], ...] = (
 def keep_from(c, th=None, overrides: dict | None = None):
     """The keep/drop decision over already-built rule columns: `c` maps
     each rule column to a Column (`rule_columns(...)` output, or F.col
-    refs to a projection of it) or is a pandas frame of them, and the
-    result is a Column or a boolean Series accordingly. `th` is any object
-    carrying the threshold fields (GopherThresholds, QAConfig).
-    `overrides` optionally replaces named thresholds with per-row values
-    (the per-language-profile form: a profile Column or Series stands in
-    for the global literal)."""
+    refs to a projection of it) or to a numpy array of it (the sink's
+    per-batch form), and the result is a Column or a boolean array
+    accordingly. `th` is any object carrying the threshold fields
+    (GopherThresholds, QAConfig). `overrides` optionally replaces named
+    thresholds with per-row values (the per-language-profile form: a
+    profile Column or array stands in for the global literal)."""
     th = th or GopherThresholds()
     overrides = overrides or {}
     unknown = set(overrides) - {f for _, _, f in RULE_CONJUNCTS}

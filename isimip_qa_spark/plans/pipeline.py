@@ -7,11 +7,14 @@ still to compute — of one run (run_qa) or of every combo of a grid
 Physical shape (the properties that carry to 1000 executors / 100 TB):
 - ONE scan feeds all stages (reference's shared scan, main.py:130-136):
   stages only add columns, so the whole DAG is a single narrow pipeline —
-  scan → filter → mapInPandas(sink) → write, no shuffle. Each sink task
+  scan → filter → mapInArrow(sink) → write, no shuffle. Each sink task
   scores one scan split in place: keep is per document and metrics are per
   (chunk, partition), so nothing needs a host key, and url-hash-bucketed
   input already has balanced splits. A retried task rereads the same
   files in the same order, so it rewrites the same bytes.
+- The sink takes Spark's Arrow batches as they come (mapInArrow): the
+  kernel reads the `text` array's buffers in place and the scored rows
+  reach the parquet writer without a pandas round trip (plans/sink.py).
 - Scope filters (warc_ts window = Period, lang cohort = Region) are applied
   before anything else → parquet/Iceberg pushdown + partition pruning. In
   a shared job the filter is the OR of the targets' scopes, and the same
@@ -269,7 +272,7 @@ def _run_single_pass(
 ) -> list:
     """ONE fused job computes every chunk in each (cfg, out_dir, todo) of
     `work`: the scan, filtered by the OR over targets of scope_pred(cfg) ∧
-    bucket ∈ todo, goes straight into the write-audit mapInPandas sink
+    bucket ∈ todo, goes straight into the write-audit mapInArrow sink
     (plans/sink.py) with a `targets` column listing the targets each row
     belongs to. The sink scores each row once, writes it to every target's
     per-chunk parquet, and returns per-(target, chunk, partition) metrics

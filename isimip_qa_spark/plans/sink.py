@@ -1,11 +1,20 @@
 """Write-audit sink: the whole QA pass as ONE Spark job.
 
-`scan → scope filter → mapInPandas(sink)`, no shuffle: each sink task
+`scan → scope filter → mapInArrow(sink)`, no shuffle: each sink task
 scores one scan split in place. The sink computes the fused QA kernel
-(functions/qa_fused.py), derives the keep/drop decision, streams the scored
-rows into per-chunk parquet files with pyarrow — one set per target out_dir
-a row belongs to, each row scored once — and returns ONLY the per-(target,
-chunk, partition) metrics rows.
+(functions/qa_fused.py) on the Arrow batch's `text` array as it arrives,
+derives the keep/drop decision, streams the scored rows into per-chunk
+parquet files with pyarrow — one set per target out_dir a row belongs to,
+each row scored once — and returns ONLY the per-(target, chunk, partition)
+metrics rows.
+
+Arrow end to end: no pandas object is built on this path. `url`, `text`
+and `lang` go to the parquet writer as the very arrays Spark sent, next to
+the kernel's score columns; `warc_ts` is written as the session time zone's
+wall-clock time with the zone dropped (what a pandas hand-off would hold).
+Rows are split per (target, chunk) by one stable sort and a `take`, so
+each group is a slice in scan order, and the metrics come from numpy views
+of the batch.
 
 Why this shape (measured on this sandbox, reasoned for 1000 executors):
 - `text` crosses the JVM→Python boundary exactly once and nothing
@@ -24,8 +33,10 @@ Why this shape (measured on this sandbox, reasoned for 1000 executors):
 Semantics contract: identical output values to the column-expression stages
 (plans/stages.py STAGES, the test oracle) — enforced by the fused==unfused
 tests and the keep-decision agreement test (tests/test_rule_table.py).
-One caveat: a NULL `text` row gets keep=False here (pandas) where the
-expression form yields keep=NULL; both count as "not kept" in every metric.
+One caveat: a NULL `text` row is written with NULL scores and keep=False
+(its NULL scores compare False in every keep conjunct) where the expression
+form yields keep=NULL; both count as "not kept" in every metric, and the
+row adds to n_docs but not to ppl_n or words_n.
 """
 
 from __future__ import annotations
@@ -34,11 +45,14 @@ import logging
 import os
 from decimal import ROUND_HALF_UP, Decimal
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
-from ..functions.qa_fused import SCORE_COLS, _fused_series
-from ..functions.textstats import keep_from
+from ..functions.qa_fused import PA_TYPES, SCORE_COLS, _fused_arrow
+from ..functions.textstats import RULE_CONJUNCTS, keep_from
 
 log = logging.getLogger(__name__)
 
@@ -70,6 +84,11 @@ METRICS_SCHEMA = (
     "ts_min timestamp, ts_max timestamp, "
     "ppl_sum double, ppl_n long, words_sum long, words_n long"
 )
+_METRICS_DDL = f"target int, {METRICS_SCHEMA}"
+_METRICS_COLS = [f.split() for f in _METRICS_DDL.split(", ")]
+# the integer metrics, each a sum of per-row terms
+_SUMS = ("n_docs", "n_keep", "trip_short", "trip_symbol", "n_scrubbed",
+         "ppl_n", "words_sum", "words_n")
 
 # stable on-disk schema for the scored rows (everything the JVM writer
 # produced, minus the chunk partition column which lives in the dir name)
@@ -85,33 +104,38 @@ _OUT_COLS = [
 
 
 def _pa_schema():
-    import pyarrow as pa
+    return pa.schema(
+        [(name, {**PA_TYPES, "timestamp": pa.timestamp("us")}[t]) for name, t in _OUT_COLS]
+    )
 
-    m = {
-        "string": pa.string(),
-        "timestamp": pa.timestamp("us"),
-        "double": pa.float64(),
-        "long": pa.int64(),
-        "boolean": pa.bool_(),
-    }
-    return pa.schema([(name, m[t]) for name, t in _OUT_COLS])
+
+def _keep_arrow(stats, cfg) -> np.ndarray:
+    """The keep decision over the kernel's score columns (a pyarrow batch or
+    table): stages.rules_pass_expr + decision, the same conjunct table over
+    bit-identical inputs, so the same booleans. NULL scores (NULL text)
+    compare False, so such a row is never kept."""
+    col = {c: stats.column(c).to_numpy(zero_copy_only=False) for c, _, _ in RULE_CONJUNCTS}
+    lang = stats.column("lang_pred")
+    overrides = None
+    if cfg.lang_profiles:
+        langs = lang.to_pylist()
+        overrides = {
+            f: np.array([by_lang.get(x, fallback) for x in langs], dtype=np.float64)
+            for f, (by_lang, fallback) in cfg.profile_thresholds().items()
+        }
+    allowed = pc.is_in(lang, value_set=pa.array(list(cfg.allowed_langs), pa.string()))
+    return (
+        keep_from(col, cfg, overrides)
+        & (stats.column("ppl").to_numpy(zero_copy_only=False) <= cfg.max_ppl)
+        & allowed.to_numpy(zero_copy_only=False)
+    )
 
 
 def _keep_series(s: pd.DataFrame, cfg) -> pd.Series:
-    """pandas form of stages.rules_pass_expr + decision — the same conjunct
-    table over bit-identical inputs, so the same booleans."""
-    overrides = None
-    if cfg.lang_profiles:
-        overrides = {
-            f: s["lang_pred"].map(by_lang).fillna(fallback).astype(float)
-            for f, (by_lang, fallback) in cfg.profile_thresholds().items()
-        }
-    keep = (
-        keep_from(s, cfg, overrides)
-        & (s["ppl"] <= cfg.max_ppl)
-        & s["lang_pred"].isin(list(cfg.allowed_langs))
-    )
-    return keep.fillna(False).astype(bool)
+    """pandas adapter of `_keep_arrow`."""
+    cols = ["lang_pred", "ppl", *dict.fromkeys(c for c, _, _ in RULE_CONJUNCTS)]
+    stats = pa.RecordBatch.from_pandas(s[cols], preserve_index=False)
+    return pd.Series(_keep_arrow(stats, cfg), index=s.index)
 
 
 def _make_writer(pq, path: str, schema):
@@ -141,8 +165,6 @@ def qa_sink(scored_input: DataFrame, out_dirs: list[str], cfg) -> DataFrame:
     min_words, max_symbol = cfg.min_words, cfg.max_symbol_ratio
 
     def sink(batches):
-        import numpy as np
-        import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
@@ -152,43 +174,70 @@ def qa_sink(scored_input: DataFrame, out_dirs: list[str], cfg) -> DataFrame:
         # all keyed by (target, chunk)
         writers: dict[tuple[int, int], tuple] = {}
         pending: dict[tuple[int, int], list] = {}  # < ROW_GROUP_ROWS rows
-        acc: dict[tuple[int, int], dict] = {}
+        acc: dict[tuple[int, int], list] = {}  # [sums, ppl_sum, ts_min, ts_max]
+        ts_type = None
 
-        def flush(writer, tables: list, final: bool) -> list:
-            """Write every full ROW_GROUP_ROWS group of the buffered tables
+        def flush(writer, parts: list, final: bool) -> list:
+            """Write every full ROW_GROUP_ROWS group of the buffered batches
             (and, if final, the remainder); return what stays buffered."""
-            n = sum(t.num_rows for t in tables)
+            n = sum(b.num_rows for b in parts)
             end = n if final else n - n % ROW_GROUP_ROWS
             if end == 0:
-                return tables
-            t = pa.concat_tables(tables).combine_chunks()
+                return parts
+            t = pa.Table.from_batches(parts, schema).combine_chunks()
             for off in range(0, end, ROW_GROUP_ROWS):
                 writer.write_table(t.slice(off, ROW_GROUP_ROWS))
-            return [t.slice(end)] if end < n else []
+            return t.slice(end).to_batches() if end < n else []
 
-        def groups(pdf, out):
-            """(target, chunk) → its rows of `out`, each in scan order."""
-            chunks = pdf["chunk"].to_numpy()
-            lists = pdf["targets"].to_numpy()
-            row = np.repeat(np.arange(len(pdf)), [len(x) for x in lists])
-            tgt = np.concatenate(lists) if len(lists) else row
-            for t in np.unique(tgt):
-                rows = row[tgt == t]
-                sub = out if len(rows) == len(out) else out.iloc[rows]
-                for ck, g in sub.groupby(chunks[rows]):
-                    yield (int(t), int(ck)), g
-
-        for pdf in batches:
+        for batch in batches:
+            if not batch.num_rows:
+                continue
             # score each row once, whatever number of targets it feeds
-            stats = _fused_series(pdf["text"])
-            out = pdf[["url", "warc_ts", "text", "lang"]].reset_index(drop=True)
-            for c in stats.columns:
-                out[c] = stats[c]
-            out["scrubbed"] = out["scrub_delta"].notna()
-            out["keep"] = _keep_series(out, cfg)
-            out["warc_ts"] = out["warc_ts"].astype("datetime64[us]")
+            stats = _fused_arrow(batch.column("text"))
+            keep = _keep_arrow(stats, cfg)
+            ts = batch.column("warc_ts")  # tz-aware, in the session time zone
+            ts_type = ts.type
+            scrubbed = stats.column("scrub_delta").is_valid()
+            out = pa.RecordBatch.from_arrays(
+                [
+                    batch.column("url"),
+                    # the session's wall-clock time, zone dropped
+                    pc.local_timestamp(ts),
+                    batch.column("text"),
+                    batch.column("lang"),
+                    *stats.columns,
+                    scrubbed,
+                    pa.array(keep),
+                ],
+                schema=schema,
+            )
 
-            for key, g in groups(pdf, out):
+            # (target, chunk) groups: one stable sort of the (row, target)
+            # pairs, so each group is a slice in scan order
+            targets = batch.column("targets")
+            row = np.repeat(np.arange(len(batch)), targets.value_lengths().to_numpy())
+            tgt = targets.flatten().to_numpy()
+            chunk = batch.column("chunk").to_numpy()[row]
+            order = np.lexsort((chunk, tgt))
+            row, tgt, chunk = row[order], tgt[order], chunk[order]
+            cuts = np.flatnonzero((tgt[1:] != tgt[:-1]) | (chunk[1:] != chunk[:-1])) + 1
+            starts = np.r_[0, cuts]
+            out = out.take(pa.array(row))
+            # per-row terms of _SUMS in the same order, summed per group
+            # (NULL text has no ppl or n_words and is never kept)
+            valid = stats.column("n_words").is_valid().to_numpy(zero_copy_only=False)[row]
+            words = stats.column("n_words").fill_null(0).to_numpy()[row]
+            sym = stats.column("symbol_ratio").to_numpy(zero_copy_only=False)[row]
+            terms = [np.ones(len(row)), keep[row], (words < min_words) & valid,
+                     sym > max_symbol, scrubbed.to_numpy(zero_copy_only=False)[row],
+                     valid, words, valid]
+            sums = np.add.reduceat(np.stack(terms).astype(np.int64), starts, axis=1)
+            ppl = stats.column("ppl").to_numpy(zero_copy_only=False)[row]
+            ts_r = ts.cast(pa.int64()).to_numpy()[row]  # scope_pred: never NULL
+            ts_lo, ts_hi = np.minimum.reduceat(ts_r, starts), np.maximum.reduceat(ts_r, starts)
+
+            for g, (lo, hi) in enumerate(zip(starts, [*cuts, len(row)])):
+                key = (int(tgt[lo]), int(chunk[lo]))
                 w = writers.get(key)
                 if w is None:
                     cdir = os.path.join(data_dirs[key[0]], f"chunk={key[1]}")
@@ -223,66 +272,41 @@ def qa_sink(scored_input: DataFrame, out_dirs: list[str], cfg) -> DataFrame:
                     w = (_make_writer(pq, tmp, schema), tmp, final)
                     writers[key] = w
                     pending[key] = []
-                    acc[key] = {
-                        "n_docs": 0, "n_keep": 0, "ppl_sum": 0.0, "ppl_n": 0,
-                        "w_sum": 0, "w_n": 0, "trip_short": 0,
-                        "trip_symbol": 0, "n_scrubbed": 0,
-                        "ts_min": None, "ts_max": None,
-                    }
-                pending[key].append(
-                    pa.Table.from_pandas(
-                        g[[c for c, _ in _OUT_COLS]], schema=schema,
-                        preserve_index=False,
-                    )
-                )
+                    acc[key] = [0, 0.0, ts_lo[g], ts_hi[g]]
+                pending[key].append(out.slice(lo, hi - lo))
                 pending[key] = flush(w[0], pending[key], final=False)
                 a = acc[key]
-                a["n_docs"] += len(g)
-                a["n_keep"] += int(g["keep"].sum())
-                ppl = g["ppl"].dropna()
-                a["ppl_sum"] += float(ppl.sum())
-                a["ppl_n"] += len(ppl)
-                nwv = g["n_words"].dropna()
-                a["w_sum"] += int(nwv.sum())
-                a["w_n"] += len(nwv)
-                a["trip_short"] += int((g["n_words"] < min_words).sum())
-                a["trip_symbol"] += int((g["symbol_ratio"] > max_symbol).sum())
-                a["n_scrubbed"] += int(g["scrubbed"].sum())
-                lo, hi = g["warc_ts"].min(), g["warc_ts"].max()
-                a["ts_min"] = lo if a["ts_min"] is None else min(a["ts_min"], lo)
-                a["ts_max"] = hi if a["ts_max"] is None else max(a["ts_max"], hi)
+                a[0] += sums[:, g]
+                a[1] += float(ppl[lo:hi][valid[lo:hi]].sum())
+                a[2], a[3] = min(a[2], ts_lo[g]), max(a[3], ts_hi[g])
 
         rows = []
         for (t, ck), (w, tmp, final) in writers.items():
             flush(w, pending[t, ck], final=True)
             w.close()
             os.replace(tmp, final)  # atomic; task retry last-wins
-            a = acc[t, ck]
+            sums, ppl_sum, ts_min, ts_max = acc[t, ck]
+            s = dict(zip(_SUMS, map(int, sums)))
             rows.append(
                 {
                     "target": t,
                     "chunk": ck,
                     "partition_id": pid,
-                    "n_docs": a["n_docs"],
-                    "n_keep": a["n_keep"],
-                    "avg_ppl": _round4_half_up(a["ppl_sum"] / a["ppl_n"])
-                    if a["ppl_n"]
+                    **s,
+                    "avg_ppl": _round4_half_up(ppl_sum / s["ppl_n"]) if s["ppl_n"] else None,
+                    "avg_words": _round4_half_up(s["words_sum"] / s["words_n"])
+                    if s["words_n"]
                     else None,
-                    "avg_words": _round4_half_up(a["w_sum"] / a["w_n"])
-                    if a["w_n"]
-                    else None,
-                    "trip_short": a["trip_short"],
-                    "trip_symbol": a["trip_symbol"],
-                    "n_scrubbed": a["n_scrubbed"],
-                    "ts_min": a["ts_min"],
-                    "ts_max": a["ts_max"],
-                    "ppl_sum": a["ppl_sum"],
-                    "ppl_n": a["ppl_n"],
-                    "words_sum": a["w_sum"],
-                    "words_n": a["w_n"],
+                    "ts_min": int(ts_min),
+                    "ts_max": int(ts_max),
+                    "ppl_sum": ppl_sum,
                 }
             )
         if rows:
-            yield pd.DataFrame(rows)
+            # timestamps as the instants the batches carried
+            types = {**PA_TYPES, "timestamp": ts_type}
+            yield pa.RecordBatch.from_pylist(
+                rows, schema=pa.schema([(c, types[t]) for c, t in _METRICS_COLS])
+            )
 
-    return scored_input.mapInPandas(sink, f"target int, {METRICS_SCHEMA}")
+    return scored_input.mapInArrow(sink, _METRICS_DDL)

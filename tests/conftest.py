@@ -70,3 +70,60 @@ def sink_jobs(spark):
         return out, n
 
     return run
+
+
+# Bytes of every class the fused kernel counts (symbols, dots, a control
+# char, digits and '@', a toxic term, multi-byte chars), for the docs around
+# a kernel edge case.
+EDGE_PAD = "pad!? 42 x@y ..\x07.. badword1 中é\n\n"
+
+
+@pytest.fixture(scope="session")
+def kernel_matches_stages(spark):
+    """check(docs) asserts that the fused kernel, run on `docs` as a slice
+    (offset != 0) of a larger Arrow array between EDGE_PAD docs, equals the
+    unfused stages (expression forms plus the per-stage pandas UDFs) in
+    every score column and in keep. The docs sit back to back in the
+    array's data buffer, so a kernel that misplaces a doc offset moves a
+    pad's or a neighbour's bytes into the docs under test."""
+    import math
+
+    import pyarrow as pa
+
+    from isimip_qa_spark.functions.qa_fused import SCORE_COLS, _fused_arrow
+    from isimip_qa_spark.plans.config import QAConfig
+    from isimip_qa_spark.plans.pipeline import apply_stages
+    from isimip_qa_spark.plans.sink import _keep_arrow
+
+    cfg = QAConfig()
+    cols = [c for c, _ in SCORE_COLS]
+
+    def norm(values) -> list:
+        return [
+            None if v is None or (isinstance(v, float) and math.isnan(v)) else v
+            for v in values
+        ]
+
+    def check(docs: list) -> None:
+        arr = pa.array([EDGE_PAD, *docs, EDGE_PAD], pa.string()).slice(1, len(docs))
+        assert arr.offset == 1
+        stats = _fused_arrow(arr)
+        df = spark.createDataFrame(list(enumerate(docs)), "i int, text string")
+        want = (
+            apply_stages(df, cfg, fused=False)
+            .select("i", *cols, "keep")
+            .toPandas()
+            .sort_values("i")
+        )
+        # NULL text: every score NULL and keep False here; the expression
+        # forms yield NULL keep (and a few 0.0 scores)
+        for c in cols:
+            got = norm(stats.column(c).to_pylist())
+            exp = norm(want[c].astype(object).tolist())
+            for d, g, w in zip(docs, got, exp):
+                assert g == (None if d is None else w), (c, d)
+        keep = _keep_arrow(stats, cfg).tolist()
+        for d, k, w in zip(docs, keep, norm(want["keep"].astype(object).tolist())):
+            assert k == (False if d is None else w) and (w is None) == (d is None)
+
+    return check

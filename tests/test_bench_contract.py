@@ -38,3 +38,37 @@ def test_calibration_constants_sane():
 
     assert 0 < bench.CAL_REF_SEC < 60  # seconds, clean-window floor
     assert bench.CAL_N <= bench.PAGES_N or bench.PAGES_N < 50_000
+
+
+def test_start_calibration_times_only_warm_reps(monkeypatch):
+    """The segment-start calibration is the session's first work: one whole
+    untimed calibration runs first, and only the later reps are timed
+    against CAL_REF_SEC. The end calibration times its reps directly."""
+    import bench
+
+    calls = []
+    walls = iter([[1.03], [0.9, 0.86, 0.88], [0.87, 0.85, 0.95]])
+
+    def fake_qa_walls(spark, pages, measured_reps=3):
+        calls.append(measured_reps)
+        return next(walls)
+
+    class FakeSpark:
+        class read:
+            @staticmethod
+            def parquet(path):
+                return path
+
+    monkeypatch.setattr(bench, "qa_walls", fake_qa_walls)
+    monkeypatch.setattr(bench, "ensure_pages", lambda spark, n: f"pages-{n}")
+    start = bench.time_calibration(FakeSpark(), cold=True)
+    assert calls == [1, 3]
+    assert start == {
+        "min_sec": 0.86,
+        "median_sec": 0.88,
+        "reps": 3,
+        "noise_index": round(0.86 / bench.CAL_REF_SEC, 3),
+    }
+    end = bench.time_calibration(FakeSpark())
+    assert calls == [1, 3, 3]
+    assert end["min_sec"] == 0.85 and end["noise_index"] == round(0.85 / bench.CAL_REF_SEC, 3)

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from isimip_qa_spark.queries.webtext import (
     MOJIBAKE_SEQS,
     encoding_quality,
@@ -119,3 +121,32 @@ def test_keep_gate_trips_on_planted_corruption(spark):
         "repl": False,
         "moji": False,
     }
+
+
+# Multi-byte chars at doc bounds: a literal split over two adjacent docs of
+# the kernel's buffer is not a match, and char counts stay per doc.
+ENCODING_EDGES = {
+    "multibyte_at_edges": ["中文", "é中", "…", "x …", "ü"],
+    "mojibake_across_docs": ["cafÃ", "© ok", "the cafÃ© is", "dâ\u0080", "\u0099hiver"],
+    "replacement_chars": ["a �..", ".� b", "��", None],
+    "ctrl_at_edges": ["bell\x07", "\x07ring", "\t\r ok"],
+}
+
+
+@pytest.mark.parametrize("docs", ENCODING_EDGES.values(), ids=ENCODING_EDGES.keys())
+def test_kernel_encoding_edges_match_unfused_stages(kernel_matches_stages, docs):
+    kernel_matches_stages(docs)
+
+
+def test_counted_literals_fit_per_token_counting():
+    """The kernel counts U+FFFD, the mojibake sequences and the toxic terms
+    per unique token and sums per doc. That equals str.count over the doc
+    only if no literal holds a space (a match then lies inside one token)
+    and none overlaps a copy of itself (so every match is a str.count
+    match)."""
+    from isimip_qa_spark.functions.scrub import TOXIC_TERMS
+    from isimip_qa_spark.functions.textstats import REPL_CHAR
+
+    for lit in [REPL_CHAR, *(s for s, _ in MOJIBAKE_SEQS), *TOXIC_TERMS]:
+        assert " " not in lit
+        assert not any(lit[:k] == lit[-k:] for k in range(1, len(lit))), lit

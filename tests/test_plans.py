@@ -88,7 +88,7 @@ def test_pipeline_is_single_narrow_pass(spark, pages_sdf):
 
 def test_qa_sink_reads_the_scan_directly(spark, pages_sdf, tmp_path, monkeypatch):
     """run_qa hands the sink the scoped, bucket-filtered scan itself:
-    scan → filter → mapInPandas with no Exchange, so each sink task scores
+    scan → filter → mapInArrow with no Exchange, so each sink task scores
     one scan split in place."""
     from isimip_qa_spark.plans import pipeline
     from isimip_qa_spark.plans.config import QAConfig
@@ -112,7 +112,8 @@ def test_qa_sink_reads_the_scan_directly(spark, pages_sdf, tmp_path, monkeypatch
     assert "Exchange" not in plan_of(given)
     plan = plan_of(metrics)
     assert "Exchange" not in plan
-    assert "MapInPandas" in plan and "FileScan parquet" in plan
+    assert "MapInArrow" in plan and "FileScan parquet" in plan
+    assert "MapInPandas" not in plan
 
 
 def test_ann_broadcasts_queries(spark, sf_dir):

@@ -271,3 +271,61 @@ def test_sink_row_groups_independent_of_arrow_batch(spark, tmp_path):
         assert sizes == [ROW_GROUP_ROWS] * (n // ROW_GROUP_ROWS) + (
             [n % ROW_GROUP_ROWS] if n % ROW_GROUP_ROWS else []
         )
+
+
+def test_sink_writes_warc_ts_as_session_wall_clock(spark, tmp_path):
+    """Under a non-UTC session time zone the sink writes `warc_ts` as that
+    zone's wall-clock time, with no zone, and the metrics' ts_min/ts_max read
+    back as wall-clock times of the same zone (the values a pandas hand-off
+    produced). The instants straddle a daylight-saving change."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from isimip_qa_spark.sources.pages import pages_pandas
+
+    tz = "America/New_York"
+    n = 48
+    epoch = 1710036000  # 2024-03-10 02:00 UTC; NY springs forward at 07:00 UTC
+    texts = pages_pandas(np.arange(n))["text"].tolist()
+    rows = [(f"https://tz.example.org/p/{i}", texts[i], "en", i) for i in range(n)]
+    # instants from epoch seconds: independent of the session time zone
+    pages = spark.createDataFrame(rows, "url string, text string, lang string, i int")
+    pages = pages.withColumn(
+        "warc_ts", F.timestamp_seconds(F.lit(epoch) + F.col("i") * 900)
+    ).drop("i")
+
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, tz)
+    try:
+        out = str(tmp_path / "qa_tz")
+        run_qa(spark, pages, QAConfig(n_chunks=2, n_partitions=2), out)
+    finally:
+        spark.conf.set(key, prev)
+
+    def wall(seconds) -> pd.Series:
+        utc = pd.to_datetime(pd.Series(seconds), unit="s", utc=True)
+        return utc.dt.tz_convert(tz).dt.tz_localize(None).astype("datetime64[us]")
+
+    data = pq.read_table(os.path.join(out, "data"), columns=["url", "warc_ts"])
+    assert data.schema.field("warc_ts").type == pa.timestamp("us")
+    got = data.to_pandas()
+    got = got.iloc[np.argsort([int(u.rsplit("/", 1)[1]) for u in got["url"]])]
+    want = wall(epoch + np.arange(n) * 900)
+    assert got["warc_ts"].tolist() == want.tolist()
+    # 20 rows before the change at 07:00 UTC (EST, -5 h), 28 after (EDT, -4 h)
+    assert want.iloc[0] == pd.Timestamp("2024-03-09 21:00")
+    assert want.iloc[19] == pd.Timestamp("2024-03-10 01:45")
+    assert want.iloc[20] == pd.Timestamp("2024-03-10 03:00")
+    assert want.iloc[-1] == pd.Timestamp("2024-03-10 09:45")
+
+    metrics = pd.read_parquet(os.path.join(out, "metrics"))
+    assert metrics["ts_min"].dtype == metrics["ts_max"].dtype == "datetime64[us]"
+    assert metrics["ts_min"].min() == want.min() and metrics["ts_max"].max() == want.max()
+    for c in range(2):
+        ts = pq.read_table(os.path.join(out, "data", f"chunk={c}")).column("warc_ts")
+        m = metrics[metrics["chunk"] == c]
+        assert (m["ts_min"].min(), m["ts_max"].max()) == (
+            ts.to_pandas().min(), ts.to_pandas().max()
+        )

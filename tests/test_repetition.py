@@ -133,3 +133,18 @@ def test_binding_thresholds_flip_keep_with_pandas_oracle(spark, pages_sdf):
     )
     assert (base["dup_line_frac"] == 0.0).all()
     assert (base["dup_2gram_frac"] <= dflt.max_dup_2gram_frac).all()
+
+
+# Line and paragraph splits at doc bounds: docs sit back to back in the
+# kernel's buffer, so a newline ending one doc is adjacent to one starting
+# the next.
+LINE_EDGES = {
+    "newlines_across_docs": ["a\n", "\nb", "a\n\n", "\n\nb"],
+    "paragraphs_across_docs": ["p\n\nq\n\np", "\n\n", "p\n", "\np"],
+    "lines_beside_null_and_empty": ["x\nx", None, "", "\n", "- a\n- a", "...\n..."],
+}
+
+
+@pytest.mark.parametrize("docs", LINE_EDGES.values(), ids=LINE_EDGES.keys())
+def test_kernel_line_edges_match_unfused_stages(kernel_matches_stages, docs):
+    kernel_matches_stages(docs)

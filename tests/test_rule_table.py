@@ -110,3 +110,23 @@ def test_spark_and_sink_decisions_follow_the_table(spark, stats):
         assert (expr[valid].astype(bool) == sink[valid]).all(), label
         assert (sink[valid] == want).all(), label
         assert (~want).any(), f"{label} trips no row"
+
+
+# Buffer-boundary cases for the kernel, which reads all docs of a batch from
+# one byte buffer with no separator between them (each runs as a slice of a
+# larger array: see the kernel_matches_stages fixture).
+BUFFER_EDGES = {
+    "null": ["one..", None, ".two"],
+    "empty": ["one..", "", ".two", ""],
+    "all_space": [" ", "   ", "a b"],
+    "sliced": ["!the cat sat!", "?le chat?"],
+    "dots_across_docs": ["it ends..", ".it starts", "...", "."],
+    "toxic_term_across_docs": ["we say badw", "ord1 here", "and badword1 too"],
+    # long words: the expression forms are slow on many tokens
+    "doc_over_1mb": [("y" * 100_000 + " ") * 11 + "end..", ".next"],
+}
+
+
+@pytest.mark.parametrize("docs", BUFFER_EDGES.values(), ids=BUFFER_EDGES.keys())
+def test_kernel_buffer_edges_match_unfused_stages(kernel_matches_stages, docs):
+    kernel_matches_stages(docs)

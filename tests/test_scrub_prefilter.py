@@ -23,8 +23,8 @@ from isimip_qa_spark.functions.scrub import (
 
 
 def _fused_byte_scan_flags(s: str) -> bool:
-    """Reference model of qa_fused's candidate scan (qa_fused.py:125-133):
-    any ASCII digit or '@' byte, or a raw toxic-term byte match."""
+    """Reference model of qa_fused's candidate scan: any ASCII digit or '@'
+    byte, or a toxic term (the kernel finds it in a space-split token)."""
     b = s.encode("utf-8")
     if any((48 <= c <= 57) or c == 64 for c in b):
         return True
@@ -61,11 +61,11 @@ def test_prefiltered_delta_still_scrubs(pattern, repl, data):
 
 
 def test_toxic_terms_are_byte_scan_safe():
-    """qa_fused locates toxic terms with a raw bytes find in a space-joined
-    buffer: terms must be lowercase (the buffer is raw-cased; the regex is
-    case-sensitive too — conventions must stay aligned), contain no space
-    (must not span the doc separator), and no regex metacharacters (they are
-    spliced into TOXIC_PATTERN verbatim)."""
+    """qa_fused locates toxic terms inside the raw-cased tokens of a
+    space split: terms must be lowercase (the regex is case-sensitive too —
+    conventions must stay aligned), contain no space (so a match lies inside
+    one token), and no regex metacharacters (they are spliced into
+    TOXIC_PATTERN verbatim)."""
     for term in TOXIC_TERMS:
         assert term == term.lower()
         assert " " not in term

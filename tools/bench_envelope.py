@@ -2,8 +2,8 @@
 
 The round-1 envelope (0.86 at 2→8 cores) came from a cache-resident
 pure-CPU probe — an upper bound for compute-only work. The QA kernel is not
-cache-resident: per batch it encodes/joins/decodes multi-MB text buffers,
-factorizes token streams, and allocates large intermediates — i.e. it is
+cache-resident: per batch it scans multi-MB text buffers, splits and
+dictionary-encodes token streams, and allocates large intermediates — i.e. it is
 partially memory-bandwidth-bound, and shared-socket bandwidth decays with
 busy-core count on top of the frequency envelope.
 
@@ -38,11 +38,12 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file is in; the workers get it as PYTHONPATH
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 WORKER = r"""
 import os, sys, time
-sys.path.insert(0, "/root/repo")
 import numpy as np
 # same malloc tuning the engine's Python workers get (session.py)
 # (set by the parent before spawn; keep env as-is here)
@@ -62,7 +63,6 @@ print(n)
 
 PIPELINE_WORKER = r"""
 import os, sys, time
-sys.path.insert(0, "/root/repo")
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -160,6 +160,9 @@ def run_level(n_workers: int, secs: float, mode: str = "kernel") -> float:
                 text=True,
                 env=dict(
                     os.environ,
+                    PYTHONPATH=os.pathsep.join(
+                        [REPO, *filter(None, [os.environ.get("PYTHONPATH")])]
+                    ),
                     MALLOC_MMAP_THRESHOLD_="536870912",
                     MALLOC_TRIM_THRESHOLD_="536870912",
                 ),

@@ -18,11 +18,13 @@ the blind spot left by the driver sampling only ~50 of the queries.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file is in, not whichever one is on sys.path already
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def normalize(df):
