@@ -6,9 +6,9 @@ same tokenisation — measured on this sandbox the JVM expression forms
 (split / array_distinct / array_contains chains) cost ~200µs/doc while this
 kernel computes identical values for ~16µs/doc (4096-doc batches, one core
 of a 4-core VM). The column-expression forms
-(functions/textstats.py) remain the reference surface: STAGES (unfused) uses
-them and tests assert bit-equality between the two paths; the pipeline runs
-only this kernel.
+(functions/textstats.py) remain the reference surface: the STAGES oracle
+(plans/stages.py) uses them and tests assert bit-equality between the two
+paths; every QA run, batch or stream, scores with this kernel only.
 
 Kernel shape (`_fused_arrow`, per Arrow string array of ~4k docs):
 - The batch's UTF-8 bytes are read in place: the array's offsets are the
@@ -31,9 +31,8 @@ Kernel shape (`_fused_arrow`, per Arrow string array of ~4k docs):
   regex chain on the candidate docs only; the column is NULL where a doc is
   unchanged.
 
-`_fused_series` is its pandas adapter (`qa_scores_udf`, tests, benchmark
-replay); the sink (plans/sink.py) calls `_fused_arrow` on the Arrow batches
-Spark hands it.
+`_fused_series` is its pandas adapter (tests, benchmark replay); the sink
+(plans/sink.py) calls `_fused_arrow` on the Arrow batches Spark hands it.
 
 The reference analogue is the shared-scan discipline: one open file feeds
 all extractions (/root/reference/isimip_qa/main.py:130-136).
@@ -48,8 +47,6 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from .scrub import TOXIC_TERMS, scrub_text
 from .textstats import (
@@ -66,13 +63,11 @@ _WORDLIKE = re.compile(WORDLIKE_RE)
 
 # Every column the kernel emits, in output order, with its Spark type: the
 # Python-only scores, then the rule statistics the keep gate reads.
-PYTHON_SCORE_COLS: tuple[tuple[str, str], ...] = (
+SCORE_COLS: tuple[tuple[str, str], ...] = (
     ("lang_pred", "string"),
     ("avg_logprob", "double"),
     ("ppl", "double"),
     ("scrub_delta", "string"),
-)
-RULE_STAT_COLS: tuple[tuple[str, str], ...] = (
     ("n_words", "long"),
     ("mean_word_len", "double"),
     ("symbol_ratio", "double"),
@@ -89,8 +84,6 @@ RULE_STAT_COLS: tuple[tuple[str, str], ...] = (
     ("ellipsis_line_frac", "double"),
     ("alpha_word_frac", "double"),
 )
-SCORE_COLS = PYTHON_SCORE_COLS + RULE_STAT_COLS
-FUSED_SCHEMA = ", ".join(f"{c} {t}" for c, t in SCORE_COLS)
 # Arrow type per Spark type name (the sink adds timestamp)
 PA_TYPES = {
     "string": pa.string(),
@@ -325,7 +318,3 @@ def _fused_series(texts: pd.Series) -> pd.DataFrame:
     NULL doubles as NaN."""
     stats = _fused_arrow(pa.array(texts, type=pa.string(), from_pandas=True))
     return stats.to_pandas(types_mapper={pa.int64(): pd.Int64Dtype()}.get)
-
-
-def qa_scores_udf(text: Column) -> Column:
-    return F.pandas_udf(_fused_series, FUSED_SCHEMA)(text)

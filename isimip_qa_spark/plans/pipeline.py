@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import contextlib
 import functools
+import glob
 import operator
 import os
 import shutil
@@ -52,7 +53,7 @@ from .checkpoint import (
 from .config import QAConfig
 from .sink import METRICS_SCHEMA, qa_sink
 from .skew import detect_hot_hosts  # noqa: F401  unused; perfbench/run.py wraps it
-from .stages import FUSED_STAGES, STAGES
+from .stages import STAGES
 
 # pandas dtypes of METRICS_SCHEMA's numeric columns — fetched-chunk metrics
 # replayed from JSON manifests are coerced to these so an all-None column
@@ -152,12 +153,10 @@ def scope_pred(cfg: QAConfig) -> Column:
     return pred
 
 
-def apply_stages(df: DataFrame, cfg: QAConfig, fused: bool = True) -> DataFrame:
-    """Fused (default): the three Python stages run as ONE pandas UDF —
-    one Arrow transfer of `text` per batch instead of three. The unfused
-    path keeps per-stage physical separation (the test oracle, and the
-    streaming scorer)."""
-    for stage in (FUSED_STAGES if fused else STAGES):
+def apply_stages(df: DataFrame, cfg: QAConfig) -> DataFrame:
+    """The expression-stage oracle: STAGES one after another, each stage
+    physically separate. run_qa's sink must produce the same columns."""
+    for stage in STAGES:
         df = stage.apply(df, cfg)
     # derived columns: `scrub_delta` is the stored form (changed docs only);
     # the full scrubbed column is a JVM-side coalesce, never shipped or
@@ -371,8 +370,16 @@ def _publish(out_dir: str, cfg: QAConfig, todo: list[int], metrics_pdf, wall: fl
 
 def read_scored(spark: SparkSession, out_dir: str) -> DataFrame:
     """Scored corpus with the full scrubbed column reconstructed from the
-    stored delta (byte-identical: unchanged docs coalesce to `text`)."""
-    df = spark.read.parquet(f"{out_dir}/data")
+    stored delta (byte-identical: unchanged docs coalesce to `text`).
+
+    `out_dir` may be a glob over several out_dirs (a stream's
+    `<out>/batch=*`): each one with data is read on its own and the rows
+    are unioned, because Spark's partition discovery rejects several roots
+    that each hold chunk=K directories."""
+    dirs = [d for d in sorted(glob.glob(out_dir)) if os.path.isdir(f"{d}/data")]
+    df = functools.reduce(
+        DataFrame.unionByName, [spark.read.parquet(f"{d}/data") for d in dirs or [out_dir]]
+    )
     if "text_scrubbed" not in df.columns and "scrub_delta" in df.columns:
         df = df.withColumn(
             "text_scrubbed", F.coalesce(F.col("scrub_delta"), F.col("text"))

@@ -31,12 +31,12 @@ Why this shape (measured on this sandbox, reasoned for 1000 executors):
   analogue, and the resume unit per north_rule).
 
 Semantics contract: identical output values to the column-expression stages
-(plans/stages.py STAGES, the test oracle) — enforced by the fused==unfused
+(plans/stages.py STAGES, the test oracle) — enforced by the kernel==stages
 tests and the keep-decision agreement test (tests/test_rule_table.py).
-One caveat: a NULL `text` row is written with NULL scores and keep=False
-(its NULL scores compare False in every keep conjunct) where the expression
-form yields keep=NULL; both count as "not kept" in every metric, and the
-row adds to n_docs but not to ppl_n or words_n.
+A NULL `text` row is written with NULL scores and keep=False (its NULL
+scores compare False in every keep conjunct), adds to n_docs but not to
+ppl_n or words_n. Only the oracle differs there: its expression form yields
+keep=NULL, so the tests compare such rows as "not kept".
 """
 
 from __future__ import annotations

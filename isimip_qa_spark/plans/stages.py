@@ -4,9 +4,10 @@ keep/drop decision is a column, so lineage can count rule trips).
 The stage registry mirrors the reference's extraction plugin registry
 (/root/reference/isimip_qa/extractions/__init__.py:11-22 walks the package
 for Extraction subclasses) with explicit registration instead of import-time
-magic; capability predicates (has_region/has_period, models.py:139-145)
-become `Stage.applicable(cfg)`.
+magic. Lineage records the stage names.
 
+The stages are the expression-form oracle of the QA pass: production
+scoring is the sink's fused kernel (plans/sink.py), tested against them.
 Everything is column expressions or Arrow pandas UDFs — no per-row Python.
 """
 
@@ -21,7 +22,6 @@ from pyspark.sql import functions as F
 from ..functions import textstats as ts
 from ..functions.langid import STOPWORD_UNION, lang_pred_udf
 from ..functions.perplexity import ppl_udf
-from ..functions.qa_fused import RULE_STAT_COLS, SCORE_COLS, qa_scores_udf
 from ..functions.scrub import scrub_delta_udf
 from .config import QAConfig
 
@@ -30,8 +30,6 @@ from .config import QAConfig
 class Stage:
     name: str
     apply: Callable[[DataFrame, QAConfig], DataFrame]
-    # columns this stage adds (lineage metadata + pruning discipline)
-    adds: tuple[str, ...]
 
 
 def _langid(df: DataFrame, cfg: QAConfig) -> DataFrame:
@@ -88,27 +86,10 @@ def _decision(df: DataFrame, cfg: QAConfig) -> DataFrame:
     return df.withColumn("keep", keep)
 
 
-def _python_scores_fused(df: DataFrame, cfg: QAConfig) -> DataFrame:
-    """langid + perplexity + scrub + rule statistics in ONE Arrow round-trip
-    (qa_fused.py); outputs are bit-identical to the individual stages
-    (tested against the expression forms)."""
-    s = qa_scores_udf(F.col("text"))
-    return df.withColumns({c: s[c] for c, _ in SCORE_COLS})
-
-
 STAGES: list[Stage] = [
-    Stage("langid", _langid, ("lang_pred",)),
-    Stage("perplexity", _perplexity, ("avg_logprob", "ppl")),
-    Stage("rules", _rules, tuple(c for c, _ in RULE_STAT_COLS)),
-    Stage("scrub", _scrub, ("scrub_delta",)),
-    Stage("decision", _decision, ("keep",)),
-]
-
-# Physical plan actually executed by the pipeline: every per-doc computation
-# fused into one UDF; logical stage list (lineage) stays STAGES.
-FUSED_STAGES: list[Stage] = [
-    Stage(
-        "python_scores", _python_scores_fused, tuple(c for c, _ in SCORE_COLS)
-    ),
-    STAGES[4],  # decision
+    Stage("langid", _langid),
+    Stage("perplexity", _perplexity),
+    Stage("rules", _rules),
+    Stage("scrub", _scrub),
+    Stage("decision", _decision),
 ]

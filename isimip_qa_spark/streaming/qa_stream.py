@@ -1,8 +1,9 @@
 """Streaming QA: score pages as they arrive; emit windowed QA metrics.
 
-Three entry points:
-- `score_stream`: the full stage DAG on a file stream (append sink) — the
-  streaming twin of plans/pipeline.run_qa's scoring pass.
+Four entry points:
+- `score_stream`: the batch QA pass per micro-batch — `foreachBatch` runs
+  plans/pipeline.run_qa on each batch into `<out_dir>/batch=<id>`, with its
+  data, metrics, lineage and chunk manifests.
 - `windowed_metrics_stream`: watermark + tumbling-window keep-rate metrics
   (late pages beyond the watermark are dropped, the streaming analogue of
   the reference's unparseable-time drop).
@@ -27,8 +28,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..catalog import PAGES_SCHEMA
 from ..plans.config import QAConfig
-from ..plans.pipeline import apply_stages
-from ..plans.stages import rules_pass_expr
+from ..plans.pipeline import run_qa
+from ..plans.stages import STAGES, rules_pass_expr
 
 
 def read_pages_stream(
@@ -47,15 +48,23 @@ def score_stream(
     cfg: QAConfig | None = None,
     available_now: bool = True,
 ):
-    """Score arriving pages; append to parquet. Returns the StreamingQuery."""
+    """Score arriving pages with the batch pass: each micro-batch is one
+    run_qa out_dir, `<out_dir>/batch=<id>`. A replayed batch (same id, same
+    files) resumes through run_qa's chunk manifests: finished chunks are
+    skipped, unfinished ones cleared and recomputed. Read the output with
+    read_scored(spark, f"{out_dir}/batch=*"). Returns the StreamingQuery."""
     cfg = cfg or QAConfig()
-    pages = read_pages_stream(spark, src_dir).drop("html")
-    scored = apply_stages(pages.filter(F.col("warc_ts").isNotNull()), cfg)
+    pages = read_pages_stream(spark, src_dir)
+    if not cfg.extract_from_html:
+        # a micro-batch reaches run_qa as an RDD scan: prune html here
+        pages = pages.drop("html")
     writer = (
-        scored.writeStream.format("parquet")
-        .option("path", f"{out_dir}/data")
+        pages.writeStream.foreachBatch(
+            lambda df, batch_id: run_qa(
+                df.sparkSession, df, cfg, f"{out_dir}/batch={batch_id}"
+            )
+        )
         .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .outputMode("append")
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
@@ -93,9 +102,10 @@ def windowed_metrics_stream(
     passes its end (finalized extraction artifacts, never rewritten)."""
     cfg = cfg or QAConfig()
     pages = read_pages_stream(spark, src_dir).drop("html")
-    # rules are pure column exprs → compute keep inline (no UDF in the agg)
-    from ..plans.stages import STAGES
-
+    # rules are pure column exprs → compute keep inline (no UDF in the agg);
+    # language profiles key their thresholds on the langid stage's lang_pred
+    if cfg.lang_profiles:
+        pages = STAGES[0].apply(pages, cfg)  # langid stage
     enriched = STAGES[2].apply(pages, cfg)  # rules stage
     metrics = windowed_metrics_agg(enriched, cfg, watermark)
     return (

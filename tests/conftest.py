@@ -110,7 +110,7 @@ def kernel_matches_stages(spark):
         stats = _fused_arrow(arr)
         df = spark.createDataFrame(list(enumerate(docs)), "i int, text string")
         want = (
-            apply_stages(df, cfg, fused=False)
+            apply_stages(df, cfg)
             .select("i", *cols, "keep")
             .toPandas()
             .sort_values("i")

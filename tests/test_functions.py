@@ -120,21 +120,22 @@ def test_minhash_jaccard_recall(pages_pdf):
     assert hit == len(pairs)
 
 
-def test_fused_equals_unfused(spark, pages_sdf):
-    """The fused single-UDF path == the three individual stages, exactly."""
+def test_fused_equals_unfused(spark, pages_sdf, tmp_path):
+    """run_qa's written rows (the sink's fused kernel and keep decision) ==
+    the unfused expression stages on the same 300 docs, exactly."""
+    from isimip_qa_spark.functions.qa_fused import SCORE_COLS
     from isimip_qa_spark.plans.config import QAConfig
-    from isimip_qa_spark.plans.pipeline import apply_stages
+    from isimip_qa_spark.plans.pipeline import apply_stages, read_scored, run_qa
 
     cfg = QAConfig()
-    sample = pages_sdf.limit(300)
-    fused = apply_stages(sample, cfg, fused=True).toPandas().sort_values("url")
-    plain = apply_stages(sample, cfg, fused=False).toPandas().sort_values("url")
-    for col in [
-        "lang_pred", "avg_logprob", "ppl", "text_scrubbed", "keep", "scrubbed",
-        "dup_line_frac", "dup_para_frac", "dup_2gram_frac",
-        "repl_n", "mojibake_n", "ctrl_frac",
-        "bullet_line_frac", "ellipsis_line_frac", "alpha_word_frac",
-    ]:
+    src, out = str(tmp_path / "pages"), str(tmp_path / "qa")
+    pages_sdf.limit(300).write.parquet(src)
+    sample = spark.read.parquet(src)
+    run_qa(spark, sample, cfg, out)
+    fused = read_scored(spark, out).toPandas().sort_values("url")
+    plain = apply_stages(sample, cfg).toPandas().sort_values("url")
+    assert len(fused) == len(plain) == 300
+    for col in [*(c for c, _ in SCORE_COLS), "keep", "scrubbed", "text_scrubbed"]:
         assert fused[col].tolist() == plain[col].tolist(), col
 
 

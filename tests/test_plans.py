@@ -74,18 +74,6 @@ def test_python_stages_are_arrow_batched(spark, sf_dir):
     assert "BatchEvalPython" not in plan
 
 
-def test_pipeline_is_single_narrow_pass(spark, pages_sdf):
-    """The fused QA DAG: no exchange and ONE ArrowEvalPython (the fused
-    UDF) — stages add columns without shuffles (the reference's shared
-    scan)."""
-    from isimip_qa_spark.plans.config import QAConfig
-    from isimip_qa_spark.plans.pipeline import apply_stages
-
-    plan = plan_of(apply_stages(pages_sdf.drop("html"), QAConfig()))
-    assert "Exchange" not in plan
-    assert plan.count("ArrowEvalPython") == 1
-
-
 def test_qa_sink_reads_the_scan_directly(spark, pages_sdf, tmp_path, monkeypatch):
     """run_qa hands the sink the scoped, bucket-filtered scan itself:
     scan → filter → mapInArrow with no Exchange, so each sink task scores

@@ -103,36 +103,35 @@ def test_duckdb_twin_on_planted():
         assert duck[col].tolist() == fused[col].tolist(), col
 
 
-def test_binding_thresholds_flip_keep_with_pandas_oracle(spark, pages_sdf):
+def test_binding_thresholds_flip_keep_with_pandas_oracle(spark, pages_sdf, tmp_path):
     """With Gopher's real 0.20 2-gram threshold the small-vocab corpus is
-    mostly dropped; the Spark decision must still match the independent
+    mostly dropped; run_qa's decision must still match the independent
     pandas oracle doc-for-doc (the F1 contract is threshold-agnostic)."""
     from oracle.pandas_ref import qa_frame
-    from isimip_qa_spark.plans.pipeline import apply_stages
+    from isimip_qa_spark.plans.pipeline import read_scored, run_qa
 
     cfg = QAConfig(max_dup_2gram_frac=0.2, max_dup_line_frac=0.1)
-    sample = pages_sdf.limit(400)
+    src, out = str(tmp_path / "pages"), str(tmp_path / "qa")
+    pages_sdf.limit(400).write.parquet(src)
+    sample = spark.read.parquet(src)
+    run_qa(spark, sample, cfg, out)
     got = (
-        apply_stages(sample, cfg, fused=True)
-        .select("url", "keep", "dup_2gram_frac")
+        read_scored(spark, out)
+        .select("url", "keep", "dup_2gram_frac", "dup_line_frac")
         .toPandas()
         .sort_values("url")
         .reset_index(drop=True)
     )
     ref = qa_frame(sample.toPandas(), cfg).sort_values("url").reset_index(drop=True)
+    assert len(got) == 400
     assert got["keep"].tolist() == ref["keep"].tolist()
     assert got["dup_2gram_frac"].tolist() == ref["dup_2gram_frac"].tolist()
     # the threshold actually bites on this corpus (median frac ≈ 0.64)
     assert (~ref["keep"]).mean() > 0.5
-    # and is inert at defaults: same sample, default cfg → rule never trips
+    # and is inert at defaults: neither repetition rule trips on these docs
     dflt = QAConfig()
-    base = (
-        apply_stages(sample, dflt, fused=True)
-        .select("keep", "dup_2gram_frac", "dup_line_frac")
-        .toPandas()
-    )
-    assert (base["dup_line_frac"] == 0.0).all()
-    assert (base["dup_2gram_frac"] <= dflt.max_dup_2gram_frac).all()
+    assert (got["dup_line_frac"] == 0.0).all()
+    assert (got["dup_2gram_frac"] <= dflt.max_dup_2gram_frac).all()
 
 
 # Line and paragraph splits at doc bounds: docs sit back to back in the

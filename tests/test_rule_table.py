@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 
 from isimip_qa_spark.functions.langid import LANG_ORDER
-from isimip_qa_spark.functions.qa_fused import FUSED_SCHEMA, _fused_series
+from isimip_qa_spark.functions.qa_fused import SCORE_COLS, _fused_series
 from isimip_qa_spark.plans.config import QAConfig
 from isimip_qa_spark.plans.sink import _keep_series
 from isimip_qa_spark.plans.stages import _decision
@@ -97,7 +97,7 @@ def test_spark_and_sink_decisions_follow_the_table(spark, stats):
     cases.append(("lang_profiles", cfg, want[valid]))
 
     # every case evaluated in one select: a single Spark job
-    df = spark.createDataFrame(stats, FUSED_SCHEMA)
+    df = spark.createDataFrame(stats, ", ".join(f"{c} {t}" for c, t in SCORE_COLS))
     for i, (_, cfg, _) in enumerate(cases):
         df = _decision(df, cfg).withColumnRenamed("keep", f"k{i}")
     got = df.select(*[f"k{i}" for i in range(len(cases))]).toPandas()

@@ -10,9 +10,10 @@ count:
   round_robin repartition(N)                  — balance upper bound
 
 per-partition row counts (deterministic — the actual skew evidence) and the
-wall time of one fused QA pass over each layout (min of 2; indicative only,
-the sandbox VM is noisy). Appends a table to BASELINE.md with
---update-baseline.
+wall time of one production QA pass over each layout: run_qa into a fresh
+temporary out_dir, its sink tasks following the layout's partitions (min of
+2; indicative only, timings on a shared VM are noisy). Appends a table to
+BASELINE.md with --update-baseline.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -50,15 +52,16 @@ def stats(counts: list[int]) -> dict:
 
 
 def time_pass(df, cfg, reps: int = 2) -> float:
-    """One fused QA scoring pass over the given layout (count(), no sink —
-    isolates compute balance from I/O)."""
-    from isimip_qa_spark.plans.pipeline import apply_stages
+    """One run_qa over the given layout, written to a temporary out_dir
+    (scoring, sink writes and the driver's publish)."""
+    from isimip_qa_spark.plans.pipeline import run_qa
 
     best = None
     for _ in range(reps + 1):
-        t0 = time.time()
-        apply_stages(df, cfg).select("keep").filter("keep").count()
-        dt = time.time() - t0
+        with tempfile.TemporaryDirectory() as out:
+            t0 = time.time()
+            run_qa(df.sparkSession, df, cfg, out)
+            dt = time.time() - t0
         if best is None or dt < best:
             best = dt
     return round(best, 2)
