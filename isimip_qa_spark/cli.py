@@ -162,8 +162,10 @@ def main(argv=None) -> int:
     lang_profiles = _parse_lang_profiles(args.lang_profiles)
 
     from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
     from .plans import QAConfig, run_qa
+    from .plans.pipeline import read_scored
 
     spark = SparkSession.builder.appName("isimip-qa-spark").getOrCreate()
     if args.gen_pages:
@@ -210,12 +212,14 @@ def main(argv=None) -> int:
 
     def kept_df():
         # the data dir holds EVERY scored page with its keep verdict
-        # (plans/sink.py); downstream consumers see only the kept ones
-        import os
-
-        return spark.read.parquet(
-            os.path.join(args.output, "data")
-        ).filter("keep")
+        # (plans/sink.py); downstream consumers see only the kept ones, and
+        # only their scrubbed text
+        return (
+            read_scored(spark, args.output)
+            .filter("keep")
+            .withColumn("text", F.col("text_scrubbed"))
+            .drop("text_scrubbed")
+        )
 
     artifact = None
     if args.dsir_artifact:
@@ -255,8 +259,6 @@ def main(argv=None) -> int:
 
         kept = kept_df()
         if args.dsir_threshold is not None:
-            from pyspark.sql import functions as F
-
             from .plans.dsir_artifact import dsir_logweight_col
 
             kept = kept.filter(

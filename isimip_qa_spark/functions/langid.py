@@ -36,7 +36,6 @@ LANG_ORDER = ["en", "es", "fr", "de", "zh"]  # argmax tie-break: first wins
 # the QA pass's stop-word set (stopword_ratio): every language's list, so the
 # fused kernel's langid lookup doubles as the membership test
 STOPWORD_UNION: list[str] = sorted(set().union(*LANG_STOPWORDS.values()))
-DEFAULT_LANG = "en"
 
 
 def _contains(words: list[str]):

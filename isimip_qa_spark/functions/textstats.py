@@ -30,10 +30,6 @@ def n_words_expr(text: Column) -> Column:
     return F.size(tokens_expr(text)).cast("long")
 
 
-def n_chars_expr(text: Column) -> Column:
-    return F.length(text).cast("long")
-
-
 def distinct_word_ratio_expr(text: Column) -> Column:
     """Repetition proxy: |distinct tokens| / |tokens| (Gopher's dup-line /
     dup-paragraph fractions degenerate to this on single-line docs)."""
@@ -205,11 +201,6 @@ def word_entropy_expr(text: Column) -> Column:
 # ASCII punctuation only (never counts CJK/accented letters as symbols);
 # identical semantics in Java regex / RE2 / Python re.
 SYMBOL_CLASS = "[!-/:-@\\[-`{-~]"
-
-
-def digit_ratio_expr(text: Column) -> Column:
-    n = F.length(text)
-    return F.regexp_count(text, F.lit(r"[0-9]")).cast("double") / n.cast("double")
 
 
 def ellipsis_count_expr(text: Column) -> Column:

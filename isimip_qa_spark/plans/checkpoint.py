@@ -3,18 +3,24 @@ extraction whose artifact exists or is fetchable —
 /root/reference/isimip_qa/main.py:126-128, mixins/extractions.py:16-28).
 
 Unit of resume: a *chunk* — a deterministic bucket range of the corpus
-(bucket = pmod(xxhash64(url), n_chunks)). A run computes all of its missing
-chunks in one fused Spark job, whose output lands in `out_dir/data/chunk=K/`;
-each chunk's manifest file is written only after that job commits, so a
-killed run resumes by re-running exactly the chunks without a manifest. On an Iceberg deployment the manifest is the
-snapshot log and a chunk is a partition-scoped append — same structure,
-different sink.
+(bucket = pmod(xxhash64(url), n_chunks)). A chunk's data lands in
+`out_dir/data/chunk=K/`, fetched from a shared cache or computed by the
+run's one fused Spark job. Either way the chunk is published after its
+data (pipeline._publish): metrics rows, then lineage rows, then the chunk's
+manifest file LAST, so a killed run resumes by fetching or re-running
+exactly the chunks without a manifest. On an Iceberg deployment the
+manifest is the snapshot log and a chunk is a partition-scoped append —
+same structure, different sink.
 """
 
 from __future__ import annotations
 
 import json
 import os
+
+import pyarrow as pa
+
+from .sink import METRICS_PA
 
 
 def manifest_dir(out_dir: str) -> str:
@@ -41,7 +47,7 @@ def mark_chunk_done(out_dir: str, chunk: int, info: dict) -> None:
     os.makedirs(mdir, exist_ok=True)
     tmp = os.path.join(mdir, f".chunk_{chunk}.json.tmp")
     with open(tmp, "w") as f:
-        json.dump(info, f, sort_keys=True)
+        json.dump(info, f, sort_keys=True, default=str)  # timestamps as str
     os.replace(tmp, os.path.join(mdir, f"chunk_{chunk}.json"))  # atomic
 
 
@@ -72,37 +78,54 @@ def _fetch_bytes(base: str, rel: str) -> bytes:
         return f.read()
 
 
-def fetch_chunk(out_dir: str, chunk: int, cache_base: str, config_hash: str) -> bool:
-    """Fetch one completed chunk (data files + manifest) from a shared
-    artifact cache whose layout mirrors an out_dir (another run's output, a
-    mounted shared volume, or an HTTP server in front of one). Returns True
-    iff the chunk was committed locally — the caller then skips its compute.
+def metrics_table(records: list[dict]) -> pa.Table:
+    """A manifest's metrics records (JSON: timestamps as strings) as a table
+    of the metrics files' schema. Raises on a record that does not fit it:
+    a missing key, a NULL anywhere but the averages, or a value that does
+    not cast losslessly."""
+    t = pa.table(
+        {f.name: pa.array([r[f.name] for r in records]) for f in METRICS_PA}
+    ).cast(METRICS_PA)
+    if any(t[f.name].null_count for f in METRICS_PA if f.name not in ("avg_ppl", "avg_words")):
+        raise ValueError("NULL in a metrics record")
+    return t
+
+
+def fetch_chunk(out_dir: str, chunk: int, cache_base: str, config_hash: str) -> dict | None:
+    """Fetch one completed chunk's data files from a shared artifact cache
+    whose layout mirrors an out_dir (another run's output, a mounted shared
+    volume, or an HTTP server in front of one). Returns the manifest to
+    publish the chunk with (the cached one, plus `fetched_from`), or None if
+    the chunk is not fetchable — the caller then computes it. Writes no
+    manifest: the caller publishes the chunk (pipeline._publish).
 
     Identity guard: the cached manifest's config_hash must equal ours (the
     reference keys artifacts by extraction identity, extractions.py:33-40);
-    manifests without a file list (older runs) are not fetchable. The chunk
-    dir is CLEARED first (a prior crashed compute attempt may have left
+    manifests without a file list or metrics (older runs) are not
+    fetchable, and neither is one whose metrics records do not parse
+    (metrics_table): the cache is not trusted. The chunk dir is CLEARED
+    first (a prior crashed compute attempt may have left
     committed-but-unmanifested part files that are not in the cache's list
-    — they must not survive into the fetched chunk), files are written
-    tmp-then-rename and the local manifest LAST, so a fetch killed mid-way
-    leaves no committed chunk. HTTP cannot list directories — the
-    manifest's `files` field is the listing; names are validated as plain
-    basenames because the cache is not trusted to build local paths."""
+    — they must not survive into the fetched chunk) and files are written
+    tmp-then-rename. HTTP cannot list directories — the manifest's `files`
+    field is the listing; names are validated as plain basenames because
+    the cache is not trusted to build local paths."""
     import shutil
 
     try:
         man = json.loads(
             _fetch_bytes(cache_base, f"_manifest/chunk_{chunk}.json")
         )
+        if man["config_hash"] != config_hash:
+            return None
+        for fn in man["files"]:
+            # path-traversal guard: a malicious/compromised cache must not
+            # be able to direct writes outside the chunk directory
+            if fn != os.path.basename(fn) or fn.startswith(".") or fn in ("", ".."):
+                return None
+        metrics_table(man["metrics"])
     except Exception:
-        return False
-    if man.get("config_hash") != config_hash or "files" not in man:
-        return False
-    for fn in man["files"]:
-        # path-traversal guard: a malicious/compromised cache must not be
-        # able to direct writes outside the chunk directory
-        if fn != os.path.basename(fn) or fn.startswith(".") or fn in ("", ".."):
-            return False
+        return None
     cdir = chunk_path(out_dir, chunk)
     shutil.rmtree(cdir, ignore_errors=True)
     os.makedirs(cdir, exist_ok=True)
@@ -114,17 +137,8 @@ def fetch_chunk(out_dir: str, chunk: int, cache_base: str, config_hash: str) -> 
                 f.write(data)
             os.replace(tmp, os.path.join(cdir, fn))
     except Exception:
-        return False
-    mark_chunk_done(out_dir, chunk, dict(man, fetched_from=cache_base))
-    return True
-
-
-def chunk_manifest(out_dir: str, chunk: int) -> dict | None:
-    p = os.path.join(manifest_dir(out_dir), f"chunk_{chunk}.json")
-    if not os.path.isfile(p):
         return None
-    with open(p) as f:
-        return json.load(f)
+    return dict(man, fetched_from=cache_base)
 
 
 def chunk_files(out_dir: str, chunk: int) -> list[str]:

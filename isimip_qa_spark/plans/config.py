@@ -7,54 +7,31 @@ import hashlib
 import json
 from dataclasses import asdict, dataclass
 
+from ..functions.textstats import GopherThresholds
+
 # threshold fields of a lang_profiles row, in row order after the language
 PROFILED_FIELDS = ("min_words", "min_stopword_ratio", "min_alpha_word_frac")
 
 
 @dataclass(frozen=True)
-class QAConfig:
-    """Thresholds + scopes for one QA run.
+class QAConfig(GopherThresholds):
+    """Thresholds + scopes for one QA run: the keep thresholds of
+    GopherThresholds, plus language profiles, model thresholds, scopes and
+    execution settings.
 
     `window` is the reference's Period (models.py:102-109): inclusive
     warc_ts bounds, None = auto/all. `cohort_langs` is the Region analogue
     (models.py:73-99): a cohort predicate over the corpus.
     """
 
-    # Gopher/C4-style rule thresholds (multilingual-safe defaults)
-    min_words: int = 50
-    max_words: int = 100_000
+    # the 17 keep thresholds are GopherThresholds'; only the word-length
+    # bounds are widened (multilingual-safe defaults)
     min_mean_word_len: float = 1.0
     max_mean_word_len: float = 20.0
-    max_symbol_ratio: float = 0.1
-    min_distinct_word_ratio: float = 0.1
-    min_stopword_ratio: float = 0.01
-    max_ellipsis: int = 5
-    # Gopher repetition rules (§A1.1). Line/para thresholds: published
-    # 0.30. The 2-gram default is inert (fraction < 1.0 always) because the
-    # synthetic space-normalised corpora are small-vocab (median dup-2-gram
-    # fraction 0.64); real-crawl deployments set Gopher's 0.20 — binding
-    # thresholds are exercised in tests/test_repetition.py.
-    max_dup_line_frac: float = 0.3
-    max_dup_para_frac: float = 0.3
-    max_dup_2gram_frac: float = 1.0
-    # encoding-quality gate (mojibake / broken-decode). Inert on the
-    # clean-ASCII synthetic corpora (measured 0 signal docs), so planted
-    # keep rates are unchanged; binding thresholds exercised in
-    # tests/test_encoding.py.
-    max_repl_chars: int = 0
-    max_mojibake: int = 0
-    max_ctrl_frac: float = 0.001
-    # document-format gate (Gopher §A1.1 bullet / ellipsis-line /
-    # alphabetic-word rules). Paper defaults; inert on the synthetic
-    # corpora (0 kept docs flip), binding thresholds exercised in
-    # tests/test_format_rules.py.
-    max_bullet_line_frac: float = 0.9
-    max_ellipsis_line_frac: float = 0.3
-    min_alpha_word_frac: float = 0.8
     # Per-language threshold profiles (CCNet practice): rows of
     # (lang, min_words, min_stopword_ratio, min_alpha_word_frac) keyed by
     # the pipeline's own lang_pred; a 'default' row covers unlisted
-    # languages (absent that, the global thresholds above do). None (the
+    # languages (absent that, the global thresholds do). None (the
     # default) disables profiling — every existing keep/F1 contract is
     # computed with the global gate.
     lang_profiles: tuple[tuple[str, int, float, float], ...] | None = None

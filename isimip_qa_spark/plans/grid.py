@@ -7,8 +7,9 @@ Each combo keeps its own output directory keyed by the combo's config hash,
 so the per-combo artifact-cache skip (main.py:126-128) falls out of the
 chunk manifests: a completed combo resumes in milliseconds without a scan,
 a half-finished combo re-runs only its missing chunks, and a combo never
-started runs fully. The resume check and the cache fetch are driver-only,
-per combo; then every combo's missing chunks are computed in ONE sink job
+started runs fully. The resume check, the cache fetch and the publish of
+the fetched chunks are driver-only, per combo; then every combo's missing
+chunks are computed in ONE sink job
 (pipeline.run_targets), the reference's one shared scan feeding every
 extraction (main.py:130-136): each row is scored once and written to every
 combo whose scope it is in. The driver then publishes each combo's

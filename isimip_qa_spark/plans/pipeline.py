@@ -19,11 +19,15 @@ Physical shape (the properties that carry to 1000 executors / 100 TB):
   before anything else → parquet/Iceberg pushdown + partition pruning. In
   a shared job the filter is the OR of the targets' scopes, and the same
   predicates route each row to the targets it is written to.
-- `html` is dropped immediately unless a stage needs it (column pruning
-  discipline; the scan never materialises it for text-only runs).
+- `html` is dropped before the sink (column pruning discipline; the scan
+  never materialises it for text-only runs).
 - Metrics are computed per Spark partition by the sink task inside the
-  same pass (plans/sink.py), appended to a metrics table — the analogue
-  of the reference's extraction artifacts (mixins/extractions.py:42-62).
+  same pass (plans/sink.py) and collected as Arrow; the driver appends them
+  to a metrics table with pyarrow — the analogue of the reference's
+  extraction artifacts (mixins/extractions.py:42-62).
+- Every chunk, fetched from a cache or computed, is published by one
+  function (_publish): metrics rows, then lineage rows, then the chunk
+  manifest, which is written last and so is the publish step.
 """
 
 from __future__ import annotations
@@ -38,103 +42,38 @@ import time
 import uuid
 from dataclasses import replace
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .checkpoint import (
     chunk_files,
-    chunk_manifest,
     chunk_path,
     completed_chunks,
     fetch_chunk,
     manifest_dir,
     mark_chunk_done,
+    metrics_table,
 )
 from .config import QAConfig
-from .sink import METRICS_SCHEMA, qa_sink
+from .sink import qa_sink
 from .skew import detect_hot_hosts  # noqa: F401  unused; perfbench/run.py wraps it
 from .stages import STAGES
 
-# pandas dtypes of METRICS_SCHEMA's numeric columns — fetched-chunk metrics
-# replayed from JSON manifests are coerced to these so an all-None column
-# (e.g. a chunk whose every partition had zero ppl rows) can't land as an
-# object-typed parquet column and break spark.read.parquet of out_dir/metrics
-_METRICS_DTYPES = {
-    name: {"int": "int32", "long": "int64", "double": "float64"}[t]
-    for name, t in (f.split() for f in METRICS_SCHEMA.split(", "))
-    if t != "timestamp"
-}
 
+def _append_parquet(table: pa.Table, path: str) -> None:
+    """Append a (small, driver-side) table as one parquet file.
 
-def _metrics_records(pdf) -> list[dict]:
-    """Chunk metrics rows as JSON-safe records for the chunk manifest —
-    fetchers replay them so a cache-hydrated out_dir keeps the full
-    artifact contract (metrics/lineage present), not just the data."""
-    import pandas as pd
-
-    recs = pdf.to_dict("records")
-    for r in recs:
-        for k in ("ts_min", "ts_max"):
-            v = r.get(k)
-            r[k] = None if v is None or pd.isna(v) else str(v)
-        for k, v in list(r.items()):
-            if v is not None and pd.isna(v):
-                r[k] = None
-    return recs
-
-
-def _replay_fetched_artifacts(out_dir: str, fetch_walls: dict[int, float]) -> None:
-    """Materialize the metrics/lineage rows of the just-fetched chunks from
-    their manifests (written by fetch_chunk) as ONE metrics and ONE lineage
-    file, keeping the same columns as computed chunks so the metrics/lineage
-    tables stay schema-stable."""
-    import pandas as pd
-
-    mans = {c: chunk_manifest(out_dir, c) or {} for c in fetch_walls}
-    recs = [r for man in mans.values() for r in man.get("metrics") or []]
-    if recs:
-        pdf = pd.DataFrame(recs)
-        for k in ("ts_min", "ts_max"):
-            if k in pdf.columns:
-                pdf[k] = pd.to_datetime(pdf[k]).astype("datetime64[us]")
-        for k, dt in _METRICS_DTYPES.items():
-            if k in pdf.columns:
-                pdf[k] = pdf[k].astype(dt)
-        _append_parquet_driver_side(pdf, f"{out_dir}/metrics")
-    lineage = pd.DataFrame(
-        [
-            {
-                "config_hash": man.get("config_hash", ""),
-                "chunk": c,
-                "stages": ",".join(man.get("stages", [])),
-                "rows": man.get("rows", 0),
-                "wall_s": round(fetch_walls[c], 3),
-            }
-            for c, man in mans.items()
-        ]
-    )
-    _append_parquet_driver_side(lineage, f"{out_dir}/lineage")
-
-
-def _append_parquet_driver_side(pdf, path: str) -> None:
-    """Append a (small, already-collected) pandas frame as one parquet file.
-
-    Metrics and lineage frames live on the driver by construction (one row
+    Metrics and lineage tables live on the driver by construction (one row
     per partition/chunk); round-tripping them through createDataFrame +
     df.write costs a full Spark job each (~0.5-1 s of fixed latency per run,
     pure Amdahl loss at high core counts). A direct pyarrow write is the
     same on-disk layout a `writeTo(...).append()` would produce — on an
     Iceberg deployment this is one catalog append."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     os.makedirs(path, exist_ok=True)
-    pq.write_table(
-        pa.Table.from_pandas(pdf, preserve_index=False),
-        os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"),
-        coerce_timestamps="us",  # Spark-readable micros, not pandas nanos
-        allow_truncated_timestamps=True,
-    )
+    pq.write_table(table, os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"))
 
 
 def scope_pred(cfg: QAConfig) -> Column:
@@ -175,7 +114,6 @@ def run_qa(
     cfg: QAConfig,
     out_dir: str,
     resume: bool = True,
-    with_html: bool = False,
     cache_base: str | None = None,
 ) -> dict:
     """Run the full QA DAG with chunk-wise checkpointing: chunks already
@@ -192,7 +130,7 @@ def run_qa(
     hash are fetched instead of computed (the reference's remote-fetch skip,
     mixins/extractions.py:16-28).
     """
-    return run_targets(spark, pages, [(cfg, out_dir, cache_base)], resume, with_html)[0]
+    return run_targets(spark, pages, [(cfg, out_dir, cache_base)], resume)[0]
 
 
 def run_targets(
@@ -200,44 +138,46 @@ def run_targets(
     pages: DataFrame,
     targets: list[tuple[QAConfig, str, str | None]],
     resume: bool = True,
-    with_html: bool = False,
 ) -> list[dict]:
     """run_qa over several (cfg, out_dir, cache_base) targets whose configs
     differ only in `window` and `cohort_langs` (a grid's combos), with ONE
-    sink job for all of them. Per target, on the driver: the resume check
-    and the cache fetch. Then one job scores each row of the union of the
-    targets' missing chunks once and writes it to every target it belongs
-    to. Then, per target, the driver publishes metrics, lineage and chunk
-    manifests. A driver killed during the job recomputes every (target,
-    chunk) it had not published. Returns one run_qa summary per target;
-    a computed target's `wall_s` is its own driver time plus its row share
-    of the job."""
+    sink job for all of them. Per target, on the driver: the resume check,
+    the cache fetch, and the publish of the fetched chunks. Then one job
+    scores each row of the union of the targets' missing chunks once and
+    writes it to every target it belongs to. Then, per target, the driver
+    publishes the computed chunks. A driver killed before a chunk's publish
+    fetches or recomputes that (target, chunk) on the next run. Returns one
+    run_qa summary per target; a computed target's `wall_s` is its own
+    driver time plus its row share of the job."""
     if len({replace(c, window=None, cohort_langs=None) for c, _, _ in targets}) > 1:
         raise ValueError("targets of one job may differ only in window and cohort_langs")
     summaries = []
     for cfg, out_dir, cache_base in targets:
         t0 = time.time()
         done = completed_chunks(out_dir) if resume else set()
+        fetched: dict[int, dict] = {}
         fetch_walls: dict[int, float] = {}
         if resume and cache_base:
             for c in range(cfg.n_chunks):
                 t_fetch = time.time()
-                if c not in done and fetch_chunk(
+                man = None if c in done else fetch_chunk(
                     out_dir, c, cache_base, cfg.config_hash()
-                ):
-                    fetch_walls[c] = time.time() - t_fetch
-        if fetch_walls:
-            _replay_fetched_artifacts(out_dir, fetch_walls)
+                )
+                if man is not None:
+                    fetched[c], fetch_walls[c] = man, time.time() - t_fetch
+        if fetched:
+            recs = [r for man in fetched.values() for r in man["metrics"]]
+            _publish(out_dir, metrics_table(recs), fetched, fetch_walls)
         summaries.append(
             {
                 # a fully-resumed run computes nothing — the reference's
                 # exists()-skip, main.py:126-128
                 "chunks_run": [
                     c for c in range(cfg.n_chunks)
-                    if c not in done and c not in fetch_walls
+                    if c not in done and c not in fetched
                 ],
                 "chunks_skipped": sorted(done),
-                "chunks_fetched": sorted(fetch_walls),
+                "chunks_fetched": sorted(fetched),
                 "rows": 0,
                 "wall_s": time.time() - t0,
                 "config_hash": cfg.config_hash(),
@@ -248,16 +188,29 @@ def run_targets(
     if work:
         t_job = time.time()
         metrics = _run_single_pass(
-            pages, [(cfg, out_dir, s["chunks_run"]) for (cfg, out_dir, _), s in work],
-            with_html,
+            pages, [(cfg, out_dir, s["chunks_run"]) for (cfg, out_dir, _), s in work]
         )
         job_s = time.time() - t_job
-        total = sum(int(m["n_docs"].sum()) for m in metrics)
-        for ((cfg, out_dir, _), s), m in zip(work, metrics):
+        rows = [pc.sum(m["n_docs"]).as_py() or 0 for m in metrics]
+        stages = [stage.name for stage in STAGES]
+        for ((cfg, out_dir, _), s), m, n in zip(work, metrics, rows):
             t0 = time.time()
-            s["rows"] = int(m["n_docs"].sum())
-            share = job_s * (s["rows"] / total if total else 1 / len(work))
-            _publish(out_dir, cfg, s["chunks_run"], m, share)
+            s["rows"] = n
+            share = job_s * (n / sum(rows) if sum(rows) else 1 / len(work))
+            m = m.append_column(
+                "config_hash", pa.array([s["config_hash"]] * m.num_rows, pa.string())
+            )
+            mans = {}
+            for c in s["chunks_run"]:
+                recs = m.filter(pc.equal(m["chunk"], c)).to_pylist()
+                mans[c] = {
+                    "rows": sum(r["n_docs"] for r in recs),
+                    "config_hash": s["config_hash"],
+                    "stages": stages,
+                    "files": chunk_files(out_dir, c),
+                    "metrics": recs,
+                }
+            _publish(out_dir, m, mans, dict.fromkeys(mans, share))
             s["wall_s"] += share + time.time() - t0
     for s in summaries:
         s["wall_s"] = round(s["wall_s"], 3)
@@ -267,8 +220,7 @@ def run_targets(
 def _run_single_pass(
     pages: DataFrame,
     work: list[tuple[QAConfig, str, list[int]]],
-    with_html: bool,
-) -> list:
+) -> list[pa.Table]:
     """ONE fused job computes every chunk in each (cfg, out_dir, todo) of
     `work`: the scan, filtered by the OR over targets of scope_pred(cfg) ∧
     bucket ∈ todo, goes straight into the write-audit mapInArrow sink
@@ -276,7 +228,7 @@ def _run_single_pass(
     belongs to. The sink scores each row once, writes it to every target's
     per-chunk parquet, and returns per-(target, chunk, partition) metrics
     rows — no shuffle, no second job, no read-back. Returns each target's
-    metrics frame."""
+    metrics table."""
     cfg = work[0][0]
     if "bucket" not in pages.columns:
         pages = pages.withColumn(
@@ -299,9 +251,8 @@ def _run_single_pass(
         from ..functions.extract import extract_text_expr
 
         df = df.withColumn("text", extract_text_expr(F.col("html")))
-    if not with_html:
-        # column-pruning discipline: text stages must never scan html bytes
-        df = df.drop("html")
+    # column-pruning discipline: text stages must never scan html bytes
+    df = df.drop("html")
     df = df.withColumn(
         "targets",
         F.array_compact(F.array(*[F.when(p, F.lit(i)) for i, p in enumerate(preds)])),
@@ -316,56 +267,38 @@ def _run_single_pass(
             with contextlib.suppress(FileNotFoundError):
                 os.remove(os.path.join(manifest_dir(out_dir), f"chunk_{c}.json"))
             shutil.rmtree(chunk_path(out_dir, c), ignore_errors=True)
-    metrics_pdf = qa_sink(
+    metrics = qa_sink(
         df.withColumnRenamed("bucket", "chunk"), [d for _, d, _ in work], cfg
-    ).toPandas()
-    by_target = metrics_pdf.groupby("target")
+    ).toArrow()
     return [
-        (by_target.get_group(i) if i in by_target.groups else metrics_pdf.iloc[:0])
-        .drop(columns="target")
-        .reset_index(drop=True)
+        metrics.filter(pc.equal(metrics["target"], i)).drop_columns("target")
         for i in range(len(work))
     ]
 
 
-def _publish(out_dir: str, cfg: QAConfig, todo: list[int], metrics_pdf, wall: float) -> None:
-    """Append a computed target's metrics and lineage rows, then publish one
-    manifest per chunk in `todo`, so a later invocation resumes chunk-wise."""
-    import pandas as pd
-
-    cfg_hash = cfg.config_hash()
-    metrics_pdf["config_hash"] = cfg_hash
-    _append_parquet_driver_side(metrics_pdf, f"{out_dir}/metrics")
-    per_chunk = metrics_pdf.groupby("chunk")["n_docs"].sum()
-    stages = [s.name for s in STAGES]
+def _publish(
+    out_dir: str, metrics: pa.Table, mans: dict[int, dict], walls: dict[int, float]
+) -> None:
+    """Publish chunks of one target, fetched or computed alike: append their
+    metrics rows, then one lineage row per chunk, then write each chunk's
+    manifest `mans[c]`. The manifest is written last, so it is the publish
+    step: a driver killed before it leaves the chunk unpublished, and the
+    next run fetches or computes it again."""
+    _append_parquet(metrics, f"{out_dir}/metrics")
     # lineage: what ran, over what, producing what (north_rule)
-    lineage_pdf = pd.DataFrame(
-        [
-            {
-                "config_hash": cfg_hash,
-                "chunk": c,
-                "stages": ",".join(stages),
-                "rows": int(per_chunk.get(c, 0)),
-                "wall_s": round(wall, 3),
-            }
-            for c in todo
-        ]
-    )
-    _append_parquet_driver_side(lineage_pdf, f"{out_dir}/lineage")
-    for c in todo:
-        mark_chunk_done(
-            out_dir,
-            c,
-            {
-                "rows": int(per_chunk.get(c, 0)),
-                "config_hash": cfg_hash,
-                "stages": stages,
-                "files": chunk_files(out_dir, c),
-                "metrics": _metrics_records(
-                    metrics_pdf[metrics_pdf["chunk"] == c]
-                ),
-            },
-        )
+    lineage = [
+        {
+            "config_hash": man["config_hash"],
+            "chunk": c,
+            "stages": ",".join(man.get("stages", [])),
+            "rows": man.get("rows", 0),
+            "wall_s": round(walls[c], 3),
+        }
+        for c, man in mans.items()
+    ]
+    _append_parquet(pa.Table.from_pylist(lineage), f"{out_dir}/lineage")
+    for c, man in mans.items():
+        mark_chunk_done(out_dir, c, man)
 
 
 def read_scored(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -10,8 +10,9 @@ metrics rows.
 
 Arrow end to end: no pandas object is built on this path. `url`, `text`
 and `lang` go to the parquet writer as the very arrays Spark sent, next to
-the kernel's score columns; `warc_ts` is written as the session time zone's
-wall-clock time with the zone dropped (what a pandas hand-off would hold).
+the kernel's score columns; `warc_ts`, and the metrics' `ts_min`/`ts_max`
+(`timestamp_ntz`), hold the session time zone's wall-clock time with the
+zone dropped (what a pandas hand-off would hold).
 Rows are split per (target, chunk) by one stable sort and a `take`, so
 each group is a slice in scan order, and the metrics come from numpy views
 of the batch.
@@ -81,11 +82,19 @@ def _round4_half_up(x: float) -> float:
 METRICS_SCHEMA = (
     "chunk int, partition_id int, n_docs long, n_keep long, avg_ppl double, "
     "avg_words double, trip_short long, trip_symbol long, n_scrubbed long, "
-    "ts_min timestamp, ts_max timestamp, "
+    "ts_min timestamp_ntz, ts_max timestamp_ntz, "
     "ppl_sum double, ppl_n long, words_sum long, words_n long"
 )
 _METRICS_DDL = f"target int, {METRICS_SCHEMA}"
 _METRICS_COLS = [f.split() for f in _METRICS_DDL.split(", ")]
+# timestamps are the session's wall-clock time with the zone dropped, in
+# the scored rows and the metrics alike
+_PA_TYPES = {**PA_TYPES, "timestamp": pa.timestamp("us"), "timestamp_ntz": pa.timestamp("us")}
+# the metrics files' schema: the sink's rows without `target`, plus the
+# config_hash the driver adds
+METRICS_PA = pa.schema(
+    [(c, _PA_TYPES[t]) for c, t in _METRICS_COLS[1:]] + [("config_hash", pa.string())]
+)
 # the integer metrics, each a sum of per-row terms
 _SUMS = ("n_docs", "n_keep", "trip_short", "trip_symbol", "n_scrubbed",
          "ppl_n", "words_sum", "words_n")
@@ -104,9 +113,7 @@ _OUT_COLS = [
 
 
 def _pa_schema():
-    return pa.schema(
-        [(name, {**PA_TYPES, "timestamp": pa.timestamp("us")}[t]) for name, t in _OUT_COLS]
-    )
+    return pa.schema([(name, _PA_TYPES[t]) for name, t in _OUT_COLS])
 
 
 def _keep_arrow(stats, cfg) -> np.ndarray:
@@ -175,7 +182,6 @@ def qa_sink(scored_input: DataFrame, out_dirs: list[str], cfg) -> DataFrame:
         writers: dict[tuple[int, int], tuple] = {}
         pending: dict[tuple[int, int], list] = {}  # < ROW_GROUP_ROWS rows
         acc: dict[tuple[int, int], list] = {}  # [sums, ppl_sum, ts_min, ts_max]
-        ts_type = None
 
         def flush(writer, parts: list, final: bool) -> list:
             """Write every full ROW_GROUP_ROWS group of the buffered batches
@@ -195,14 +201,14 @@ def qa_sink(scored_input: DataFrame, out_dirs: list[str], cfg) -> DataFrame:
             # score each row once, whatever number of targets it feeds
             stats = _fused_arrow(batch.column("text"))
             keep = _keep_arrow(stats, cfg)
-            ts = batch.column("warc_ts")  # tz-aware, in the session time zone
-            ts_type = ts.type
+            # warc_ts arrives tz-aware, in the session time zone: keep the
+            # session's wall-clock time, zone dropped
+            ts = pc.local_timestamp(batch.column("warc_ts"))
             scrubbed = stats.column("scrub_delta").is_valid()
             out = pa.RecordBatch.from_arrays(
                 [
                     batch.column("url"),
-                    # the session's wall-clock time, zone dropped
-                    pc.local_timestamp(ts),
+                    ts,
                     batch.column("text"),
                     batch.column("lang"),
                     *stats.columns,
@@ -303,10 +309,8 @@ def qa_sink(scored_input: DataFrame, out_dirs: list[str], cfg) -> DataFrame:
                 }
             )
         if rows:
-            # timestamps as the instants the batches carried
-            types = {**PA_TYPES, "timestamp": ts_type}
             yield pa.RecordBatch.from_pylist(
-                rows, schema=pa.schema([(c, types[t]) for c, t in _METRICS_COLS])
+                rows, schema=pa.schema([(c, _PA_TYPES[t]) for c, t in _METRICS_COLS])
             )
 
     return scored_input.mapInArrow(sink, _METRICS_DDL)

@@ -16,10 +16,6 @@ def cents_sql(col: str) -> str:
     return f"CAST(round({col} * 100, 0) AS BIGINT)"
 
 
-def r6(col: Column) -> Column:
-    return F.round(col, 6)
-
-
 def spread(df, *cols):
     """Give a compute-heavy map stage cluster-wide parallelism.
 

@@ -158,7 +158,6 @@ def _hyperplanes(rotation: int = 0) -> list[list[float]]:
     ]
 
 
-HYPERPLANES = _hyperplanes()
 N_ROTATIONS = 4  # multi-probe tables for the near-dup pair query
 
 

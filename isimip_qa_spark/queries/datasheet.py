@@ -33,9 +33,6 @@ def _keep_sql() -> str:
     return _GOPHER_SQL
 
 
-_DATASHEET_SQL = None  # built lazily below (needs webtext import)
-
-
 def _datasheet_sql() -> str:
     return f"""
     WITH lbl AS (SELECT doc_id, keep FROM ({_keep_sql()}) g),

@@ -202,7 +202,6 @@ def repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fractions are clipped at 1.0 — see dup_ngram_chars_expr docstring.
 # ---------------------------------------------------------------------------
 
-_NGRAM_NS = (2, 3, 4, 5, 10)
 _TOP_TH = {2: 0.20, 3: 0.18, 4: 0.16}
 _DUP_TH = {5: 0.15, 10: 0.10}
 
@@ -1192,7 +1191,6 @@ def lang_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (they are part of the keep-gate contract); aliased here for the
 # fixture plant and the standalone-query oracle
 MOJIBAKE_SEQS = ts.MOJIBAKE_SEQS
-ENC_CTRL_PER_MILLE = 1  # standalone gate: ctrl_n * 1000 < n_chars
 _CTRL_CLASS = ts.CTRL_CLASS
 _REPL_CHAR = ts.REPL_CHAR
 

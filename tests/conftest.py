@@ -45,7 +45,7 @@ def pages_sdf(spark):
 def sink_jobs(spark):
     """sink_jobs(fn, n_splits) runs fn under a fresh job group and returns
     (fn's result, the number of sink jobs it submitted), counted with the
-    status tracker: jobs from the sink's toPandas call site in pipeline.py.
+    status tracker: jobs from the sink's toArrow call site in pipeline.py.
     Each must be one stage of one task per input split: the sink scores
     each scan split in place, so no shuffle map job shares the call site."""
     import uuid
@@ -64,7 +64,7 @@ def sink_jobs(spark):
         for jid in st.getJobIdsForGroup(group):
             stage_ids = st.getJobInfo(jid).stageIds
             last = st.getStageInfo(max(stage_ids))
-            if "toPandas at" in last.name and "pipeline.py:" in last.name:
+            if "toArrow at" in last.name and "pipeline.py:" in last.name:
                 assert len(stage_ids) == 1 and last.numTasks == n_splits
                 n += 1
         return out, n

@@ -71,6 +71,7 @@ def test_cli_fits_model_and_filters_export(spark, tmp_path):
     """End-to-end: QA run + DSIR fit + thresholded export through the CLI
     entry (same code path as spark-submit)."""
     from isimip_qa_spark.cli import main
+    from isimip_qa_spark.plans.pipeline import read_scored
     from isimip_qa_spark.sources.pages import pages_pandas
 
     import numpy as np
@@ -102,16 +103,19 @@ def test_cli_fits_model_and_filters_export(spark, tmp_path):
     assert len(art["logratio"]) == 1024
     # permissive threshold ⇒ export equals the kept set exactly — and
     # ONLY the kept set (the data dir also stores the keep=False rows)
-    scored_all = spark.read.parquet(f"{out}/data")
-    kept_n = scored_all.filter("keep").count()
+    scored_all = read_scored(spark, out)
+    kept = scored_all.filter("keep").select("url", F.col("text_scrubbed").alias("text"))
+    kept_n = kept.count()
     assert kept_n < scored_all.count()  # fixture drops some pages
     exported = spark.read.json(f"{exp}/data")
     assert exported.count() == kept_n
+    # the export ships each kept doc's SCRUBBED text, never the raw text
+    assert sorted(exported.select("url", "text").collect()) == sorted(kept.collect())
+    assert scored_all.filter("keep AND scrubbed").count() > 0  # raw != scrubbed somewhere
 
     # second run with a real threshold: export strictly shrinks, and every
     # surviving doc scores above it
     exp2 = str(tmp_path / "export2")
-    kept = scored_all.filter("keep")
     scored = score_with_artifact(kept, art)
     med = scored.approxQuantile("dsir_logweight", [0.5], 0.0)[0]
     rc = main(

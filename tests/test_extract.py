@@ -68,9 +68,9 @@ def test_pipeline_raw_capture_entry_matches_text_entry(spark, tmp_path):
     cfg_x = QAConfig(n_chunks=2, n_partitions=4, extract_from_html=True)
     pages = pages_df(spark, 3000, num_partitions=4)
     out_a, out_b = str(tmp_path / "a"), str(tmp_path / "b")
-    run_qa(spark, pages, cfg, out_a, with_html=False)
+    run_qa(spark, pages, cfg, out_a)
     poisoned = pages.withColumn("text", F.lit("POISON"))
-    run_qa(spark, poisoned, cfg_x, out_b, with_html=False)
+    run_qa(spark, poisoned, cfg_x, out_b)
 
     key = ["url"]
     a = read_scored(spark, out_a).toPandas().sort_values(key).reset_index(drop=True)

@@ -5,6 +5,8 @@ gated at main.py:127)."""
 
 from __future__ import annotations
 
+import pytest
+
 from isimip_qa_spark.plans import QAConfig, run_qa
 from isimip_qa_spark.plans.pipeline import read_scored
 
@@ -134,3 +136,79 @@ def test_fetch_rejects_traversal_file_names(spark, pages_sdf, tmp_path):
     assert 0 not in got["chunks_fetched"]  # rejected, recomputed instead
     assert 0 in got["chunks_run"]
     assert not os.path.exists(str(tmp_path / "evil.parquet"))
+
+
+def _rollup(spark, out_dir):
+    """metrics_rollup per chunk: counts and keep rate exactly, the mean
+    perplexity up to float summation order."""
+    from isimip_qa_spark.plots import metrics_rollup
+
+    return {
+        r["chunk"]: (r["n_docs"], r["keep_rate"], r["n_scrubbed"], pytest.approx(r["avg_ppl"]))
+        for r in metrics_rollup(spark, out_dir).collect()
+    }
+
+
+def test_publish_failing_after_fetch_leaves_chunks_unpublished(
+    spark, pages_sdf, tmp_path, monkeypatch
+):
+    """A fetched chunk is published like a computed one, manifest last: if
+    the publish raises after the fetches (here: the metrics write), no
+    local manifest exists, and the rerun fetches both chunks again and ends
+    with the cache's metrics, each row once."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    cache = str(tmp_path / "cache")
+    cfg = _cfg()
+    run_qa(spark, pages_sdf, cfg, cache)
+
+    def write_fails(*args, **kw):
+        raise OSError("metrics store unavailable")
+
+    out = str(tmp_path / "out")
+    monkeypatch.setattr(pq, "write_table", write_fails)
+    with pytest.raises(OSError, match="metrics store unavailable"):
+        run_qa(spark, pages_sdf, cfg, out, cache_base=cache)
+    monkeypatch.undo()
+    assert not os.path.isdir(f"{out}/_manifest") or not os.listdir(f"{out}/_manifest")
+
+    got = run_qa(spark, pages_sdf, cfg, out, cache_base=cache)
+    assert got["chunks_fetched"] == [0, 1] and got["chunks_run"] == []
+    assert _rollup(spark, out) == _rollup(spark, cache)
+    metrics = spark.read.parquet(f"{out}/metrics")
+    assert metrics.count() == spark.read.parquet(f"{cache}/metrics").count()
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [{"n_docs": None}, {"n_keep": "many"}, {"n_docs": 1.5}, {"ts_min": "yesterday"}, {"ppl_sum": ...}],
+    ids=["null_count", "string_count", "fractional_count", "bad_timestamp", "missing_key"],
+)
+def test_malformed_cached_metrics_make_the_chunk_computed(spark, pages_sdf, tmp_path, bad):
+    """A cached manifest whose metrics records do not parse into the
+    metrics schema is not fetchable: its chunk is computed instead, the
+    other chunk is still fetched, and the out_dir's metrics equal the
+    cache's."""
+    import json
+
+    cache = str(tmp_path / "cache")
+    cfg = _cfg()
+    run_qa(spark, pages_sdf, cfg, cache)
+    mpath = f"{cache}/_manifest/chunk_1.json"
+    with open(mpath) as f:
+        man = json.load(f)
+    rec = man["metrics"][0]
+    for k, v in bad.items():
+        if v is ...:
+            del rec[k]
+        else:
+            rec[k] = v
+    with open(mpath, "w") as f:
+        json.dump(man, f)
+
+    out = str(tmp_path / "out")
+    got = run_qa(spark, pages_sdf, cfg, out, cache_base=cache)
+    assert got["chunks_fetched"] == [0] and got["chunks_run"] == [1]
+    assert _rollup(spark, out) == _rollup(spark, cache)
