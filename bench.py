@@ -10,7 +10,7 @@ the numbers measure the engine, not the sandbox disk.
 
 Env knobs:
     SPARK_GRAFT_SF_DIR   table dir     (default /root/testdata/sf0.1)
-    SPARK_GRAFT_CPUS     local[N]      (default 32)
+    SPARK_GRAFT_CPUS     local[N]      (default: the cores this process may use)
     BENCH_PAGES_N        pages corpus  (default 1_000_000)
     BENCH_SKIP_PAGES=1   skip the QA-pipeline segment
     BENCH_SKIP_100K=1    skip the extra 100k-band measurement
@@ -41,7 +41,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 # 1M docs, not 100k: at 100k the ~1-2s fixed job cost (job submit, python
 # worker fan-out, sink commit) is ~half the wall, understating sustained
 # throughput ~3x (same-window measurement: 31k docs/s at 100k vs 94k at
@@ -235,7 +235,9 @@ def time_qa(spark, pages, measured_reps: int = 3) -> float:
 # 2-3 in the hypervisor-steal windows BASELINE.md documents (they only ever
 # ADD time). CAL_REF_SEC is the min over repeated clean-window runs of this
 # exact job on this machine (local[32], tmpfs), committed as the reference
-# point; re-baseline it if the hardware changes.
+# point; re-baseline it if the hardware changes. It is a local[32] record:
+# on another core count (CPUS defaults to the cores this process may
+# use) noise_index also carries the core-count ratio, not only noise.
 
 CAL_N = 50_000
 CAL_REF_SEC = 0.85  # clean-window floor, 2026-08-21 (local[32] + tmpfs,

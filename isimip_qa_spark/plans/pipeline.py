@@ -276,14 +276,42 @@ def _run_single_pass(
     ]
 
 
+def _drop_chunk_rows(path: str, chunks) -> None:
+    """Remove the rows of `chunks` from the parquet files of a metrics or
+    lineage table: what an earlier publish of those chunks left behind (a
+    resume=False rerun, or a driver killed before the chunk's manifest).
+    A file holding none of them is only read; one holding some is
+    rewritten without them (tmp, then an atomic rename) or removed."""
+    if not os.path.isdir(path):
+        return
+    for name in sorted(os.listdir(path)):
+        if name.startswith((".", "_")):
+            continue
+        f = os.path.join(path, name)
+        t = pq.read_table(f)
+        hit = pc.is_in(t["chunk"], value_set=pa.array(sorted(chunks), t["chunk"].type))
+        if not pc.any(hit).as_py():
+            continue
+        rest = t.filter(pc.invert(hit))
+        if rest.num_rows:
+            tmp = os.path.join(path, f".{name}.tmp")
+            pq.write_table(rest, tmp)
+            os.replace(tmp, f)
+        else:
+            os.remove(f)
+
+
 def _publish(
     out_dir: str, metrics: pa.Table, mans: dict[int, dict], walls: dict[int, float]
 ) -> None:
-    """Publish chunks of one target, fetched or computed alike: append their
-    metrics rows, then one lineage row per chunk, then write each chunk's
-    manifest `mans[c]`. The manifest is written last, so it is the publish
-    step: a driver killed before it leaves the chunk unpublished, and the
-    next run fetches or computes it again."""
+    """Publish chunks of one target, fetched or computed alike: drop any
+    metrics and lineage rows an earlier publish of these chunks left, append
+    their metrics rows, then one lineage row per chunk, then write each
+    chunk's manifest `mans[c]`. The manifest is written last, so it is the
+    publish step: a driver killed before it leaves the chunk unpublished,
+    and the next run fetches or computes it again, replacing its rows."""
+    for table in ("metrics", "lineage"):
+        _drop_chunk_rows(f"{out_dir}/{table}", mans)
     _append_parquet(metrics, f"{out_dir}/metrics")
     # lineage: what ran, over what, producing what (north_rule)
     lineage = [

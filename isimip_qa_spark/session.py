@@ -16,10 +16,14 @@ Scale rationale (100 TB target, tested on local[N]):
 from __future__ import annotations
 
 import os
+import zipimport
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the cores this process may run on, unless SPARK_GRAFT_CPUS says otherwise
+DEFAULT_SHUFFLE_PARTITIONS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 
 
 # glibc malloc tuning for the executor Python workers: the QA kernels
@@ -33,6 +37,41 @@ MALLOC_ENV = {
     "MALLOC_MMAP_THRESHOLD_": "536870912",
     "MALLOC_TRIM_THRESHOLD_": "536870912",
 }
+
+
+# Per-task cost of a reused Python worker: before it loads a task's UDF,
+# PySpark calls importlib.invalidate_caches() (pyspark/worker_util.py,
+# setup_spark_files). On Python 3.11 and 3.12 that re-reads the central
+# directory of every cached zipimporter: 14 of them over pyspark.zip (1,328
+# entries) and the py4j zip, 0.16-0.30 s of one core per task before the
+# task's first row with 4 workers busy (3.13 made the invalidation lazy, so
+# it costs ~0 there). The sink installs this helper at the start of each
+# task, so a worker re-reads an archive only when it has changed since that
+# importer last read it.
+def keep_unchanged_zip_dirs() -> None:
+    """Wrap zipimporter.invalidate_caches in this process: an importer keeps
+    the directory it holds while the archive's (st_ino, st_size,
+    st_mtime_ns) equals what it saw when it last read it, and re-reads as
+    before when the stat differs, fails, or was never recorded (so a
+    worker's first wrapped call still reads). The stat is taken before the
+    read, so an archive rewritten during a read is read again next time.
+    Idempotent: a second call wraps nothing."""
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "keeps_unchanged", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            seen = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            seen = None
+        if seen is None or getattr(self, "_dir_stat", None) != seen:
+            reread(self)
+            self._dir_stat = seen
+
+    invalidate_caches.keeps_unchanged = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def get_spark(

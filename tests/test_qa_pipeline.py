@@ -329,3 +329,74 @@ def test_sink_writes_warc_ts_as_session_wall_clock(spark, tmp_path):
         assert (m["ts_min"].min(), m["ts_max"].max()) == (
             ts.to_pandas().min(), ts.to_pandas().max()
         )
+
+
+def _published(spark, out):
+    """What a reader of `out` sees: the metrics_rollup rows and the number
+    of lineage rows."""
+    from isimip_qa_spark.plots import metrics_rollup
+
+    rollup = [r.asDict() for r in metrics_rollup(spark, out).collect()]
+    return rollup, spark.read.parquet(f"{out}/lineage").count()
+
+
+def _assert_published_once(spark, out, clean_out):
+    got, n_lineage = _published(spark, out)
+    want, want_lineage = _published(spark, clean_out)
+    assert n_lineage == want_lineage == 4
+    assert [r["chunk"] for r in got] == [r["chunk"] for r in want]
+    for g, w in zip(got, want):
+        assert g == pytest.approx(w)
+
+
+def _publish_dies(monkeypatch):
+    """Kill the driver after a publish has appended its metrics and lineage
+    rows, before the first chunk manifest."""
+    from isimip_qa_spark.plans import pipeline
+
+    def dies(*args, **kw):
+        raise RuntimeError("driver killed")
+
+    monkeypatch.setattr(pipeline, "mark_chunk_done", dies)
+
+
+def test_rerun_without_resume_publishes_each_chunk_once(
+    spark, pages_sdf, cfg, scored, tmp_path
+):
+    """A resume=False rerun replaces each chunk's metrics and lineage rows
+    instead of adding a second copy."""
+    out = str(tmp_path / "qa_twice")
+    run_qa(spark, pages_sdf, cfg, out)
+    assert run_qa(spark, pages_sdf, cfg, out, resume=False)["chunks_run"] == [0, 1, 2, 3]
+    _assert_published_once(spark, out, scored[0])
+
+
+def test_rerun_after_death_before_manifests_publishes_once(
+    spark, pages_sdf, cfg, scored, tmp_path, monkeypatch
+):
+    """A driver killed between a computed publish's metrics/lineage append
+    and its manifests leaves rows of unpublished chunks; the rerun
+    recomputes those chunks and drops the rows it left."""
+    out = str(tmp_path / "qa_orphans")
+    _publish_dies(monkeypatch)
+    with pytest.raises(RuntimeError, match="driver killed"):
+        run_qa(spark, pages_sdf, cfg, out)
+    monkeypatch.undo()
+    assert run_qa(spark, pages_sdf, cfg, out)["chunks_run"] == [0, 1, 2, 3]
+    _assert_published_once(spark, out, scored[0])
+
+
+def test_refetch_after_death_before_manifests_publishes_once(
+    spark, pages_sdf, cfg, scored, tmp_path, monkeypatch
+):
+    """The same kill on the cache-fetch path: the rerun fetches the chunks
+    again and drops the rows the killed publish left."""
+    cache = scored[0]
+    out = str(tmp_path / "qa_refetch")
+    _publish_dies(monkeypatch)
+    with pytest.raises(RuntimeError, match="driver killed"):
+        run_qa(spark, pages_sdf, cfg, out, cache_base=cache)
+    monkeypatch.undo()
+    again = run_qa(spark, pages_sdf, cfg, out, cache_base=cache)
+    assert again["chunks_fetched"] == [0, 1, 2, 3] and again["chunks_run"] == []
+    _assert_published_once(spark, out, cache)
