@@ -6,11 +6,13 @@ Unit of resume: a *chunk* — a deterministic bucket range of the corpus
 (bucket = pmod(xxhash64(url), n_chunks)). A chunk's data lands in
 `out_dir/data/chunk=K/`, fetched from a shared cache or computed by the
 run's one fused Spark job. Either way the chunk is published after its
-data (pipeline._publish): metrics rows, then lineage rows, then the chunk's
-manifest file LAST, so a killed run resumes by fetching or re-running
-exactly the chunks without a manifest. On an Iceberg deployment the
-manifest is the snapshot log and a chunk is a partition-scoped append —
-same structure, different sink.
+data (pipeline._publish), and its manifest file is written LAST, so a
+killed run resumes by fetching or re-running exactly the chunks without a
+manifest. The manifests are the only source of truth: each holds its
+chunk's file list, rows, stages, `wall_s` and metrics records, and the
+out_dir's `metrics/` and `lineage/` tables are rebuilt from them at every
+publish. On an Iceberg deployment the manifest is the snapshot log and a
+chunk is a partition-scoped append — same structure, different sink.
 """
 
 from __future__ import annotations

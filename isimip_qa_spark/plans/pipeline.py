@@ -22,12 +22,14 @@ Physical shape (the properties that carry to 1000 executors / 100 TB):
 - `html` is dropped before the sink (column pruning discipline; the scan
   never materialises it for text-only runs).
 - Metrics are computed per Spark partition by the sink task inside the
-  same pass (plans/sink.py) and collected as Arrow; the driver appends them
-  to a metrics table with pyarrow — the analogue of the reference's
-  extraction artifacts (mixins/extractions.py:42-62).
+  same pass (plans/sink.py) and collected as Arrow; the driver keeps them
+  in each chunk's manifest — the analogue of the reference's extraction
+  artifacts (mixins/extractions.py:42-62).
 - Every chunk, fetched from a cache or computed, is published by one
-  function (_publish): metrics rows, then lineage rows, then the chunk
-  manifest, which is written last and so is the publish step.
+  function (_publish). The chunk manifests are the only source of truth:
+  `metrics/` and `lineage/` are one parquet file each, rebuilt from all
+  published manifests plus the new ones, and the manifests are written
+  last, so they are the publish step.
 """
 
 from __future__ import annotations
@@ -35,11 +37,11 @@ from __future__ import annotations
 import contextlib
 import functools
 import glob
+import json
 import operator
 import os
 import shutil
 import time
-import uuid
 from dataclasses import replace
 
 import pyarrow as pa
@@ -56,6 +58,7 @@ from .checkpoint import (
     manifest_dir,
     mark_chunk_done,
     metrics_table,
+    read_manifest,
 )
 from .config import QAConfig
 from .sink import qa_sink
@@ -63,17 +66,12 @@ from .skew import detect_hot_hosts  # noqa: F401  unused; perfbench/run.py wraps
 from .stages import STAGES
 
 
-def _append_parquet(table: pa.Table, path: str) -> None:
-    """Append a (small, driver-side) table as one parquet file.
-
-    Metrics and lineage tables live on the driver by construction (one row
-    per partition/chunk); round-tripping them through createDataFrame +
-    df.write costs a full Spark job each (~0.5-1 s of fixed latency per run,
-    pure Amdahl loss at high core counts). A direct pyarrow write is the
-    same on-disk layout a `writeTo(...).append()` would produce — on an
-    Iceberg deployment this is one catalog append."""
-    os.makedirs(path, exist_ok=True)
-    pq.write_table(table, os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"))
+# lineage: what ran, over what, producing what (north_rule); one row per
+# published chunk
+LINEAGE_PA = pa.schema(
+    [("config_hash", pa.string()), ("chunk", pa.int64()), ("stages", pa.string()),
+     ("rows", pa.int64()), ("wall_s", pa.float64())]
+)
 
 
 def scope_pred(cfg: QAConfig) -> Column:
@@ -166,8 +164,7 @@ def run_targets(
                 if man is not None:
                     fetched[c], fetch_walls[c] = man, time.time() - t_fetch
         if fetched:
-            recs = [r for man in fetched.values() for r in man["metrics"]]
-            _publish(out_dir, metrics_table(recs), fetched, fetch_walls)
+            _publish(out_dir, fetched, fetch_walls)
         summaries.append(
             {
                 # a fully-resumed run computes nothing — the reference's
@@ -210,7 +207,7 @@ def run_targets(
                     "files": chunk_files(out_dir, c),
                     "metrics": recs,
                 }
-            _publish(out_dir, m, mans, dict.fromkeys(mans, share))
+            _publish(out_dir, mans, dict.fromkeys(mans, share))
             s["wall_s"] += share + time.time() - t0
     for s in summaries:
         s["wall_s"] = round(s["wall_s"], 3)
@@ -276,55 +273,49 @@ def _run_single_pass(
     ]
 
 
-def _drop_chunk_rows(path: str, chunks) -> None:
-    """Remove the rows of `chunks` from the parquet files of a metrics or
-    lineage table: what an earlier publish of those chunks left behind (a
-    resume=False rerun, or a driver killed before the chunk's manifest).
-    A file holding none of them is only read; one holding some is
-    rewritten without them (tmp, then an atomic rename) or removed."""
-    if not os.path.isdir(path):
-        return
-    for name in sorted(os.listdir(path)):
-        if name.startswith((".", "_")):
-            continue
-        f = os.path.join(path, name)
-        t = pq.read_table(f)
-        hit = pc.is_in(t["chunk"], value_set=pa.array(sorted(chunks), t["chunk"].type))
-        if not pc.any(hit).as_py():
-            continue
-        rest = t.filter(pc.invert(hit))
-        if rest.num_rows:
-            tmp = os.path.join(path, f".{name}.tmp")
-            pq.write_table(rest, tmp)
-            os.replace(tmp, f)
-        else:
-            os.remove(f)
+def _replace_table(table: pa.Table, path: str) -> None:
+    """Make `table` the one data file of the table directory `path`: tmp,
+    then an atomic rename, then remove every other file there (what an
+    earlier layout appended, one file per publish)."""
+    os.makedirs(path, exist_ok=True)
+    tmp = os.path.join(path, ".part-0.parquet.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, "part-0.parquet"))
+    for name in os.listdir(path):
+        if name != "part-0.parquet":
+            os.remove(os.path.join(path, name))
 
 
-def _publish(
-    out_dir: str, metrics: pa.Table, mans: dict[int, dict], walls: dict[int, float]
-) -> None:
-    """Publish chunks of one target, fetched or computed alike: drop any
-    metrics and lineage rows an earlier publish of these chunks left, append
-    their metrics rows, then one lineage row per chunk, then write each
-    chunk's manifest `mans[c]`. The manifest is written last, so it is the
-    publish step: a driver killed before it leaves the chunk unpublished,
-    and the next run fetches or computes it again, replacing its rows."""
-    for table in ("metrics", "lineage"):
-        _drop_chunk_rows(f"{out_dir}/{table}", mans)
-    _append_parquet(metrics, f"{out_dir}/metrics")
-    # lineage: what ran, over what, producing what (north_rule)
+def _publish(out_dir: str, mans: dict[int, dict], walls: dict[int, float]) -> None:
+    """Publish chunks of one target, fetched or computed alike: stamp each
+    manifest `mans[c]` with its `wall_s`, rebuild the metrics and lineage
+    tables from the already-published manifests with `mans` in place of
+    their chunks, then write the manifests. The manifest is written last,
+    so it is the publish step: a driver killed before it leaves the chunk
+    unpublished, its rows are dropped by the next rebuild, and the next run
+    fetches or computes it again."""
+    # the manifests' JSON form (timestamps as str), so the first write and
+    # any later rebuild from disk build the same tables
+    mans = {
+        c: json.loads(json.dumps(dict(man, wall_s=round(walls[c], 3)), default=str))
+        for c, man in mans.items()
+    }
+    published = dict(sorted({**read_manifest(out_dir), **mans}.items()))
+    _replace_table(
+        metrics_table([r for man in published.values() for r in man["metrics"]]),
+        f"{out_dir}/metrics",
+    )
     lineage = [
         {
             "config_hash": man["config_hash"],
             "chunk": c,
             "stages": ",".join(man.get("stages", [])),
             "rows": man.get("rows", 0),
-            "wall_s": round(walls[c], 3),
+            "wall_s": man.get("wall_s"),
         }
-        for c, man in mans.items()
+        for c, man in published.items()
     ]
-    _append_parquet(pa.Table.from_pylist(lineage), f"{out_dir}/lineage")
+    _replace_table(pa.Table.from_pylist(lineage, LINEAGE_PA), f"{out_dir}/lineage")
     for c, man in mans.items():
         mark_chunk_done(out_dir, c, man)
 

@@ -1,53 +1,57 @@
-"""Figure sink — the reference's plot phase, Sparkified (S11 analogue).
+"""Figure sink — the reference's plot phase (S11 analogue).
 
 The reference's plots re-read extraction artifacts, aggregate in pandas,
 and render a grid of matplotlib panels to SVG/PNG
 (/root/reference/isimip_qa/mixins/plots.py:17-28,116-158,
 /root/reference/isimip_qa/plots/*.py). The engine-side math of every plot
 (A10-A15) already lives in oracle-checked queries; this module closes the
-*presentation* entry point: collect a small driver-side rollup from the QA
-metrics table (the artifact analogue) and render one figure.
+*presentation* entry point: roll the QA metrics table (the artifact
+analogue: one small parquet file per out_dir, rebuilt from the chunk
+manifests at every publish) up per chunk and render one figure. The plot
+phase runs no Spark: it reads that file with pyarrow on the driver.
 
 Rendering backends: matplotlib when importable (savefig, like the
 reference's Figure sink, mixins/plots.py:17-28); otherwise a dependency-free
 deterministic SVG writer — same data, same artifact contract, testable in
-environments without plotting libs. Only the rollup (one row per chunk)
-ever reaches the driver; the corpus does not."""
+environments without plotting libs."""
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import pyarrow.parquet as pq
 
 
-def metrics_rollup(spark: SparkSession, out_dir: str) -> DataFrame:
+def metrics_rollup(out_dir: str) -> list[dict]:
     """Per-chunk rollup over the metrics table (reference analogue: a plot
-    re-reading its extraction CSV, plots/daily.py:15-17). Small by
-    construction: one row per chunk."""
-    m = spark.read.parquet(f"{out_dir}/metrics")
-    return (
-        m.groupBy("chunk")
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            (F.sum("n_keep") / F.sum("n_docs")).alias("keep_rate"),
+    re-reading its extraction CSV, plots/daily.py:15-17), one dict per
+    chunk in chunk order: n_docs, keep_rate, avg_ppl, n_scrubbed. A ratio
+    whose denominator is 0 (no docs, or no doc with a perplexity) is
+    None."""
+    cols = ("n_docs", "n_keep", "ppl_sum", "ppl_n", "n_scrubbed")
+    m = pq.read_table(f"{out_dir}/metrics", columns=["chunk", *cols])
+    sums = m.group_by("chunk").aggregate([(c, "sum") for c in cols]).sort_by("chunk")
+    return [
+        {
+            "chunk": r["chunk"],
+            "n_docs": r["n_docs_sum"],
+            "keep_rate": r["n_keep_sum"] / r["n_docs_sum"] if r["n_docs_sum"] else None,
             # EXACT per-doc mean from the raw sums carried in
             # METRICS_SCHEMA (ppl_sum/ppl_n) — not a docs-weighted mean of
             # rounded partials, which is biased when null-ppl rows are
             # uneven across partitions (tests/test_plots.py asserts
             # equality with the direct corpus aggregate)
-            (F.sum("ppl_sum") / F.sum("ppl_n")).alias("avg_ppl"),
-            F.sum("n_scrubbed").alias("n_scrubbed"),
-        )
-        .orderBy("chunk")
-    )
+            "avg_ppl": r["ppl_sum_sum"] / r["ppl_n_sum"] if r["ppl_n_sum"] else None,
+            "n_scrubbed": r["n_scrubbed_sum"],
+        }
+        for r in sums.to_pylist()
+    ]
 
 
-def render_rollup(spark: SparkSession, out_dir: str, fig_path: str) -> str:
-    """Collect the rollup and render keep-rate per chunk (bars) with the
-    average perplexity (markers). Returns the written path."""
-    rows = metrics_rollup(spark, out_dir).collect()
+def render_rollup(out_dir: str, fig_path: str) -> str:
+    """Render the rollup's keep-rate per chunk (bars) with the average
+    perplexity (markers). Returns the written path."""
+    rows = metrics_rollup(out_dir)
     chunks = [r["chunk"] for r in rows]
     keep = [float(r["keep_rate"] or 0.0) for r in rows]
     ppl = [float(r["avg_ppl"] or 0.0) for r in rows]
@@ -85,10 +89,10 @@ def _render_matplotlib(fig_path, chunks, keep, ppl) -> str:
 # from the scope dimensions) — one panel per (window × cohort) combo -------
 
 
-def grid_panels(spark: SparkSession, out_root: str) -> list[dict]:
+def grid_panels(out_root: str) -> list[dict]:
     """Walk a grid output root (run_grid layout:
     out_root/window=W/cohort=C/<hash>/metrics) and roll each combo up to
-    one panel spec. Only the per-chunk rollups reach the driver."""
+    one panel spec."""
     import glob
 
     panels = []
@@ -98,7 +102,7 @@ def grid_panels(spark: SparkSession, out_root: str) -> list[dict]:
         hashdir = os.path.dirname(m)
         cohort = os.path.basename(os.path.dirname(hashdir))
         window = os.path.basename(os.path.dirname(os.path.dirname(hashdir)))
-        rows = metrics_rollup(spark, hashdir).collect()
+        rows = metrics_rollup(hashdir)
         panels.append(
             {
                 "window": window,
@@ -112,11 +116,11 @@ def grid_panels(spark: SparkSession, out_root: str) -> list[dict]:
     return panels
 
 
-def render_grid(spark: SparkSession, out_root: str, fig_path: str) -> str:
+def render_grid(out_root: str, fig_path: str) -> str:
     """Render every combo of a grid run as one figure: rows = windows,
     cols = cohorts (the reference's dimension-derived panel layout).
     Returns the written path; same backend split as render_rollup."""
-    panels = grid_panels(spark, out_root)
+    panels = grid_panels(out_root)
     windows = sorted({p["window"] for p in panels})
     cohorts = sorted({p["cohort"] for p in panels})
     os.makedirs(os.path.dirname(fig_path) or ".", exist_ok=True)

@@ -104,11 +104,9 @@ def get_spark(
         ),
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # experiment hook: Arrow batch rows trade per-batch overhead against
-        # kernel working-set size (cache pressure at high core counts)
-        "spark.sql.execution.arrow.maxRecordsPerBatch": os.environ.get(
-            "SPARK_GRAFT_ARROW_BATCH", "4096"
-        ),
+        # Arrow batch rows trade per-batch overhead against kernel
+        # working-set size (cache pressure at high core counts)
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
         # 128 MiB splits: the sweet spot for wide parquet scans of page tables.
         "spark.sql.files.maxPartitionBytes": "134217728",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
@@ -116,10 +114,6 @@ def get_spark(
         "spark.ui.enabled": os.environ.get("SPARK_UI", "false"),
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
     }
-    # experiment hook: JVM flags for the (local-mode) driver+executor JVM,
-    # e.g. GC selection — SPARK_GRAFT_JAVA_OPTS="-XX:+UseParallelGC"
-    if os.environ.get("SPARK_GRAFT_JAVA_OPTS"):
-        conf["spark.driver.extraJavaOptions"] = os.environ["SPARK_GRAFT_JAVA_OPTS"]
     # cluster mode: same malloc tuning for executor-side python workers
     for k, v in MALLOC_ENV.items():
         conf[f"spark.executorEnv.{k}"] = v

@@ -15,11 +15,11 @@ def test_render_rollup_figure(spark, pages_sdf, tmp_path):
     cfg = QAConfig(n_chunks=2, n_partitions=4)
     run_qa(spark, pages_sdf, cfg, out)
 
-    roll = metrics_rollup(spark, out).collect()
+    roll = metrics_rollup(out)
     assert [r["chunk"] for r in roll] == [0, 1]
     assert all(0.0 < r["keep_rate"] < 1.0 for r in roll)
 
-    fig = render_rollup(spark, out, str(tmp_path / "figs" / "rollup.svg"))
+    fig = render_rollup(out, str(tmp_path / "figs" / "rollup.svg"))
     assert os.path.exists(fig)
     with open(fig, "rb") as f:
         body = f.read()
@@ -47,7 +47,7 @@ def test_rollup_avg_ppl_exact(spark, pages_sdf, tmp_path):
     cfg = QAConfig(n_chunks=2, n_partitions=4)
     run_qa(spark, pages_sdf, cfg, out)
 
-    roll = {r["chunk"]: r["avg_ppl"] for r in metrics_rollup(spark, out).collect()}
+    roll = {r["chunk"]: r["avg_ppl"] for r in metrics_rollup(out)}
     direct = {
         r["chunk"]: r["m"]
         for r in read_scored(spark, out)
@@ -84,7 +84,7 @@ def test_render_grid_svg_matches_golden_bytes(spark, pages_sdf, tmp_path):
     windows = [None, ("2024-01-01 00:00:00", "2024-01-10 00:00:00")]
     cohorts = [("en", "es"), ("fr",)]
     run_grid(spark, pages_sdf, cfg, windows, cohorts, out_root)
-    fig = render_grid(spark, out_root, str(tmp_path / "figs" / "grid.svg"))
+    fig = render_grid(out_root, str(tmp_path / "figs" / "grid.svg"))
     with open(fig, "rb") as f:
         body = f.read()
     if not body.lstrip().startswith(b"<svg"):
@@ -106,11 +106,11 @@ def test_render_grid_multi_panel(spark, pages_sdf, tmp_path):
     cohorts = [("en", "es"), ("fr",)]
     run_grid(spark, pages_sdf, cfg, windows, cohorts, out_root)
 
-    panels = grid_panels(spark, out_root)
+    panels = grid_panels(out_root)
     assert len(panels) == 4  # one per combo
     assert {p["cohort"] for p in panels} == {"cohort=en-es", "cohort=fr"}
 
-    fig = render_grid(spark, out_root, str(tmp_path / "figs" / "grid.svg"))
+    fig = render_grid(out_root, str(tmp_path / "figs" / "grid.svg"))
     assert os.path.getsize(fig) > 500
     with open(fig, "rb") as f:
         body = f.read()
@@ -119,3 +119,25 @@ def test_render_grid_multi_panel(spark, pages_sdf, tmp_path):
         assert text.count('class="panel"') == 4
         # every combo contributes its own bars
         assert text.count('class="keep-bar"') == 4 * 2  # 2 chunks per combo
+
+
+def test_rollup_of_a_chunk_without_perplexity(spark, tmp_path):
+    """A chunk whose docs all have NULL text has no perplexity (its ppl_n
+    sums to 0): the rollup's avg_ppl is None, and the figure draws it as
+    0."""
+    from pyspark.sql import functions as F
+
+    rows = [(f"https://null.example.org/p/{i}", None, "en", i) for i in range(20)]
+    pages = spark.createDataFrame(rows, "url string, text string, lang string, i int")
+    pages = pages.withColumn("warc_ts", F.timestamp_seconds(1704067200 + F.col("i"))).drop("i")
+    out = str(tmp_path / "qa_null_text")
+    run_qa(spark, pages, QAConfig(n_chunks=1, n_partitions=2), out)
+
+    (roll,) = metrics_rollup(out)
+    assert roll["chunk"] == 0 and roll["n_docs"] == 20
+    assert roll["avg_ppl"] is None
+    fig = render_rollup(out, str(tmp_path / "figs" / "rollup.svg"))
+    with open(fig, "rb") as f:
+        body = f.read()
+    if body.lstrip().startswith(b"<svg"):
+        assert 'data-ppl="0.00"' in body.decode()

@@ -332,21 +332,46 @@ def test_sink_writes_warc_ts_as_session_wall_clock(spark, tmp_path):
 
 
 def _published(spark, out):
-    """What a reader of `out` sees: the metrics_rollup rows and the number
-    of lineage rows."""
+    """What a reader of `out` sees: the metrics_rollup rows, which it reads
+    without a Spark job, and the number of lineage rows."""
+    import uuid
+
     from isimip_qa_spark.plots import metrics_rollup
 
-    rollup = [r.asDict() for r in metrics_rollup(spark, out).collect()]
+    sc = spark.sparkContext
+    group = f"metrics-rollup-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        rollup = metrics_rollup(out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
     return rollup, spark.read.parquet(f"{out}/lineage").count()
 
 
 def _assert_published_once(spark, out, clean_out):
+    """`out` reads as the clean run `clean_out`, and its metrics and lineage
+    tables are one file each, projected from its chunk manifests."""
+    import pyarrow.parquet as pq
+
+    from isimip_qa_spark.plans.checkpoint import metrics_table, read_manifest
+
     got, n_lineage = _published(spark, out)
     want, want_lineage = _published(spark, clean_out)
     assert n_lineage == want_lineage == 4
     assert [r["chunk"] for r in got] == [r["chunk"] for r in want]
     for g, w in zip(got, want):
         assert g == pytest.approx(w)
+
+    for table in ("metrics", "lineage"):
+        names = os.listdir(f"{out}/{table}")
+        assert [n for n in names if not n.startswith((".", "_"))] == ["part-0.parquet"]
+    mans = read_manifest(out)
+    recs = [r for man in mans.values() for r in man["metrics"]]
+    assert pq.read_table(f"{out}/metrics").equals(metrics_table(recs))
+    lineage = pq.read_table(f"{out}/lineage").to_pydict()
+    assert lineage["chunk"] == sorted(mans)
+    assert lineage["wall_s"] == [man["wall_s"] for man in mans.values()]
 
 
 def _publish_dies(monkeypatch):
@@ -400,3 +425,38 @@ def test_refetch_after_death_before_manifests_publishes_once(
     again = run_qa(spark, pages_sdf, cfg, out, cache_base=cache)
     assert again["chunks_fetched"] == [0, 1, 2, 3] and again["chunks_run"] == []
     _assert_published_once(spark, out, cache)
+
+
+def test_half_cached_run_publishes_each_chunk_once(spark, pages_sdf, cfg, scored, tmp_path):
+    """A fetched publish, then a computed publish into the same out_dir:
+    the second rebuilds both tables from the first's manifests plus its
+    own."""
+    import shutil
+
+    cache = str(tmp_path / "half_cache")
+    shutil.copytree(scored[0], cache)
+    for c in (2, 3):
+        os.remove(os.path.join(cache, "_manifest", f"chunk_{c}.json"))
+    out = str(tmp_path / "qa_half")
+    got = run_qa(spark, pages_sdf, cfg, out, cache_base=cache)
+    assert got["chunks_fetched"] == [0, 1] and got["chunks_run"] == [2, 3]
+    _assert_published_once(spark, out, scored[0])
+
+
+def test_publish_replaces_appended_metrics_files(spark, pages_sdf, cfg, scored, tmp_path):
+    """An out_dir whose metrics/ holds one more appended part file (the
+    layout of one file per publish) double-counts until its next publish,
+    which removes that file."""
+    import shutil
+
+    out = str(tmp_path / "qa_appended")
+    shutil.copytree(scored[0], out)
+    extra = os.path.join(out, "metrics", "part-0f1e2d3c4b5a69788796a5b4c3d2e1f0.parquet")
+    shutil.copy(os.path.join(out, "metrics", "part-0.parquet"), extra)
+    doubled, clean = _published(spark, out)[0], _published(spark, scored[0])[0]
+    assert [r["n_docs"] for r in doubled] == [2 * r["n_docs"] for r in clean]
+
+    os.remove(os.path.join(out, "_manifest", "chunk_1.json"))
+    assert run_qa(spark, pages_sdf, cfg, out)["chunks_run"] == [1]
+    assert not os.path.exists(extra)
+    _assert_published_once(spark, out, scored[0])

@@ -85,7 +85,7 @@ def test_fetch_clears_stale_files_and_replays_metrics(spark, pages_sdf, tmp_path
     run_qa(spark, pages_sdf, cfg, cache)
     cache_rollup = {
         r["chunk"]: (r["n_docs"], r["keep_rate"])
-        for r in metrics_rollup(spark, cache).collect()
+        for r in metrics_rollup(cache)
     }
 
     out = str(tmp_path / "out")
@@ -109,7 +109,7 @@ def test_fetch_clears_stale_files_and_replays_metrics(spark, pages_sdf, tmp_path
     # metrics replayed from the manifests: same rollup as the cache
     out_rollup = {
         r["chunk"]: (r["n_docs"], r["keep_rate"])
-        for r in metrics_rollup(spark, out).collect()
+        for r in metrics_rollup(out)
     }
     assert out_rollup == cache_rollup
     assert os.path.isdir(f"{out}/lineage")
@@ -145,7 +145,7 @@ def _rollup(spark, out_dir):
 
     return {
         r["chunk"]: (r["n_docs"], r["keep_rate"], r["n_scrubbed"], pytest.approx(r["avg_ppl"]))
-        for r in metrics_rollup(spark, out_dir).collect()
+        for r in metrics_rollup(out_dir)
     }
 
 

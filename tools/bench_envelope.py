@@ -72,12 +72,12 @@ from isimip_qa_spark.functions.qa_fused import _fused_series
 
 src = sys.argv[2]          # pre-staged parquet-zstd pages file (tmpfs)
 scratch = sys.argv[3]      # per-worker scratch dir (tmpfs)
-# the engine feeds the kernel SPARK_GRAFT_ARROW_BATCH-row Arrow batches
-# (session.py maxRecordsPerBatch, default 4096) — the probe must match that
-# working-set size or it measures a different cache regime: a 20k-row batch
-# spills the per-core cache share and showed ~0.5 per-worker 2->8 where the
-# engine itself measures 0.765
-BATCH = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", "4096"))
+# the engine feeds the kernel 4096-row Arrow batches (session.py
+# maxRecordsPerBatch) — the probe must match that working-set size or it
+# measures a different cache regime: a 20k-row batch spills the per-core
+# cache share and showed ~0.5 per-worker 2->8 where the engine itself
+# measures 0.765
+BATCH = 4096
 # warm model tables + page cache
 tbl = pq.read_table(src, columns=["url", "text"])
 _fused_series(tbl.column("text").to_pandas().head(64))
