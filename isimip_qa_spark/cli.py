@@ -161,13 +161,13 @@ def main(argv=None) -> int:
         raise SystemExit("--dsir-threshold needs --dsir-artifact")
     lang_profiles = _parse_lang_profiles(args.lang_profiles)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from .plans import QAConfig, run_qa
     from .plans.pipeline import read_scored
+    from .session import get_spark
 
-    spark = SparkSession.builder.appName("isimip-qa-spark").getOrCreate()
+    spark = get_spark()
     if args.gen_pages:
         from .sources.pages import write_pages
 

@@ -1,26 +1,24 @@
-"""fastText-style language identification, two interchangeable backends.
+"""fastText-style language identification: the model and its column
+expressions.
 
-The production path is an Arrow-vectorized pandas UDF with the model held in
-a broadcast-once module global (SCALAR_ITER semantics: the per-executor
-Python worker builds token→lang lookups once per batch stream) — the Spark
-recast of the reference's process-wide cached auxiliary inputs
-(/root/reference/isimip_qa/config.py:18-19, models.py:83-86).
+The QA pass scores language in the sink's fused kernel
+(functions/qa_fused.py), which builds its token→language map from
+LANG_STOPWORDS once per Python worker. The column expressions here compute
+the *identical* scores (stop-word occurrence counts per language, argmax
+with fixed tie-break order) JVM-side: they are the `langid` stage of the
+expression oracle (plans/stages.py), the `langid` query, and with their
+DuckDB twins the cross-engine check: integer scores, no float noise.
 
-A pure-column-expression backend computes the *identical* scores (stop-word
-occurrence counts per language, argmax with fixed tie-break order), so the
-DuckDB oracle and the UDF can be cross-checked exactly: integer scores, no
-float noise.
-
-The model: per-language stop-word lists with distinct vocabularies. This is
-the hash-ngram linear classifier degenerated to unigram indicator features —
-the same decision function shape as fastText's linear layer, sized for the
-deterministic synthetic corpora (real fastText weights are external data,
-which this sandbox excludes).
+The model: per-language stop-word lists; a word on two lists ('la' and
+'de': es and fr) counts for both languages. This is the hash-ngram linear
+classifier degenerated to unigram indicator features — the same decision
+function shape as fastText's linear layer, sized for the deterministic
+synthetic corpora (real fastText weights are external data, which this
+repository does not ship).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -111,42 +109,3 @@ def argmax_lang_sql(score_sql_of) -> str:
         )
         pred = f"CASE WHEN {cond} THEN '{lang}' ELSE {pred} END"
     return pred
-
-
-# --- pandas UDF backend (production path) -----------------------------------
-
-_TOKEN2LANG: dict[str, int] | None = None
-
-
-def _lookup() -> dict[str, int]:
-    global _TOKEN2LANG
-    if _TOKEN2LANG is None:
-        _TOKEN2LANG = {}
-        for li, lang in enumerate(LANG_ORDER):
-            for w in LANG_STOPWORDS[lang]:
-                _TOKEN2LANG[w] = li
-    return _TOKEN2LANG
-
-
-def _predict_series(texts: pd.Series) -> pd.Series:
-    """Vectorized: explode tokens once, map token→lang id, count per (doc,
-    lang), argmax. No per-row Python."""
-    import numpy as np
-
-    texts = texts.reset_index(drop=True)
-    toks = texts.str.lower().str.split(" ").explode()
-    lang_ids = toks.map(_lookup()).dropna().astype(np.int64)
-    n = len(texts)
-    counts = np.zeros((n, len(LANG_ORDER)), dtype=np.int64)
-    if len(lang_ids):
-        np.add.at(counts, (lang_ids.index.to_numpy(), lang_ids.to_numpy()), 1)
-    preds = np.array(LANG_ORDER, dtype=object)[counts.argmax(axis=1)]
-    out = pd.Series(preds, dtype="object")
-    out[texts.isna()] = None
-    return out
-
-
-def lang_pred_udf(text: Column) -> Column:
-    """Arrow-vectorized pandas UDF (created lazily: module-level decoration
-    would re-trigger DDL parsing on executor-side module import)."""
-    return F.pandas_udf(_predict_series, "string")(text)

@@ -1,7 +1,10 @@
 """KenLM-style n-gram perplexity scoring (unigram backoff model).
 
-Production path: broadcast model dict + Arrow-vectorized pandas UDF
-(reference analogue: broadcast-shaped auxiliary lookup,
+The QA pass scores perplexity in the sink's fused kernel
+(functions/qa_fused.py) from the same broadcast model dict; `ppl_udf`, an
+Arrow-vectorized pandas UDF, is the `perplexity` stage of the expression
+oracle (plans/stages.py) and the `perplexity` query (reference analogue:
+broadcast-shaped auxiliary lookup,
 /root/reference/isimip_qa/extractions/mean.py:30-33 gridarea weights).
 
 Determinism contract for cross-engine verification: all log-probabilities are

@@ -1,14 +1,15 @@
 """Fused Python-side QA scoring: one Arrow round-trip for the whole stage set.
 
-langid + perplexity + scrub each need Python (model lookups, compiled-re
-byte-identity); the Gopher/C4 rule statistics are also computed here on the
-same tokenisation — measured on this sandbox the JVM expression forms
+langid + perplexity + scrub run here in Python (model lookups, compiled
+`re`, the pandas oracle's engine); the Gopher/C4 rule statistics are also
+computed here on the same tokenisation — measured, the JVM expression forms
 (split / array_distinct / array_contains chains) cost ~200µs/doc while this
 kernel computes identical values for ~16µs/doc (4096-doc batches, one core
-of a 4-core VM). The column-expression forms
-(functions/textstats.py) remain the reference surface: the STAGES oracle
-(plans/stages.py) uses them and tests assert bit-equality between the two
-paths; every QA run, batch or stream, scores with this kernel only.
+of a 4-core VM). This kernel is the only Python implementation of langid
+and scrub; the column-expression forms (functions/textstats.py, langid.py,
+scrub.py) remain the reference surface: the STAGES oracle (plans/stages.py)
+uses them and tests assert bit-equality between the two paths; every QA
+run, batch or stream, scores with this kernel only.
 
 Kernel shape (`_fused_arrow`, per Arrow string array of ~4k docs):
 - The batch's UTF-8 bytes are read in place: the array's offsets are the
@@ -108,26 +109,30 @@ _CLASS[46] |= _DOT
 _CLASS[[b for b in range(128) if re.fullmatch(CTRL_CLASS, chr(b))]] |= _CTRL
 
 
-# combined model: token → id; LP[id] = unigram logprob, LID[id] = language id
-# (-1: not a stop-word of any language). Built once per Python worker process
-# (module global = the broadcast-variable analogue in local mode).
+# combined model: token → id; LP[id] = unigram logprob, LANGS[id] = bit l set
+# iff LANG_ORDER[l] lists the token as a stop-word (0: no language; 'la'
+# and 'de' are listed by two). Built once per Python worker process (module
+# global = the broadcast-variable analogue in local mode).
 _TOK2ID: dict[str, int] | None = None
 _LP: np.ndarray | None = None
-_LID: np.ndarray | None = None
+_LANGS: np.ndarray | None = None
 
 
 def _combined() -> tuple[dict[str, int], np.ndarray, np.ndarray]:
-    global _TOK2ID, _LP, _LID
+    global _TOK2ID, _LP, _LANGS
     if _TOK2ID is None:
-        from .langid import _lookup
+        from .langid import LANG_ORDER, LANG_STOPWORDS
         from .perplexity import MODEL, OOV_LOGPROB
 
-        lang_of = _lookup()
-        vocab = sorted(set(MODEL) | set(lang_of))
+        langs_of: dict[str, int] = {}
+        for li, lang in enumerate(LANG_ORDER):
+            for w in LANG_STOPWORDS[lang]:
+                langs_of[w] = langs_of.get(w, 0) | (1 << li)
+        vocab = sorted(set(MODEL) | set(langs_of))
         _TOK2ID = {w: i for i, w in enumerate(vocab)}
         _LP = np.array([MODEL.get(w, OOV_LOGPROB) for w in vocab], dtype=np.float64)
-        _LID = np.array([lang_of.get(w, -1) for w in vocab], dtype=np.int64)
-    return _TOK2ID, _LP, _LID
+        _LANGS = np.array([langs_of.get(w, 0) for w in vocab], dtype=np.int64)
+    return _TOK2ID, _LP, _LANGS
 
 
 def _distinct(doc: np.ndarray, code: np.ndarray, n: int, v: int) -> np.ndarray:
@@ -201,22 +206,29 @@ def _fused_arrow(text: pa.Array) -> pa.RecordBatch:
 
     # ONE vocabulary pass over the UNIQUE raw-case tokens (langid/perplexity
     # lower before lookup, so probing lower(unique) is identical)
-    tok2id, lp_arr, lid_arr = _combined()
+    tok2id, lp_arr, langs_arr = _combined()
     uid = np.array([tok2id.get(u.lower(), -1) for u in uniques], dtype=np.int64)
     known = uid >= 0
     u_lp = np.where(known, lp_arr[uid], OOV_LOGPROB)
-    u_lid = np.where(known, lid_arr[uid], -1)
+    u_langs = np.where(known, langs_arr[uid], 0)
     u_word = np.array([_WORDLIKE.search(u) is not None for u in uniques], dtype=bool)
 
     # perplexity: exact dyadic mean per doc
     avg = np.bincount(idx, weights=u_lp[codes], minlength=n) / counts
 
-    # langid: stop-word occurrence argmax (first max wins = LANG_ORDER)
-    lids = u_lid[codes]
-    sw = lids >= 0
-    n_lang = len(LANG_ORDER)
-    per_lang = np.bincount(idx[sw] * n_lang + lids[sw], minlength=n * n_lang)
-    preds = np.array(LANG_ORDER, dtype=object)[per_lang.reshape(n, n_lang).argmax(axis=1)]
+    # langid: per-language stop-word occurrence counts (a token listed by
+    # several languages counts for each), argmax (first max wins = LANG_ORDER)
+    bits = u_langs[codes]
+    sw = bits != 0
+    sw_doc, sw_bits = idx[sw], bits[sw]
+    per_lang = np.stack(
+        [
+            np.bincount(sw_doc, weights=(sw_bits >> li) & 1, minlength=n)
+            for li in range(len(LANG_ORDER))
+        ],
+        axis=1,
+    )
+    preds = np.array(LANG_ORDER, dtype=object)[per_lang.argmax(axis=1)]
 
     # --- rule statistics (textstats.py expression semantics, bit-exact) ---
     # mean_word_len = (chars − spaces)/n_words, spaces = n_words − 1

@@ -1,12 +1,13 @@
 """Compiled-regex PII/toxicity scrubbing.
 
-Two backends with the byte-identity rule from SURVEY.md §7: any pattern that
-must match the pandas oracle byte-for-byte runs in the *same* engine — the
-Arrow pandas UDF uses precompiled Python `re` (identical to the oracle by
-construction); the column-expression backend (`regexp_replace` chains, Java
-regex JVM-side) is restricted to patterns whose semantics agree across
-Java/RE2/Python (plain character classes, no unicode classes, no
-lookaround), verified by tests/test_qa_pipeline.py.
+One pattern list, three engines. The QA pass scrubs in the sink's fused
+kernel with precompiled Python `re` (`scrub_text`, the same engine as the
+pandas oracle); `scrub_expr` is the JVM-side `regexp_replace` chain (the
+`scrub` stage of the expression oracle and the `scrub_pii` query), and
+`scrub_oracle_sql` its DuckDB RE2 twin. The patterns are therefore
+restricted to a subset whose semantics agree across Java/RE2/Python (plain
+character classes, no unicode classes, no lookaround), verified by
+tests/test_twin_property.py::test_scrub_three_backend_parity.
 
 Patterns are applied in list order; order matters (emails before bare
 domains would, e.g., double-scrub).
@@ -16,7 +17,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -32,6 +32,14 @@ TOXIC_TERMS = ["badword1", "badword2", "slur1"]
 TOXIC_PATTERN = "(?:" + "|".join(TOXIC_TERMS) + ")"
 
 ALL_PATTERNS = PII_PATTERNS + [(TOXIC_PATTERN, "<TOXIC>")]
+
+# Every ALL_PATTERNS match holds an ASCII digit, an '@' or a toxic term
+# (tests/test_scrub_prefilter.py), so a doc holding none is unchanged by the
+# chain. Backtracking engines (Java, Python `re`) take time quadratic in a
+# long run of e.g. email-class characters with no match, so the kernel (a
+# byte scan) and the JVM `scrub` stage (this regex) run the chain on
+# candidate docs only.
+CANDIDATE_PATTERN = "[0-9@]|" + TOXIC_PATTERN
 
 _COMPILED = [(re.compile(p), r) for p, r in ALL_PATTERNS]
 
@@ -49,49 +57,6 @@ def scrub_text(s: str) -> str:
     for rx, repl in _COMPILED:
         s = rx.sub(repl, s)
     return s
-
-
-def _scrub_series(texts: pd.Series) -> pd.Series:
-    return texts.map(scrub_text, na_action="ignore")
-
-
-# Candidate prefilter: every ALL_PATTERNS match necessarily contains a digit,
-# an '@' (email), or a toxic term — so a doc with none of those cannot be
-# changed by the scrub chain. One cheap contains() pass gates the 4-pattern
-# substitution chain to the (few) candidate docs; clean docs skip it entirely.
-_PREFILTER = re.compile("[0-9@]|" + TOXIC_PATTERN)
-
-
-def _scrub_delta_series(texts: pd.Series) -> pd.Series:
-    """Scrubbed text where it differs from the input, else None.
-
-    The delta form is the scale-path representation: Arrow ships (and the
-    sink stores) only changed docs; `coalesce(scrub_delta, text)` JVM-side
-    reconstructs the full scrubbed column byte-identically."""
-    out = pd.Series([None] * len(texts), index=texts.index, dtype=object)
-    cand = texts.str.contains(_PREFILTER, regex=True, na=False)
-    if cand.any():
-        sub = texts[cand]
-        scrubbed = _scrub_series(sub)
-        changed = scrubbed != sub
-        out[scrubbed.index[changed]] = scrubbed[changed]
-    return out
-
-
-def scrub_udf(text: Column) -> Column:
-    """Python-`re` backend: byte-identical to the pandas oracle (lazily
-    created pandas UDF)."""
-    return F.pandas_udf(_scrub_series, "string")(text)
-
-
-def scrub_delta_udf(text: Column) -> Column:
-    """Delta form of `scrub_udf`: NULL for unchanged docs (see
-    `_scrub_delta_series`)."""
-
-    def _delta(texts: pd.Series) -> pd.Series:
-        return _scrub_delta_series(texts)
-
-    return F.pandas_udf(_delta, "string")(text)
 
 
 def scrub_oracle_sql(col: str) -> str:

@@ -18,11 +18,14 @@ chunk is a partition-scoped append — same structure, different sink.
 from __future__ import annotations
 
 import json
+import logging
 import os
 
 import pyarrow as pa
 
 from .sink import METRICS_PA
+
+log = logging.getLogger(__name__)
 
 
 def manifest_dir(out_dir: str) -> str:
@@ -111,36 +114,57 @@ def fetch_chunk(out_dir: str, chunk: int, cache_base: str, config_hash: str) -> 
     — they must not survive into the fetched chunk) and files are written
     tmp-then-rename. HTTP cannot list directories — the manifest's `files`
     field is the listing; names are validated as plain basenames because
-    the cache is not trusted to build local paths."""
+    the cache is not trusted to build local paths. Each chunk not fetched
+    logs one line: INFO when the cache has no manifest for it, else a
+    WARNING with the reason it was refused."""
     import shutil
 
     try:
         man = json.loads(
             _fetch_bytes(cache_base, f"_manifest/chunk_{chunk}.json")
         )
-        if man["config_hash"] != config_hash:
+        why = _refusal(man, config_hash)
+    except Exception as e:
+        if isinstance(e, FileNotFoundError) or getattr(e, "code", None) == 404:
+            log.info("chunk %d: no manifest in cache %s", chunk, cache_base)
             return None
-        for fn in man["files"]:
-            # path-traversal guard: a malicious/compromised cache must not
-            # be able to direct writes outside the chunk directory
-            if fn != os.path.basename(fn) or fn.startswith(".") or fn in ("", ".."):
-                return None
-        metrics_table(man["metrics"])
-    except Exception:
+        why = f"unreadable manifest ({e!r})"
+    if why:
+        log.warning("chunk %d not fetched from %s, computing it: %s", chunk, cache_base, why)
         return None
     cdir = chunk_path(out_dir, chunk)
     shutil.rmtree(cdir, ignore_errors=True)
     os.makedirs(cdir, exist_ok=True)
-    try:
-        for fn in man["files"]:
+    for fn in man["files"]:
+        try:
             data = _fetch_bytes(cache_base, f"data/chunk={chunk}/{fn}")
             tmp = os.path.join(cdir, f".{fn}.fetch.tmp")
             with open(tmp, "wb") as f:
                 f.write(data)
             os.replace(tmp, os.path.join(cdir, fn))
-    except Exception:
-        return None
+        except Exception as e:
+            log.warning(
+                "chunk %d not fetched from %s, computing it: read error on %s (%r)",
+                chunk, cache_base, fn, e,
+            )
+            return None
     return dict(man, fetched_from=cache_base)
+
+
+def _refusal(man: dict, config_hash: str) -> str | None:
+    """Why a cached manifest is not fetchable, or None if it is."""
+    if man["config_hash"] != config_hash:
+        return f"config hash mismatch ({man['config_hash']} != {config_hash})"
+    for fn in man["files"]:
+        # path-traversal guard: a malicious/compromised cache must not
+        # be able to direct writes outside the chunk directory
+        if fn != os.path.basename(fn) or fn.startswith(".") or fn in ("", ".."):
+            return f"unsafe file name {fn!r}"
+    try:
+        metrics_table(man["metrics"])
+    except Exception as e:
+        return f"unparseable metrics ({e!r})"
+    return None
 
 
 def chunk_files(out_dir: str, chunk: int) -> list[str]:

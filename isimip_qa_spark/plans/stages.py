@@ -8,7 +8,10 @@ magic. Lineage records the stage names.
 
 The stages are the expression-form oracle of the QA pass: production
 scoring is the sink's fused kernel (plans/sink.py), tested against them.
-Everything is column expressions or Arrow pandas UDFs — no per-row Python.
+langid, rules and scrub are JVM column expressions, so the kernel (numpy and
+Python `re`) is checked against a second engine; perplexity is the one
+Arrow pandas UDF (`ppl_udf`: it has no expression twin, and JVM `exp` is
+not known to match numpy's bit for bit). No per-row Python.
 """
 
 from __future__ import annotations
@@ -20,9 +23,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import textstats as ts
-from ..functions.langid import STOPWORD_UNION, lang_pred_udf
+from ..functions.langid import STOPWORD_UNION, lang_pred_expr
 from ..functions.perplexity import ppl_udf
-from ..functions.scrub import scrub_delta_udf
+from ..functions.scrub import CANDIDATE_PATTERN, scrub_expr
 from .config import QAConfig
 
 
@@ -33,7 +36,10 @@ class Stage:
 
 
 def _langid(df: DataFrame, cfg: QAConfig) -> DataFrame:
-    return df.withColumn("lang_pred", lang_pred_udf(F.col("text")))
+    # NULL text scores NULL, as in the kernel (the argmax chain alone would
+    # fall through to its last language)
+    text = F.col("text")
+    return df.withColumn("lang_pred", F.when(text.isNotNull(), lang_pred_expr(text)))
 
 
 def _perplexity(df: DataFrame, cfg: QAConfig) -> DataFrame:
@@ -50,10 +56,12 @@ def _rules(df: DataFrame, cfg: QAConfig) -> DataFrame:
 
 
 def _scrub(df: DataFrame, cfg: QAConfig) -> DataFrame:
-    # Python-re backend: the byte-identity invariant vs the pandas oracle.
-    # Delta form: only changed docs carry a value; `text_scrubbed` is the
-    # JVM-side coalesce (stored once, reconstructed on read — scale path).
-    return df.withColumn("scrub_delta", scrub_delta_udf(F.col("text")))
+    # Delta form, as the sink stores it: only changed docs carry a value;
+    # `text_scrubbed` is the JVM-side coalesce (apply_stages)
+    text = F.col("text")
+    s = scrub_expr(text)
+    changed = text.rlike(CANDIDATE_PATTERN) & (s != text)
+    return df.withColumn("scrub_delta", F.when(changed, s))
 
 
 def _profile_overrides(cfg: QAConfig) -> dict[str, Column]:

@@ -18,7 +18,7 @@ from ..functions.fingerprint import (
     simhash_expr,
     simhash_sql,
 )
-from ..functions.langid import LANG_ORDER, LANG_STOPWORDS, lang_pred_udf
+from ..functions.langid import LANG_ORDER
 from ..functions.perplexity import OOV_LOGPROB, model_values_sql, ppl_udf
 from ..functions.scrub import scrub_expr, scrub_oracle_sql
 from . import register
@@ -300,8 +300,8 @@ def repetition_ngram_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Language-ID: integer stop-word scores per language + argmax with fixed
-# tie-break. Spark side uses the production pandas UDF — proving the UDF
-# against the SQL twin is the point.
+# tie-break. Spark side: the column expressions (argmax_lang over
+# lang_score_exprs), DuckDB side: their SQL twins from the same generators.
 # ---------------------------------------------------------------------------
 
 
@@ -323,14 +323,14 @@ def _langid_sql() -> str:
 
 @register("langid", oracle=_langid_sql())
 def langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.langid import lang_score_exprs
+    from ..functions.langid import argmax_lang, lang_score_exprs
 
     d = read_table(spark, sf_dir, "documents")
     scores = lang_score_exprs(F.col("text"))
     return d.select(
         "doc_id",
         *[scores[lang].alias(f"s_{lang}") for lang in LANG_ORDER],
-        lang_pred_udf(F.col("text")).alias("lang_pred"),
+        argmax_lang(scores).alias("lang_pred"),
     )
 
 

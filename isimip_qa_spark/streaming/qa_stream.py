@@ -32,13 +32,8 @@ from ..plans.pipeline import run_qa
 from ..plans.stages import STAGES, rules_pass_expr
 
 
-def read_pages_stream(
-    spark: SparkSession, src_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(src_dir)
+def read_pages_stream(spark: SparkSession, src_dir: str) -> DataFrame:
+    return spark.readStream.schema(PAGES_SCHEMA).parquet(src_dir)
 
 
 def score_stream(
@@ -46,7 +41,6 @@ def score_stream(
     src_dir: str,
     out_dir: str,
     cfg: QAConfig | None = None,
-    available_now: bool = True,
 ):
     """Score arriving pages with the batch pass: each micro-batch is one
     run_qa out_dir, `<out_dir>/batch=<id>`. A replayed batch (same id, same
@@ -58,17 +52,16 @@ def score_stream(
     if not cfg.extract_from_html:
         # a micro-batch reaches run_qa as an RDD scan: prune html here
         pages = pages.drop("html")
-    writer = (
+    return (
         pages.writeStream.foreachBatch(
             lambda df, batch_id: run_qa(
                 df.sparkSession, df, cfg, f"{out_dir}/batch={batch_id}"
             )
         )
         .option("checkpointLocation", f"{out_dir}/_checkpoint")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_metrics_agg(pages: DataFrame, cfg: QAConfig, watermark: str = "1 hour"):
@@ -102,11 +95,12 @@ def windowed_metrics_stream(
     passes its end (finalized extraction artifacts, never rewritten)."""
     cfg = cfg or QAConfig()
     pages = read_pages_stream(spark, src_dir).drop("html")
-    # rules are pure column exprs → compute keep inline (no UDF in the agg);
-    # language profiles key their thresholds on the langid stage's lang_pred
+    # rules and langid are pure column exprs → compute keep inline (no UDF
+    # in the agg); language profiles key their thresholds on lang_pred
+    stages = {s.name: s for s in STAGES}
     if cfg.lang_profiles:
-        pages = STAGES[0].apply(pages, cfg)  # langid stage
-    enriched = STAGES[2].apply(pages, cfg)  # rules stage
+        pages = stages["langid"].apply(pages, cfg)
+    enriched = stages["rules"].apply(pages, cfg)
     metrics = windowed_metrics_agg(enriched, cfg, watermark)
     return (
         metrics.writeStream.format("parquet")

@@ -18,6 +18,21 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def restore_session_conf(spark):
+    """Puts back every `spark.sql.*` session conf the test changed (a
+    cli.main run re-applies session.get_spark's defaults to the shared
+    session)."""
+    before = spark.conf.getAll
+    yield
+    for k, v in spark.conf.getAll.items():
+        if k.startswith("spark.sql.") and before.get(k) != v:
+            if k in before:
+                spark.conf.set(k, before[k])
+            else:
+                spark.conf.unset(k)
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
@@ -82,10 +97,12 @@ EDGE_PAD = "pad!? 42 x@y ..\x07.. badword1 中é\n\n"
 def kernel_matches_stages(spark):
     """check(docs) asserts that the fused kernel, run on `docs` as a slice
     (offset != 0) of a larger Arrow array between EDGE_PAD docs, equals the
-    unfused stages (expression forms plus the per-stage pandas UDFs) in
-    every score column and in keep. The docs sit back to back in the
-    array's data buffer, so a kernel that misplaces a doc offset moves a
-    pad's or a neighbour's bytes into the docs under test."""
+    unfused stages in every score column and in keep. The stages are JVM
+    column expressions for langid, rules and scrub (so numpy and Python
+    `re` are checked against a second engine) and the perplexity pandas
+    UDF. The docs sit back to back in the array's data buffer, so a kernel
+    that misplaces a doc offset moves a pad's or a neighbour's bytes into
+    the docs under test."""
     import math
 
     import pyarrow as pa

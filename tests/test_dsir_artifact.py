@@ -67,7 +67,7 @@ def test_fingerprint_guard_refuses_foreign_model(tmp_path):
     assert "B=1024" in MODEL_FINGERPRINT
 
 
-def test_cli_fits_model_and_filters_export(spark, tmp_path):
+def test_cli_fits_model_and_filters_export(spark, tmp_path, restore_session_conf):
     """End-to-end: QA run + DSIR fit + thresholded export through the CLI
     entry (same code path as spark-submit)."""
     from isimip_qa_spark.cli import main

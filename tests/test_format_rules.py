@@ -237,7 +237,7 @@ def test_pipeline_with_lang_profiles_matches_reference(
     assert n_prof > n_glob
 
 
-def test_cli_lang_profiles(spark, tmp_path):
+def test_cli_lang_profiles(spark, tmp_path, restore_session_conf):
     """--lang-profiles: inline and JSON-file specs parse (malformed specs
     fail before any compute), and an end-to-end CLI run under looser
     de/zh profiles keeps more documents than the global-gate run."""

@@ -1,50 +1,25 @@
-"""Backend-equivalence tests: the pandas-UDF production paths must produce
-exactly what the pure-column-expression twins produce (SURVEY.md §5's
+"""Backend-equivalence tests: the vectorized kernels must produce exactly
+what the pure-column-expression twins produce (SURVEY.md §5's
 golden-artifact mechanism applied to function backends)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 
-def test_langid_udf_equals_expr(spark, pages_sdf):
-    from isimip_qa_spark.functions.langid import lang_pred_expr, lang_pred_udf
-
-    df = pages_sdf.select(
-        "url",
-        lang_pred_udf(F.col("text")).alias("udf"),
-        lang_pred_expr(F.col("text")).alias("expr"),
-    )
-    mismatches = df.filter(F.col("udf") != F.col("expr")).count()
-    assert mismatches == 0
-
-
-def test_scrub_udf_equals_expr_on_portable_patterns(spark, pages_sdf):
-    """Java-regex expr backend vs Python-re UDF backend — identical on the
-    engine-portable pattern subset (scrub.py contract)."""
-    from isimip_qa_spark.functions.scrub import scrub_expr, scrub_udf
-
-    df = pages_sdf.select(
-        scrub_udf(F.col("text")).alias("py"),
-        scrub_expr(F.col("text")).alias("jvm"),
-    )
-    assert df.filter(F.col("py") != F.col("jvm")).count() == 0
-
-
 def test_scrub_known_pii():
-    from isimip_qa_spark.functions.scrub import _scrub_series
+    from isimip_qa_spark.functions.scrub import scrub_text
 
-    s = pd.Series(
-        [
-            "mail a.b@c.org now",
-            "call +1 (555) 123-4567 ok",
-            "ip 10.0.0.1 end",
-            "clean text",
-        ]
-    )
-    got = _scrub_series(s).tolist()
+    texts = [
+        "mail a.b@c.org now",
+        "call +1 (555) 123-4567 ok",
+        "ip 10.0.0.1 end",
+        "clean text",
+    ]
+    got = [scrub_text(t) for t in texts]
     assert got == [
         "mail <EMAIL> now",
         "call <PHONE> ok",
@@ -137,6 +112,32 @@ def test_fused_equals_unfused(spark, pages_sdf, tmp_path):
     assert len(fused) == len(plain) == 300
     for col in [*(c for c, _ in SCORE_COLS), "keep", "scrubbed", "text_scrubbed"]:
         assert fused[col].tolist() == plain[col].tolist(), col
+
+
+@pytest.mark.parametrize(
+    "docs",
+    [
+        # Unicode case mappings beside stop words: the kernel lowers with
+        # Python str.lower, the langid and stop-word stages with JVM lower
+        # (dotted capital I, final sigma, capital sharp s, a titlecase
+        # digraph, a ligature, the Kelvin sign)
+        [
+            "İn the İ and İS",
+            "ΟΔΟΣ der ΟΔΟΣ. die ΣΑΣ ς Σ",
+            "STRAẞE und die Straße ẞ",
+            "Ǆ ǅ ǆ la el de",
+            "ﬁle the ﬁ of ﬁﬁ",
+            "K und der K k",
+            "THE AND OF İ K ﬁ ẞ Ǆ ΟΔΟΣ",
+        ],
+        # stop words listed by two languages ('la', 'de': es and fr) count
+        # for both, so ties go to LANG_ORDER
+        ["de la", "la", "de", "y de", "le de la", "de fuente lote de datos red"],
+    ],
+    ids=["unicode_case", "shared_stop_words"],
+)
+def test_kernel_language_edges_match_unfused_stages(kernel_matches_stages, docs):
+    kernel_matches_stages(docs)
 
 
 def test_minhash_udf_equals_expr(spark, pages_sdf):

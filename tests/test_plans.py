@@ -74,6 +74,21 @@ def test_python_stages_are_arrow_batched(spark, sf_dir):
     assert "BatchEvalPython" not in plan
 
 
+def test_stage_oracle_runs_python_only_for_perplexity(spark, pages_sdf):
+    """apply_stages is column expressions except perplexity: its plan holds
+    one ArrowEvalPython node evaluating one UDF, ppl_udf, so langid and
+    scrub are checked against the JVM, not against more Python (Spark
+    would fold further pandas UDFs into the same node)."""
+    from isimip_qa_spark.plans.config import QAConfig
+    from isimip_qa_spark.plans.pipeline import apply_stages
+
+    plan = plan_of(apply_stages(pages_sdf, QAConfig()))
+    assert "BatchEvalPython" not in plan
+    nodes = [line for line in plan.splitlines() if "ArrowEvalPython" in line]
+    assert len(nodes) == 1, plan
+    assert nodes[0].count("pythonUDF") == 1 and "_score_series(" in nodes[0], nodes[0]
+
+
 def test_qa_sink_reads_the_scan_directly(spark, pages_sdf, tmp_path, monkeypatch):
     """run_qa hands the sink the scoped, bucket-filtered scan itself:
     scan → filter → mapInArrow with no Exchange, so each sink task scores

@@ -70,6 +70,16 @@ def test_pii_actually_scrubbed(scored):
     assert not changed["text_scrubbed"].str.contains("example-mail.com").any()
 
 
+def test_langid_equals_oracle(scored, oracle_scored):
+    """lang_pred per url equals the pandas oracle's stop-word argmax on
+    every page, defect buckets included."""
+    _, _, got = scored
+    merged = got.merge(oracle_scored[["url", "lang_pred"]], on="url", suffixes=("", "_o"))
+    assert len(merged) == len(got)
+    same = merged["lang_pred"] == merged["lang_pred_o"]
+    assert same.all(), merged.loc[~same, "url"].head()
+
+
 def test_langid_accuracy_on_clean_docs(scored):
     """Clean docs (every bucket except no-stopword 85-89) must langid to
     their true language."""

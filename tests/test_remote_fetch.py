@@ -212,3 +212,60 @@ def test_malformed_cached_metrics_make_the_chunk_computed(spark, pages_sdf, tmp_
     got = run_qa(spark, pages_sdf, cfg, out, cache_base=cache)
     assert got["chunks_fetched"] == [0] and got["chunks_run"] == [1]
     assert _rollup(spark, out) == _rollup(spark, cache)
+
+
+def test_refused_fetch_logs_its_reason(spark, pages_sdf, tmp_path, caplog):
+    """A chunk the cache cannot supply logs one line saying why, so a
+    recomputed chunk is never silent: a WARNING naming the reason for a
+    refused manifest or data file, an INFO line for a chunk the cache does
+    not hold."""
+    import json
+    import logging
+
+    from isimip_qa_spark.plans.checkpoint import fetch_chunk
+
+    cache = str(tmp_path / "cache")
+    cfg = _cfg()
+    run_qa(spark, pages_sdf, cfg, cache)
+    mpath = f"{cache}/_manifest/chunk_0.json"
+    with open(mpath) as f:
+        raw = f.read()
+
+    def fetch_logs(chunk=0, text=raw, config_hash=cfg.config_hash()):
+        with open(mpath, "w") as f:
+            f.write(text)
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="isimip_qa_spark.plans.checkpoint"):
+            man = fetch_chunk(str(tmp_path / "out"), chunk, cache, config_hash)
+        return man, [(r.levelname, r.getMessage()) for r in caplog.records]
+
+    def edited(edit):
+        man = json.loads(raw)
+        edit(man)
+        return json.dumps(man)
+
+    man, logs = fetch_logs()
+    assert man is not None and logs == []
+
+    refusals = {
+        "config hash mismatch": fetch_logs(config_hash="other"),
+        "unsafe file name '../evil.parquet'": fetch_logs(
+            text=edited(lambda m: m.update(files=["../evil.parquet"]))
+        ),
+        "unparseable metrics": fetch_logs(
+            text=edited(lambda m: m["metrics"][0].update(n_docs=None))
+        ),
+        "read error on part-missing.parquet": fetch_logs(
+            text=edited(lambda m: m["files"].append("part-missing.parquet"))
+        ),
+        "unreadable manifest": fetch_logs(text="{not json"),
+    }
+    for reason, (man, logs) in refusals.items():
+        assert man is None, reason
+        ((level, msg),) = logs
+        assert level == "WARNING" and reason in msg and "chunk 0" in msg, msg
+
+    man, logs = fetch_logs(chunk=7)
+    assert man is None
+    ((level, msg),) = logs
+    assert level == "INFO" and "chunk 7: no manifest" in msg, msg

@@ -173,7 +173,8 @@ def test_windowed_metrics_with_lang_profiles(spark, staged_src, tmp_path, pages_
     assert q.exception() is None
     got = spark.read.parquet(f"{out}/metrics").toPandas()
 
-    scored = STAGES[2].apply(STAGES[0].apply(pages_sdf, cfg), cfg)
+    stages = {s.name: s for s in STAGES}
+    scored = stages["rules"].apply(stages["langid"].apply(pages_sdf, cfg), cfg)
     want = (
         scored.groupBy(F.window("warc_ts", "1 day").start.alias("window_start"), "lang")
         .agg(

@@ -199,21 +199,20 @@ _scrub_text = st.lists(
 @given(texts=st.lists(_scrub_text, min_size=1, max_size=12))
 @_SETTINGS
 def test_scrub_three_backend_parity(spark, texts):
-    """scrub_expr (JVM regex), _scrub_series (Python re — the contract
-    oracle), and scrub_oracle_sql (DuckDB RE2) must produce identical
-    bytes on arbitrary ASCII-ish text: the engine-portable-subset claim
-    (functions/scrub.py docstring), hammered instead of assumed."""
-    import pandas as pd
-
+    """scrub_expr (JVM regex), scrub_text (Python re — the fused kernel's
+    engine and the contract oracle), and scrub_oracle_sql (DuckDB RE2) must
+    produce identical bytes on arbitrary ASCII-ish text: the
+    engine-portable-subset claim (functions/scrub.py docstring), hammered
+    instead of assumed."""
     from isimip_qa_spark.functions.scrub import (
-        _scrub_series,
         scrub_expr,
         scrub_oracle_sql,
+        scrub_text,
     )
 
     s = _spark_vals(spark, texts, scrub_expr(F.col("text")))
     d = _duck(texts, scrub_oracle_sql("text"))
-    py = dict(enumerate(_scrub_series(pd.Series(texts, dtype="object"))))
+    py = dict(enumerate(map(scrub_text, texts)))
     assert s == py
     assert d == py
 
