@@ -60,8 +60,11 @@ def lang_score_exprs(text: Column) -> dict[str, Column]:
 def argmax_lang(scores: dict[str, Column]) -> Column:
     """THE argmax-with-LANG_ORDER-tie-break chain — single definition so
     every predictor (doc-level, windowed, SQL twins via argmax_lang_sql)
-    resolves ties identically."""
-    pred = F.lit(LANG_ORDER[-1])
+    resolves ties identically. NULL scores (NULL text) predict NULL, as
+    in the kernel: every comparison is NULL, so the chain falls through to
+    its last language, which is predicted only for a non-NULL score."""
+    last = LANG_ORDER[-1]
+    pred = F.when(scores[last].isNotNull(), F.lit(last))
     # build right-to-left so earlier languages win ties (>= comparison)
     for lang in reversed(LANG_ORDER[:-1]):
         later = [scores[o] for o in LANG_ORDER[LANG_ORDER.index(lang) + 1 :]]
@@ -101,7 +104,8 @@ def lang_score_sql(toks_sql: str, lang: str) -> str:
 def argmax_lang_sql(score_sql_of) -> str:
     """DuckDB twin of argmax_lang. `score_sql_of(lang)` returns the SQL
     string for that language's score (a column alias or an inline expr)."""
-    pred = f"'{LANG_ORDER[-1]}'"
+    last = LANG_ORDER[-1]
+    pred = f"CASE WHEN {score_sql_of(last)} IS NOT NULL THEN '{last}' END"
     for lang in reversed(LANG_ORDER[:-1]):
         later = LANG_ORDER[LANG_ORDER.index(lang) + 1 :]
         cond = " AND ".join(

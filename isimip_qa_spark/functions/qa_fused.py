@@ -1,15 +1,14 @@
 """Fused Python-side QA scoring: one Arrow round-trip for the whole stage set.
 
-langid + perplexity + scrub run here in Python (model lookups, compiled
-`re`, the pandas oracle's engine); the Gopher/C4 rule statistics are also
+langid + perplexity + scrub run here in Python (model lookups, and
+Arrow's RE2 for the scrub chain); the Gopher/C4 rule statistics are also
 computed here on the same tokenisation — measured, the JVM expression forms
 (split / array_distinct / array_contains chains) cost ~200µs/doc while this
 kernel computes identical values for ~16µs/doc (4096-doc batches, one core
-of a 4-core VM). This kernel is the only Python implementation of langid
-and scrub; the column-expression forms (functions/textstats.py, langid.py,
+of a 4-core VM). Every QA run, batch or stream, scores with this kernel
+only; the column-expression forms (functions/textstats.py, langid.py,
 scrub.py) remain the reference surface: the STAGES oracle (plans/stages.py)
-uses them and tests assert bit-equality between the two paths; every QA
-run, batch or stream, scores with this kernel only.
+uses them and tests assert bit-equality between the two paths.
 
 Kernel shape (`_fused_arrow`, per Arrow string array of ~4k docs):
 - The batch's UTF-8 bytes are read in place: the array's offsets are the
@@ -29,8 +28,8 @@ Kernel shape (`_fused_arrow`, per Arrow string array of ~4k docs):
   '.'-runs break at them. Literals (U+FFFD, mojibake, toxic terms) hold no
   space, so they are counted per unique token and cannot span two docs.
 - Scrub in delta form: a digit/'@'/toxic-term candidate prefilter, then the
-  regex chain on the candidate docs only; the column is NULL where a doc is
-  unchanged.
+  RE2 chain (`scrub_arrow`, linear time) on the candidate docs only; the
+  column is NULL where a doc is unchanged.
 
 `_fused_series` is its pandas adapter (tests, benchmark replay); the sink
 (plans/sink.py) calls `_fused_arrow` on the Arrow batches Spark hands it.
@@ -49,7 +48,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from .scrub import TOXIC_TERMS, scrub_text
+from .scrub import TOXIC_TERMS, scrub_arrow
 from .textstats import (
     BULLET_LINE_RE,
     CTRL_CLASS,
@@ -287,15 +286,15 @@ def _fused_arrow(text: pa.Array) -> pa.RecordBatch:
     ) / line_n.astype(np.float64)
     alpha_frac = np.bincount(idx[u_word[codes]], minlength=n) / fcounts
 
-    # scrub candidates: any digit/'@' byte, or a toxic term; the regex chain
+    # scrub candidates: any digit/'@' byte, or a toxic term; the RE2 chain
     # runs on those docs only
     cand = ((per_doc(_SCRUB) > 0) | (token_sum(TOXIC_TERMS) > 0)) & valid
-    delta = np.full(n, None, dtype=object)
     ci = np.flatnonzero(cand)
-    for i, s in zip(ci, text.take(pa.array(ci)).to_pylist()):
-        out = scrub_text(s)
-        if out != s:
-            delta[i] = out
+    before = text.take(pa.array(ci))
+    after = scrub_arrow(before)
+    changed = pc.not_equal(after, before)
+    delta = np.full(n, None, dtype=object)
+    delta[ci[changed.to_numpy(zero_copy_only=False)]] = after.filter(changed).to_pylist()
 
     scores = {
         "lang_pred": preds,

@@ -1,12 +1,13 @@
 """Compiled-regex PII/toxicity scrubbing.
 
-One pattern list, three engines. The QA pass scrubs in the sink's fused
-kernel with precompiled Python `re` (`scrub_text`, the same engine as the
-pandas oracle); `scrub_expr` is the JVM-side `regexp_replace` chain (the
-`scrub` stage of the expression oracle and the `scrub_pii` query), and
-`scrub_oracle_sql` its DuckDB RE2 twin. The patterns are therefore
-restricted to a subset whose semantics agree across Java/RE2/Python (plain
-character classes, no unicode classes, no lookaround), verified by
+One pattern list, four engines. The QA pass scrubs in the sink's fused
+kernel with Arrow's RE2 (`scrub_arrow`, linear in the text length);
+`scrub_expr` is the JVM-side `regexp_replace` chain (the `scrub` stage of
+the expression oracle and the `scrub_pii` query), `scrub_oracle_sql` its
+DuckDB RE2 twin, and `scrub_text` the Python `re` chain of the test
+oracles. The patterns are therefore restricted to a subset whose semantics
+agree across Java/RE2/Python (plain character classes, no unicode classes,
+no lookaround), verified by
 tests/test_twin_property.py::test_scrub_three_backend_parity.
 
 Patterns are applied in list order; order matters (emails before bare
@@ -17,6 +18,8 @@ from __future__ import annotations
 
 import re
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -36,9 +39,9 @@ ALL_PATTERNS = PII_PATTERNS + [(TOXIC_PATTERN, "<TOXIC>")]
 # Every ALL_PATTERNS match holds an ASCII digit, an '@' or a toxic term
 # (tests/test_scrub_prefilter.py), so a doc holding none is unchanged by the
 # chain. Backtracking engines (Java, Python `re`) take time quadratic in a
-# long run of e.g. email-class characters with no match, so the kernel (a
-# byte scan) and the JVM `scrub` stage (this regex) run the chain on
-# candidate docs only.
+# long run of e.g. email-class characters with no match, so the JVM `scrub`
+# stage (this regex) runs the chain on candidate docs only. The kernel (a
+# byte scan) gates the same way to save RE2's per-doc cost.
 CANDIDATE_PATTERN = "[0-9@]|" + TOXIC_PATTERN
 
 _COMPILED = [(re.compile(p), r) for p, r in ALL_PATTERNS]
@@ -57,6 +60,13 @@ def scrub_text(s: str) -> str:
     for rx, repl in _COMPILED:
         s = rx.sub(repl, s)
     return s
+
+
+def scrub_arrow(texts: pa.Array) -> pa.Array:
+    """The chain over a string array, in RE2 (linear time)."""
+    for pat, repl in ALL_PATTERNS:
+        texts = pc.replace_substring_regex(texts, pattern=pat, replacement=repl)
+    return texts
 
 
 def scrub_oracle_sql(col: str) -> str:

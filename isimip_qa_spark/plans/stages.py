@@ -36,10 +36,7 @@ class Stage:
 
 
 def _langid(df: DataFrame, cfg: QAConfig) -> DataFrame:
-    # NULL text scores NULL, as in the kernel (the argmax chain alone would
-    # fall through to its last language)
-    text = F.col("text")
-    return df.withColumn("lang_pred", F.when(text.isNotNull(), lang_pred_expr(text)))
+    return df.withColumn("lang_pred", lang_pred_expr(F.col("text")))
 
 
 def _perplexity(df: DataFrame, cfg: QAConfig) -> DataFrame:

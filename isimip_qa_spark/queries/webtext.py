@@ -1090,8 +1090,7 @@ def _lang_consistency_sql() -> str:
     return f"""
     WITH b AS (
       SELECT doc_id,
-             CASE WHEN text IS NOT NULL
-                  THEN {_win_pred_sql(toks)} END AS doc_lang,
+             {_win_pred_sql(toks)} AS doc_lang,
              list_transform({wins}, wn -> {_win_pred_sql('wn')}) AS preds,
              {n_win}::BIGINT AS n_windows
       FROM documents
@@ -1126,11 +1125,7 @@ def lang_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda i: F.slice(toks, i * LANG_WIN + 1, LANG_WIN),
     )
     preds = F.transform(wins, lang_pred_tokens_expr)
-    # the argmax chain's terminal otherwise() would leak the last language
-    # for NULL text (every when-condition is NULL) — pin NULL in, NULL out
-    doc_pred = F.when(
-        F.col("text").isNotNull(), lang_pred_expr(F.col("text"))
-    )
+    doc_pred = lang_pred_expr(F.col("text"))
     n_agree = F.size(F.filter(preds, lambda p: p == doc_pred)).cast("long")
     frac = F.round(
         F.col("n_agree").cast("double") / F.col("n_windows"), 6

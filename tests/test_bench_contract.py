@@ -1,7 +1,8 @@
 """bench.py driver-contract guards (no Spark session needed): every
 benched query must exist in the registry (a typo'd name would crash the
-driver's per-round bench run at measurement time, the worst place), and
-the calibration/banding constants must stay sane."""
+driver's per-round bench run at measurement time, the worst place), every
+registered query is benched or exempt with a reason, and the
+calibration/banding constants must stay sane."""
 
 from __future__ import annotations
 
@@ -20,6 +21,11 @@ def test_bench_queries_all_registered():
     assert not missing, missing
     # no duplicate measurements
     assert len(bench.BENCH_QUERIES) == len(set(bench.BENCH_QUERIES))
+    # the bench surface is the registry: every registered query is benched
+    # or exempt with a stated reason, never both
+    unbenched = set(QUERIES) - set(bench.BENCH_QUERIES)
+    assert unbenched == set(bench.BENCH_EXEMPT), unbenched ^ set(bench.BENCH_EXEMPT)
+    assert all(bench.BENCH_EXEMPT.values())
     # the round-5 driver-visible companion is benched alongside its sketch
     assert "ppl_bucket_agreement" in bench.BENCH_QUERIES
 

@@ -28,6 +28,24 @@ def test_scrub_known_pii():
     ]
 
 
+def test_kernel_scrubs_a_long_word_in_linear_time():
+    """A 1 MB run of email-class characters next to a digit or an '@' is a
+    scrub candidate. A backtracking engine rescans the run from every start
+    position (quadratic: ~35 min for Python `re` at this size); the
+    kernel's RE2 chain takes milliseconds. The wall bound is loose."""
+    import time
+
+    import pyarrow as pa
+
+    from isimip_qa_spark.functions.qa_fused import _fused_arrow
+
+    word = "y" * 1_000_000
+    t0 = time.perf_counter()
+    delta = _fused_arrow(pa.array([word + " 1", word + " a@b.org"])).column("scrub_delta")
+    assert time.perf_counter() - t0 < 30
+    assert delta.to_pylist() == [None, word + " <EMAIL>"]
+
+
 def test_perplexity_dyadic_exactness():
     """avg_logprob is an exact dyadic mean: udf output == direct fsum."""
     import math

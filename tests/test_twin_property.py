@@ -180,7 +180,7 @@ def test_decontaminate_13gram_parity(spark, texts):
     assert {k: list(v) for k, v in s.items()} == d
 
 
-# --- scrub: three backends (Java regex, Python re, DuckDB RE2) -----------
+# --- scrub: four backends (Java regex, Python re, Arrow RE2, DuckDB RE2) ---
 
 _scrub_text = st.lists(
     st.one_of(
@@ -199,12 +199,15 @@ _scrub_text = st.lists(
 @given(texts=st.lists(_scrub_text, min_size=1, max_size=12))
 @_SETTINGS
 def test_scrub_three_backend_parity(spark, texts):
-    """scrub_expr (JVM regex), scrub_text (Python re — the fused kernel's
-    engine and the contract oracle), and scrub_oracle_sql (DuckDB RE2) must
-    produce identical bytes on arbitrary ASCII-ish text: the
-    engine-portable-subset claim (functions/scrub.py docstring), hammered
-    instead of assumed."""
+    """scrub_expr (JVM regex), scrub_text (Python re — the contract
+    oracle), scrub_arrow (Arrow RE2 — the fused kernel's engine) and
+    scrub_oracle_sql (DuckDB RE2) must produce identical bytes on arbitrary
+    ASCII-ish text: the engine-portable-subset claim (functions/scrub.py
+    docstring), hammered instead of assumed."""
+    import pyarrow as pa
+
     from isimip_qa_spark.functions.scrub import (
+        scrub_arrow,
         scrub_expr,
         scrub_oracle_sql,
         scrub_text,
@@ -212,9 +215,11 @@ def test_scrub_three_backend_parity(spark, texts):
 
     s = _spark_vals(spark, texts, scrub_expr(F.col("text")))
     d = _duck(texts, scrub_oracle_sql("text"))
+    ar = dict(enumerate(scrub_arrow(pa.array(texts, pa.string())).to_pylist()))
     py = dict(enumerate(map(scrub_text, texts)))
     assert s == py
     assert d == py
+    assert ar == py
 
 
 # words for the BPE twin: include merge-list chars so replaces actually
@@ -240,3 +245,21 @@ def test_bpe_len_parity(spark, words):
     s = _spark_vals(spark, words, bpe_len_expr(F.col("text")))
     d = _duck(words, _bpe_len_sql("text"))
     assert s == d
+
+
+def test_langid_null_text_predicts_null(spark):
+    """NULL text has NULL scores and predicts NULL on both engines, as in
+    the kernel; the argmax chain alone would fall through to its last
+    language."""
+    from isimip_qa_spark.functions.langid import (
+        LANG_ORDER,
+        argmax_lang_sql,
+        lang_pred_expr,
+        lang_score_sql,
+    )
+    from isimip_qa_spark.queries.webtext import _TOKENS_LOWER_SQL
+
+    texts = [None, "the cat"]
+    s = _spark_vals(spark, texts, lang_pred_expr(F.col("text")))
+    d = _duck(texts, argmax_lang_sql(lambda lang: lang_score_sql(_TOKENS_LOWER_SQL, lang)))
+    assert s == d == {0: None, 1: LANG_ORDER[0]}
