@@ -18,4 +18,15 @@ Layout:
   streaming/  — Structured Streaming variant of the metrics stage
 """
 
+import os
+
 __version__ = "0.1.0"
+
+# Inside a PySpark Python worker (its env carries the factory secret; the
+# driver's does not), the package's first import, which unpickling any of
+# its UDFs does, installs the zip directory keeper for the rest of the
+# worker process: see session.keep_unchanged_zip_dirs.
+if "PYTHON_WORKER_FACTORY_SECRET" in os.environ:
+    from .session import keep_unchanged_zip_dirs
+
+    keep_unchanged_zip_dirs()

@@ -17,6 +17,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # --- declared schemas for the driver-provided tables (TESTDATA.md) ---------
+# Their parquet timestamps are timezone-naive (isAdjustedToUTC=false), so
+# they are declared TIMESTAMP_NTZ, the type Spark would infer for them.
 
 SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
@@ -65,7 +67,7 @@ SCHEMAS: dict[str, T.StructType] = {
             T.StructField("o_custkey", T.LongType()),
             T.StructField("o_orderstatus", T.StringType()),
             T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.TimestampType()),
+            T.StructField("o_orderdate", T.TimestampNTZType()),
             T.StructField("o_orderpriority", T.StringType()),
         ]
     ),
@@ -81,13 +83,13 @@ SCHEMAS: dict[str, T.StructType] = {
             T.StructField("l_tax", T.DoubleType()),
             T.StructField("l_returnflag", T.StringType()),
             T.StructField("l_linestatus", T.StringType()),
-            T.StructField("l_shipdate", T.TimestampType()),
+            T.StructField("l_shipdate", T.TimestampNTZType()),
         ]
     ),
     "events": T.StructType(
         [
             T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
+            T.StructField("ts", T.TimestampNTZType()),
             T.StructField("user_id", T.LongType()),
             T.StructField("event_type", T.StringType()),
             T.StructField("value", T.DoubleType()),
@@ -125,13 +127,14 @@ PAGES_SCHEMA = T.StructType(
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver-provided table; project to the declared column order
-    so downstream plans are schema-stable regardless of file layout."""
+    """Read one driver-provided table with its declared schema, so
+    downstream plans are schema-stable regardless of file layout and the
+    read launches no schema-inference job. A name without a declared
+    schema is read with inference."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
     if name in SCHEMAS:
-        df = df.select(*[f.name for f in SCHEMAS[name].fields])
-    return df
+        return spark.read.schema(SCHEMAS[name]).parquet(path)
+    return spark.read.parquet(path)
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:

@@ -24,12 +24,13 @@ Why this shape (measured on this sandbox, reasoned for 1000 executors):
   the grid — /root/reference/isimip_qa/mixins/extractions.py:42-62).
 - A reused Python worker pays a fixed cost per task before its first
   row: PySpark's importlib.invalidate_caches() re-reads the directory of
-  every zip it imports from (pyspark.zip, py4j), 0.16-0.30 s of one core
+  every zip it imports from (pyspark.zip, py4j), 0.12-0.40 s of one core
   per task on Python 3.11 with 4 workers busy. Chunks and stream
-  micro-batches are small tasks, so the sink installs
-  session.keep_unchanged_zip_dirs at its start, and a worker re-reads an
-  archive only when it has changed (the call then takes 0.2 ms; on 4
-  cores the 2x2 resumed grid's sink stage went 0.99 → 0.78 s).
+  micro-batches are small tasks. The sink does nothing about it itself:
+  unpickling it imports this package, whose import in a worker installs
+  session.keep_unchanged_zip_dirs for the worker's life (and for every
+  other package UDF), so a worker re-reads an archive only when it has
+  changed; the call then takes 0.2 ms.
 - The separate audit job (re-scan written output for metrics) and the
   committer's driver-side rename pass disappear; those were the remaining
   serial terms in the N→4N scaling measurement (BASELINE.md).
@@ -62,7 +63,6 @@ from pyspark.sql import DataFrame
 
 from ..functions.qa_fused import PA_TYPES, SCORE_COLS, _fused_arrow
 from ..functions.textstats import RULE_CONJUNCTS, keep_from
-from ..session import keep_unchanged_zip_dirs
 
 log = logging.getLogger(__name__)
 
@@ -181,8 +181,6 @@ def qa_sink(scored_input: DataFrame, out_dirs: list[str], cfg) -> DataFrame:
     min_words, max_symbol = cfg.min_words, cfg.max_symbol_ratio
 
     def sink(batches):
-        # later tasks of this worker skip PySpark's per-task zip re-read
-        keep_unchanged_zip_dirs()
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 

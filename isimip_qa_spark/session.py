@@ -16,6 +16,7 @@ Scale rationale (100 TB target, tested on local[N]):
 from __future__ import annotations
 
 import os
+import sys
 import zipimport
 
 from pyspark.sql import SparkSession
@@ -43,35 +44,81 @@ MALLOC_ENV = {
 # PySpark calls importlib.invalidate_caches() (pyspark/worker_util.py,
 # setup_spark_files). On Python 3.11 and 3.12 that re-reads the central
 # directory of every cached zipimporter: 14 of them over pyspark.zip (1,328
-# entries) and the py4j zip, 0.16-0.30 s of one core per task before the
+# entries) and the py4j zip, 0.12-0.40 s of one core per task before the
 # task's first row with 4 workers busy (3.13 made the invalidation lazy, so
-# it costs ~0 there). The sink installs this helper at the start of each
-# task, so a worker re-reads an archive only when it has changed since that
-# importer last read it.
+# it costs ~0 there). Importing this package inside a PySpark worker
+# installs this helper (isimip_qa_spark/__init__.py), once per worker
+# process and for every UDF the package ships, so a worker re-reads an
+# archive only when it has changed since that importer last read it.
 def keep_unchanged_zip_dirs() -> None:
     """Wrap zipimporter.invalidate_caches in this process: an importer keeps
     the directory it holds while the archive's (st_ino, st_size,
     st_mtime_ns) equals what it saw when it last read it, and re-reads as
-    before when the stat differs, fails, or was never recorded (so a
-    worker's first wrapped call still reads). The stat is taken before the
-    read, so an archive rewritten during a read is read again next time.
-    Idempotent: a second call wraps nothing."""
+    before when the stat differs, fails, or was never recorded. The stat is
+    taken before the read, so an archive rewritten during a read is read
+    again next time. Idempotent: a second call wraps nothing.
+
+    The install also records the stat of every cached importer whose
+    archive was last changed (mtime and ctime) before this process started,
+    so a worker's first wrapped call skips those too. That is sound where
+    every directory the process holds was read after it started: PySpark
+    re-reads them all in each task's setup, before the task's UDF (and
+    so this package) is loaded. Without a readable /proc, or for an archive
+    changed after that bound, nothing is recorded and the first wrapped
+    call reads."""
     reread = zipimport.zipimporter.invalidate_caches
     if getattr(reread, "keeps_unchanged", False):
         return
 
     def invalidate_caches(self):
-        try:
-            st = os.stat(self.archive)
-            seen = (st.st_ino, st.st_size, st.st_mtime_ns)
-        except OSError:
-            seen = None
+        seen = _zip_stat(self.archive)
         if seen is None or getattr(self, "_dir_stat", None) != seen:
             reread(self)
             self._dir_stat = seen
 
     invalidate_caches.keeps_unchanged = True
     zipimport.zipimporter.invalidate_caches = invalidate_caches
+    started = _process_start()
+    if started is None:
+        return
+    for imp in list(sys.path_importer_cache.values()):
+        if isinstance(imp, zipimport.zipimporter):
+            seen = _zip_stat(imp.archive, before_ns=started)
+            if seen is not None:
+                imp._dir_stat = seen
+
+
+def _zip_stat(archive: str, before_ns: int | None = None) -> tuple | None:
+    """(st_ino, st_size, st_mtime_ns) of `archive`; None if the stat fails
+    or, given `before_ns`, the archive changed at or after it."""
+    try:
+        st = os.stat(archive)
+    except OSError:
+        return None
+    if before_ns is not None and max(st.st_mtime_ns, st.st_ctime_ns) >= before_ns:
+        return None
+    return (st.st_ino, st.st_size, st.st_mtime_ns)
+
+
+# /proc/stat's btime is whole seconds; the bound is taken this much earlier
+_START_MARGIN_NS = 1_000_000_000
+_PROC = "/proc"
+
+
+def _process_start() -> int | None:
+    """A lower bound on this process's start, in epoch ns: boot time
+    (/proc/stat btime) plus the start in clock ticks after boot (field 22
+    of /proc/self/stat), less a margin. None where /proc cannot be read."""
+    try:
+        with open(os.path.join(_PROC, "self", "stat")) as f:
+            # the command name (field 2) may hold spaces: split after it
+            ticks = int(f.read().rsplit(")", 1)[1].split()[19])
+        with open(os.path.join(_PROC, "stat")) as f:
+            btime = next(int(ln.split()[1]) for ln in f if ln.startswith("btime "))
+        hz = os.sysconf("SC_CLK_TCK")
+    except (OSError, ValueError, IndexError, StopIteration):
+        return None
+    return btime * 1_000_000_000 + ticks * 1_000_000_000 // hz - _START_MARGIN_NS
 
 
 def get_spark(

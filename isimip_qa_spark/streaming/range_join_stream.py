@@ -41,7 +41,9 @@ def range_join_stream(
     `{out_dir}/pairs`. Returns the StreamingQuery (availableNow)."""
     # null event-time rows must not reach the join state store: the
     # eviction predicate is NULL for them, so they would never be evicted
-    # (session_stream.py applies the same guard for the same reason)
+    # (session_stream.py applies the same guard for the same reason). A
+    # watermark needs TIMESTAMP: the declared `ts` is naive (NTZ), taken as
+    # wall-clock time in the session time zone.
     left = (
         spark.readStream.schema(SCHEMAS["events"])
         .parquet(src_dir)
@@ -50,7 +52,7 @@ def range_join_stream(
         .select(
             F.col("event_id").alias("purchase_event"),
             F.col("user_id").alias("l_user"),
-            F.col("ts").alias("lts"),
+            F.col("ts").cast("timestamp").alias("lts"),
         )
         .withWatermark("lts", watermark)
     )
@@ -62,7 +64,7 @@ def range_join_stream(
         .select(
             F.col("event_id").alias("error_event"),
             F.col("user_id").alias("r_user"),
-            F.col("ts").alias("rts"),
+            F.col("ts").cast("timestamp").alias("rts"),
         )
         .withWatermark("rts", watermark)
     )

@@ -48,7 +48,13 @@ def sessionize_stream(
     Append mode emits a session ONLY once the watermark passes its end —
     rerunning the query after more (later) events arrive flushes the
     remainder; the test exercises exactly that two-trigger pattern."""
-    ev = spark.readStream.schema(SCHEMAS["events"]).parquet(src_dir)
+    # a watermark needs TIMESTAMP: the declared `ts` is naive (NTZ), taken
+    # as wall-clock time in the session time zone
+    ev = (
+        spark.readStream.schema(SCHEMAS["events"])
+        .parquet(src_dir)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+    )
     agg = (
         ev.filter(F.col("ts").isNotNull())
         .withWatermark("ts", watermark)

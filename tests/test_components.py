@@ -5,8 +5,10 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
+from isimip_qa_spark.operators import components
 from isimip_qa_spark.operators.components import connected_components
 
 
@@ -37,13 +39,39 @@ def _run(spark, edges):
     return got
 
 
-def test_chain_needs_multiple_rounds(spark):
+@pytest.fixture
+def rounds(monkeypatch):
+    """The number of rounds connected_components runs (one small-star step
+    each)."""
+    n = [0]
+    small_star = components._small_star
+
+    def counting(e):
+        n[0] += 1
+        return small_star(e)
+
+    monkeypatch.setattr(components, "_small_star", counting)
+    return n
+
+
+def test_chain_needs_multiple_rounds(spark, rounds):
     # a 64-node path has diameter 63 — plain label propagation would need
     # 63 rounds; star contraction must still converge (O(log² n)) and label
-    # every node with the path minimum
+    # every node with the path minimum. It stops on the round that reaches
+    # the star forest, not one round later.
     edges = [(i, i + 1) for i in range(63)]
     got = _run(spark, edges)
     assert set(got.values()) == {0}
+    assert rounds[0] == 6
+
+
+def test_child_with_two_roots_is_not_a_fixpoint(spark, rounds):
+    # path 0-2-3-4-1: the first round gives 2→0, 2→1, 3→0, 4→1, where no
+    # parent is a child but node 2 has two parents. Stopping there would
+    # label 1 and 4 with component 1.
+    got = _run(spark, [(0, 2), (2, 3), (3, 4), (4, 1)])
+    assert set(got.values()) == {0}
+    assert rounds[0] == 3
 
 
 def test_mixed_components_and_duplicates(spark):
