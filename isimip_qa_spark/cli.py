@@ -14,11 +14,20 @@ import json
 import sys
 
 
+def _positive_int(tok: str) -> int:
+    """argparse type for a count that must be at least 1, so a bad value
+    fails at parse time, before the Spark session and the QA run."""
+    n = int(tok)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"{tok!r} is not a positive integer")
+    return n
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="isimip-qa-spark")
     p.add_argument("--input", required=True, help="pages parquet/Iceberg path")
     p.add_argument("--output", required=True, help="output root (data/metrics/lineage)")
-    p.add_argument("--chunks", type=int, default=8)
+    p.add_argument("--chunks", type=_positive_int, default=8)
     p.add_argument("--window", default=None, help="warc_ts window lo:hi (dates)")
     p.add_argument("--langs", default=None, help="cohort langs, comma-separated")
     # multi-scope grid (reference planning loop, main.py:115-128): several
@@ -62,7 +71,7 @@ def build_parser() -> argparse.ArgumentParser:
         "integrity-verified compressed JSONL shards (plans/export.py) "
         "under this directory",
     )
-    p.add_argument("--export-shards", type=int, default=16)
+    p.add_argument("--export-shards", type=_positive_int, default=16)
     p.add_argument(
         "--lang-profiles", default=None,
         help="per-language threshold profiles for the keep gate: inline "

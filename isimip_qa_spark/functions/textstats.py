@@ -8,7 +8,14 @@ hot path. Thresholds follow the published Gopher rules (Rae et al. 2021,
 "Scaling Language Models: ... Gopher", §A1.1) and C4 (Raffel et al. 2020).
 
 Tokenisation contract: split on single spaces (the synthetic corpora are
-space-normalised); `tokens_expr` is the single place to change that.
+space-normalised); `tokens_expr` and its DuckDB twin `tokens_sql` are the
+single place to change that.
+
+The DuckDB twins the oracles run sit beside their Spark forms: `tokens_sql`
+/ `TOKENS_SQL`, `rule_columns_sql` (same keys and order as `rule_columns`),
+and `keep_sql` / `violations_sql`, which fold the same `RULE_CONJUNCTS`
+table as `keep_from`. DuckDB still computes every statistic with its own
+list and regex functions, so an oracle match is a cross-check.
 """
 
 from __future__ import annotations
@@ -24,6 +31,18 @@ from pyspark.sql import functions as F
 
 def tokens_expr(text: Column) -> Column:
     return F.split(text, " ")
+
+
+def tokens_sql(text: str) -> str:
+    """DuckDB twin of tokens_expr over the SQL expression `text`."""
+    return f"string_split({text}, ' ')"
+
+
+TOKENS_SQL = tokens_sql("text")
+
+
+def _lines_sql(text: str) -> str:
+    return f"string_split({text}, chr(10))"
 
 
 def n_words_expr(text: Column) -> Column:
@@ -42,6 +61,11 @@ def _dup_frac(parts: Column) -> Column:
     shape shared by the line / paragraph / n-gram repetition rules."""
     n = F.size(parts)
     return (n - F.size(F.array_distinct(parts))).cast("double") / n.cast("double")
+
+
+def _dup_frac_sql(parts: str) -> str:
+    """DuckDB twin of _dup_frac over the list expression `parts`."""
+    return f"(len({parts}) - len(list_distinct({parts})))::DOUBLE / len({parts})"
 
 
 def dup_line_frac_expr(text: Column) -> Column:
@@ -260,7 +284,7 @@ def alpha_word_frac_expr(text: Column) -> Column:
 
 def bullet_line_frac_sql(col: str) -> str:
     """DuckDB twin of bullet_line_frac_expr (byte-identical pattern)."""
-    lines = f"string_split({col}, chr(10))"
+    lines = _lines_sql(col)
     return (
         f"len(list_filter({lines}, x -> regexp_matches(x,"
         f" '{BULLET_LINE_RE}')))::DOUBLE / len({lines})"
@@ -269,7 +293,7 @@ def bullet_line_frac_sql(col: str) -> str:
 
 def ellipsis_line_frac_sql(col: str) -> str:
     """DuckDB twin of ellipsis_line_frac_expr."""
-    lines = f"string_split({col}, chr(10))"
+    lines = _lines_sql(col)
     tests = " OR ".join(
         "ends_with(x, " + " || ".join(f"chr({ord(c)})" for c in suf) + ")"
         for suf in ELLIPSIS_SUFFIXES
@@ -279,7 +303,7 @@ def ellipsis_line_frac_sql(col: str) -> str:
 
 def alpha_word_frac_sql(col: str) -> str:
     """DuckDB twin of alpha_word_frac_expr (byte-identical pattern)."""
-    toks = f"string_split({col}, ' ')"
+    toks = tokens_sql(col)
     return (
         f"len(list_filter({toks}, x -> regexp_matches(x,"
         f" '{WORDLIKE_RE}')))::DOUBLE / len({toks})"
@@ -558,6 +582,46 @@ def rule_columns(
     }
 
 
+def rule_columns_sql(
+    text: str, stopwords: list[str] = EN_STOPWORDS
+) -> dict[str, str]:
+    """DuckDB twin of rule_columns: the same keys in the same order, each
+    statistic a SQL expression over the text expression `text`."""
+    toks = tokens_sql(text)
+    nw = f"len({toks})"
+    sw = "[" + ", ".join(f"'{w}'" for w in stopwords) + "]"
+    grams = (
+        f"list_transform(range(1, greatest({nw} - 1, 1) + 1), "
+        f"i -> ({toks})[i] || ' ' || coalesce(({toks})[i+1], ''))"
+    )
+    return {
+        "n_words": f"{nw}::BIGINT",
+        "mean_word_len": f"length(replace({text}, ' ', ''))::DOUBLE / {nw}",
+        "symbol_ratio": (
+            f"len(regexp_extract_all({text}, '{SYMBOL_CLASS}'))::DOUBLE / {nw}"
+        ),
+        "distinct_word_ratio": f"len(list_distinct({toks}))::DOUBLE / {nw}",
+        "stopword_ratio": (
+            f"len(list_filter({tokens_sql(f'lower({text})')},"
+            f" x -> list_contains({sw}, x)))::DOUBLE / {nw}"
+        ),
+        "ellipsis_count": (
+            f"len(regexp_extract_all({text}, '\\.\\.\\.'))::BIGINT"
+        ),
+        "dup_line_frac": _dup_frac_sql(_lines_sql(text)),
+        "dup_para_frac": _dup_frac_sql(
+            f"string_split({text}, chr(10) || chr(10))"
+        ),
+        "dup_2gram_frac": _dup_frac_sql(grams),
+        "repl_n": repl_count_sql(text),
+        "mojibake_n": mojibake_count_sql(text),
+        "ctrl_frac": ctrl_frac_sql(text),
+        "bullet_line_frac": bullet_line_frac_sql(text),
+        "ellipsis_line_frac": ellipsis_line_frac_sql(text),
+        "alpha_word_frac": alpha_word_frac_sql(text),
+    }
+
+
 # The keep gate, one row per conjunct: (rule column, comparator, threshold
 # field). Threshold fields are named alike on GopherThresholds and QAConfig,
 # and operator.ge/le apply unchanged to pyspark Columns and numpy arrays, so
@@ -584,27 +648,67 @@ RULE_CONJUNCTS: tuple[tuple[str, Callable, str], ...] = (
 )
 
 
-def keep_from(c, th=None, overrides: dict | None = None):
-    """The keep/drop decision over already-built rule columns: `c` maps
-    each rule column to a Column (`rule_columns(...)` output, or F.col
-    refs to a projection of it) or to a numpy array of it (the sink's
-    per-batch form), and the result is a Column or a boolean array
-    accordingly. `th` is any object carrying the threshold fields
-    (GopherThresholds, QAConfig). `overrides` optionally replaces named
-    thresholds with per-row values (the per-language-profile form: a
-    profile Column or array stands in for the global literal)."""
+def conjuncts(th=None, overrides: dict | None = None) -> list[tuple]:
+    """RULE_CONJUNCTS with each threshold field resolved to its value:
+    `overrides[field]` when given (a per-row profile value), else the
+    field of `th` (any object carrying the threshold fields:
+    GopherThresholds, QAConfig). An override naming no field is an
+    error."""
     th = th or GopherThresholds()
     overrides = overrides or {}
     unknown = set(overrides) - {f for _, _, f in RULE_CONJUNCTS}
     if unknown:
         raise KeyError(f"unknown threshold overrides: {sorted(unknown)}")
+    return [
+        (col, op, overrides[f] if f in overrides else getattr(th, f))
+        for col, op, f in RULE_CONJUNCTS
+    ]
+
+
+def keep_from(c, th=None, overrides: dict | None = None):
+    """The keep/drop decision over already-built rule columns: `c` maps
+    each rule column to a Column (`rule_columns(...)` output, or F.col
+    refs to a projection of it) or to a numpy array of it (the sink's
+    per-batch form), and the result is a Column or a boolean array
+    accordingly. `th` and `overrides` as in `conjuncts`; an override is a
+    profile Column or array standing in for the global literal."""
     return reduce(
-        operator.and_,
-        (
-            op(c[col], overrides[f] if f in overrides else getattr(th, f))
-            for col, op, f in RULE_CONJUNCTS
-        ),
+        operator.and_, (op(c[col], t) for col, op, t in conjuncts(th, overrides))
     )
+
+
+# SQL spelling of each RULE_CONJUNCTS comparator: (keep form, violation form)
+_SQL_OPS = {operator.ge: (">=", "<"), operator.le: ("<=", ">")}
+
+
+def _sql_value(t) -> str:
+    """A threshold as DuckDB reads it. A float goes through a string cast:
+    DuckDB reads `0.11666666666666667` as a DECIMAL whose conversion to
+    DOUBLE is not correctly rounded (so the double it came from would not
+    pass `>=` it), and reads no infinity literal. An int or a column
+    expression (a joined profile column) goes as it is."""
+    return f"'{float(t)!r}'::DOUBLE" if isinstance(t, float) else str(t)
+
+
+def keep_sql(cols: dict[str, str], th=None, overrides: dict | None = None) -> str:
+    """DuckDB twin of keep_from: `cols` maps each rule column to a SQL
+    expression (its name in a projection, or `rule_columns_sql` output),
+    and `overrides` maps threshold fields to SQL expressions."""
+    return "(" + " AND ".join(
+        f"{cols[col]} {_SQL_OPS[op][0]} {_sql_value(t)}"
+        for col, op, t in conjuncts(th, overrides)
+    ) + ")"
+
+
+def violations_sql(cols: dict[str, str], th=None) -> dict[str, str]:
+    """Per rule column, the SQL predicate that it fails the gate: its
+    conjuncts negated and OR-ed, in RULE_CONJUNCTS order (the funnel
+    reports' violation flags)."""
+    out: dict[str, str] = {}
+    for col, op, t in conjuncts(th):
+        v = f"{cols[col]} {_SQL_OPS[op][1]} {_sql_value(t)}"
+        out[col] = f"{out[col]} OR {v}" if col in out else v
+    return out
 
 
 def keep_expr(text: Column, th: GopherThresholds | None = None) -> Column:

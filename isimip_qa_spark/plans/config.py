@@ -53,6 +53,12 @@ class QAConfig(GopherThresholds):
     # each scan split in place; kept because perfbench/workloads.py passes it
     n_partitions: int = 32
 
+    def __post_init__(self):
+        # run_qa scores chunks range(n_chunks): with none, it would write
+        # nothing and still report success
+        if self.n_chunks < 1:
+            raise ValueError(f"n_chunks must be at least 1, got {self.n_chunks}")
+
     def profile_thresholds(self) -> dict[str, tuple[dict[str, float], float]]:
         """lang_profiles as {threshold field: ({lang: value}, fallback)}: a
         listed language takes its row's value, any other the 'default'

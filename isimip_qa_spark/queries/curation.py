@@ -58,9 +58,11 @@ from ..functions.normalize import normalize_text_expr, normalize_text_sql
 from ..functions.perplexity import ppl_udf
 from ..functions.textstats import (
     C4_NEWLINE_RE,
+    TOKENS_SQL,
     c4_line_keep_expr,
     c4_line_keep_sql,
     keep_expr,
+    tokens_sql,
 )
 from . import register
 from .webtext import _GOPHER_SQL
@@ -93,7 +95,7 @@ def _segs_cte(
     carried key columns, the emitted index expression, and DISTINCT)."""
     d = "DISTINCT " if distinct else ""
     return f"""
-    t AS (SELECT {keys}, string_split(text, ' ') AS toks FROM documents),
+    t AS (SELECT {keys}, {TOKENS_SQL} AS toks FROM documents),
     segs AS (
       SELECT {d}{keys}, {idx}
              array_to_string(toks[(i*{w}+1):(i*{w}+{w})], ' ') AS seg
@@ -170,8 +172,8 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shared CTE prefix (tok → scored → ppl): per-doc dyadic-exact avg_lp +
 # rounded ppl under the broadcast LM — composed by the ppl_terciles and
 # ppl_bucket_agreement twins
-_PPL_CTE = """tok AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token FROM documents
+_PPL_CTE = f"""tok AS (
+      SELECT doc_id, unnest({tokens_sql('lower(text)')}) AS token FROM documents
     ),
     scored AS (
       SELECT tok.doc_id, coalesce(lm.lp, -12.0) AS lp

@@ -21,24 +21,15 @@ from pyspark.sql import functions as F
 from ..catalog import read_table
 from ..functions import textstats as ts
 from . import register
-
-_TOKENS_SQL = "string_split(text, ' ')"
-
-
-def _keep_sql() -> str:
-    # inline the production keep expression by reusing the gopher oracle as
-    # a labelled subquery (same pattern as textmodel._nb_sql)
-    from .webtext import _GOPHER_SQL
-
-    return _GOPHER_SQL
+from .webtext import _GOPHER_SQL
 
 
 def _datasheet_sql() -> str:
     return f"""
-    WITH lbl AS (SELECT doc_id, keep FROM ({_keep_sql()}) g),
+    WITH lbl AS (SELECT doc_id, keep FROM ({_GOPHER_SQL}) g),
     s AS (
       SELECT d.lang, d.source, l.keep,
-             len({_TOKENS_SQL})::BIGINT AS n_tokens,
+             len({ts.TOKENS_SQL})::BIGINT AS n_tokens,
              length(d.text)::BIGINT AS n_chars
       FROM documents d JOIN lbl l ON d.doc_id = l.doc_id
     )
@@ -97,7 +88,7 @@ def corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DOCLEN_SQL = f"""
     WITH s AS (
-      SELECT length(bin(len({_TOKENS_SQL})))::BIGINT AS bucket
+      SELECT length(bin(len({ts.TOKENS_SQL})))::BIGINT AS bucket
       FROM documents
     )
     SELECT bucket,
@@ -163,7 +154,7 @@ DECILES = 10
     WITH mx AS (SELECT max(doc_id) + 1 AS m FROM documents),
     ex AS (
       SELECT 1 + (doc_id * {DECILES}) // mx.m AS b,
-             unnest({_TOKENS_SQL}) AS w
+             unnest({ts.TOKENS_SQL}) AS w
       FROM documents CROSS JOIN mx
     ),
     occ AS (SELECT b, count(*)::BIGINT AS occ FROM ex GROUP BY b),
@@ -248,7 +239,7 @@ def vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _source_overlap_sql() -> str:
     from ..functions.fingerprint import shingles_sql
 
-    sh = shingles_sql(_TOKENS_SQL)
+    sh = shingles_sql(ts.TOKENS_SQL)
     return f"""
     WITH e AS (SELECT DISTINCT source, s
                FROM (SELECT source, unnest({sh}) AS s FROM documents)),
@@ -405,7 +396,7 @@ COVERAGE_KS = (10, 100, 1000)  # tail flattens into hapax noise
 
 _ZIPF_SQL = f"""
     WITH c AS (SELECT w, count(*)::BIGINT AS cnt
-               FROM (SELECT unnest({_TOKENS_SQL}) AS w FROM documents)
+               FROM (SELECT unnest({ts.TOKENS_SQL}) AS w FROM documents)
                GROUP BY w),
     t AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, w) AS rnk
           FROM c ORDER BY cnt DESC, w LIMIT {V_FIT})
@@ -460,7 +451,7 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _COV_SQL = f"""
     WITH c AS (SELECT w, count(*)::BIGINT AS cnt
-               FROM (SELECT unnest({_TOKENS_SQL}) AS w FROM documents)
+               FROM (SELECT unnest({ts.TOKENS_SQL}) AS w FROM documents)
                GROUP BY w),
     t AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, w) AS rnk
           FROM c ORDER BY cnt DESC, w LIMIT {max(COVERAGE_KS)}),
@@ -536,7 +527,7 @@ QD = 1 << 20  # dyadic grid for per-token JS contributions
 
 _DIVERGENCE_SQL = f"""
     WITH c AS (SELECT source, w, count(*)::BIGINT AS csw
-               FROM (SELECT source, unnest({_TOKENS_SQL}) AS w
+               FROM (SELECT source, unnest({ts.TOKENS_SQL}) AS w
                      FROM documents)
                GROUP BY 1, 2),
     tot AS (SELECT w, sum(csw)::BIGINT AS cw FROM c GROUP BY w),

@@ -59,7 +59,7 @@ def ngrams_sql(tokens_sql: str, k: int) -> str:
     )
 
 
-_NG = ngrams_sql("string_split(text, ' ')", K)
+_NG = ngrams_sql(ts.TOKENS_SQL, K)
 
 _DECON_SQL = f"""
     WITH grams AS (
@@ -114,7 +114,7 @@ _LEAK_SQL = f"""
                AS bucket,
              text
       FROM (SELECT doc_id, text,
-                   {rolling_fingerprint_sql("string_split(text, ' ')")} AS fp
+                   {rolling_fingerprint_sql(ts.TOKENS_SQL)} AS fp
             FROM documents)
     ),
     grams AS (SELECT doc_id, bucket, unnest({_NG}) AS ng FROM b),
@@ -198,7 +198,7 @@ FUZZY_THRESHOLD = 0.5  # same Jaccard grade as the dedup family
 
 _FUZZY_SQL = f"""
 WITH d AS (
-  SELECT doc_id, {shingles_sql("string_split(text, ' ')")} AS sh,
+  SELECT doc_id, {shingles_sql(ts.TOKENS_SQL)} AS sh,
          doc_id % {EVAL_MOD} = 0 AS is_eval
   FROM documents
 ),

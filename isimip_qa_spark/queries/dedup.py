@@ -162,7 +162,7 @@ def candidate_pairs(keyed: DataFrame, id_col: str, key: str = "k",
 
 
 def _jaccard_pairs_sql(threshold: float) -> str:
-    sh = shingles_sql("string_split(text, ' ')")
+    sh = shingles_sql(ts.TOKENS_SQL)
     return f"""
     WITH {_REPS_CTE},
     d AS (SELECT doc_id, {sh} AS sh FROM reps),
@@ -198,7 +198,7 @@ def _jaccard_pairs_capped_sql(threshold: float, cap: int) -> str:
     tests/test_dedup_caps.py asserts this equals the UNCAPPED ground truth
     at test scale (max df ≤ cap there), so a fixture change that makes the
     cap bite fails loudly instead of silently redefining the query."""
-    sh = shingles_sql("string_split(text, ' ')")
+    sh = shingles_sql(ts.TOKENS_SQL)
     return f"""
     WITH {_REPS_CTE},
     d AS (SELECT doc_id, {sh} AS sh FROM reps),
@@ -352,7 +352,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _clusters_sql(threshold: float) -> str:
-    sh = shingles_sql("string_split(text, ' ')")
+    sh = shingles_sql(ts.TOKENS_SQL)
     return f"""
     WITH RECURSIVE {_REPS_CTE},
     d AS (SELECT doc_id, {sh} AS sh FROM reps),
@@ -603,7 +603,7 @@ SIMHASH64_HAMMING_MAX = SIMHASH64_CHUNKS - 1  # d ≤ 3, pigeonhole-exact
     oracle=f"""
     WITH {_REPS_CTE},
     th AS (SELECT doc_id,
-                  list_transform(string_split(text, ' '), t -> {fnv64_sql('t')}) AS h
+                  list_transform({ts.TOKENS_SQL}, t -> {fnv64_sql('t')}) AS h
            FROM reps),
     d AS (SELECT doc_id, {simhash64_from_hashes_sql('h')} AS sh FROM th)
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -644,7 +644,7 @@ def dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _incr_sql() -> str:
     return f"""
     WITH th AS (SELECT doc_id,
-                       list_transform(string_split(text, ' '), t -> {fnv64_sql('t')}) AS h
+                       list_transform({ts.TOKENS_SQL}, t -> {fnv64_sql('t')}) AS h
                 FROM documents),
     d AS (SELECT doc_id, {simhash64_from_hashes_sql('h')} AS sh FROM th),
     nw AS (SELECT * FROM d WHERE doc_id % 2 = 1),
@@ -730,7 +730,7 @@ CONTAIN_THRESHOLD = 0.5
 
 
 def _containment_capped_sql(threshold: float, cap: int) -> str:
-    sh = shingles_sql("string_split(text, ' ')")
+    sh = shingles_sql(ts.TOKENS_SQL)
     return f"""
     WITH {_REPS_CTE},
     d AS (SELECT doc_id, {sh} AS sh FROM reps),
@@ -856,7 +856,7 @@ def _band_keys_sql_terms() -> list[str]:
 def _minhash_audit_sql() -> str:
     from ..functions.fingerprint import token_hash_sql
 
-    sh = shingles_sql("string_split(text, ' ')")
+    sh = shingles_sql(ts.TOKENS_SQL)
     th = token_hash_sql("x")
     bands = ", ".join(_band_keys_sql_terms())
     return f"""

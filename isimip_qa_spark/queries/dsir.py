@@ -59,7 +59,7 @@ from ..functions.fingerprint import (
     token_hash_expr,
     token_hash_sql,
 )
-from ..functions.textstats import tokens_expr
+from ..functions.textstats import TOKENS_SQL, tokens_expr
 from . import register
 
 B = 1024  # hash-feature buckets (model size O(B), vocab-independent)
@@ -68,8 +68,6 @@ ALPHA = 1  # Laplace smoothing count
 Q = 1024  # dyadic quantization grid for the per-bucket log-ratio
 SELECT_K = 200  # Gumbel-top-k resample size
 _UPRIME = (1 << 31) - 1  # uniform grain for the Gumbel draw
-
-_TOKENS_SQL = "string_split(text, ' ')"
 
 
 # --- hashed n-gram features (unigram + bigram), engine-portable ----------
@@ -117,7 +115,7 @@ def _ngram_buckets_sql(tokens_sql: str) -> str:
 _MODEL_CTE = f"""
 WITH ng AS (
   SELECT doc_id % {TARGET_MOD} = 0 AS is_target,
-         unnest({_ngram_buckets_sql(_TOKENS_SQL)}) AS bucket
+         unnest({_ngram_buckets_sql(TOKENS_SQL)}) AS bucket
   FROM documents
 ),
 cnt AS (
@@ -362,8 +360,8 @@ _WEIGHTS_SQL = (
 lrarr AS (SELECT list(logratio ORDER BY bucket) AS arr FROM model),
 scored AS (
   SELECT doc_id,
-         len({_ngram_buckets_sql(_TOKENS_SQL)})::BIGINT AS n_grams,
-         list_sum(list_transform({_ngram_buckets_sql(_TOKENS_SQL)},
+         len({_ngram_buckets_sql(TOKENS_SQL)})::BIGINT AS n_grams,
+         list_sum(list_transform({_ngram_buckets_sql(TOKENS_SQL)},
                                  b -> arr[(b + 1)::INT]))::DOUBLE AS logweight
   FROM documents, lrarr
   WHERE doc_id % {TARGET_MOD} != 0
@@ -392,7 +390,7 @@ def _gumbel_expr(text: Column) -> Column:
 
 
 def _gumbel_sql() -> str:
-    fp = rolling_fingerprint_sql(_TOKENS_SQL)
+    fp = rolling_fingerprint_sql(TOKENS_SQL)
     return (
         f"-ln(-ln((({fp}) % {_UPRIME} + 1)::DOUBLE / {float(_UPRIME + 2)!r}))"
     )
@@ -407,7 +405,7 @@ def _gumbel_sql() -> str:
     .replace("__GUMBEL__", _gumbel_sql())
     .replace(
         "__LW__",
-        f"list_sum(list_transform({_ngram_buckets_sql(_TOKENS_SQL)},"
+        f"list_sum(list_transform({_ngram_buckets_sql(TOKENS_SQL)},"
         f" b -> arr[(b + 1)::INT]))::DOUBLE",
     )
     + f"""
@@ -458,7 +456,7 @@ _SELECT_SQL = (
     .replace("__GUMBEL__", _gumbel_sql())
     .replace(
         "__LW__",
-        f"list_sum(list_transform({_ngram_buckets_sql(_TOKENS_SQL)},"
+        f"list_sum(list_transform({_ngram_buckets_sql(TOKENS_SQL)},"
         f" b -> arr[(b + 1)::INT]))::DOUBLE",
     )
 )
@@ -479,7 +477,7 @@ sel AS (SELECT doc_id FROM scored ORDER BY gumbel_key DESC, doc_id
         LIMIT {SELECT_K}),
 selcnt AS (
   SELECT bucket, count(*) AS s_cnt FROM (
-    SELECT unnest({_ngram_buckets_sql(_TOKENS_SQL)}) AS bucket
+    SELECT unnest({_ngram_buckets_sql(TOKENS_SQL)}) AS bucket
     FROM documents JOIN sel USING (doc_id)
   ) GROUP BY bucket
 ),

@@ -37,7 +37,6 @@ from ..functions.fingerprint import (
     rolling_fingerprint_sql,
 )
 from . import register
-from .webtext import _TOKENS_SQL
 
 # the entity-decoded form of _INTRO below
 _INTRO = (
@@ -113,7 +112,7 @@ _LINKS_HTML_SQL = f"""
 
 _LINKS_SQL = f"""
     WITH d AS (SELECT doc_id, source, text,
-                      {rolling_fingerprint_sql(_TOKENS_SQL)} AS fp
+                      {rolling_fingerprint_sql(ts.TOKENS_SQL)} AS fp
                FROM documents),
     h AS (SELECT source, {_LINKS_HTML_SQL} AS html FROM d)
     SELECT src, dst, count(*)::BIGINT AS n_links

@@ -50,7 +50,6 @@ from ..functions.fingerprint import (
     rolling_fingerprint_sql,
 )
 from . import register
-from .webtext import _TOKENS_SQL
 
 ITERS = 3  # fixed so the DuckDB twin unrolls exactly
 DAMP = 0.85  # Brin & Page 1998
@@ -82,7 +81,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _EDGES_SQL = f"""
     d AS (SELECT source AS src,
-                 {rolling_fingerprint_sql(_TOKENS_SQL)} AS fp
+                 {rolling_fingerprint_sql(ts.TOKENS_SQL)} AS fp
           FROM documents),
     hosts AS (SELECT DISTINCT src AS host FROM d),
     nh AS (SELECT count(*)::BIGINT AS n FROM hosts),

@@ -43,14 +43,11 @@ from ..functions.fingerprint import (
 from ..functions.zorder import zorder_key_expr, zorder_key_sql
 from . import register
 
-_TOKS = "string_split(text, ' ')"
-
-
 @register(
     "zorder_key",
     oracle=f"""
     SELECT doc_id,
-           {zorder_key_sql("n_chars", f"len({_TOKS})")} AS zkey
+           {zorder_key_sql("n_chars", f"len({ts.TOKENS_SQL})")} AS zkey
     FROM documents
     """,
 )
@@ -75,8 +72,6 @@ def _rv_coeffs(n_shards: int) -> list[tuple[int, int]]:
     shard count works (the LCG is prefix-stable: growing S keeps every
     existing shard's hash, the HRW minimal-reshuffle property)."""
     return universal_coeffs(n_shards, RV_SEED)
-
-_TOKENS_SQL = "string_split(text, ' ')"
 
 
 def rendezvous_assign(d: DataFrame, n_shards: int) -> DataFrame:
@@ -109,7 +104,7 @@ def _rendezvous_sql(n_shards: int) -> str:
     return f"""
     WITH h AS (
       SELECT doc_id, ((fp % {MERSENNE31}) + {MERSENNE31}) % {MERSENNE31} AS hv
-      FROM (SELECT doc_id, {rolling_fingerprint_sql(_TOKENS_SQL)} AS fp
+      FROM (SELECT doc_id, {rolling_fingerprint_sql(ts.TOKENS_SQL)} AS fp
             FROM documents)
     ),
     ranked AS (

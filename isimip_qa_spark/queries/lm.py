@@ -66,7 +66,6 @@ from pyspark.sql import functions as F
 from ..catalog import read_table
 from ..functions import textstats as ts
 from . import register
-from .webtext import _TOKENS_SQL
 
 Q = 1024  # dyadic quantization grid for per-position logprobs
 BACKOFF = 0.4  # Brants et al. 2007 §4: fixed, not tuned
@@ -144,7 +143,7 @@ def _big(toksdf: DataFrame) -> DataFrame:
 
 
 _MODEL_SQL = f"""
-    mtoks AS (SELECT {_TOKENS_SQL} AS t FROM documents
+    mtoks AS (SELECT {ts.TOKENS_SQL} AS t FROM documents
               WHERE doc_id % {MODEL_MOD} = 0),
     big AS (
       SELECT w1, w2, count(*)::BIGINT AS cb FROM (
@@ -182,7 +181,7 @@ def lm_bigram_top(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM (SELECT unnest(t) AS w FROM mtoks) GROUP BY w
     ),
     tot AS (SELECT sum(cu)::BIGINT AS n_corpus FROM uni),
-    toks AS (SELECT doc_id, {_TOKENS_SQL} AS t FROM documents),
+    toks AS (SELECT doc_id, {ts.TOKENS_SQL} AS t FROM documents),
     stream AS (
       SELECT doc_id,
              CASE WHEN i = 1 THEN NULL ELSE t[i - 1] END AS w1,

@@ -33,7 +33,7 @@ from ..functions.fingerprint import (
     rolling_fingerprint_sql,
 )
 from . import register
-from .webtext import QUALITY_SQL, _TOKENS_SQL, quality_expr
+from .webtext import QUALITY_SQL, quality_expr
 
 SAMPLE_BUCKETS = 1000
 SAMPLE_KEEP = 100  # 10% sample
@@ -47,7 +47,7 @@ REBALANCE_SCALE = 4  # lang_rebalance: keep ~SCALE*sqrt(n_l) docs per lang
     SELECT doc_id, bucket
     FROM (
       SELECT doc_id,
-             (({rolling_fingerprint_sql(_TOKENS_SQL)} % {SAMPLE_BUCKETS})
+             (({rolling_fingerprint_sql(ts.TOKENS_SQL)} % {SAMPLE_BUCKETS})
               + {SAMPLE_BUCKETS}) % {SAMPLE_BUCKETS} AS bucket
       FROM documents
     )
@@ -77,7 +77,7 @@ def deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
              ) AS cum_tokens
       FROM (
         SELECT doc_id, source,
-               len({_TOKENS_SQL})::BIGINT AS ws_tokens,
+               len({ts.TOKENS_SQL})::BIGINT AS ws_tokens,
                {QUALITY_SQL} AS quality
         FROM documents
       )
@@ -121,7 +121,7 @@ def token_budget_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     bucketed AS (
       SELECT doc_id, lang,
-             (({rolling_fingerprint_sql(_TOKENS_SQL)} % {SAMPLE_BUCKETS})
+             (({rolling_fingerprint_sql(ts.TOKENS_SQL)} % {SAMPLE_BUCKETS})
               + {SAMPLE_BUCKETS}) % {SAMPLE_BUCKETS} AS bucket
       FROM documents
     )
@@ -193,8 +193,8 @@ HOST_QUOTA = 5  # max docs kept per source at test scale
                AS pos
       FROM (
         SELECT doc_id,
-               {rolling_fingerprint_sql(_TOKENS_SQL)} AS fp,
-               (({rolling_fingerprint_sql(_TOKENS_SQL)} % {N_SHARDS})
+               {rolling_fingerprint_sql(ts.TOKENS_SQL)} AS fp,
+               (({rolling_fingerprint_sql(ts.TOKENS_SQL)} % {N_SHARDS})
                 + {N_SHARDS}) % {N_SHARDS} AS shard_id
         FROM documents
       )
@@ -235,7 +235,7 @@ def shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'test' END AS split
     FROM (
       SELECT doc_id, lang,
-             (({rolling_fingerprint_sql(_TOKENS_SQL)} % {SPLIT_BUCKETS})
+             (({rolling_fingerprint_sql(ts.TOKENS_SQL)} % {SPLIT_BUCKETS})
               + {SPLIT_BUCKETS}) % {SPLIT_BUCKETS} AS bucket
       FROM documents
     )
@@ -321,10 +321,10 @@ def host_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shard_manifest",
     oracle=f"""
     WITH s AS (
-      SELECT (({rolling_fingerprint_sql(_TOKENS_SQL)} % {N_SHARDS})
+      SELECT (({rolling_fingerprint_sql(ts.TOKENS_SQL)} % {N_SHARDS})
               + {N_SHARDS}) % {N_SHARDS} AS shard_id,
-             {rolling_fingerprint_sql(_TOKENS_SQL)} AS fp,
-             len({_TOKENS_SQL})::BIGINT AS n_tokens
+             {rolling_fingerprint_sql(ts.TOKENS_SQL)} AS fp,
+             len({ts.TOKENS_SQL})::BIGINT AS n_tokens
       FROM documents
     )
     SELECT shard_id,
@@ -380,7 +380,7 @@ MIX_Q = 1 << 20
     WITH s AS (
       SELECT source,
              count(*)::BIGINT AS n_docs,
-             sum(len({_TOKENS_SQL}))::BIGINT AS n_tokens
+             sum(len({ts.TOKENS_SQL}))::BIGINT AS n_tokens
       FROM documents GROUP BY source
     ),
     tot AS (SELECT sum(n_tokens)::BIGINT AS t FROM s),

@@ -53,7 +53,7 @@ PACK_BLOCKS = 32  # prefix-sum blocks (≈ partitions participating)
 
 _PACK_SQL = f"""
     WITH toks AS (
-      SELECT doc_id, len(string_split(text, ' '))::BIGINT AS n
+      SELECT doc_id, len({ts.TOKENS_SQL})::BIGINT AS n
       FROM documents
     ),
     offs AS (
@@ -147,7 +147,7 @@ _ASSEMBLE_SQL = f"""
     pieces AS (
       SELECT s.seq_id, s.seq_start, s.len,
              array_to_string(
-               list_slice(string_split(d.text, ' '),
+               list_slice({ts.tokens_sql('d.text')},
                           s.doc_start + 1, s.doc_start + s.len), ' ') AS piece
       FROM spans s JOIN documents d USING (doc_id)
     )

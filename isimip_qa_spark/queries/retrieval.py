@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import read_table
+from ..functions.textstats import TOKENS_SQL
 from . import register
 
 QUERY_TERMS = ["hash", "join", "scan", "slow"]
@@ -39,12 +40,9 @@ K1 = 1.2
 B = 0.75
 TOP_K = 20
 
-_TOKS = "string_split(text, ' ')"
-
-
 def _bm25_sql() -> str:
     tf_cols = ", ".join(
-        f"len(list_filter({_TOKS}, x -> x = '{t}'))::BIGINT AS tf_{i}"
+        f"len(list_filter({TOKENS_SQL}, x -> x = '{t}'))::BIGINT AS tf_{i}"
         for i, t in enumerate(QUERY_TERMS)
     )
     df_cols = ", ".join(
@@ -59,7 +57,7 @@ def _bm25_sql() -> str:
     )
     return f"""
     WITH t AS (
-      SELECT doc_id, {tf_cols}, len({_TOKS})::BIGINT AS dl FROM documents
+      SELECT doc_id, {tf_cols}, len({TOKENS_SQL})::BIGINT AS dl FROM documents
     ),
     s AS (
       SELECT {df_cols}, sum(dl)::DOUBLE / count(*) AS avgdl,

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import read_table
+from ..functions.textstats import TOKENS_SQL
 from . import register
 from .datasheet import QD
 from .dedup import JACCARD_THRESHOLD, _clusters_sql, cluster_assignment
@@ -127,7 +128,7 @@ CHUNK_STRIDE = 48  # overlap = CHUNK_TOKENS - CHUNK_STRIDE = 16 tokens
     FROM (
       SELECT doc_id, toks,
              unnest(range(0, len(toks), {CHUNK_STRIDE})) AS s
-      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
+      FROM (SELECT doc_id, {TOKENS_SQL} AS toks FROM documents)
     )
     ORDER BY doc_id, chunk_idx
     """,
@@ -168,7 +169,7 @@ def chunk_long_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH per AS (
       SELECT source,
-             sum(len(string_split(text, ' ')))::BIGINT AS toks
+             sum(len({TOKENS_SQL}))::BIGINT AS toks
       FROM documents GROUP BY source
     ),
     t AS (SELECT sum(toks)::BIGINT AS tot FROM per),

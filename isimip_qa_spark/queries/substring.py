@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import read_table
 from ..functions.fingerprint import token_hash_expr, token_hash_sql
+from ..functions.textstats import TOKENS_SQL, tokens_sql
 from . import register
 from ._util import spread
 
@@ -69,7 +70,7 @@ def _spans_sql(k: int) -> str:
     th = token_hash_sql("x")
     return f"""
     WITH t AS (
-      SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+      SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
     ),
     h AS (
       SELECT doc_id, toks, list_transform(toks, x -> ({th})) AS hs FROM t
@@ -205,10 +206,10 @@ def _coverage_sql(k: int) -> str:
       FROM spans GROUP BY doc_id
     )
     SELECT d.doc_id,
-           len(string_split(d.text, ' '))::BIGINT AS n_tokens,
+           len({tokens_sql('d.text')})::BIGINT AS n_tokens,
            coalesce(cov.dup_tokens, 0)::BIGINT AS dup_tokens,
            coalesce(cov.dup_tokens, 0)::DOUBLE
-             / len(string_split(d.text, ' ')) AS dup_frac
+             / len({tokens_sql('d.text')}) AS dup_frac
     FROM documents d LEFT JOIN cov USING (doc_id)
     """
 
@@ -269,7 +270,7 @@ def _cut_sql(k: int) -> str:
       FROM spansq GROUP BY doc_id
     ),
     j AS (
-      SELECT d.doc_id, string_split(d.text, ' ') AS toks,
+      SELECT d.doc_id, {tokens_sql('d.text')} AS toks,
              coalesce(sp.spans, []::STRUCT(s BIGINT, e BIGINT)[]) AS spans
       FROM documents d LEFT JOIN sp USING (doc_id)
     ),

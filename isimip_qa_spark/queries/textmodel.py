@@ -19,8 +19,7 @@ from ..catalog import read_table
 from ..functions import textstats as ts
 from ..functions.fingerprint import KNUTH, MOD31, token_hash_expr, token_hash_sql
 from . import register
-
-_TOKENS_SQL = "string_split(text, ' ')"
+from .webtext import _GOPHER_SQL
 
 # ---------------------------------------------------------------------------
 # quality_classifier — hashing-trick linear text classifier
@@ -52,8 +51,8 @@ def _weight_sql(tok: str) -> str:
 _CLASSIFIER_SQL = f"""
     WITH s AS (
       SELECT doc_id,
-             len({_TOKENS_SQL})::BIGINT AS n_tokens,
-             list_sum(list_transform({_TOKENS_SQL},
+             len({ts.TOKENS_SQL})::BIGINT AS n_tokens,
+             list_sum(list_transform({ts.TOKENS_SQL},
                                      t -> {_weight_sql('t')}))::BIGINT AS swi
       FROM documents
     )
@@ -106,7 +105,7 @@ _IDF_SCALE = 1_000_000.0
 
 _TFIDF_SQL = f"""
     WITH tok AS (
-      SELECT doc_id, lang, unnest({_TOKENS_SQL}) AS term FROM documents
+      SELECT doc_id, lang, unnest({ts.TOKENS_SQL}) AS term FROM documents
     ),
     tf AS (SELECT lang, term, count(*)::BIGINT AS tf FROM tok GROUP BY 1, 2),
     df AS (SELECT term, count(DISTINCT doc_id)::BIGINT AS df FROM tok GROUP BY 1),
@@ -175,7 +174,7 @@ MIN_COUNT = 3
 
 
 _LM_SQL = f"""
-    WITH t AS (SELECT {_TOKENS_SQL} AS tok FROM documents),
+    WITH t AS (SELECT {ts.TOKENS_SQL} AS tok FROM documents),
     pairs AS (
       SELECT tok[i] AS w1, tok[i + 1] AS w2
       FROM t, unnest(range(1, len(tok))) AS u(i)
@@ -245,12 +244,10 @@ def _nb_sql() -> str:
     # label CTE = the full production Gopher keep decision (webtext._GOPHER_SQL
     # as a subquery), so the trained table distills exactly the rules the
     # pipeline ships
-    from .webtext import _GOPHER_SQL
-
     return f"""
     WITH lbl AS (SELECT doc_id, keep FROM ({_GOPHER_SQL}) g),
     tok AS (
-      SELECT l.keep, unnest({_TOKENS_SQL}) AS t
+      SELECT l.keep, unnest({ts.TOKENS_SQL}) AS t
       FROM documents d JOIN lbl l ON d.doc_id = l.doc_id
     ),
     bk AS (
@@ -345,13 +342,11 @@ _NBQ = 1024  # dyadic grid for per-bucket log-odds
 
 
 def _nb_score_sql() -> str:
-    from .webtext import _GOPHER_SQL
-
     th = token_hash_sql("t")
     return f"""
     WITH lbl AS (SELECT doc_id, keep FROM ({_GOPHER_SQL}) g),
     tok AS (
-      SELECT l.keep, unnest({_TOKENS_SQL}) AS t
+      SELECT l.keep, unnest({ts.TOKENS_SQL}) AS t
       FROM documents d JOIN lbl l ON d.doc_id = l.doc_id
     ),
     bk AS (
@@ -377,7 +372,7 @@ def _nb_score_sql() -> str:
     ),
     doctok AS (
       SELECT l.doc_id, l.keep, ({th}) % {N_BUCKETS} AS bucket
-      FROM (SELECT doc_id, unnest({_TOKENS_SQL}) AS t FROM documents) d
+      FROM (SELECT doc_id, unnest({ts.TOKENS_SQL}) AS t FROM documents) d
       JOIN lbl l ON d.doc_id = l.doc_id
     ),
     sc AS (
@@ -535,7 +530,7 @@ def nb_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bpe_merge_pairs",
     oracle=f"""
     WITH w AS (
-      SELECT unnest({_TOKENS_SQL}) AS w FROM documents
+      SELECT unnest({ts.TOKENS_SQL}) AS w FROM documents
     ),
     v AS (SELECT w, count(*)::BIGINT AS c FROM w GROUP BY w),
     p AS (
@@ -621,8 +616,8 @@ def _bpe_len_sql(w_sql: str) -> str:
     "bpe_segment",
     oracle=f"""
     SELECT doc_id,
-           len({_TOKENS_SQL})::BIGINT AS n_tok_ws,
-           list_sum(list_transform({_TOKENS_SQL},
+           len({ts.TOKENS_SQL})::BIGINT AS n_tok_ws,
+           list_sum(list_transform({ts.TOKENS_SQL},
                                    w -> {_bpe_len_sql("w")}))::BIGINT
              AS n_tok_bpe
     FROM documents
@@ -654,7 +649,7 @@ def bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BPE_DOC_SQL = (
-    f"list_sum(list_transform({_TOKENS_SQL}, w -> {_bpe_len_sql('w')}))"
+    f"list_sum(list_transform({ts.TOKENS_SQL}, w -> {_bpe_len_sql('w')}))"
 )
 
 
@@ -662,10 +657,10 @@ _BPE_DOC_SQL = (
     "bpe_fertility",
     oracle=f"""
     SELECT lang,
-           sum(len({_TOKENS_SQL}))::BIGINT AS n_tok_ws,
+           sum(len({ts.TOKENS_SQL}))::BIGINT AS n_tok_ws,
            sum({_BPE_DOC_SQL})::BIGINT AS n_tok_bpe,
            round(sum({_BPE_DOC_SQL})::DOUBLE
-                 / sum(len({_TOKENS_SQL})), 6) AS fertility
+                 / sum(len({ts.TOKENS_SQL})), 6) AS fertility
     FROM documents GROUP BY lang ORDER BY lang
     """,
 )

@@ -40,33 +40,12 @@ from .decontaminate import EVAL_MOD, K, ngrams_sql
 from .mixing import SAMPLE_BUCKETS, SAMPLE_KEEP
 from .textmodel import _weight_sql
 from .textmodel import _weight_expr
-from .webtext import _2GRAMS_SQL, _TOKENS_LOWER_SQL, _TOKENS_SQL
-from .webtext import _dup_frac_sql, _sw_list_sql
 
-_T = _TOKENS_SQL
-_TH = ts.GopherThresholds()
+_T = ts.TOKENS_SQL
 
-# the Gopher keep predicate, spelled exactly as queries/webtext._GOPHER_SQL
-# spells it (that query's green oracle row pins these expressions)
-_KEEP_SQL = f"""(
-      len({_T}) >= {_TH.min_words} AND len({_T}) <= {_TH.max_words}
-  AND length(replace(text, ' ', ''))::DOUBLE / len({_T}) >= {_TH.min_mean_word_len}
-  AND length(replace(text, ' ', ''))::DOUBLE / len({_T}) <= {_TH.max_mean_word_len}
-  AND len(regexp_extract_all(text, '{ts.SYMBOL_CLASS}'))::DOUBLE / len({_T}) <= {_TH.max_symbol_ratio}
-  AND len(list_distinct({_T}))::DOUBLE / len({_T}) >= {_TH.min_distinct_word_ratio}
-  AND len(list_filter({_TOKENS_LOWER_SQL}, x -> list_contains({_sw_list_sql(ts.EN_STOPWORDS)}, x)))::DOUBLE
-        / len({_T}) >= {_TH.min_stopword_ratio}
-  AND len(regexp_extract_all(text, '\\.\\.\\.'))::BIGINT <= {_TH.max_ellipsis}
-  AND {_dup_frac_sql("string_split(text, chr(10))")} <= {_TH.max_dup_line_frac}
-  AND {_dup_frac_sql("string_split(text, chr(10) || chr(10))")} <= {_TH.max_dup_para_frac}
-  AND {_dup_frac_sql(_2GRAMS_SQL)} <= {_TH.max_dup_2gram_frac}
-  AND {ts.repl_count_sql("text")} <= {_TH.max_repl_chars}
-  AND {ts.mojibake_count_sql("text")} <= {_TH.max_mojibake}
-  AND {ts.ctrl_frac_sql("text")} <= {_TH.max_ctrl_frac}
-  AND {ts.bullet_line_frac_sql("text")} <= {_TH.max_bullet_line_frac}
-  AND {ts.ellipsis_line_frac_sql("text")} <= {_TH.max_ellipsis_line_frac}
-  AND {ts.alpha_word_frac_sql("text")} >= {_TH.min_alpha_word_frac}
-)"""
+# the Gopher keep predicate over inlined rule statistics: the same fold of
+# the rule table that queries/webtext._GOPHER_SQL applies to its CTE
+_KEEP_SQL = ts.keep_sql(ts.rule_columns_sql("text"))
 
 _NG = ngrams_sql(_T, K)
 

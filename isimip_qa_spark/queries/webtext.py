@@ -3,9 +3,18 @@
 The production QA pipeline applies the same functions to the pages table
 (isimip_qa_spark/plans/pipeline.py); these twins pin the semantics against
 DuckDB. Tokenisation contract everywhere: split on single space.
+
+The rule-gate twins (gopher_rules, the funnels, the language-profile gate,
+the threshold sweep, repetition_rules) take their SQL from
+functions/textstats: the statistics from `rule_columns_sql`, the keep
+predicate from `keep_sql` and the violation flags from `violations_sql`,
+both folds of `RULE_CONJUNCTS`, so no threshold is written out here.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,12 +32,21 @@ from ..functions.perplexity import OOV_LOGPROB, model_values_sql, ppl_udf
 from ..functions.scrub import scrub_expr, scrub_oracle_sql
 from . import register
 
-_TOKENS_SQL = "string_split(text, ' ')"
-_TOKENS_LOWER_SQL = "string_split(lower(text), ' ')"
+# the rule statistics as DuckDB expressions over `text`, and as the names
+# of the columns a CTE projects them to (textstats.rule_columns_sql)
+_RULES_SQL = ts.rule_columns_sql("text")
+_RULE_NAMES = {k: k for k in _RULES_SQL}
 
 
-def _sw_list_sql(words: list[str]) -> str:
-    return "[" + ", ".join(f"'{w}'" for w in words) + "]"
+def _rule_stats_sql(keys: str) -> str:
+    """The rule-statistics CTE body over `documents`, carrying `keys`
+    (shared by the gopher gate, the funnel reports and the per-language
+    profile gate)."""
+    return (
+        f"SELECT {keys}, "
+        + ", ".join(f"{v} AS {k}" for k, v in _RULES_SQL.items())
+        + " FROM documents"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -36,67 +54,24 @@ def _sw_list_sql(words: list[str]) -> str:
 # (reference anchor: per-dataset assessment stats, extractions/*.py).
 # ---------------------------------------------------------------------------
 
-def _dup_frac_sql(parts: str) -> str:
-    return f"(len({parts}) - len(list_distinct({parts})))::DOUBLE / len({parts})"
-
-
-_2GRAMS_SQL = (
-    f"list_transform(range(1, greatest(len({_TOKENS_SQL}) - 1, 1) + 1), "
-    f"i -> ({_TOKENS_SQL})[i] || ' ' || coalesce(({_TOKENS_SQL})[i+1], ''))"
-)
-
-_GOPHER_SQL = f"""
-    WITH s AS (
-      SELECT doc_id,
-             len({_TOKENS_SQL})::BIGINT AS n_words,
-             length(replace(text, ' ', ''))::DOUBLE / len({_TOKENS_SQL}) AS mean_word_len,
-             len(regexp_extract_all(text, '{ts.SYMBOL_CLASS}'))::DOUBLE / len({_TOKENS_SQL}) AS symbol_ratio,
-             len(list_distinct({_TOKENS_SQL}))::DOUBLE / len({_TOKENS_SQL}) AS distinct_word_ratio,
-             len(list_filter({_TOKENS_LOWER_SQL}, x -> list_contains({_sw_list_sql(ts.EN_STOPWORDS)}, x)))::DOUBLE
-               / len({_TOKENS_SQL}) AS stopword_ratio,
-             len(regexp_extract_all(text, '\\.\\.\\.'))::BIGINT AS ellipsis_count,
-             {_dup_frac_sql("string_split(text, chr(10))")} AS dup_line_frac,
-             {_dup_frac_sql("string_split(text, chr(10) || chr(10))")} AS dup_para_frac,
-             {_dup_frac_sql(_2GRAMS_SQL)} AS dup_2gram_frac,
-             {ts.repl_count_sql("text")} AS repl_n,
-             {ts.mojibake_count_sql("text")} AS mojibake_n,
-             {ts.ctrl_frac_sql("text")} AS ctrl_frac,
-             {ts.bullet_line_frac_sql("text")} AS bullet_line_frac,
-             {ts.ellipsis_line_frac_sql("text")} AS ellipsis_line_frac,
-             {ts.alpha_word_frac_sql("text")} AS alpha_word_frac
-      FROM documents
-    )
-    SELECT doc_id, n_words, round(mean_word_len, 6) AS mean_word_len,
-           round(symbol_ratio, 6) AS symbol_ratio,
-           round(distinct_word_ratio, 6) AS distinct_word_ratio,
-           round(stopword_ratio, 6) AS stopword_ratio,
-           ellipsis_count, repl_n, mojibake_n,
-           round(ctrl_frac, 6) AS ctrl_frac,
-           round(bullet_line_frac, 6) AS bullet_line_frac,
-           round(ellipsis_line_frac, 6) AS ellipsis_line_frac,
-           round(alpha_word_frac, 6) AS alpha_word_frac,
-           (n_words >= 50 AND n_words <= 100000
-            AND mean_word_len >= 2.0 AND mean_word_len <= 12.0
-            AND symbol_ratio <= 0.1
-            AND distinct_word_ratio >= 0.1
-            AND stopword_ratio >= 0.01
-            AND ellipsis_count <= 5
-            AND dup_line_frac <= 0.3
-            AND dup_para_frac <= 0.3
-            AND dup_2gram_frac <= 1.0
-            AND repl_n <= 0 AND mojibake_n <= 0
-            AND ctrl_frac <= 0.001
-            AND bullet_line_frac <= 0.9
-            AND ellipsis_line_frac <= 0.3
-            AND alpha_word_frac >= 0.8) AS keep
-    FROM s
-"""
-
-
 _ROUND6_RULES = (
     "mean_word_len", "symbol_ratio", "distinct_word_ratio",
     "stopword_ratio", "ctrl_frac", "bullet_line_frac",
     "ellipsis_line_frac", "alpha_word_frac",
+)
+# gopher_rules' statistic columns: all but the duplicate fractions, which
+# repetition_rules reports
+_GOPHER_COLS = tuple(k for k in _RULES_SQL if not k.startswith("dup_"))
+
+
+def _round6(k: str) -> str:
+    return f"round({k}, 6) AS {k}" if k in _ROUND6_RULES else k
+
+
+_GOPHER_SQL = (
+    f"WITH s AS ({_rule_stats_sql('doc_id')})\n"
+    f"    SELECT doc_id, {', '.join(map(_round6, _GOPHER_COLS))},"
+    f" {ts.keep_sql(_RULE_NAMES)} AS keep FROM s"
 )
 
 
@@ -134,12 +109,8 @@ def gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep = ts.keep_from({k: F.col(k) for k in r.columns if k != "doc_id"})
     return r.select(
         "doc_id",
-        "n_words",
         *[F.round(F.col(k), 6).alias(k) if k in _ROUND6_RULES else F.col(k)
-          for k in ("mean_word_len", "symbol_ratio", "distinct_word_ratio",
-                    "stopword_ratio", "ellipsis_count", "repl_n",
-                    "mojibake_n", "ctrl_frac", "bullet_line_frac",
-                    "ellipsis_line_frac", "alpha_word_frac")],
+          for k in _GOPHER_COLS],
         keep.alias("keep"),
     )
 
@@ -154,37 +125,35 @@ def gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# the published trip thresholds of the `repetitive` flag
+_REP_TRIPS = {"dup_line_frac": 0.3, "dup_para_frac": 0.3, "dup_2gram_frac": 0.2}
+
+
 @register(
     "repetition_rules",
-    oracle=f"""
-    WITH s AS (
-      SELECT doc_id,
-             {_dup_frac_sql("string_split(text, chr(10))")} AS dup_line_frac,
-             {_dup_frac_sql("string_split(text, chr(10) || chr(10))")} AS dup_para_frac,
-             {_dup_frac_sql(_2GRAMS_SQL)} AS dup_2gram_frac
-      FROM documents
-    )
-    SELECT doc_id,
-           round(dup_line_frac, 6) AS dup_line_frac,
-           round(dup_para_frac, 6) AS dup_para_frac,
-           round(dup_2gram_frac, 6) AS dup_2gram_frac,
-           (dup_line_frac > 0.3 OR dup_para_frac > 0.3
-            OR dup_2gram_frac > 0.2) AS repetitive
-    FROM s
-    """,
+    oracle=(
+        "WITH s AS (SELECT doc_id, "
+        + ", ".join(f"{_RULES_SQL[k]} AS {k}" for k in _REP_TRIPS)
+        + " FROM documents)\n    SELECT doc_id, "
+        + ", ".join(f"round({k}, 6) AS {k}" for k in _REP_TRIPS)
+        + ", ("
+        + " OR ".join(f"{k} > {t}" for k, t in _REP_TRIPS.items())
+        + ") AS repetitive FROM s"
+    ),
 )
 def repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
     text = F.col("text")
-    line = ts.dup_line_frac_expr(text)
-    para = ts.dup_para_frac_expr(text)
-    gram = ts.dup_2gram_frac_expr(text)
+    cols = {
+        "dup_line_frac": ts.dup_line_frac_expr(text),
+        "dup_para_frac": ts.dup_para_frac_expr(text),
+        "dup_2gram_frac": ts.dup_2gram_frac_expr(text),
+    }
+    trip = reduce(operator.or_, (cols[k] > t for k, t in _REP_TRIPS.items()))
     return d.select(
         "doc_id",
-        F.round(line, 6).alias("dup_line_frac"),
-        F.round(para, 6).alias("dup_para_frac"),
-        F.round(gram, 6).alias("dup_2gram_frac"),
-        ((line > 0.3) | (para > 0.3) | (gram > 0.2)).alias("repetitive"),
+        *[F.round(c, 6).alias(k) for k, c in cols.items()],
+        trip.alias("repetitive"),
     )
 
 
@@ -207,7 +176,7 @@ _DUP_TH = {5: 0.15, 10: 0.10}
 
 _NGRAM_REP_SQL = f"""
     WITH base AS (
-      SELECT doc_id, string_split(text, ' ') AS toks,
+      SELECT doc_id, {ts.TOKENS_SQL} AS toks,
              length(text)::BIGINT AS nch
       FROM documents
     ),
@@ -309,7 +278,7 @@ def _langid_sql() -> str:
     from ..functions.langid import argmax_lang_sql, lang_score_sql
 
     score_cols = ", ".join(
-        f"{lang_score_sql(_TOKENS_LOWER_SQL, lang)} AS s_{lang}"
+        f"{lang_score_sql(ts.tokens_sql('lower(text)'), lang)} AS s_{lang}"
         for lang in LANG_ORDER
     )
     # argmax with first-in-LANG_ORDER tie-break (shared chain generator)
@@ -344,7 +313,7 @@ def langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ppl_sql() -> str:
     return f"""
     WITH tok AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token
+      SELECT doc_id, unnest({ts.tokens_sql('lower(text)')}) AS token
       FROM documents
     ),
     scored AS (
@@ -451,7 +420,7 @@ def pii_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "token_count",
     oracle=f"""
     SELECT doc_id,
-           len({_TOKENS_SQL})::BIGINT AS ws_tokens,
+           len({ts.TOKENS_SQL})::BIGINT AS ws_tokens,
            len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]'))::BIGINT AS bpe_ish_tokens
     FROM documents
     """,
@@ -475,9 +444,9 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # cross-engine twins shared with the mixing queries (queries/mixing.py)
 QUALITY_SQL = f"""round(
-             0.4 * least(len({_TOKENS_SQL}) / 100.0, 1.0)
-           + 0.3 * (len(list_distinct({_TOKENS_SQL}))::DOUBLE / len({_TOKENS_SQL}))
-           + 0.3 * least((len(list_filter({_TOKENS_LOWER_SQL}, x -> list_contains({_sw_list_sql(ts.EN_STOPWORDS)}, x)))::DOUBLE / len({_TOKENS_SQL})) / 0.1, 1.0)
+             0.4 * least(len({ts.TOKENS_SQL}) / 100.0, 1.0)
+           + 0.3 * ({_RULES_SQL["distinct_word_ratio"]})
+           + 0.3 * least(({_RULES_SQL["stopword_ratio"]}) / 0.1, 1.0)
            , 6)"""
 
 
@@ -509,7 +478,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 ENTROPY_MIN = 2.0  # bits; docs whose token distribution carries less are dropped
 
 _ENTROPY_SQL = f"""
-    WITH t AS (SELECT doc_id, unnest({_TOKENS_SQL}) AS tok FROM documents
+    WITH t AS (SELECT doc_id, unnest({ts.TOKENS_SQL}) AS tok FROM documents
                WHERE text IS NOT NULL),
     c AS (SELECT doc_id, count(*) AS cnt FROM t GROUP BY doc_id, tok),
     a AS (SELECT doc_id, sum(cnt)::DOUBLE AS n,
@@ -549,7 +518,7 @@ def word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_fingerprint",
     oracle=f"""
-    SELECT doc_id, {rolling_fingerprint_sql(_TOKENS_SQL)} AS fp
+    SELECT doc_id, {rolling_fingerprint_sql(ts.TOKENS_SQL)} AS fp
     FROM documents
     """,
 )
@@ -566,7 +535,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "simhash",
-    oracle=f"SELECT doc_id, {simhash_sql(_TOKENS_SQL)} AS sh FROM documents",
+    oracle=f"SELECT doc_id, {simhash_sql(ts.TOKENS_SQL)} AS sh FROM documents",
 )
 def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
@@ -648,49 +617,8 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the driver side of the plan; no explode, no per-rule pass.
 # ---------------------------------------------------------------------------
 
-_FUNNEL_RULES = [
-    # (name, DuckDB violation predicate over the s CTE columns)
-    ("n_words", "n_words < 50 OR n_words > 100000"),
-    ("mean_word_len", "mean_word_len < 2.0 OR mean_word_len > 12.0"),
-    ("symbol_ratio", "symbol_ratio > 0.1"),
-    ("distinct_word_ratio", "distinct_word_ratio < 0.1"),
-    ("stopword_ratio", "stopword_ratio < 0.01"),
-    ("ellipsis_count", "ellipsis_count > 5"),
-    ("dup_line_frac", "dup_line_frac > 0.3"),
-    ("dup_para_frac", "dup_para_frac > 0.3"),
-    ("dup_2gram_frac", "dup_2gram_frac > 1.0"),
-    ("repl_n", "repl_n > 0"),
-    ("mojibake_n", "mojibake_n > 0"),
-    ("ctrl_frac", "ctrl_frac > 0.001"),
-    ("bullet_line_frac", "bullet_line_frac > 0.9"),
-    ("ellipsis_line_frac", "ellipsis_line_frac > 0.3"),
-    ("alpha_word_frac", "alpha_word_frac < 0.8"),
-]
-
-def _rule_stats_sql(keys: str) -> str:
-    """The 15-rule statistics CTE body over `documents`, carrying `keys`
-    (shared by the funnel reports and the per-language profile gate)."""
-    return f"""
-      SELECT {keys},
-             len({_TOKENS_SQL})::BIGINT AS n_words,
-             length(replace(text, ' ', ''))::DOUBLE / len({_TOKENS_SQL}) AS mean_word_len,
-             len(regexp_extract_all(text, '{ts.SYMBOL_CLASS}'))::DOUBLE / len({_TOKENS_SQL}) AS symbol_ratio,
-             len(list_distinct({_TOKENS_SQL}))::DOUBLE / len({_TOKENS_SQL}) AS distinct_word_ratio,
-             len(list_filter({_TOKENS_LOWER_SQL}, x -> list_contains({_sw_list_sql(ts.EN_STOPWORDS)}, x)))::DOUBLE
-               / len({_TOKENS_SQL}) AS stopword_ratio,
-             len(regexp_extract_all(text, '\\.\\.\\.'))::BIGINT AS ellipsis_count,
-             {_dup_frac_sql("string_split(text, chr(10))")} AS dup_line_frac,
-             {_dup_frac_sql("string_split(text, chr(10) || chr(10))")} AS dup_para_frac,
-             {_dup_frac_sql(_2GRAMS_SQL)} AS dup_2gram_frac,
-             {ts.repl_count_sql("text")} AS repl_n,
-             {ts.mojibake_count_sql("text")} AS mojibake_n,
-             {ts.ctrl_frac_sql("text")} AS ctrl_frac,
-             {ts.bullet_line_frac_sql("text")} AS bullet_line_frac,
-             {ts.ellipsis_line_frac_sql("text")} AS ellipsis_line_frac,
-             {ts.alpha_word_frac_sql("text")} AS alpha_word_frac
-      FROM documents
-"""
-
+# (rule column, DuckDB violation predicate over the s CTE columns)
+_FUNNEL_RULES = list(ts.violations_sql(_RULE_NAMES).items())
 
 _FUNNEL_STATS_SQL = _rule_stats_sql("doc_id, source")
 
@@ -730,12 +658,10 @@ def _violations() -> dict[str, Column]:
     """Per-rule violation flag exprs over a `_staged_rule_cols` frame —
     the negated keep_from conjuncts, OR-ed per rule column, shared by the
     corpus funnel (drop_attribution) and the per-source funnel
-    (source_rule_funnel). Rule names match _FUNNEL_RULES; thresholds are
-    the GopherThresholds defaults the SQL twins spell literally."""
-    th = ts.GopherThresholds()
+    (source_rule_funnel); the Spark form of ts.violations_sql."""
     viol: dict[str, Column] = {}
-    for col, op, field in ts.RULE_CONJUNCTS:
-        v = ~op(F.col(col), getattr(th, field))
+    for col, op, t in ts.conjuncts():
+        v = ~op(F.col(col), t)
         viol[col] = viol[col] | v if col in viol else v
     return viol
 
@@ -878,25 +804,12 @@ LANG_PROFILES: list[tuple[str, int, float, float]] = [
 ]
 
 
-def _keep_pred_sql(
-    min_words: str = "50", min_sw: str = "0.01", min_alpha: str = "0.8"
-) -> str:
-    """The 17-conjunct keep predicate over rule-stat columns, with the
-    three language-profiled thresholds injectable (literal or a joined
-    profile column) — one template, so global and profile gates cannot
-    drift."""
-    return (
-        f"(n_words >= {min_words} AND n_words <= 100000"
-        " AND mean_word_len >= 2.0 AND mean_word_len <= 12.0"
-        " AND symbol_ratio <= 0.1 AND distinct_word_ratio >= 0.1"
-        f" AND stopword_ratio >= {min_sw} AND ellipsis_count <= 5"
-        " AND dup_line_frac <= 0.3 AND dup_para_frac <= 0.3"
-        " AND dup_2gram_frac <= 1.0 AND repl_n <= 0 AND mojibake_n <= 0"
-        " AND ctrl_frac <= 0.001 AND bullet_line_frac <= 0.9"
-        " AND ellipsis_line_frac <= 0.3"
-        f" AND alpha_word_frac >= {min_alpha})"
-    )
-
+# the language-profiled thresholds and the profile columns that override them
+_PROFILE_COLS = {
+    "min_words": "p_min_words",
+    "min_stopword_ratio": "p_min_sw",
+    "min_alpha_word_frac": "p_min_alpha",
+}
 
 _PROFILE_LANGS = [l for l, *_ in LANG_PROFILES if l != "default"]
 
@@ -911,8 +824,8 @@ _LANG_PROFILE_SQL = (
     " FROM s JOIN prof p ON p.p_lang = (CASE WHEN s.lang IN ("
     + ", ".join(f"'{l}'" for l in _PROFILE_LANGS)
     + ") THEN s.lang ELSE 'default' END))\n"
-    f"    SELECT doc_id, lang, {_keep_pred_sql()} AS keep_global,"
-    f" {_keep_pred_sql('p_min_words', 'p_min_sw', 'p_min_alpha')}"
+    f"    SELECT doc_id, lang, {ts.keep_sql(_RULE_NAMES)} AS keep_global,"
+    f" {ts.keep_sql(_RULE_NAMES, overrides=_PROFILE_COLS)}"
     " AS keep_profile FROM j"
 )
 
@@ -940,12 +853,7 @@ def lang_profile_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = r.join(F.broadcast(prof), key == F.col("p_lang"), "inner")
     c = {k: F.col(k) for k in r.columns if k not in ("doc_id", "lang")}
     keep_p = ts.keep_from(
-        c,
-        overrides={
-            "min_words": F.col("p_min_words"),
-            "min_stopword_ratio": F.col("p_min_sw"),
-            "min_alpha_word_frac": F.col("p_min_alpha"),
-        },
+        c, overrides={f: F.col(p) for f, p in _PROFILE_COLS.items()}
     )
     return j.select(
         "doc_id",
@@ -969,13 +877,9 @@ SWEEP_GRID: list[tuple[str, float]] = (
 
 
 def _sweep_sql() -> str:
-    sw = (
-        f"len(list_filter({_TOKENS_LOWER_SQL}, "
-        f"x -> list_contains({_sw_list_sql(ts.EN_STOPWORDS)}, x)))::DOUBLE"
-        f" / len({_TOKENS_SQL})"
+    sw, nw, af = (
+        _RULES_SQL[k] for k in ("stopword_ratio", "n_words", "alpha_word_frac")
     )
-    nw = f"len({_TOKENS_SQL})::BIGINT"
-    af = ts.alpha_word_frac_sql("text")
     conds = {
         "stopword_ratio": lambda t: f"sw >= {t!r}",
         "min_words": lambda t: f"nw >= {t!r}",
@@ -1081,7 +985,7 @@ def _win_pred_sql(win: str) -> str:
 
 def _lang_consistency_sql() -> str:
     w = LANG_WIN
-    toks = _TOKENS_LOWER_SQL
+    toks = ts.tokens_sql("lower(text)")
     n_win = f"((len({toks}) + {w - 1}) // {w})"
     wins = (
         f"list_transform(range(0, {n_win}), "

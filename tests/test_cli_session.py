@@ -42,3 +42,34 @@ def test_cli_window_is_utc_whatever_the_session_zone(
     want = rows(want_out)
     assert 0 < len(want) < 1000
     assert rows(got_out) == want
+
+
+def test_qaconfig_rejects_fewer_than_one_chunk():
+    import pytest
+
+    from isimip_qa_spark.plans import QAConfig
+
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="n_chunks"):
+            QAConfig(n_chunks=n)
+    assert QAConfig(n_chunks=1).n_chunks == 1
+
+
+def test_cli_rejects_non_positive_counts_before_the_session(monkeypatch):
+    """--chunks 0 would score nothing, and --export-shards 0 would fail in
+    the export's pmod only after the whole QA run: both are parse errors,
+    raised before any Spark session is asked for."""
+    import pytest
+
+    from isimip_qa_spark import cli, session
+
+    def no_session(*a, **k):
+        raise AssertionError("a Spark session was requested")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    base = ["--input", "in", "--output", "out"]
+    for flags in (["--chunks", "0"], ["--chunks", "-2"], ["--chunks", "x"],
+                  ["--export-dir", "exp", "--export-shards", "0"]):
+        with pytest.raises(SystemExit) as e:
+            cli.main(base + flags)
+        assert e.value.code == 2, flags

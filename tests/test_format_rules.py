@@ -124,10 +124,7 @@ def test_source_rule_funnel_shape_and_plan(spark):
     text, only as 16 longs per source."""
     import os
 
-    from isimip_qa_spark.queries.webtext import (
-        _FUNNEL_RULES,
-        source_rule_funnel,
-    )
+    from isimip_qa_spark.queries.webtext import source_rule_funnel
 
     sf = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
     df = source_rule_funnel(spark, sf)
@@ -135,7 +132,7 @@ def test_source_rule_funnel_shape_and_plan(spark):
     assert plan.count("Exchange") == 1
     rows = df.collect()
     sources = {r["source"] for r in rows}
-    assert len(rows) == len(sources) * len(_FUNNEL_RULES)
+    assert len(rows) == len(sources) * len(ts.rule_columns_sql("text"))
     for r in rows:
         assert 0 <= r["n_viol"] <= r["n_docs"]
         # tolerance, not equality: F.round is HALF_UP, Python round is

@@ -83,18 +83,19 @@ def test_fused_kernel_bit_identical_to_exprs(planted_sdf):
 def test_duckdb_twin_on_planted():
     import duckdb
 
-    from isimip_qa_spark.queries.webtext import _2GRAMS_SQL, _dup_frac_sql
+    from isimip_qa_spark.functions.textstats import rule_columns_sql
 
     con = duckdb.connect()
     con.register(
         "documents",
         pd.DataFrame({"doc_id": range(len(PLANTED)), "text": PLANTED}),
     )
+    r = rule_columns_sql("text")
     sql = f"""
     SELECT doc_id,
-           {_dup_frac_sql("string_split(text, chr(10))")} AS dup_line_frac,
-           {_dup_frac_sql("string_split(text, chr(10) || chr(10))")} AS dup_para_frac,
-           {_dup_frac_sql(_2GRAMS_SQL)} AS dup_2gram_frac
+           {r["dup_line_frac"]} AS dup_line_frac,
+           {r["dup_para_frac"]} AS dup_para_frac,
+           {r["dup_2gram_frac"]} AS dup_2gram_frac
     FROM documents ORDER BY doc_id
     """
     duck = con.execute(sql).df()

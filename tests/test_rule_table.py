@@ -1,17 +1,19 @@
-"""The keep gate's conjunct table drives both decision forms: the Spark
-expression (stages.rules_pass_expr + decision) and the sink's pandas
-`_keep_series` must agree row for row, and each conjunct must bind the
-column and direction its threshold field names."""
+"""The keep gate's conjunct table drives every decision form: the Spark
+expression (stages.rules_pass_expr + decision), the sink's `_keep_series`
+and the DuckDB predicate (`keep_sql`) must agree row for row, and each
+conjunct must bind the column and direction its threshold field names."""
 
 from __future__ import annotations
 
 import math
 
+import duckdb
 import pandas as pd
 import pytest
 
 from isimip_qa_spark.functions.langid import LANG_ORDER
 from isimip_qa_spark.functions.qa_fused import SCORE_COLS, _fused_series
+from isimip_qa_spark.functions.textstats import keep_sql
 from isimip_qa_spark.plans.config import QAConfig
 from isimip_qa_spark.plans.sink import _keep_series
 from isimip_qa_spark.plans.stages import _decision
@@ -102,6 +104,23 @@ def test_spark_and_sink_decisions_follow_the_table(spark, stats):
         df = _decision(df, cfg).withColumnRenamed("keep", f"k{i}")
     got = df.select(*[f"k{i}" for i in range(len(cases))]).toPandas()
 
+    # the DuckDB fold over the same rows, a language profile's thresholds
+    # riding along as per-row columns
+    duck = stats[list(dict.fromkeys(c for c, _ in CONJUNCTS))].copy()
+    overrides = {}
+    for f, (by_lang, fallback) in cfg.profile_thresholds().items():
+        duck[f"p_{f}"] = lp.map(by_lang).fillna(fallback).astype(float)
+        overrides[f] = f"p_{f}"
+    names = {c: c for c, _ in CONJUNCTS}
+    preds = [
+        keep_sql(names, cfg, overrides if cfg.lang_profiles else None)
+        for _, cfg, _ in cases
+    ]
+    con = duckdb.connect()
+    con.register("s", duck.reset_index())
+    sql = ", ".join(f"{p} AS k{i}" for i, p in enumerate(preds))
+    got_sql = con.execute(f"SELECT {sql} FROM s ORDER BY index").df()
+
     for i, (label, cfg, want) in enumerate(cases):
         sink = _keep_series(stats, cfg)
         expr = got[f"k{i}"]
@@ -109,6 +128,7 @@ def test_spark_and_sink_decisions_follow_the_table(spark, stats):
         assert not sink[~valid].any(), label  # ... and False in the sink
         assert (expr[valid].astype(bool) == sink[valid]).all(), label
         assert (sink[valid] == want).all(), label
+        assert (got_sql[f"k{i}"][valid] == want).all(), label
         assert (~want).any(), f"{label} trips no row"
 
 

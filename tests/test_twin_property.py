@@ -27,7 +27,9 @@ from isimip_qa_spark.functions.textstats import (
     dup_para_frac_expr,
     ellipsis_line_frac_expr,
     ellipsis_line_frac_sql,
+    rule_columns_sql,
     tokens_expr,
+    tokens_sql,
 )
 from isimip_qa_spark.functions.urlops import (
     canonical_url_expr,
@@ -37,7 +39,6 @@ from isimip_qa_spark.functions.urlops import (
 )
 from isimip_qa_spark.functions.fingerprint import shingles_expr
 from isimip_qa_spark.queries.decontaminate import K, ngrams_sql
-from isimip_qa_spark.queries.webtext import _2GRAMS_SQL, _dup_frac_sql
 
 _SETTINGS = settings(
     max_examples=10,
@@ -127,13 +128,11 @@ def test_normalize_text_parity(spark, texts):
 @given(texts=st.lists(_text, min_size=1, max_size=10))
 @_SETTINGS
 def test_dup_fraction_parity(spark, texts):
+    r = rule_columns_sql("text")
     for expr, sql in [
-        (dup_line_frac_expr(F.col("text")), _dup_frac_sql("string_split(text, chr(10))")),
-        (
-            dup_para_frac_expr(F.col("text")),
-            _dup_frac_sql("string_split(text, chr(10) || chr(10))"),
-        ),
-        (dup_2gram_frac_expr(F.col("text")), _dup_frac_sql(_2GRAMS_SQL)),
+        (dup_line_frac_expr(F.col("text")), r["dup_line_frac"]),
+        (dup_para_frac_expr(F.col("text")), r["dup_para_frac"]),
+        (dup_2gram_frac_expr(F.col("text")), r["dup_2gram_frac"]),
     ]:
         s = _spark_vals(spark, texts, expr)
         d = _duck(texts, sql)
@@ -257,9 +256,7 @@ def test_langid_null_text_predicts_null(spark):
         lang_pred_expr,
         lang_score_sql,
     )
-    from isimip_qa_spark.queries.webtext import _TOKENS_LOWER_SQL
-
     texts = [None, "the cat"]
     s = _spark_vals(spark, texts, lang_pred_expr(F.col("text")))
-    d = _duck(texts, argmax_lang_sql(lambda lang: lang_score_sql(_TOKENS_LOWER_SQL, lang)))
+    d = _duck(texts, argmax_lang_sql(lambda lang: lang_score_sql(tokens_sql("lower(text)"), lang)))
     assert s == d == {0: None, 1: LANG_ORDER[0]}
