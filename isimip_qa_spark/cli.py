@@ -150,13 +150,14 @@ def main(argv=None) -> int:
     args = build_parser().parse_args(argv)
     # validate flag combinations BEFORE any compute: a typo must not cost
     # the full QA run
-    if args.export_dir and (args.windows or args.cohorts):
+    grid = bool(args.windows or args.cohorts)
+    if args.export_dir and grid:
         raise SystemExit(
             "--export-dir exports a single run's kept set; for a grid, "
             "export each combo's <output>/<window>/<cohort>/<hash> dir "
             "in a separate invocation"
         )
-    if args.dsir_target and (args.windows or args.cohorts):
+    if args.dsir_target and grid:
         raise SystemExit(
             "--dsir-target fits against a single run's kept output; a "
             "grid writes only per-combo dirs — fit from one combo's dir "
@@ -169,6 +170,18 @@ def main(argv=None) -> int:
     if args.dsir_threshold is not None and not args.dsir_artifact:
         raise SystemExit("--dsir-threshold needs --dsir-artifact")
     lang_profiles = _parse_lang_profiles(args.lang_profiles)
+    # scopes too: a bad window or cohort list must not cost a session
+    window = _parse_window(args.window)
+    if grid:
+        from .sources.cohorts import fetch_cohorts, resolve_cohort_tokens
+
+        windows = [_parse_window(t) for t in (args.windows or "all").split(";")]
+        try:
+            resolved = resolve_cohort_tokens(
+                (args.cohorts or "all").split(";"), fetch_cohorts(args.cohorts_file)
+            )
+        except ValueError as e:
+            raise SystemExit(f"--cohorts-file: {e}")
 
     from pyspark.sql import functions as F
 
@@ -188,7 +201,6 @@ def main(argv=None) -> int:
             n_buckets=args.chunks,
         )
 
-    window = _parse_window(args.window)
     cfg = QAConfig(
         n_chunks=args.chunks,
         window=window,
@@ -197,15 +209,9 @@ def main(argv=None) -> int:
         lang_profiles=lang_profiles,
     )
     pages = spark.read.parquet(args.input)
-    if args.windows or args.cohorts:
+    if grid:
         from .plans import run_grid
-        from .sources.cohorts import fetch_cohorts, resolve_cohort_tokens
 
-        windows = [_parse_window(t) for t in (args.windows or "all").split(";")]
-        cohort_list = fetch_cohorts(args.cohorts_file)
-        resolved = resolve_cohort_tokens(
-            (args.cohorts or "all").split(";"), cohort_list
-        )
         names = [nm for nm, _ in resolved]
         cohorts = [langs for _, langs in resolved]
         summary = run_grid(

@@ -5,15 +5,28 @@ reproduce them exactly with integer arithmetic:
 
     h(tok) = (len(tok)*2654435761 + ascii(first)*40503 + ascii(last)) mod 2^31
 
-(2654435761 = Knuth's multiplicative constant.) MinHash additionally uses the
-classic universal-hash family h_i(x) = (a_i*x + b_i) mod p with fixed seeded
-(a_i, b_i) — pure integer math, identical everywhere.
+(2654435761 = Knuth's multiplicative constant.) It is spelled three times:
+`token_hash_expr` (Spark), `token_hash_sql` (DuckDB) and `token_hash_np`
+(the numpy kernels). MinHash additionally uses the classic universal-hash
+family h_i(x) = (a_i*x + b_i) mod p with fixed seeded (a_i, b_i) — pure
+integer math, identical everywhere.
+
+The numpy kernels read the shared token frame (`textstats.tokens_arrow`):
+every per-token value (code-point length, first/last code point, the
+portable hash, FNV-1a-64) is computed once per UNIQUE token and gathered
+through the frame's dictionary codes.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .textstats import tokens_arrow
 
 KNUTH = 2654435761
 MOD31 = 2**31
@@ -61,6 +74,36 @@ def token_hash_sql(tok: str) -> str:
         f"(length({tok})::BIGINT * {KNUTH} + ascii({tok}[1:1])::BIGINT * 40503"
         f" + ascii({tok}[length({tok}):length({tok})])::BIGINT) % {MOD31}"
     )
+
+
+def token_hash_np(length: np.ndarray, first: np.ndarray, last: np.ndarray) -> np.ndarray:
+    """numpy twin of token_hash_expr over int64 arrays of (code-point
+    length, first code point, last code point); '' is (0, 0, 0)."""
+    return (length * KNUTH + first * 40503 + last) % MOD31
+
+
+def _codepoints(uniques: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(code points of the tokens back to back, code-point length of each
+    token, start of each token in the first array): one UTF-8 → UTF-32
+    decode of the array's data buffer, no per-token Python."""
+    lens = pc.utf8_length(uniques).to_numpy().astype(np.int64)
+    starts = np.cumsum(lens) - lens
+    if not lens.any():  # no characters: the data buffer may be absent
+        return np.zeros(0, dtype=np.uint32), lens, starts
+    offs = np.frombuffer(uniques.buffers()[1], dtype=np.int32)
+    lo, hi = offs[uniques.offset], offs[uniques.offset + len(uniques)]
+    utf8 = memoryview(uniques.buffers()[2])[lo:hi]
+    cps = np.frombuffer(str(utf8, "utf-8").encode("utf-32-le"), dtype=np.uint32)
+    return cps, lens, starts
+
+
+def token_ends(uniques: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(code-point length, first code point, last code point) per token as
+    int64, '' → (0, 0, 0): the inputs of token_hash_np."""
+    cps, lens, starts = _codepoints(uniques)
+    cps = np.append(cps.astype(np.int64), 0)  # '' tokens read a masked slot
+    some = lens > 0
+    return lens, np.where(some, cps[starts], 0), np.where(some, cps[starts + lens - 1], 0)
 
 
 def rolling_fingerprint_expr(tokens: Column) -> Column:
@@ -177,78 +220,62 @@ def _shingle_parts(texts):
     hashes[starts[i]:starts[i+1]] are doc i's word-3-shingle hashes.
     Exactly reproduces token_hash_expr(shingles_expr(tokens)): the shingle
     hash needs only (total length, first char of tok_i, last char of
-    tok_{i+2}) — all computed from one exploded token frame, no per-shingle
-    Python.
+    tok_{i+2}) — all gathered from the token frame, no per-shingle Python.
+    NULL text hashes as '', as the expression path does.
     """
-    import numpy as np
-    import pandas as pd
-
-    texts = texts.reset_index(drop=True)
-    toks = texts.str.split(" ").explode()
-    doc_idx = toks.index.to_numpy(dtype=np.int64)
-    tok_len = toks.str.len().fillna(0).to_numpy(dtype=np.int64)
-
-    # ord of first/last char per token (codepoint; '' → 0, matches ascii('')):
-    # slice to 1-char strings, then view the fixed-width U1 buffer as uint32
-    # codepoints — no per-token Python
-    def _ords(s: pd.Series) -> np.ndarray:
-        arr = s.fillna("").to_numpy(dtype="U1")
-        return arr.view(np.uint32).astype(np.int64)
-
-    first_ord = _ords(toks.str.slice(0, 1))
-    last_ord = _ords(toks.str.slice(-1))
-    n_docs = len(texts)
-    counts = np.bincount(doc_idx, minlength=n_docs)
+    _, counts, doc_idx, codes, uniques = tokens_arrow(texts)
+    u_len, u_first, u_last = token_ends(uniques)
+    tok_len, first_ord, last_ord = u_len[codes], u_first[codes], u_last[codes]
+    # a joined shingle that starts (ends) with an '' token starts (ends)
+    # with the joining space
+    first_j = np.where(tok_len > 0, first_ord, ord(" "))
+    last_j = np.where(tok_len > 0, last_ord, ord(" "))
+    n_docs, n_tok = len(counts), len(codes)
     ends = np.cumsum(counts)
     starts_tok = ends - counts
 
-    same2 = np.zeros(len(toks), dtype=bool)
+    same2 = np.zeros(n_tok, dtype=bool)
     same2[:-2] = doc_idx[:-2] == doc_idx[2:]  # i and i+2 in same doc
 
     # full 3-shingles: "t_i t_{i+1} t_{i+2}"
-    sh_len = np.zeros(len(toks), dtype=np.int64)
+    sh_len = np.zeros(n_tok, dtype=np.int64)
     sh_len[:-2] = tok_len[:-2] + tok_len[1:-1] + tok_len[2:] + 2
-    sh_last = np.zeros(len(toks), dtype=np.int64)
-    sh_last[:-2] = last_ord[2:]
-    h3 = (sh_len * KNUTH + first_ord * 40503 + sh_last) % MOD31
+    sh_last = np.zeros(n_tok, dtype=np.int64)
+    sh_last[:-2] = last_j[2:]
+    h3 = token_hash_np(sh_len, first_j, sh_last)
 
     # per-doc shingle list: positions where same2 holds; docs with < 3
     # tokens get ONE shingle = the whole (≤2-token) text
-    keep = same2.copy()
     short = counts < 3
-    hashes_parts, starts = [], np.zeros(n_docs + 1, dtype=np.int64)
-    if short.any():
-        # short docs: shingle string == text itself (join of its tokens)
-        text_len = texts.str.len().fillna(0).to_numpy(dtype=np.int64)
-        t_first = first_ord[starts_tok.clip(0)]
-        t_last = np.where(counts > 0, last_ord[(ends - 1).clip(0)], 0)
-        h_short = (text_len * KNUTH + t_first * 40503 + t_last) % MOD31
-    n_sh = np.where(short, 1, np.maximum(counts - 2, 0))
+    starts = np.zeros(n_docs + 1, dtype=np.int64)
+    n_sh = np.where(short, 1, counts - 2)
     starts[1:] = np.cumsum(n_sh)
     out = np.empty(int(starts[-1]), dtype=np.int64)
     # scatter full shingles (vectorized): target positions are
     # starts[doc] + (pos_in_doc) for kept rows
-    pos_in_doc = np.arange(len(toks)) - starts_tok[doc_idx]
-    kept = keep & ~short[doc_idx]
+    pos_in_doc = np.arange(n_tok) - starts_tok[doc_idx]
+    kept = same2 & ~short[doc_idx]
     out[starts[doc_idx[kept]] + pos_in_doc[kept]] = h3[kept]
     if short.any():
-        out[starts[np.where(short)[0]]] = h_short[short]
+        # short docs: shingle string == text itself (join of its tokens)
+        s0, s1 = starts_tok[short], ends[short] - 1
+        pair = s1 > s0
+        text_len = tok_len[s0] + np.where(pair, tok_len[s1] + 1, 0)
+        first = np.where(pair, first_j[s0], first_ord[s0])
+        last = np.where(pair, last_j[s1], last_ord[s1])
+        out[starts[:-1][short]] = token_hash_np(text_len, first, last)
     return out, starts
 
 
 def minhash_band_keys_series(texts):
     """texts → list-of-16-band-keys per doc (vectorized numpy;
     bit-identical to band_keys_expr(minhash_sig_expr(...)))."""
-    import pandas as pd
-
     hashes, starts = _shingle_parts(texts)
     keys = _bands_from_parts(hashes, starts)
     return pd.Series(list(keys), dtype="object")
 
 
 def minhash_bands_udf(text):
-    from pyspark.sql import functions as F
-
     return F.pandas_udf(minhash_band_keys_series, "array<long>")(text)
 
 
@@ -261,8 +288,6 @@ def _sigs_from_parts(hashes, starts):
     broadcast formulation materializes — that matrix made 32 concurrent
     Python workers memory-bandwidth-bound and hypersensitive to neighbor
     load. h*a+b stays < 2^62 (h < 2^31, a < 2^31): no int64 overflow."""
-    import numpy as np
-
     n_docs = len(starts) - 1
     nonempty = starts[:-1] < starts[1:]
     red_starts = starts[:-1][nonempty]
@@ -281,8 +306,6 @@ def _sigs_from_parts(hashes, starts):
 def _bands_from_parts(hashes, starts):
     """(shingle hashes, segment starts) → (n_docs, LSH_BANDS) band keys —
     the shared tail of minhash_band_keys_series (sig pass + band fold)."""
-    import numpy as np
-
     sigs = _sigs_from_parts(hashes, starts)
     n_docs = sigs.shape[0]
     sig3 = sigs.reshape(n_docs, LSH_BANDS, LSH_ROWS)
@@ -300,9 +323,6 @@ def minhash_audit_series(texts):
     (bit-identical to the expression path, asserted in
     tests/test_minhash_audit.py); the distinct-per-doc step is one lexsort
     + adjacent-dedup over the whole Arrow batch, never per-row Python."""
-    import numpy as np
-    import pandas as pd
-
     hashes, starts = _shingle_parts(texts)
     sigs = _sigs_from_parts(hashes, starts)
     n_docs = len(starts) - 1
@@ -313,58 +333,47 @@ def minhash_audit_series(texts):
     if hs.size:
         first[1:] = (hs[1:] != hs[:-1]) | (sg[1:] != sg[:-1])
     hs_u, sg_u = hs[first], sg[first]
-    counts = np.bincount(sg_u, minlength=n_docs)
-    splits = np.cumsum(counts)[:-1]
+    ends = np.cumsum(np.bincount(sg_u, minlength=n_docs))
     return pd.DataFrame(
-        {"sig": list(sigs), "shs": np.split(hs_u, splits)}
+        {"sig": list(sigs), "shs": np.split(hs_u, ends)[:n_docs]}
     )
 
 
 def minhash_audit_udf(text):
-    from pyspark.sql import functions as F
-
     return F.pandas_udf(
         minhash_audit_series, "struct<sig: array<long>, shs: array<long>>"
     )(text)
 
 
+def _bit_fold(h: np.ndarray, counts: np.ndarray, bits: int) -> np.ndarray:
+    """SimHash fold over per-token hashes (uint64 or non-negative int64),
+    docs back to back with counts[i] >= 1 tokens each: bit b is set iff the
+    doc's ±1 sum over bit b of its token hashes is positive. One pass per
+    bit keeps the working set at one token-sized vector instead of an
+    (n_tokens, bits) matrix — the same cache-sizing lesson as the minhash
+    kernel."""
+    val = np.zeros(len(counts), dtype=np.uint64)
+    if not len(counts):
+        return val
+    starts = np.cumsum(counts) - counts
+    h = h.astype(np.uint64)
+    for b in range(bits):
+        pm = ((h >> np.uint64(b)) & np.uint64(1)).astype(np.int64) * 2 - 1
+        sums = np.add.reduceat(pm, starts)
+        val |= (sums > 0).astype(np.uint64) << np.uint64(b)
+    return val
+
+
 def simhash_series(texts, bits: int = SIMHASH_BITS):
     """Vectorized twin of simhash_expr over a text Series — exact integer
-    math, bit-identical (tested). One exploded token frame gives every
-    token hash; then one pass per bit (±1 map → per-doc reduceat) keeps the
-    working set at one token-sized vector instead of an (n_tokens, bits)
-    matrix — the same cache-sizing lesson as the minhash kernel."""
-    import numpy as np
-    import pandas as pd
-
-    texts = texts.reset_index(drop=True).fillna("")
-    toks = texts.str.split(" ").explode()
-    doc_idx = toks.index.to_numpy(dtype=np.int64)
-    tok_len = toks.str.len().fillna(0).to_numpy(dtype=np.int64)
-
-    def _ords(s: pd.Series) -> np.ndarray:
-        arr = s.fillna("").to_numpy(dtype="U1")
-        return arr.view(np.uint32).astype(np.int64)
-
-    h = (
-        tok_len * KNUTH
-        + _ords(toks.str.slice(0, 1)) * 40503
-        + _ords(toks.str.slice(-1))
-    ) % MOD31
-    n_docs = len(texts)
-    counts = np.bincount(doc_idx, minlength=n_docs)
-    starts = np.cumsum(counts) - counts  # every doc has >= 1 token ('' -> [''])
-    val = np.zeros(n_docs, dtype=np.int64)
-    for b in range(bits):
-        pm = (((h >> b) & 1) << 1) - 1  # ±1 by bit b, int64
-        sums = np.add.reduceat(pm, starts)
-        val += np.where(sums > 0, np.int64(1 << b), np.int64(0))
-    return pd.Series(val, dtype="int64")
+    math, bit-identical (tested): the portable hash of each unique token,
+    gathered through the token frame, then the per-bit fold."""
+    _, counts, _, codes, uniques = tokens_arrow(texts)
+    h = token_hash_np(*token_ends(uniques))[codes]
+    return pd.Series(_bit_fold(h, counts, bits).view(np.int64), dtype="int64")
 
 
 def simhash_udf(text, bits: int = SIMHASH_BITS):
-    from pyspark.sql import functions as F
-
     def _k(s):
         return simhash_series(s, bits)
 
@@ -412,62 +421,37 @@ def simhash64_from_hashes_sql(hashes: str) -> str:
     )
 
 
-def _token_fnv64(toks) -> "object":
-    """Vectorized FNV-1a 64 per token (pd.Series[str] → uint64 ndarray).
+def _token_fnv64(uniques: pa.Array) -> np.ndarray:
+    """Vectorized FNV-1a 64 over the code points of each token of a string
+    array (uint64 per token; callers pass the frame's unique tokens).
 
-    Codepoint matrix from the fixed-width U-dtype buffer, then one
-    vectorized fold step per character column (max-token-length passes, each
-    whole-array) — uint64 multiply wraps mod 2^64 natively. Bit-identical to
-    the per-char Python/DuckDB fold (tested)."""
-    import numpy as np
-
-    n = len(toks)
-    filled = toks.fillna("")
-    arr = filled.to_numpy(dtype="U")
-    if n == 0 or arr.dtype.itemsize == 0:  # empty batch / all-empty tokens
-        return np.full(n, FNV_BASIS, dtype=np.uint64)
-    width = arr.dtype.itemsize // 4
-    cp = arr.view(np.uint32).reshape(n, width).astype(np.uint64)
-    lens = filled.str.len().to_numpy(dtype=np.int64)
-    h = np.full(n, FNV_BASIS, dtype=np.uint64)
+    Tokens are folded longest first, so the tokens still folding at step j
+    are a prefix of that order: the work is the total code-point count,
+    not tokens × longest token. uint64 multiply wraps mod 2^64 natively.
+    Bit-identical to the per-char Python/DuckDB fold (tested)."""
+    cps, lens, starts = _codepoints(uniques)
+    cps = cps.astype(np.uint64)
+    h = np.full(len(lens), FNV_BASIS, dtype=np.uint64)
+    order = np.argsort(-lens, kind="stable")
+    neg_sorted = -lens[order]
     prime = np.uint64(FNV_PRIME)
-    for j in range(width):
-        active = lens > j
-        if not active.any():
-            break
-        h = np.where(active, (h ^ cp[:, j]) * prime, h)
+    for j in range(int(lens.max()) if len(lens) else 0):
+        act = order[: np.searchsorted(neg_sorted, -j)]  # tokens longer than j
+        h[act] = (h[act] ^ cps[starts[act] + j]) * prime
     return h
 
 
 def simhash64_series(texts):
     """Vectorized 64-bit simhash over a text Series → int64 Series (the
     uint64 fingerprint viewed as two's-complement, so Spark BIGINT holds it
-    and xor/bit_count operate on the same bit pattern). Same per-bit
-    reduceat shape as simhash_series — one token-sized working vector."""
-    import numpy as np
-    import pandas as pd
-
-    texts = texts.reset_index(drop=True).fillna("")
-    n_docs = len(texts)
-    if n_docs == 0:
-        return pd.Series([], dtype="int64")
-    toks = texts.str.split(" ").explode()
-    doc_idx = toks.index.to_numpy(dtype=np.int64)
-    h = _token_fnv64(toks)
-    counts = np.bincount(doc_idx, minlength=n_docs)
-    starts = np.cumsum(counts) - counts  # every doc has >= 1 token
-    val = np.zeros(n_docs, dtype=np.uint64)
-    one = np.uint64(1)
-    for b in range(64):
-        pm = (((h >> np.uint64(b)) & one).astype(np.int64) << 1) - 1
-        sums = np.add.reduceat(pm, starts)
-        val |= np.where(sums > 0, one << np.uint64(b), np.uint64(0))
-    return pd.Series(val.view(np.int64), dtype="int64")
+    and xor/bit_count operate on the same bit pattern). Same per-bit fold
+    as simhash_series over the FNV-1a-64 hash of each unique token."""
+    _, counts, _, codes, uniques = tokens_arrow(texts)
+    h = _token_fnv64(uniques)[codes]
+    return pd.Series(_bit_fold(h, counts, 64).view(np.int64), dtype="int64")
 
 
 def simhash64_udf(text):
-    from pyspark.sql import functions as F
-
     return F.pandas_udf(simhash64_series, "long")(text)
 
 

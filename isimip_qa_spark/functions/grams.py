@@ -11,7 +11,9 @@ shuffle, no state, no per-row Python.
 
 Gram hash = FNV-1a-64 fold over the gram's token hashes (each token's
 FNV-1a-64 over codepoints, functions/fingerprint._token_fnv64, is one fold
-symbol: h = (h ^ tok_hash) * prime mod 2^64). Window semantics exactly
+symbol: h = (h ^ tok_hash) * prime mod 2^64). Tokens come from the shared
+token frame (`textstats.tokens_arrow`), so each unique token is hashed
+once and gathered through the frame's dictionary codes. Window semantics exactly
 match fingerprint.shingles_expr / decontaminate.ngrams_sql: a doc with
 n >= k tokens yields n-k+1 grams; a doc with n < k yields ONE gram folding
 all n tokens (the clamped tail window). Hashes are stored and compared as
@@ -28,6 +30,7 @@ import numpy as np
 import pandas as pd
 
 from .fingerprint import FNV_BASIS, FNV_PRIME, _token_fnv64
+from .textstats import tokens_arrow
 
 _PRIME = np.uint64(FNV_PRIME)
 
@@ -39,18 +42,11 @@ def gram_hash_pairs(texts: pd.Series, k: int) -> tuple[np.ndarray, np.ndarray]:
     (two's-complement view of the uint64 FNV fold). Distinctness is per
     doc — the same contract as shingles_expr's array_distinct, so hit
     counts computed from these pairs equal the batch query's n_hits.
+    NULL text folds as ''.
     """
-    texts = texts.reset_index(drop=True).fillna("")
-    m = len(texts)
-    if m == 0:
-        return (
-            np.empty(0, dtype=np.int64),
-            np.empty(0, dtype=np.int64),
-        )
-    toks = texts.str.split(" ").explode()
-    tok_doc = toks.index.to_numpy(dtype=np.int64)
-    th = _token_fnv64(toks)
-    n = np.bincount(tok_doc, minlength=m)  # tokens per doc (>= 1: '' -> [''])
+    _, n, _, codes, uniques = tokens_arrow(texts)  # n >= 1 tokens per doc
+    m = len(n)
+    th = _token_fnv64(uniques)[codes]
     starts = np.cumsum(n) - n  # global index of each doc's first token
 
     # window starts: per doc, w = max(n - k, 0) + 1 windows

@@ -15,11 +15,13 @@ Kernel shape (`_fused_arrow`, per Arrow string array of ~4k docs):
   doc bounds and its data buffer is scanned as one byte array. Nothing is
   decoded to Python strings except the unique tokens and the few scrub
   candidates.
-- ONE tokenize: `split_pattern(" ")` + `dictionary_encode`; per-doc token
-  counts are the list lengths.
+- ONE tokenize: the shared token frame (`textstats.tokens_arrow`,
+  `split_pattern(" ")` + `dictionary_encode`); per-doc token counts are
+  the list lengths.
 - ONE vocabulary pass: lowering, the model dict probe and the wordlike
   regex run in Python per UNIQUE token, then per-token values are numpy
-  gathers over the dictionary codes. Dyadic logprobs ⇒ np.bincount sums
+  gathers over the frame's dictionary codes (the technique every Python
+  text kernel shares: fingerprint.py, grams.py, queries/dsir.py). Dyadic logprobs ⇒ np.bincount sums
   are exact, so outputs are bit-identical to the unfused kernels.
 - Rule statistics from byte classes of the buffer and the token codes,
   matching textstats.py expression semantics exactly (integer counts + one
@@ -56,6 +58,7 @@ from .textstats import (
     MOJIBAKE_SEQS,
     REPL_CHAR,
     WORDLIKE_RE,
+    tokens_arrow,
 )
 
 _MOJIBAKE = [seq for seq, _ in MOJIBAKE_SEQS]
@@ -163,7 +166,9 @@ def _fused_arrow(text: pa.Array) -> pa.RecordBatch:
     n = len(text)
     if n == 0:
         return pa.RecordBatch.from_pylist([], schema=SCORE_SCHEMA)
-    valid = text.is_valid().to_numpy(zero_copy_only=False)
+    # ONE tokenize, the shared token frame; '' doc → one '' token
+    valid, counts, idx, codes, dictionary = tokens_arrow(text)
+    uniques = dictionary.to_pylist()
     if text.null_count:
         text = pc.fill_null(text, "")  # scored as '' and masked at the end
 
@@ -187,18 +192,10 @@ def _fused_arrow(text: pa.Array) -> pa.RecordBatch:
     def per_doc(bit: int) -> np.ndarray:
         return np.bincount(doc[(cls & bit) != 0], minlength=n)
 
-    # ONE tokenize: '' doc → one '' token, matching ''.split(' ')
-    words = pc.split_pattern(text, " ")
-    counts = words.value_lengths().to_numpy().astype(np.int64)
-    enc = pc.dictionary_encode(words.flatten())
-    codes = enc.indices.to_numpy()
-    uniques = enc.dictionary.to_pylist()
-    idx = np.repeat(np.arange(n, dtype=np.int64), counts)
-
     def token_sum(lits: list[str]) -> np.ndarray:
         """Per-doc non-overlapping count of the literals. None holds a space,
         so every match lies inside one token: counted per unique token."""
-        u_n = sum(pc.count_substring(enc.dictionary, s).to_numpy() for s in lits)
+        u_n = sum(pc.count_substring(dictionary, s).to_numpy() for s in lits)
         if not u_n.any():
             return np.zeros(n, dtype=np.int64)
         return np.bincount(idx, weights=u_n[codes], minlength=n).astype(np.int64)

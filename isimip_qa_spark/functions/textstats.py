@@ -8,8 +8,10 @@ hot path. Thresholds follow the published Gopher rules (Rae et al. 2021,
 "Scaling Language Models: ... Gopher", §A1.1) and C4 (Raffel et al. 2020).
 
 Tokenisation contract: split on single spaces (the synthetic corpora are
-space-normalised); `tokens_expr` and its DuckDB twin `tokens_sql` are the
-single place to change that.
+space-normalised). It has three forms, the single places to change it:
+`tokens_expr` (Spark), its DuckDB twin `tokens_sql`, and `tokens_arrow`,
+the token frame every Python text kernel reads (the QA kernel, the
+minhash/simhash kernels, the gram hashes and DSIR).
 
 The DuckDB twins the oracles run sit beside their Spark forms: `tokens_sql`
 / `TOKENS_SQL`, `rule_columns_sql` (same keys and order as `rule_columns`),
@@ -23,8 +25,11 @@ from __future__ import annotations
 import operator
 from dataclasses import dataclass
 from functools import reduce
-from typing import Callable
+from typing import Callable, NamedTuple
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -39,6 +44,33 @@ def tokens_sql(text: str) -> str:
 
 
 TOKENS_SQL = tokens_sql("text")
+
+
+class TokenFrame(NamedTuple):
+    valid: np.ndarray  # bool per doc: text is not NULL
+    counts: np.ndarray  # int64 tokens per doc, >= 1
+    idx: np.ndarray  # int64 doc index of each token, docs in order
+    codes: np.ndarray  # dictionary code of each token
+    uniques: pa.StringArray  # the distinct tokens, indexed by code
+
+
+def tokens_arrow(text) -> TokenFrame:
+    """Arrow twin of tokens_expr over a string array (or a pandas Series of
+    str/None): one `split_pattern(" ")` + `dictionary_encode`, so a kernel
+    computes each per-token value once per unique token and gathers it
+    through `codes`. NULL text is tokenised as '' (one '' token, as
+    ''.split(' ')), so every doc has at least one token; `valid` says which
+    docs were NULL."""
+    if not isinstance(text, pa.Array):
+        text = pa.array(text, type=pa.string(), from_pandas=True)
+    valid = text.is_valid().to_numpy(zero_copy_only=False)
+    if text.null_count:
+        text = pc.fill_null(text, "")
+    words = pc.split_pattern(text, " ")
+    counts = words.value_lengths().to_numpy().astype(np.int64)
+    enc = pc.dictionary_encode(words.flatten())
+    idx = np.repeat(np.arange(len(text), dtype=np.int64), counts)
+    return TokenFrame(valid, counts, idx, enc.indices.to_numpy(), enc.dictionary)
 
 
 def _lines_sql(text: str) -> str:

@@ -56,10 +56,12 @@ from ..functions.fingerprint import (
     MOD31,
     rolling_fingerprint_expr,
     rolling_fingerprint_sql,
+    token_ends,
     token_hash_expr,
+    token_hash_np,
     token_hash_sql,
 )
-from ..functions.textstats import TOKENS_SQL, tokens_expr
+from ..functions.textstats import TOKENS_SQL, tokens_arrow, tokens_expr
 from . import register
 
 B = 1024  # hash-feature buckets (model size O(B), vocab-independent)
@@ -151,20 +153,13 @@ def _flagged_counts(is_t, texts):
     import numpy as np
     import pandas as pd
 
-    uni, big, doc_idx, same, _ = _bucket_parts(texts)
-    t_uni = is_t[doc_idx]
-    t_big = is_t[doc_idx[:-1][same]]
-    t_cnt = np.bincount(uni[t_uni], minlength=B) + np.bincount(
-        big[t_big], minlength=B
-    )
-    r_cnt = np.bincount(uni[~t_uni], minlength=B) + np.bincount(
-        big[~t_big], minlength=B
-    )
+    doc, bucket, _, _ = _bucket_parts(texts)
+    t = is_t[doc]
     return pd.DataFrame(
         {
             "bucket": np.arange(B, dtype=np.int64),
-            "target_cnt": t_cnt.astype(np.int64),
-            "raw_cnt": r_cnt.astype(np.int64),
+            "target_cnt": np.bincount(bucket[t], minlength=B).astype(np.int64),
+            "raw_cnt": np.bincount(bucket[~t], minlength=B).astype(np.int64),
         }
     )
 
@@ -268,33 +263,28 @@ def _logratio_array(spark: SparkSession, sf_dir: str) -> list[float]:
 
 def _bucket_parts(texts):
     """Vectorized unigram+bigram hash buckets — the same integers as
-    `_ngram_buckets_expr`, from one exploded token frame (the
-    `_shingle_parts` technique, functions/fingerprint.py). Returns
-    (buckets: int64 array, doc_idx: int64 array, n_grams per doc)."""
+    `_ngram_buckets_expr`: the portable hash of each unique token, gathered
+    through the shared token frame (textstats.tokens_arrow). A NULL text
+    has no n-gram, as `unnest` yields no row for it in the DuckDB fit.
+    Returns (doc: int64 doc index of each n-gram, bucket: its bucket,
+    n_grams per doc, valid: text is not NULL)."""
     import numpy as np
 
-    texts = texts.reset_index(drop=True)
-    toks = texts.str.split(" ").explode()
-    doc_idx = toks.index.to_numpy(dtype=np.int64)
-    tok_len = toks.str.len().fillna(0).to_numpy(dtype=np.int64)
-
-    def _ords(s):
-        arr = s.fillna("").to_numpy(dtype="U1")
-        return arr.view(np.uint32).astype(np.int64)
-
-    first_ord = _ords(toks.str.slice(0, 1))
-    last_ord = _ords(toks.str.slice(-1))
-    th = (tok_len * KNUTH + first_ord * 40503 + last_ord) % MOD31
-    uni = th % B
+    valid, n_tok, doc_idx, codes, uniques = tokens_arrow(texts)
+    th = token_hash_np(*token_ends(uniques))[codes]
     same = doc_idx[:-1] == doc_idx[1:]  # bigram partner in same doc
     big = ((th[:-1] * KNUTH + th[1:]) % MOD31)[same] % B
-    n_tok = np.bincount(doc_idx, minlength=len(texts))
-    n_grams = n_tok + np.maximum(n_tok - 1, 0)
-    return uni, big, doc_idx, same, n_grams
+    doc = np.concatenate([doc_idx, doc_idx[:-1][same]])
+    bucket = np.concatenate([th % B, big])
+    if not valid.all():
+        keep = valid[doc]
+        doc, bucket = doc[keep], bucket[keep]
+    return doc, bucket, n_tok + np.maximum(n_tok - 1, 0), valid
 
 
 def _score_kernel(lr):
-    """(logratio array) → pandas kernel: texts → (n_grams, logweight).
+    """(logratio array) → pandas kernel: texts → (n_grams, logweight), both
+    NULL for a NULL text (the `_weights_expr_df` twin's answer).
     Per-doc sums via bincount with float64 weights — every addend is a
     dyadic multiple of 1/Q, so the sum is exact in any order (the same
     contract as functions/perplexity.py)."""
@@ -303,12 +293,11 @@ def _score_kernel(lr):
         import numpy as np
         import pandas as pd
 
-        uni, big, doc_idx, same, n_grams = _bucket_parts(texts)
-        lw = np.bincount(doc_idx, weights=lr[uni], minlength=len(texts))
-        lw += np.bincount(
-            doc_idx[:-1][same], weights=lr[big], minlength=len(texts)
-        )
-        return pd.DataFrame({"n_grams": n_grams, "logweight": lw})
+        doc, bucket, n_grams, valid = _bucket_parts(texts)
+        lw = np.bincount(doc, weights=lr[bucket], minlength=len(valid))
+        n = pd.array(n_grams, dtype="Int64")
+        n[~valid] = pd.NA
+        return pd.DataFrame({"n_grams": n, "logweight": np.where(valid, lw, np.nan)})
 
     return score
 
@@ -335,22 +324,26 @@ def _weights_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _weights_expr_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pure-expression reference path (slow: see _weights_df docstring) —
-    kept as the bit-equality twin the kernel is tested against."""
-    lr = _logratio_array(spark, sf_dir)
-    arr = F.array(*[F.lit(v) for v in lr])
-    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    buckets = _ngram_buckets_expr(tokens_expr(F.col("text")))
+def _weights_expr(text: Column, lr) -> tuple[Column, Column]:
+    """(n_grams, logweight) as pure expressions over the logratio array `lr`
+    (slow: see _weights_df docstring) — the bit-equality twin `_score_kernel`
+    is tested against. NULL text gives NULL for both."""
+    arr = F.array(*[F.lit(float(v)) for v in lr])
+    buckets = _ngram_buckets_expr(tokens_expr(text))
     lw = F.aggregate(
         F.transform(buckets, lambda b: F.element_at(arr, (b + 1).cast("int"))),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+    return F.size(buckets).cast("long"), lw
+
+
+def _weights_expr_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`_weights_df` through `_weights_expr`, the pure-expression path."""
+    n_grams, lw = _weights_expr(F.col("text"), _logratio_array(spark, sf_dir))
+    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     return d.filter(F.col("doc_id") % TARGET_MOD != 0).select(
-        "doc_id",
-        F.size(buckets).cast("long").alias("n_grams"),
-        lw.alias("logweight"),
+        "doc_id", n_grams.alias("n_grams"), lw.alias("logweight")
     )
 
 
@@ -579,11 +572,10 @@ def _sel_count_batches(it):
     import pandas as pd
 
     for pdf in it:
-        uni, big, doc_idx, same, _ = _bucket_parts(pdf["text"])
-        cnt = np.bincount(uni, minlength=B) + np.bincount(big, minlength=B)
+        _, bucket, _, _ = _bucket_parts(pdf["text"])
         yield pd.DataFrame(
             {
                 "bucket": np.arange(B, dtype=np.int64),
-                "s_cnt": cnt.astype(np.int64),
+                "s_cnt": np.bincount(bucket, minlength=B).astype(np.int64),
             }
         )

@@ -50,22 +50,12 @@ def dsir_score_stream(
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in pages.schema.fields
     ) + ", n_grams long, logweight double"
-    kernel = _score_kernel  # bind module ref; closure built per batch below
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        k = kernel(bcast.value)
+        k = _score_kernel(bcast.value)
         for pdf in batches:
-            pdf = pdf.reset_index(drop=True)
-            null_text = pdf["text"].isna()
-            safe = pdf["text"].fillna("")
-            s = k(safe)
-            pdf = pdf.copy()
-            # NULL text is undecidable: null BOTH outputs (the kernel saw
-            # the '' substitute, whose n_grams=1 would otherwise leak into
-            # the audit as a real single-gram doc)
-            pdf["n_grams"] = s["n_grams"].astype("Int64").where(~null_text)
-            pdf["logweight"] = s["logweight"].where(~null_text, other=None)
-            yield pdf
+            s = k(pdf["text"])  # NULL text scores NULL n_grams and logweight
+            yield pdf.assign(n_grams=s["n_grams"].array, logweight=s["logweight"].array)
 
     scored = pages.mapInPandas(score, schema=out_schema)
 

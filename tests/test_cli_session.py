@@ -55,10 +55,14 @@ def test_qaconfig_rejects_fewer_than_one_chunk():
     assert QAConfig(n_chunks=1).n_chunks == 1
 
 
-def test_cli_rejects_non_positive_counts_before_the_session(monkeypatch):
+def test_cli_rejects_non_positive_counts_before_the_session(monkeypatch, tmp_path):
     """--chunks 0 would score nothing, and --export-shards 0 would fail in
     the export's pmod only after the whole QA run: both are parse errors,
-    raised before any Spark session is asked for."""
+    raised before any Spark session is asked for. So are a malformed
+    window, in --window or in a --windows grid, and a cohort list holding
+    an unsafe name."""
+    import json
+
     import pytest
 
     from isimip_qa_spark import cli, session
@@ -73,3 +77,13 @@ def test_cli_rejects_non_positive_counts_before_the_session(monkeypatch):
         with pytest.raises(SystemExit) as e:
             cli.main(base + flags)
         assert e.value.code == 2, flags
+
+    bad = tmp_path / "cohorts.json"
+    bad.write_text(json.dumps([{"name": "../up", "langs": ["en"]}]))
+    for flags, msg in (
+        (["--window", "2024-01-01"], "must be 'lo:hi'"),
+        (["--windows", "2024-01-01;all"], "must be 'lo:hi'"),
+        (["--cohorts", "all", "--cohorts-file", str(bad)], "unsafe cohort name"),
+    ):
+        with pytest.raises(SystemExit, match=msg):
+            cli.main(base + flags)
